@@ -29,6 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifact import (
+    delete_path,
+    persisted,
+    read_stream,
+    start_foreach_batch,
+    swap_table,
+    write_rows,
+)
 from .textops import (
     _DOT,
     _EMB_DIM,
@@ -112,8 +120,7 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     """Train the PQ codebooks, encode every (normalized) vector, assign
     coarse cells, and persist the index tables.  Returns build stats."""
     sub = _EMB_DIM // _PQ_M
-    e = _normalized(spark, sf_dir).persist()
-    try:
+    with persisted(_normalized(spark, sf_dir)) as e:
         books = _train_pq_codebooks(e, _PQ_M, _PQ_K, sub, iters=2, seed_mod=13)
         # TRAINED coarse quantizer — the same _trained_coarse(e) call
         # sim_ann_ivfpq makes, so the stored index reproduces the gate op
@@ -135,21 +142,19 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         ).option("partitionOverwriteMode", "static").partitionBy(
             "ingest"
         ).parquet(out_dir + "/vectors")
-        spark.createDataFrame(
-            [
-                (m, code, books[m][code])
-                for m in range(_PQ_M)
-                for code in range(_PQ_K)
-            ],
+        write_rows(
+            spark,
+            [(m, code, books[m][code]) for m in range(_PQ_M) for code in range(_PQ_K)],
             "m int, code int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/codebook")
-        spark.createDataFrame(
+            out_dir + "/codebook",
+        )
+        write_rows(
+            spark,
             [(cid, vec, nrm) for cid, vec, nrm in coarse],
             "cell int, centroid array<double>, nrm double",
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/coarse")
+            out_dir + "/coarse",
+        )
         n = spark.read.parquet(out_dir + "/vectors").count()
-    finally:
-        e.unpersist()
     return {"n_vectors": n, "m": _PQ_M, "k": _PQ_K, "cells": len(coarse)}
 
 
@@ -250,12 +255,9 @@ def encode_into_index(
     coarse = _read_coarse(spark, index_dir)
     # persist: the write and the count would otherwise each run the full
     # codebook-literal encode job over new_rows
-    encoded = _encode_new_rows(new_rows, books, coarse).persist()
-    try:
+    with persisted(_encode_new_rows(new_rows, books, coarse)) as encoded:
         _write_ingest(encoded, index_dir, ingest)
         n = encoded.count()
-    finally:
-        encoded.unpersist()
     return {"n_appended": n, "m": _PQ_M, "k": _PQ_K, "cells": len(coarse)}
 
 
@@ -291,11 +293,7 @@ def start_stream_index_append(
     _check_partitioned_layout(spark, index_dir)
     books = _read_books(spark, index_dir)
     coarse = _read_coarse(spark, index_dir)
-    stream = (
-        spark.readStream.schema(EMBED_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_stream(spark, EMBED_INPUT_SCHEMA, input_dir, max_files_per_trigger)
 
     def _append(batch_df, batch_id: int) -> None:
         _write_ingest(
@@ -304,13 +302,7 @@ def start_stream_index_append(
             "batch-%d" % batch_id,
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _append, checkpoint_dir, available_now)
 
 
 def compact_index_ingests(
@@ -329,11 +321,9 @@ def compact_index_ingests(
     coalesce with ``spark.sql.files.maxRecordsPerFile`` there.
 
     Crash safety: the compacted table is staged to a sibling tmp dir and
-    swapped in rename-then-delete order (the Bloom-index ``words``
-    discipline) — the data is never deleted before its replacement is in
-    place, so a crash between the two renames leaves the previous table
-    intact under ``vectors.old`` (manual recovery: rename it back; reads
-    of the canonical path fail loudly until then).  Writer fencing
+    swapped in by :func:`~.artifact.swap_table` (rename-then-delete
+    through the index dir's Hadoop FS — a crash leaves the previous
+    table under ``vectors.old``).  Writer fencing
     is the caller's job, same as :func:`compact_bloom_deltas` in
     bloom_index: compact ONLY when no stream lineage on this index can
     still replay — a batch replayed AFTER compaction would re-land its
@@ -341,15 +331,12 @@ def compact_index_ingests(
     would rank as duplicate candidates.  (On a lakehouse this whole
     function is an Iceberg rewrite-data-files action — atomic, with
     snapshot isolation instead of renames.)"""
-    import os
-    import shutil
-
     _check_partitioned_layout(spark, index_dir)
     vectors = index_dir + "/vectors"
     v = spark.read.parquet(vectors)
     n_ingests = v.select("ingest").distinct().count()
     tmp = vectors + ".compact.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    delete_path(spark, tmp)
     (
         v.drop("ingest")
         .coalesce(max(1, target_files))
@@ -359,11 +346,7 @@ def compact_index_ingests(
         .parquet(tmp)
     )
     n = spark.read.parquet(tmp).count()
-    old = vectors + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(vectors, old)
-    os.rename(tmp, vectors)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_table(spark, vectors, tmp)
     return {"n_vectors": n, "n_ingests_folded": n_ingests}
 
 

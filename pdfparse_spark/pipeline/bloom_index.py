@@ -56,6 +56,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifact import (
+    batch_dir,
+    checkpoint_scope,
+    delete_path,
+    persisted,
+    read_meta,
+    read_stream,
+    start_foreach_batch,
+    swap_table,
+    write_batch,
+    write_meta,
+    write_rows,
+)
 from .textops import (
     _BLOOM_BITS,
     _BLOOM_K,
@@ -74,6 +87,8 @@ __all__ = [
 ]
 
 _SEED_TAG = "bloomidx"
+_WORDS_SCHEMA = "word_idx int, word long"
+_META_SCHEMA = "bits int, k int, seed_tag string, n_set_bits long"
 _U64 = (1 << 64) - 1
 
 # Past this filter size the constant-folded literal probe (one bits/8-byte
@@ -122,7 +137,7 @@ def _sparse_words(pos_values) -> list[tuple[int, int]]:
     ]
 
 
-def _write_rows(
+def _write_filter(
     spark: SparkSession,
     out_dir: str,
     rows: list[tuple[int, int]],
@@ -134,16 +149,8 @@ def _write_rows(
     from the table is all-zero (both probe paths treat it so), keeping
     the words table O(set bits) even at m = 2^28+."""
     n_set = sum(bin(w & _U64).count("1") for _, w in rows)
-    (
-        spark.createDataFrame(
-            rows or [(0, 0)], "word_idx int, word long"
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/words")
-    )
-    (
-        spark.createDataFrame(
-            [(bits, k, seed_tag, n_set)], "bits int, k int, seed_tag string, n_set_bits long"
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/meta")
-    )
+    write_rows(spark, rows or [(0, 0)], _WORDS_SCHEMA, out_dir + "/words")
+    write_meta(spark, out_dir, (bits, k, seed_tag, n_set), _META_SCHEMA)
 
 
 def _fold_rewrite_words(
@@ -159,11 +166,8 @@ def _fold_rewrite_words(
     an ``extra`` sparse increment frame) into a fresh sparse words table
     by a DISTRIBUTED bit_or aggregate, then swap it in — the filter
     never materializes on the driver, so extend/compact work at any m.
-    Stage-write + rename because parquet cannot overwrite a table that
+    Stage-write + swap because parquet cannot overwrite a table that
     feeds the writing plan."""
-    import os
-    import shutil
-
     words = _read_words_df(spark, index_dir, include_deltas=include_deltas)
     if extra is not None:
         words = (
@@ -182,20 +186,10 @@ def _fold_rewrite_words(
         spark.read.parquet(tmp).agg(F.sum(F.bit_count("word")).alias("n")).collect()[0]
     )
     n_set = int(n_row["n"] or 0)
-    # rename-then-delete, not delete-then-rename: a crash between the two
-    # renames leaves the old table intact under words_old (manual
-    # recovery), never a window with NO words table.  On a real
-    # lakehouse this whole swap is one Iceberg commit.
-    old = index_dir + "/words_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(index_dir + "/words", old)
-    os.rename(tmp, index_dir + "/words")
-    shutil.rmtree(old, ignore_errors=True)
-    (
-        spark.createDataFrame(
-            [(bits, k, seed_tag, n_set)], "bits int, k int, seed_tag string, n_set_bits long"
-        ).coalesce(1).write.mode("overwrite").parquet(index_dir + "/meta")
-    )
+    # rename-then-delete (never a window with NO words table); on a real
+    # lakehouse this whole swap is one Iceberg commit
+    swap_table(spark, index_dir + "/words", tmp)
+    write_meta(spark, index_dir, (bits, k, seed_tag, n_set), _META_SCHEMA)
 
 
 def _increment_words_df(
@@ -225,10 +219,6 @@ def _increment_words_df(
         .groupBy("word_idx")
         .agg(F.bit_or("w1").alias("word"))
     )
-
-
-def _read_meta(spark: SparkSession, index_dir: str):
-    return spark.read.parquet(index_dir + "/meta").collect()[0]
 
 
 def _delta_words(
@@ -268,7 +258,7 @@ def _read(
     Callers that already fetched the meta row pass it via ``meta`` to
     skip the second read job."""
     if meta is None:
-        meta = _read_meta(spark, index_dir)
+        meta = read_meta(spark, index_dir)
     bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
     words = [0] * (bits // 64)
     _or_rows_into(words, spark.read.parquet(index_dir + "/words").collect())
@@ -310,7 +300,7 @@ def build_bloom_index(
     if bits % 64:
         raise ValueError("bits must be a multiple of 64")
     rows = _sparse_words(_distinct_positions(docs, text_col, bits, k))
-    _write_rows(spark, out_dir, rows, bits, k)
+    _write_filter(spark, out_dir, rows, bits, k)
     return bloom_index_stats(spark, out_dir)
 
 
@@ -329,7 +319,7 @@ def extend_bloom_index(
     filters far past the literal cutover.  See the module docstring's
     writer-fencing note before running this while a stream maintains
     the same index."""
-    meta = _read_meta(spark, index_dir)
+    meta = read_meta(spark, index_dir)
     bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
     inc = _increment_words_df(docs, text_col, bits, k, seed_tag)
     _fold_rewrite_words(spark, index_dir, bits, k, seed_tag, extra=inc)
@@ -359,7 +349,7 @@ def probe_bloom_index(
     are verdict-identical (pytest-pinned)."""
     if method not in ("auto", "literal", "join"):
         raise ValueError("method must be 'auto', 'literal' or 'join'")
-    meta = _read_meta(spark, index_dir)
+    meta = read_meta(spark, index_dir)
     bits, k, seed_tag = meta["bits"], meta["k"], meta["seed_tag"]
     if method == "auto":
         method = "literal" if bits <= _LITERAL_MAX_BITS else "join"
@@ -394,7 +384,7 @@ def bloom_index_stats(
     filter a probe would actually see (base + streaming deltas).  Counts
     set bits distributedly (one bit_count aggregate over the sparse word
     frame), so it works at any m without a driver-side array."""
-    meta = _read_meta(spark, index_dir)
+    meta = read_meta(spark, index_dir)
     bits, k = meta["bits"], meta["k"]
     row = (
         _read_words_df(spark, index_dir, include_deltas=include_deltas)
@@ -417,10 +407,10 @@ def compact_bloom_deltas(
 ) -> dict:
     """Fold every streaming delta partition into the base ``words`` (an
     idempotent OR — safe to re-run).  With ``remove_deltas`` the delta
-    tree is deleted afterwards (local filesystem paths only): do that
+    tree is deleted afterwards (through the index dir's Hadoop FS): do that
     ONLY once no stream lineage on this index can still replay a batch
     whose delta is being removed — see the writer-fencing note."""
-    meta = _read_meta(spark, index_dir)
+    meta = read_meta(spark, index_dir)
     _fold_rewrite_words(
         spark,
         index_dir,
@@ -430,9 +420,7 @@ def compact_bloom_deltas(
         include_deltas=True,
     )
     if remove_deltas:
-        import shutil
-
-        shutil.rmtree(index_dir + "/deltas", ignore_errors=True)
+        delete_path(spark, index_dir + "/deltas")
     return bloom_index_stats(spark, index_dir)
 
 
@@ -470,8 +458,6 @@ def start_stream_bloom_index(
     cost grows one tiny file per batch until then).  NULL-text turns
     carry nothing to dedup and are skipped, as in ``dedup_stream``.
     """
-    import hashlib
-
     from pyspark.errors import AnalysisException
     from pyspark.sql import Window
 
@@ -479,7 +465,7 @@ def start_stream_bloom_index(
 
     seed_tag = _SEED_TAG
     try:
-        meta = _read_meta(spark, index_dir)
+        meta = read_meta(spark, index_dir)
         # stored params always win, seed included — hashing with anything
         # but the seed the bits were built with silently breaks the
         # no-false-negative guarantee
@@ -487,26 +473,20 @@ def start_stream_bloom_index(
     except AnalysisException:
         if bits % 64:
             raise ValueError("bits must be a multiple of 64")
-        _write_rows(spark, index_dir, [], bits, k)
+        _write_filter(spark, index_dir, [], bits, k)
 
-    ck_tag = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
+    ck_tag = checkpoint_scope(checkpoint_dir)
     delta_root = "%s/deltas/ck=%s" % (index_dir, ck_tag)
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_stream(spark, INPUT_SCHEMA, input_dir, max_files_per_trigger)
 
     def _process_batch(batch_df, batch_id: int) -> None:
-        keyed = (
+        with persisted(
             batch_df.filter(F.col("text").isNotNull())
             .withColumn(
                 "id", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string"))
             )
             .select("id", "ts", "text")
-            .persist()
-        )
-        try:
+        ) as keyed:
             w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("ts", "id")
             marked = keyed.withColumn(
                 "within_dup", (F.row_number().over(w) > 1).cast("int")
@@ -535,29 +515,18 @@ def start_stream_bloom_index(
                 probed = _with_bloom_hit_join(
                     marked, words_df, seed_tag=seed_tag, bits=bits, k=k, out_col="prior_hit"
                 )
-            probed.select(
+            verdicts = probed.select(
                 "id",
                 "prior_hit",
                 "within_dup",
                 F.greatest("prior_hit", "within_dup").alias("bloom_hit"),
-            ).write.mode("overwrite").parquet("%s/batch=%d" % (out_dir, batch_id))
+            )
+            write_batch(verdicts, out_dir, batch_id)
             rows = _sparse_words(
                 _distinct_positions(keyed, "text", bits, k, seed_tag=seed_tag)
             )
-            (
-                spark.createDataFrame(rows or [(0, 0)], "word_idx int, word long")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet("%s/batch=%d" % (delta_root, batch_id))
+            write_rows(
+                spark, rows or [(0, 0)], _WORDS_SCHEMA, batch_dir(delta_root, batch_id)
             )
-        finally:
-            keyed.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(_process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _process_batch, checkpoint_dir, available_now)

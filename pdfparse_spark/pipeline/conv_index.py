@@ -48,6 +48,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifact import (
+    local_checkpoint,
+    read_batches,
+    read_meta,
+    read_stream,
+    release_rdds,
+    start_foreach_batch,
+    write_meta,
+)
 from .convops import conv_chains
 
 __all__ = [
@@ -63,6 +72,11 @@ __all__ = [
 # stored in meta so an index built under an older convention cannot be
 # silently probed with a newer one
 _FEAT_TAG = "conv-md5chain-v1"
+_TAG_MISMATCH = (
+    "conversation index at %r was built under chain convention %r; "
+    "this build hashes with %r — probing would silently mis-screen "
+    "every session, rebuild the index"
+)
 
 # one schema definition for transcript-stream sources (the input_hint
 # table, mirrored so tests and pipelines can feed slices of it)
@@ -87,24 +101,13 @@ def build_conv_index(
     the value set + meta.  Returns index stats."""
     vals = _chain_values(transcripts)
     vals.write.mode("overwrite").parquet(out_dir + "/chains")
-    (
-        spark.createDataFrame([(_FEAT_TAG,)], "feat_tag string")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/meta")
-    )
+    write_meta(spark, out_dir, (_FEAT_TAG,), "feat_tag string")
     n = spark.read.parquet(out_dir + "/chains").count()
     return {"n_chain_values": n}
 
 
 def _read_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    meta = spark.read.parquet(index_dir + "/meta").collect()[0]
-    if meta["feat_tag"] != _FEAT_TAG:
-        raise ValueError(
-            "conversation index at %r was built under chain convention %r; "
-            "this build hashes with %r — probing would silently mis-screen "
-            "every session, rebuild the index" % (index_dir, meta["feat_tag"], _FEAT_TAG)
-        )
+    read_meta(spark, index_dir, expect_tag=_FEAT_TAG, mismatch=_TAG_MISMATCH)
     return spark.read.parquet(index_dir + "/chains").select("h")
 
 
@@ -115,23 +118,16 @@ def extend_conv_index(
     Idempotent by value: re-running after a crash (or with an already-
     indexed corpus) appends nothing new that matters."""
     stored = _read_index(spark, index_dir)
-    jsc = spark.sparkContext._jsc
-    pre = set(jsc.getPersistentRDDs().keys())
     # eager localCheckpoint, not persist: it TRUNCATES lineage, so the
     # append below never re-reads the very files it is appending to
-    # (persist could silently recompute from source on eviction); the
-    # blocks are RDD-level, so release them by id diff afterwards
-    new = (
-        _chain_values(transcripts)
-        .join(stored, "h", "left_anti")
-        .localCheckpoint(eager=True)
+    # (persist could silently recompute from source on eviction)
+    new, ck_ids = local_checkpoint(
+        _chain_values(transcripts).join(stored, "h", "left_anti")
     )
     n_new = new.count()
     if n_new:
         new.write.mode("append").parquet(index_dir + "/chains")
-    for rid, rdd in list(jsc.getPersistentRDDs().items()):
-        if rid not in pre:
-            rdd.unpersist(False)
+    release_rdds(spark, ck_ids)
     return {"n_added": n_new}
 
 
@@ -178,27 +174,15 @@ def start_stream_conv_screen(
     so a replayed batch overwrites its own ``batch=<id>`` dir with
     identical rows (the start_stream_dsir_score discipline)."""
     stored = _read_index(spark, index_dir).localCheckpoint(eager=True)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = read_stream(spark, TRANSCRIPT_INPUT_SCHEMA, input_dir, max_files_per_trigger)
+    return start_foreach_batch(
+        stream,
+        lambda batch_df, _: _probe(conv_chains(batch_df), stored),
+        checkpoint_dir,
+        available_now,
+        out_dir=out_dir,
     )
-
-    def _screen_batch(batch_df, batch_id: int) -> None:
-        _probe(conv_chains(batch_df), stored).write.mode("overwrite").parquet(
-            "%s/batch=%d" % (out_dir, batch_id)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_screen_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_conv_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch=*")
+    return read_batches(spark, out_dir)

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .artifact import local_checkpoint, release_rdds
+
 __all__ = [
     "conv_chains",
     "conv_dedup_exact",
@@ -215,15 +217,10 @@ def conv_dedup_filter(df: DataFrame) -> tuple[DataFrame, dict]:
     fraction, so AQE broadcasts them and the filter is map-side; if a
     pathological corpus ever makes the drop set huge, the fallback is a
     conv_id shuffle of keys the extraction stage was about to shuffle
-    anyway.  The chains checkpoint is released before returning (the
-    run_curate RDD-diff discipline); only the drop-set checkpoint rides
-    on with the returned frame — the caller's session teardown (or a
-    post-run RDD-diff release) frees it."""
-    spark = df.sparkSession
-    jsc = spark.sparkContext._jsc
-    pre = set(jsc.getPersistentRDDs().keys())
-    ch = conv_chains(df).localCheckpoint(eager=True)
-    ch_ids = set(jsc.getPersistentRDDs().keys()) - pre
+    anyway.  The chains checkpoint is released before returning; only
+    the drop-set checkpoint rides on with the returned frame — the
+    caller's session teardown (or a post-run RDD-diff release) frees it."""
+    ch, ch_ids = local_checkpoint(conv_chains(df))
     n_convs = ch.count()
     drop = (
         conv_dedup_exact(df, chains=ch)
@@ -239,9 +236,7 @@ def conv_dedup_filter(df: DataFrame) -> tuple[DataFrame, dict]:
         .localCheckpoint(eager=True)
     )
     n_dropped = drop.count()
-    for rid, rdd in list(jsc.getPersistentRDDs().items()):
-        if rid in ch_ids:
-            rdd.unpersist(False)
+    release_rdds(df.sparkSession, ch_ids)
     return (
         df.join(drop, "conv_id", "left_anti"),
         {"n_convs": n_convs, "n_convs_dropped": n_dropped},

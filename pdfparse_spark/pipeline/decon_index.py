@@ -31,6 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifact import (
+    persisted,
+    read_batches,
+    read_stream,
+    start_foreach_batch,
+    write_batch,
+)
 from .dsir_model import DOC_INPUT_SCHEMA, _toks
 from .textops import _DECON_JACC_TAU, _FIVEGRAMS, _SHINGLES
 
@@ -58,16 +65,13 @@ def build_decon_index(
     Scale: one pass over the benchmark corpus (tiny), two doc-keyed
     explodes, one distinct; the persisted tables are what every later job
     broadcasts, so build cost is paid once per eval-suite release."""
-    arr = _with_arr(bench_docs).persist()
-    try:
+    with persisted(_with_arr(bench_docs)) as arr:
         g5 = arr.select(F.explode(F.expr(_FIVEGRAMS)).alias("sh")).distinct()
         sh3 = arr.select(
             F.col("doc_id").alias("bench_id"), F.explode(F.expr(_SHINGLES)).alias("sh")
         )
         g5.write.mode("overwrite").parquet(index_dir + "/grams5")
         sh3.write.mode("overwrite").parquet(index_dir + "/sh3")
-    finally:
-        arr.unpersist()
     sizes = (
         spark.read.parquet(index_dir + "/sh3")
         .groupBy("bench_id")
@@ -135,15 +139,17 @@ def _score(
     )
 
 
-def _read_index(spark: SparkSession, index_dir: str):
-    # persist (not localCheckpoint): the benchmark-sized tables pin in the
-    # block cache across a stream's batches but stay EVICTABLE and carry
-    # their parquet lineage, so memory pressure or loss just re-reads —
-    # no unreleasable checkpoint blocks accumulate in a borrowed session
-    g5 = spark.read.parquet(index_dir + "/grams5").persist()
-    sh3 = spark.read.parquet(index_dir + "/sh3").persist()
-    sizes = spark.read.parquet(index_dir + "/sizes").persist()
-    return g5, sh3, sizes
+def _read_index(spark: SparkSession, index_dir: str, persist: bool = False):
+    # the stream face persists (not localCheckpoints): the benchmark-sized
+    # tables pin in the block cache across a stream's batches but stay
+    # EVICTABLE and carry their parquet lineage, so memory pressure or
+    # loss just re-reads — no unreleasable checkpoint blocks accumulate in
+    # a borrowed session.  The batch face reads them plain: it returns a
+    # lazy frame, so it could never release a persist it made.
+    tables = [
+        spark.read.parquet(index_dir + "/" + name) for name in ("grams5", "sh3", "sizes")
+    ]
+    return [t.persist() for t in tables] if persist else tables
 
 
 def score_with_decon_index(
@@ -180,38 +186,18 @@ def start_stream_decon(
     row-local given the static index, so a replayed batch overwrites its
     own ``batch=<id>`` dir with identical rows (replay-stable with no
     cross-batch state — the ``start_stream_dsir_score`` discipline)."""
-    g5, sh3, sizes = _read_index(spark, index_dir)
-
-    stream = (
-        spark.readStream.schema(DOC_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    g5, sh3, sizes = _read_index(spark, index_dir, persist=True)
+    stream = read_stream(spark, DOC_INPUT_SCHEMA, input_dir, max_files_per_trigger)
 
     def _score_batch(batch_df, batch_id: int) -> None:
         # persist THIS batch's tokenized frame (both legs consume it) and
-        # release exactly it after the write: Dataset.unpersist on the
-        # handle we persisted frees precisely our own blocks — unlike a
-        # getPersistentRDDs-diff sweep, which would race a concurrent
-        # job's checkpoints in a shared session — and a long-lived stream
+        # release exactly it after the write, so a long-lived stream
         # accumulates nothing batch over batch
-        arr = _with_arr(batch_df).persist()
-        try:
-            _score(arr, g5, sh3, sizes, tau=tau).write.mode("overwrite").parquet(
-                "%s/batch=%d" % (out_dir, batch_id)
-            )
-        finally:
-            arr.unpersist()
+        with persisted(_with_arr(batch_df)) as arr:
+            write_batch(_score(arr, g5, sh3, sizes, tau=tau), out_dir, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, _score_batch, checkpoint_dir, available_now)
 
 
 def read_decon_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch=*")
+    return read_batches(spark, out_dir)

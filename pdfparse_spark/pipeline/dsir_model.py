@@ -41,6 +41,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifact import read_meta, read_stream, start_foreach_batch, write_meta
 from .textops import _DSIR_PROD_BUCKETS, _TOKS_T, _dsir_fb, _dsir_score
 
 __all__ = [
@@ -53,6 +54,11 @@ __all__ = [
 # prefix); stored in meta so a future feature-space change cannot be
 # silently applied to a model trained under the old one
 _FEAT_TAG = "dsir-uni+bi-md5"
+_TAG_MISMATCH = (
+    "model at %r was trained under feature space %r; this build "
+    "scores with %r — rescoring would be silently wrong, retrain "
+    "the model"
+)
 
 # one schema definition for document-stream sources (mirrors the
 # documents parquet table so tests and pipelines can feed slices of it)
@@ -104,24 +110,18 @@ def train_dsir_model(
         .write.mode("overwrite")
         .parquet(out_dir + "/lm")
     )
-    (
-        spark.createDataFrame(
-            [(buckets, tt, tr, _FEAT_TAG)],
-            "buckets int, tt long, tr long, feat_tag string",
-        ).coalesce(1).write.mode("overwrite").parquet(out_dir + "/meta")
+    write_meta(
+        spark,
+        out_dir,
+        (buckets, tt, tr, _FEAT_TAG),
+        "buckets int, tt long, tr long, feat_tag string",
     )
     n_seen = spark.read.parquet(out_dir + "/lm").count()
     return {"buckets": buckets, "n_buckets_seen": n_seen, "tt": tt, "tr": tr}
 
 
 def _read_model(spark: SparkSession, model_dir: str):
-    meta = spark.read.parquet(model_dir + "/meta").collect()[0]
-    if meta["feat_tag"] != _FEAT_TAG:
-        raise ValueError(
-            "model at %r was trained under feature space %r; this build "
-            "scores with %r — rescoring would be silently wrong, retrain "
-            "the model" % (model_dir, meta["feat_tag"], _FEAT_TAG)
-        )
+    meta = read_meta(spark, model_dir, expect_tag=_FEAT_TAG, mismatch=_TAG_MISMATCH)
     lm = spark.read.parquet(model_dir + "/lm").select("b", "lam")
     return meta, lm
 
@@ -166,25 +166,13 @@ def start_stream_dsir_score(
     meta, lm = _read_model(spark, model_dir)
     lm = lm.localCheckpoint(eager=True)  # pin the tiny table in memory
     buckets = int(meta["buckets"])
+    stream = read_stream(spark, DOC_INPUT_SCHEMA, input_dir, max_files_per_trigger)
 
-    stream = (
-        spark.readStream.schema(DOC_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def _score_batch(batch_df, batch_id: int) -> None:
+    def _score_batch(batch_df, batch_id: int) -> DataFrame:
         toks = _toks(batch_df, "text")
         fb = _dsir_fb(toks, F.lit(False), buckets=buckets).select("doc_id", "b")
-        _dsir_score(toks, fb, lm).write.mode("overwrite").parquet(
-            "%s/batch=%d" % (out_dir, batch_id)
-        )
+        return _dsir_score(toks, fb, lm)
 
-    writer = (
-        stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return start_foreach_batch(
+        stream, _score_batch, checkpoint_dir, available_now, out_dir=out_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -46,6 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifact import (
+    read_meta,
+    read_stream,
+    start_foreach_batch,
+    write_meta,
+    write_rows,
+)
 from .textops import (
     _LR_ITERS,
     _LR_LABEL,
@@ -66,6 +73,11 @@ __all__ = [
 # Stored in meta so a future change cannot be silently applied to a model
 # trained under the old convention.
 _FEAT_TAG = "embed-lr-rawfold-v1"
+_TAG_MISMATCH = (
+    "model at %r was trained under scoring convention %r; this "
+    "build scores with %r — applying it would be silently wrong, "
+    "retrain the model"
+)
 
 # one schema definition for embedding-stream sources (mirrors the
 # embeddings parquet table so tests and pipelines can feed slices of it)
@@ -104,38 +116,27 @@ def train_lr_model(
     bias = b
     for wj, mj, sj in zip(w, mu, sd):
         bias -= wj * mj / sj
-    (
-        spark.createDataFrame(
-            [
-                (j, float(w_raw[j]), float(mu[j]), float(sd[j]))
-                for j in range(dim)
-            ],
-            "pos int, w double, mu double, sd double",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/weights")
+    write_rows(
+        spark,
+        [(j, float(w_raw[j]), float(mu[j]), float(sd[j])) for j in range(dim)],
+        "pos int, w double, mu double, sd double",
+        out_dir + "/weights",
     )
     final_loss = trace[-1][1] if trace else float("nan")
-    (
-        spark.createDataFrame(
-            [
-                (
-                    dim,
-                    float(bias),
-                    int(target_label),
-                    int(iters),
-                    float(rate),
-                    float(final_loss),
-                    _FEAT_TAG,
-                )
-            ],
-            "dim int, bias double, target_label int, iters int, "
-            "rate double, final_loss double, feat_tag string",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(out_dir + "/meta")
+    write_meta(
+        spark,
+        out_dir,
+        (
+            dim,
+            float(bias),
+            int(target_label),
+            int(iters),
+            float(rate),
+            float(final_loss),
+            _FEAT_TAG,
+        ),
+        "dim int, bias double, target_label int, iters int, "
+        "rate double, final_loss double, feat_tag string",
     )
     return {
         "dim": dim,
@@ -146,13 +147,7 @@ def train_lr_model(
 
 
 def _read_model(spark: SparkSession, model_dir: str):
-    meta = spark.read.parquet(model_dir + "/meta").collect()[0]
-    if meta["feat_tag"] != _FEAT_TAG:
-        raise ValueError(
-            "model at %r was trained under scoring convention %r; this "
-            "build scores with %r — applying it would be silently wrong, "
-            "retrain the model" % (model_dir, meta["feat_tag"], _FEAT_TAG)
-        )
+    meta = read_meta(spark, model_dir, expect_tag=_FEAT_TAG, mismatch=_TAG_MISMATCH)
     rows = (
         spark.read.parquet(model_dir + "/weights")
         .orderBy("pos")
@@ -217,23 +212,11 @@ def start_stream_lr_score(
     rows (replay-stable without any probe/exclusion protocol)."""
     meta, w = _read_model(spark, model_dir)  # once; fail fast BEFORE start
     dim, bias = int(meta["dim"]), float(meta["bias"])
-
-    stream = (
-        spark.readStream.schema(EMB_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = read_stream(spark, EMB_INPUT_SCHEMA, input_dir, max_files_per_trigger)
+    return start_foreach_batch(
+        stream,
+        lambda batch_df, _: _score_frame(batch_df, dim, bias, w, "embedding"),
+        checkpoint_dir,
+        available_now,
+        out_dir=out_dir,
     )
-
-    def _score_batch(batch_df, batch_id: int) -> None:
-        _score_frame(batch_df, dim, bias, w, "embedding").write.mode(
-            "overwrite"
-        ).parquet("%s/batch=%d" % (out_dir, batch_id))
-
-    writer = (
-        stream.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .artifact import path_exists
 from .extract import run_extraction, run_extraction_dedup
 
 __all__ = ["bucket_of", "run_resumable", "read_output", "read_ledger"]
@@ -43,15 +44,8 @@ def bucket_of(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame | None:
-    if not _path_exists(spark, ledger_dir):
+    if not path_exists(spark, ledger_dir):
         return None  # first run: no ledger yet
     # mergeSchema: a ledger spanning the wave-column upgrade holds files
     # with and without 'wave'; without the merge, which schema wins depends
@@ -70,7 +64,7 @@ def read_output(spark: SparkSession, out_dir: str, ledger_dir: str | None = None
     ``buckets_per_wave``, the orphan dir's buckets eventually commit via a
     differently-composed wave path — a bucket-only semi-join would
     re-admit the orphan rows and duplicate turns."""
-    if not _path_exists(spark, out_dir):
+    if not path_exists(spark, out_dir):
         # truly fresh run: nothing written yet.  An empty frame with the
         # standard output schema (+ lineage columns) — reading the wave
         # glob here would raise PATH_NOT_FOUND before the documented

@@ -33,6 +33,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from .artifact import persistent_rdd_ids, release_rdds_since
 from .session import get_spark
 from .textops import (
     _curate_parts,
@@ -86,7 +87,9 @@ def main(argv: list[str] | None = None) -> int:
         "training payload (clean_text) instead of the raw text — the "
         "operational face of dedup_span_strip (Lee et al.): tokens "
         "covered by a cross-document duplicated n-gram are removed, "
-        "coverage computed over the FULL corpus before any filter",
+        "coverage computed over the FULL corpus before any filter (with "
+        "--holdout-dir: over the train split only — held-out docs never "
+        "count toward a span's duplication)",
     )
     p.add_argument(
         "--holdout-dir",
@@ -120,8 +123,8 @@ def main(argv: list[str] | None = None) -> int:
     # snapshot the persisted-RDD ids NOW: localCheckpoint blocks (the
     # shared tokenized frame and any checkpoints the gate ops create) are
     # RDD-level and Dataset.unpersist() cannot free them — at the end we
-    # release exactly the RDDs this run added, never a borrowed session's
-    pre_persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    # release the RDDs this run added, never a borrowed session's
+    pre_persisted = persistent_rdd_ids(spark)
 
     d = _docs(spark, args.sf_dir)
     n_in = d.count()
@@ -259,7 +262,9 @@ def main(argv: list[str] | None = None) -> int:
         # body) over the SHARED tokenized checkpoint, applied to the
         # curated survivors: the cleaned alnum-token stream becomes the
         # training payload (clean_text) — lossy wrt punctuation/case by
-        # design, it is exactly the stream dedup_span_strip sha-verifies
+        # design, it is exactly the stream dedup_span_strip sha-verifies.
+        # Under --holdout-dir docs_tok is already anti-joined to the train
+        # split, so coverage is train-split-only there.
         from .textops import _dup_gram_cov
 
         toks_arr = docs_tok.select("doc_id", "arr")
@@ -320,16 +325,11 @@ def main(argv: list[str] | None = None) -> int:
     dropped_dup.unpersist()
     for ok in extra_ok:
         ok.unpersist()  # consumed lazily by the ranked write above
-    # release the corpus-sized tokenized checkpoint (and every other
-    # localCheckpoint this run created): Dataset.unpersist() is a no-op
-    # for localCheckpoint blocks — they are RDD-level, so free them at
-    # the RDD level, restricted to ids not persisted before this run
-    # (inside a borrowed long-lived session each CLI run would otherwise
-    # leak one full (text, arr) copy of the corpus until the session dies)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid, rdd in list(jmap.items()):
-        if rid not in pre_persisted:
-            rdd.unpersist(False)
+    # release the corpus-sized tokenized checkpoint and every other
+    # localCheckpoint this run created (inside a borrowed long-lived
+    # session each CLI run would otherwise leak one full (text, arr) copy
+    # of the corpus until the session dies)
+    release_rdds_since(spark, pre_persisted)
     wall = time.monotonic() - t0
     print(
         json.dumps(

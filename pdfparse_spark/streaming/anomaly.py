@@ -35,6 +35,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 __all__ = ["EVENTS_SCHEMA", "MOMENTS_SCHEMA", "with_anomaly_units", "start_anomaly_stream"]
 
+from ..pipeline.artifact import read_stream, start_parquet_sink
 from ..pipeline.relational import _ANOM_SCALE as _SCALE  # one rounding scale, no drift
 
 EVENTS_SCHEMA = T.StructType(
@@ -123,10 +124,7 @@ def start_anomaly_stream(
     touched event_type; the max-n row per type in the sink is the live
     moment set.  Scoring any event against it is the stateless z
     predicate the batch op applies — no replay needed."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
+    stream = read_stream(spark, EVENTS_SCHEMA, input_dir, max_files_per_trigger)
     moments = (
         with_anomaly_units(stream)
         .groupBy("event_type")
@@ -138,12 +136,4 @@ def start_anomaly_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    writer = (
-        moments.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(moments, out_dir, checkpoint_dir, available_now)

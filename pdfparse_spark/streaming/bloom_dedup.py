@@ -36,8 +36,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
+from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
 from ..pipeline.transcripts import INPUT_SCHEMA
 
 __all__ = ["bloom_pos_cols", "start_stream_bloom_dedup", "read_bloom_verdicts"]
@@ -150,42 +151,24 @@ def start_stream_bloom_dedup(
     band TTL does; ``"auto"`` = None for an availableNow backfill (pending
     timers would hold the finite query open), 60 for a long-lived stream.
     """
-    if state_ttl_minutes == "auto":
-        state_ttl_minutes = None if available_now else 60
     if bits_per_group % 64:
         raise ValueError("bits_per_group must be a multiple of 64")
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_stream(spark, INPUT_SCHEMA, input_dir, max_files_per_trigger)
     narrow = (
         bloom_pos_cols(stream, n_groups=n_groups, bits_per_group=bits_per_group)
         .filter(F.col("text").isNotNull())
         .withColumn("id", F.concat_ws("#", "conv_id", F.col("turn_idx").cast("string")))
         .select("id", "ts", "grp", "pos")
     )
-    ttl_ms = 0 if state_ttl_minutes is None else state_ttl_minutes * 60_000
+    ttl_ms, timeout = state_timeout(state_ttl_minutes, available_now)
     verdicts = narrow.groupBy("grp").applyInPandasWithState(
         _make_bloom_updater(bits_per_group, ttl_ms),
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms == 0
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=timeout,
     )
-    writer = (
-        verdicts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(verdicts, out_dir, checkpoint_dir, available_now)
 
 
 def read_bloom_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.artifact import read_stream, start_parquet_sink
 from ..pipeline.transcripts import INPUT_SCHEMA
 
 __all__ = ["dedup_stream", "start_stream_dedup"]
@@ -51,18 +52,6 @@ def start_stream_dedup(
     available_now: bool = True,
 ):
     """Stream transcript parquet drops through watermarked exact dedup."""
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_stream(spark, INPUT_SCHEMA, input_dir, max_files_per_trigger)
     deduped = dedup_stream(stream, watermark_delay)
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(deduped, out_dir, checkpoint_dir, available_now)

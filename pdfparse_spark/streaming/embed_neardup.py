@@ -39,8 +39,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
+from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
 from ..pipeline.textops import (
     _EMB_DIM,
     _SIGNLSH_BANDS,
@@ -206,13 +207,7 @@ def start_stream_embed_neardup(
     ``"auto"`` resolves to 60 minutes for a long-running stream and to
     ``None`` for an availableNow backfill (pending timers would keep a
     finite backfill alive past the last batch)."""
-    if state_ttl_minutes == "auto":
-        state_ttl_minutes = None if available_now else 60
-    stream = (
-        spark.readStream.schema(EMBED_INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_stream(spark, EMBED_INPUT_SCHEMA, input_dir, max_files_per_trigger)
     banded = (
         signlsh_cols(stream)
         # dim guard: a short/long embedding would still hash (zip_with
@@ -220,27 +215,15 @@ def start_stream_embed_neardup(
         .filter(F.size("v") == _EMB_DIM)
         .select("vec_id", "v", "nrm", F.explode("bands").alias("band_key"))
     )
-    ttl_ms = 0 if state_ttl_minutes is None else state_ttl_minutes * 60_000
+    ttl_ms, timeout = state_timeout(state_ttl_minutes, available_now)
     pairs = banded.groupBy("band_key").applyInPandasWithState(
         _make_bucket_updater(state_cap, ttl_ms, _EMB_DIM),
         outputStructType=_PAIR_OUT_SCHEMA,
         stateStructType=_PAIR_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms == 0
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=timeout,
     )
-    writer = (
-        pairs.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(pairs, out_dir, checkpoint_dir, available_now)
 
 
 def read_embed_neardup(

@@ -38,8 +38,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
+from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
 from ..pipeline.textops import _MINHASH_PERMS, _LSH_BANDS, _SHINGLES, _TOKS_T
 from ..pipeline.transcripts import INPUT_SCHEMA
 
@@ -259,13 +260,7 @@ def start_stream_neardup(
     ``None`` for an availableNow backfill — pending timers would
     otherwise keep a finite backfill query alive past the last input
     batch."""
-    if state_ttl_minutes == "auto":
-        state_ttl_minutes = None if available_now else 60
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_stream(spark, INPUT_SCHEMA, input_dir, max_files_per_trigger)
     narrow = (
         minhash_cols(stream)
         .filter(F.col("has_sig"))
@@ -275,28 +270,15 @@ def start_stream_neardup(
     banded = _fence_sig_bands(narrow).select(
         "id", "ts", "sig", F.explode("bands").alias("band_key")
     )
-    ttl_ms = 0 if state_ttl_minutes is None else state_ttl_minutes * 60_000
+    ttl_ms, timeout = state_timeout(state_ttl_minutes, available_now)
     verdicts = banded.groupBy("band_key").applyInPandasWithState(
         _make_band_updater(state_cap, ttl_ms),
         outputStructType=_BAND_OUT_SCHEMA,
         stateStructType=_BAND_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms == 0
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=timeout,
     )
-
-    writer = (
-        verdicts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(verdicts, out_dir, checkpoint_dir, available_now)
 
 
 def read_neardup_verdicts(

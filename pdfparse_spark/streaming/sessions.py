@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.artifact import read_stream, start_parquet_sink
 from ..pipeline.extract import OUTPUT_SCHEMA
 
 __all__ = ["conv_sessions", "start_conv_sessions"]
@@ -66,18 +67,6 @@ def start_conv_sessions(
     windowed.py, the watermark advances BETWEEN micro-batches only, so
     backfills keep ``maxFilesPerTrigger=1``.
     """
-    stream = (
-        spark.readStream.schema(OUTPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(extracted_dir)
-    )
+    stream = read_stream(spark, OUTPUT_SCHEMA, extracted_dir, max_files_per_trigger)
     sessions = conv_sessions(stream, gap, watermark_delay)
-    writer = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(sessions, out_dir, checkpoint_dir, available_now)

@@ -22,8 +22,9 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
+from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
 from ..pipeline.extract import run_extraction
 from ..pipeline.transcripts import INPUT_SCHEMA
 
@@ -105,9 +106,9 @@ def start_conv_stats_stream(
     aggregation over the raw turns).  Default None keeps exact running
     totals (and lets availableNow backfills terminate — pending timers
     hold the query open past the last input batch)."""
-    stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
+    stream = read_stream(spark, INPUT_SCHEMA, input_dir)
     extracted = run_extraction(stream)
-    ttl_ms = 0 if state_ttl_minutes is None else state_ttl_minutes * 60_000
+    ttl_ms, timeout = state_timeout(state_ttl_minutes, available_now)
     stats = extracted.select(
         "conv_id", "n_chars", "parse_status"
     ).groupBy("conv_id").applyInPandasWithState(
@@ -115,18 +116,6 @@ def start_conv_stats_stream(
         outputStructType=CONV_STATS_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms == 0
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=timeout,
     )
-    writer = (
-        stats.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(stats, out_dir, checkpoint_dir, available_now)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.artifact import read_stream, start_parquet_sink
 from ..pipeline.extract import OUTPUT_SCHEMA
 
 __all__ = ["windowed_turn_stats", "start_windowed_stats"]
@@ -71,18 +72,6 @@ def start_windowed_stats(
     ``max_files_per_trigger`` defaults to 1: a single mega-batch over a
     backfill would emit nothing before the query drains.
     """
-    stream = (
-        spark.readStream.schema(OUTPUT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(extracted_dir)
-    )
+    stream = read_stream(spark, OUTPUT_SCHEMA, extracted_dir, max_files_per_trigger)
     stats = windowed_turn_stats(stream, window_duration, watermark_delay)
-    writer = (
-        stats.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_parquet_sink(stats, out_dir, checkpoint_dir, available_now)
