@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship pipeline: synthesize a deterministic
 transcript corpus (FIXTURES.md §1) carrying PDF/HTML/text payloads, run the
-classify → salt/repartition → mapInPandas extraction kernel, join against
+classify → salt/repartition → mapInArrow extraction kernel, join against
 the golden table, and return per-content-type match stats (plus a read of
 the driver's sf0.001 documents table as a relational sanity column).
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import subprocess
 import sys
@@ -35,6 +36,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CACHE = os.environ.get("PDFPARSE_BENCH_CACHE", "/tmp/pdfparse_bench")
 PARTITIONS = 128  # fixed across scaling legs: >= 4 x 32 and 16 x 8
+# recorded run_extraction turns/s at sf0.1, local[32] (BENCH/BASELINE.md)
+BASELINE_TURNS_PER_SEC = 20026
 
 # headline per-query bench set (run at SF_DIR); names resolve via __spark_entry__
 BENCH_QUERIES = [
@@ -269,15 +272,15 @@ def main() -> int:
         result["queries"]["extract_dedup"] = ext["extract_dedup_sec"]
     if "conv_dedup_sec" in ext:
         result["queries"]["conv_dedup"] = ext["conv_dedup_sec"]
-    if sf == 0.1 and args.cpus == 32:
+    if math.isclose(sf, 0.1) and args.cpus == 32:
         # self-document the recorded-baseline ratio (BENCH/BASELINE.md,
         # local[32] @ sf0.1) so a single record reads in context: the
         # host's absolute CPU speed drifts ±25% between windows (see
         # BASELINE.md), so a low ratio in one window is drift, not a
         # regression, unless it reproduces alongside the committed
         # good-window records
-        result["baseline_turns_per_sec"] = 20026
-        result["vs_baseline"] = round(ext["turns_per_sec"] / 20026, 4)
+        result["baseline_turns_per_sec"] = BASELINE_TURNS_PER_SEC
+        result["vs_baseline"] = round(ext["turns_per_sec"] / BASELINE_TURNS_PER_SEC, 4)
     if not args.extract_only:
         timings, warm = bench_queries(spark)
         result["queries"].update(timings)
@@ -713,7 +716,7 @@ def _write_baseline_md(legs: dict, eff_4_16: float, eff_8_32: float) -> None:
 Input: fixture corpus replicated x{legs[32]['turns'] // 160} ({legs[32]['turns']} turns,
 2 heavy 20-page FlateDecode PDFs + 4 small fixture PDFs + 6 HTML + 8 text
 turns per conversation), read from parquet; classify -> salted
-repartition(128) -> mapInPandas extraction; identical plan at every
+repartition(128) -> mapInArrow extraction; identical plan at every
 parallelism level; only the core count varies.
 
 | config | turns/sec | extract wall (s) |

@@ -1,10 +1,14 @@
-"""The extraction stage: classify → salt/repartition → mapInPandas kernel.
+"""The extraction stage: classify → salt/repartition → mapInArrow kernel.
 
 SURVEY.md §2 operators P8 (classify/route), P10 (skew salting), R12
 (vectorized kernel).  The kernel chain (P1–P7) runs entirely inside the
 Python worker on Arrow record batches — one JVM↔Python crossing per batch,
 never per row (BASELINE.json input_hint: "vectorized pandas/Arrow UDFs, no
-per-row Python").
+per-row Python"): the body reads ``text`` off the batch, passes the key
+columns through as the input Arrow arrays and builds every output column,
+``spans`` included, as a typed Arrow array.  No pandas frame and no per-row
+converter sits between the kernel and the JVM.  The body also installs the
+per-task zip-cache guard (pyworker.py) in its worker.
 
 Scale notes (the part Catalyst cannot do for us):
 - A 10k-turn conversation must not pin one task.  The kernel is per-turn
@@ -22,11 +26,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Iterable
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from . import pyworker
 
 __all__ = [
     "DEDUP_KERNEL_SCHEMA",
@@ -75,6 +82,8 @@ TELEMETRY_SCHEMA = T.StructType(
 
 
 _TURN_KEY_COLS = ("conv_id", "turn_idx", "role", "tool", "ts")
+_KERNEL_COLS = ("content_type", "extracted_text", "spans", "parse_status", "n_chars")
+_ARROW_TYPES = {f.name: to_arrow_type(f.dataType) for f in TELEMETRY_SCHEMA.fields}
 
 
 def make_extract_batch(
@@ -82,13 +91,19 @@ def make_extract_batch(
     telemetry: bool = False,
     key_cols: tuple[str, ...] = _TURN_KEY_COLS,
 ):
-    """mapInPandas body factory: one parameterized implementation for every
-    (layout device, telemetry, key-column) combination — the column-assembly
-    dict lives in exactly one place.  ``key_cols`` are the pass-through
-    identity columns (turn keys for the per-turn path, the content hash for
-    the distinct-payload path).  The kernel is imported lazily inside the
-    body so the module object is constructed once per (reused) Python worker
-    and the glyph/AFM tables stay warm.
+    """mapInArrow body factory: one parameterized implementation for every
+    (layout device, telemetry, key-column) combination — the column assembly
+    lives in exactly one place.  ``key_cols`` are the pass-through identity
+    columns (turn keys for the per-turn path, the content hash for the
+    distinct-payload path); they leave as the input Arrow arrays, untouched.
+    The kernel is imported lazily inside the body so the module object is
+    constructed once per (reused) Python worker and the glyph/AFM tables
+    stay warm.
+
+    Output columns are built as typed Arrow arrays from flat Python lists:
+    ``spans`` is one ``ListArray`` over a ``StructArray`` made from flat
+    offset/page/start/end lists, so no per-row dict is built and no per-row
+    converter runs on the way back to the JVM.
 
     ``telemetry=True`` also emits ``kernel_us`` — wall microseconds spent
     in the kernel per turn, measured at the call site inside the worker.
@@ -98,41 +113,50 @@ def make_extract_batch(
     per turn is noise next to the 0.1-50 ms kernel cost; telemetry stays
     opt-in only because the extra column changes the output schema.
     """
+    names = list(key_cols) + list(_KERNEL_COLS) + (["kernel_us"] if telemetry else [])
+    spans_type = _ARROW_TYPES["spans"]
+    span_fields = list(spans_type.value_type)
 
-    def extract_batch_body(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_batch_body(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pyworker.install()
         from time import perf_counter_ns
 
         from ..kernel.extract import extract_turn, get_device_factory
 
         factory = get_device_factory(device)
-        for pdf in batches:
-            ctypes, texts, spans_col, statuses, nchars = [], [], [], [], []
-            micros = []
-            for text in pdf["text"]:
+        for batch in batches:
+            ctypes, texts, statuses, nchars, micros = [], [], [], [], []
+            offsets, pages, starts, ends = [0], [], [], []
+            for text in batch.column("text").to_pylist():
                 t0 = perf_counter_ns()
                 ctype, extracted, spans, status = extract_turn(text, factory)
                 if telemetry:
                     micros.append((perf_counter_ns() - t0) // 1000)
                 ctypes.append(ctype)
                 texts.append(extracted)
-                spans_col.append(
-                    [{"page": p, "start": s, "end": e} for (p, s, e) in spans]
-                )
                 statuses.append(status)
                 nchars.append(len(extracted))
-            cols = {k: pdf[k] for k in key_cols}
-            cols.update(
-                {
-                    "content_type": ctypes,
-                    "extracted_text": texts,
-                    "spans": spans_col,
-                    "parse_status": statuses,
-                    "n_chars": nchars,
-                }
+                for p, s, e in spans:
+                    pages.append(p)
+                    starts.append(s)
+                    ends.append(e)
+                offsets.append(len(pages))
+            span_values = pa.StructArray.from_arrays(
+                [pa.array(v, pa.int32()) for v in (pages, starts, ends)],
+                fields=span_fields,
             )
+            cols = [batch.column(k) for k in key_cols] + [
+                pa.array(ctypes, _ARROW_TYPES["content_type"]),
+                pa.array(texts, _ARROW_TYPES["extracted_text"]),
+                pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()), span_values, type=spans_type
+                ),
+                pa.array(statuses, _ARROW_TYPES["parse_status"]),
+                pa.array(nchars, _ARROW_TYPES["n_chars"]),
+            ]
             if telemetry:
-                cols["kernel_us"] = pd.array(micros, dtype="int64")
-            yield pd.DataFrame(cols)
+                cols.append(pa.array(micros, _ARROW_TYPES["kernel_us"]))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return extract_batch_body
 
@@ -165,7 +189,7 @@ def run_extraction(
     """Full extraction stage over a transcripts DataFrame (input_hint schema).
 
     ``telemetry=True`` adds per-turn ``kernel_us`` and the executing
-    ``part_id`` (``spark_partition_id`` is stable here: mapInPandas is a
+    ``part_id`` (``spark_partition_id`` is stable here: mapInArrow is a
     narrow op, so the id is the salted-shuffle partition that did the work).
     Aggregate with :func:`pdfparse_spark.pipeline.metrics.straggler_stats`.
     """
@@ -176,11 +200,11 @@ def run_extraction(
     if telemetry:
         if device != "simple":
             raise ValueError("telemetry supports only the golden device")
-        out = df.mapInPandas(extract_batch_telemetry, schema=TELEMETRY_SCHEMA)
+        out = df.mapInArrow(extract_batch_telemetry, schema=TELEMETRY_SCHEMA)
         return out.withColumn("part_id", F.spark_partition_id())
     if device != "simple":
-        return df.mapInPandas(make_extract_batch(device), schema=OUTPUT_SCHEMA)
-    return df.mapInPandas(extract_batch, schema=OUTPUT_SCHEMA)
+        return df.mapInArrow(make_extract_batch(device), schema=OUTPUT_SCHEMA)
+    return df.mapInArrow(extract_batch, schema=OUTPUT_SCHEMA)
 
 
 def payload_key():
@@ -197,8 +221,7 @@ def payload_key():
 # distinct-payload batch body: input (payload_sha, text) → kernel columns
 DEDUP_KERNEL_SCHEMA = T.StructType(
     [T.StructField("payload_sha", T.StringType(), False)]
-    + [f for f in OUTPUT_SCHEMA.fields if f.name in
-       ("content_type", "extracted_text", "spans", "parse_status", "n_chars")]
+    + [f for f in OUTPUT_SCHEMA.fields if f.name in _KERNEL_COLS]
 )
 
 
@@ -270,6 +293,6 @@ def run_extraction_dedup(
     else:
         if num_partitions:
             uniq = uniq.repartition(num_partitions, F.col("payload_sha"))
-        extracted = uniq.mapInPandas(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
+        extracted = uniq.mapInArrow(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
     out = keyed.drop("text").join(extracted, "payload_sha", "left")
     return out.select(*[f.name for f in OUTPUT_SCHEMA.fields])

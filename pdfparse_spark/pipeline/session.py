@@ -6,8 +6,21 @@ Design notes (SURVEY.md §4):
 - ``spark.python.worker.reuse`` keeps glyph tables / AFM dicts warm across
   batches (module-level state survives in the reused worker).
 - AQE on for the relational shell (skew-join splitting, coalescing); the
-  mapInPandas stage is skew-proofed separately by explicit salting
+  mapInArrow stage is skew-proofed separately by explicit salting
   (extract.py) because AQE cannot split a skewed Python stage.
+- Worker reuse alone does not make a task cheap.  pyspark's worker runs
+  ``setup_spark_files`` at the start of EVERY task, which calls
+  ``importlib.invalidate_caches()``; on CPython 3.11 and 3.12 each
+  ``zipimporter`` then re-reads its archive's whole central directory at
+  once, and a worker holds ~16 of them over ``pyspark.zip`` (one per
+  package directory, ~1.3k entries each).  Each re-read costs ~8 ms on a
+  4-vCPU Xeon VM, so 0.13–0.40 s per task depending on host load.
+  CPython 3.13 made the re-read lazy.  ``pyworker.install()``, called
+  first thing in the extraction body, re-reads an archive only when its
+  mtime or size changed, so a reused worker pays once.  It is not a
+  session conf or a daemon module: ``--py-files`` deployments only put the
+  package on the worker's path per task, inside that same
+  ``setup_spark_files``.
 - On a real cluster this module is unchanged; only ``master`` and
   ``--py-files`` packaging differ (see README).
 """

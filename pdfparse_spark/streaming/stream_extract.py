@@ -2,7 +2,7 @@
 
 The batch pipeline's wave/ledger model (resume.py) is deliberately
 foreachBatch-shaped, so streaming ingestion is a thin wrapper: a file-source
-``readStream`` over transcript parquet drops, the SAME salted mapInPandas
+``readStream`` over transcript parquet drops, the SAME salted mapInArrow
 extraction per micro-batch, idempotent append keyed by ``batch_id``, and
 Spark's own streaming checkpoint for exactly-once source progress.
 
@@ -131,7 +131,7 @@ def start_stream_extraction_dedup(
             new = uniq
         if num_partitions:
             new = new.repartition(num_partitions, F.col("payload_sha"))
-        fresh = new.mapInPandas(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
+        fresh = new.mapInArrow(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
         write_batch(fresh, cache_root, batch_id)
         cache = (
             read_batches(spark, cache_root)

@@ -17,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 
 CASES = [
     (
-        "extraction stage (classify → salt → mapInPandas kernel)",
+        "extraction stage (classify → salt → mapInArrow kernel)",
         "flagship",
         "One narrow Python stage after one explicit salted Exchange; only the "
         "6 input columns are read (ReadSchema), and the fat `text` column "

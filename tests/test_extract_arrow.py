@@ -1,0 +1,109 @@
+"""Parity of the mapInArrow extraction body with the kernel run on the driver.
+
+Every output column of ``run_extraction`` (and ``run_extraction_dedup``)
+must equal ``kernel.extract.extract_turn`` applied to the same text, and the
+key columns must come back exactly as they went in.
+"""
+
+from __future__ import annotations
+
+import base64
+import datetime
+
+import pytest
+
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+@pytest.fixture(scope="module")
+def turns(spark):
+    from pdfparse_spark.fixtures.html_gen import build_html_fixtures
+    from pdfparse_spark.fixtures.pdf_gen import build_pdf_fixtures
+    from pdfparse_spark.pipeline.transcripts import INPUT_SCHEMA
+
+    pdfs = {fx.name: fx for fx in build_pdf_fixtures()}
+    texts = [
+        "pdfb64:" + base64.b64encode(pdfs[name].data).decode("ascii")
+        for name in ("pdf_multipage", "pdf_multiline", "pdf_unsupported_filter")
+    ] + [build_html_fixtures()[0].html, "a plain text turn", None]
+    ts0 = datetime.datetime(2024, 5, 1, 12, 0, 0)
+    rows = [
+        (
+            "conv%d" % (i % 2),
+            i,
+            "user" if i % 3 else None,
+            text,
+            None if i % 2 else "browser",
+            ts0 + datetime.timedelta(seconds=i),
+        )
+        for i, text in enumerate(texts)
+    ]
+    # role is non-nullable in INPUT_SCHEMA; relax it so NULL roles pass through
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in INPUT_SCHEMA])
+    return spark.createDataFrame(rows, schema), rows
+
+
+def _expected(rows):
+    from pdfparse_spark.kernel.extract import extract_turn
+
+    out = {}
+    for conv_id, turn_idx, role, text, tool, ts in rows:
+        ctype, extracted, spans, status = extract_turn(text)
+        out[(conv_id, turn_idx)] = {
+            "role": role,
+            "tool": tool,
+            "ts": ts,
+            "content_type": ctype,
+            "extracted_text": extracted,
+            "spans": [tuple(s) for s in spans],
+            "parse_status": status,
+            "n_chars": len(extracted),
+        }
+    return out
+
+
+def _actual(df):
+    out = {}
+    for r in df.collect():
+        d = r.asDict()
+        key = (d.pop("conv_id"), d.pop("turn_idx"))
+        d["spans"] = [(s["page"], s["start"], s["end"]) for s in d["spans"]]
+        out[key] = d
+    return out
+
+
+def test_arrow_body_matches_driver_kernel(spark, turns):
+    from pdfparse_spark.pipeline.extract import OUTPUT_SCHEMA, run_extraction
+
+    df, rows = turns
+    expected = _expected(rows)
+    assert {e["content_type"] for e in expected.values()} == {"pdf", "html", "text"}
+    assert any(len(e["spans"]) > 1 for e in expected.values())  # multi-page
+    assert "unsupported_filter" in {e["parse_status"] for e in expected.values()}
+
+    out = run_extraction(df, num_partitions=3, salt=4)
+    assert out.schema == OUTPUT_SCHEMA
+    assert _actual(out) == expected
+
+
+def test_arrow_body_telemetry_adds_only_kernel_us(spark, turns):
+    from pdfparse_spark.pipeline.extract import TELEMETRY_SCHEMA, run_extraction
+
+    df, rows = turns
+    out = run_extraction(df, num_partitions=3, salt=4, telemetry=True)
+    assert out.schema[: len(TELEMETRY_SCHEMA)] == TELEMETRY_SCHEMA
+    assert dict(out.dtypes)["kernel_us"] == "bigint"
+    assert out.filter(F.col("kernel_us") < 0).count() == 0
+    actual = _actual(out.drop("kernel_us", "part_id"))
+    assert actual == _expected(rows)
+
+
+def test_arrow_dedup_body_matches_plain_path(spark, turns):
+    from pdfparse_spark.pipeline.extract import run_extraction_dedup
+
+    df, rows = turns
+    dup = df.unionByName(df.withColumn("conv_id", F.concat(F.col("conv_id"), F.lit("b"))))
+    expected = _expected(rows)
+    expected.update({(c + "b", i): v for (c, i), v in list(expected.items())})
+    assert _actual(run_extraction_dedup(dup, num_partitions=2)) == expected
