@@ -97,7 +97,7 @@ def _extract_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the conv-unique prose turns play real content) and must be stripped
     with surviving lines intact in order.  The cross-document complement
     to the per-document DOM heuristic the kernel already applies."""
-    from pdfparse_spark.pipeline.textops import boilerplate_strip
+    from pdfparse_spark.pipeline.textdedup import boilerplate_strip
 
     extracted, _ = _extract_corpus(spark)
     cleaned = boilerplate_strip(
@@ -397,94 +397,112 @@ def _extract_device_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Insertion order is deliberate: the driver's harness checks queries
-    in order under a bounded budget (round 2 recorded exactly the first 50
-    of 59), so the extraction gates — the north-rule invariant — and the
-    pandas-UDF / multimodal surfaces it never reached come FIRST, and the
-    simplest relational scaffolding ops sit at the very end, where they
-    lose the least if the budget caps the run (each is also pinned by
-    pytest and the committed tools/check_oracle.py full sweep)."""
-    from pdfparse_spark.pipeline import multimodal, pandas_udfs, relational, textops
+# The operators this module defines itself: the extraction gates over the
+# synthesized transcript corpus, which no pipeline family owns.
+_ENTRY_QUERIES = {
+    "extract_transcripts": _extract_transcripts,
+    "extract_match_golden": _extract_match_golden,
+    "extract_turn_offsets": _extract_turn_offsets,
+    "extract_conv_reassembly": _extract_conv_reassembly,
+    "extract_split_parity": _extract_split_parity,
+    "extract_device_variants": _extract_device_variants,
+    "extract_line_dedup": _extract_line_dedup,
+    "extract_dedup_parity": _extract_dedup_parity,
+    "conv_dedup": _conv_dedup,
+}
 
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    q["extract_transcripts"] = _extract_transcripts
-    q["extract_match_golden"] = _extract_match_golden
-    q["extract_turn_offsets"] = _extract_turn_offsets
-    q["extract_conv_reassembly"] = _extract_conv_reassembly
-    q["extract_split_parity"] = _extract_split_parity
-    q["extract_device_variants"] = _extract_device_variants
-    q["text_tokens_vectorized"] = pandas_udfs.text_tokens_vectorized
-    q.update(multimodal.QUERIES)
-    # Slots 11-50 hold every remaining HASH-VERIFIABLE (oracled) query the
-    # budget can reach, plus dedup_minhash_lsh as the flagship sketch op;
-    # rows-only ops gain nothing from a driver slot beyond a row count, so
-    # (except the extraction gates above — the north-rule invariant — and
-    # the flagship) they sit at 51+, pinned by pytest + the committed
-    # tools/check_oracle.py sweep.  The simplest relational scaffolding
-    # ops sit at the very end, where they lose the least.
-    rows_only_textops = sorted(textops.ROWS_ONLY - {"dedup_minhash_lsh"})
-    for k, v in textops.QUERIES.items():
-        if (
-            k not in textops.ROWS_ONLY and k not in textops.LATE_ORACLED
-        ) or k == "dedup_minhash_lsh":
-            q[k] = v
-    rows_only_relational = sorted(relational.ROWS_ONLY)
-    tail = [
-        # hopping_window yields its gate slot to corpus_curate_dsir (r5):
-        # tumbling + session keep the window family hash-verified in the
-        # 50-slot budget, and hopping stays oracled in the local sweep
-        "events_hopping_window",
-        "text_ngrams",
-        "r6_order_window",
-        "r14_event_users",
-        "r13_status_reassembly",
-        "r15_set_ops",
-        "r11_string_funcs",
-        "r8_union_tagged",
-        "r7_distinct_flags",
-        "r2_filter",
-        "r1_projection",
-    ]
-    for k, v in relational.QUERIES.items():
-        if k not in tail and k not in rows_only_relational:
-            q[k] = v
-    q["text_tfidf_topk"] = textops.text_tfidf_topk
-    q["docs_pps_sample"] = textops.docs_pps_sample
-    q["events_retention"] = relational.events_retention
-    q["docs_token_chunks"] = textops.docs_token_chunks
-    q["docs_mix_rebalance"] = textops.docs_mix_rebalance
-    q["events_anomaly"] = relational.events_anomaly
-    # --- position 51+: rows-only (sketch / iterative / extraction-corpus) ---
-    # plus the LATE_ORACLED ops added after the r5 gate composition froze:
-    # hash-verified in the committed local sweep, not in the driver window
-    for k in sorted(textops.LATE_ORACLED):
-        q[k] = textops.QUERIES[k]
-    for k in rows_only_textops:
-        q[k] = textops.QUERIES[k]
-    for k in rows_only_relational:
-        q[k] = relational.QUERIES[k]
-    q["sim_ann_ivf_trained"] = textops.sim_ann_ivf_trained
-    q["extract_line_dedup"] = _extract_line_dedup
-    q["extract_dedup_parity"] = _extract_dedup_parity
-    q["conv_dedup"] = _conv_dedup
-    q["train_embed_lr"] = textops.train_embed_lr
-    q["embed_pca"] = textops.embed_pca
-    for k in tail:
-        q[k] = relational.QUERIES[k]
-    return q
+# The correctness gate checks queries in this order under a bounded budget
+# (round 2 recorded exactly the first 50 of 59), so the order is the one
+# deliberate, pinned list (tests/test_pipeline_spark.py holds it equal to
+# the committed CORRECTNESS_LOCAL sweep).  Every query a family registers
+# appears here exactly once.
+QUERY_ORDER = (
+    # the extraction gates — the north-rule invariant — then the pandas-UDF
+    # and multimodal surfaces the gate's budget never reached in round 2
+    "extract_transcripts", "extract_match_golden", "extract_turn_offsets",
+    "extract_conv_reassembly", "extract_split_parity",
+    "extract_device_variants", "text_tokens_vectorized", "mm_decode_meta",
+    "mm_pipeline", "mm_audio_chunks",
+    # slots 11-50: every hash-verifiable (oracled) query the budget reaches,
+    # plus dedup_minhash_lsh as the flagship sketch op; rows-only ops gain
+    # nothing from a gate slot beyond a row count
+    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash_lsh", "text_langid",
+    "text_quality", "text_tokens", "text_fingerprint", "text_pii_redact",
+    "text_length_stats", "dedup_keep_best", "sim_cosine_topk", "sim_ann_lsh",
+    "sim_ann_ivf", "dedup_embedding_cosine", "dedup_semantic",
+    "text_bpe_pairs", "text_perplexity", "text_perplexity_bigram",
+    "embed_label_stats", "embed_quality_score", "text_gopher_quality",
+    "decontaminate_ngram", "dedup_span_ngrams", "dedup_span_strip",
+    "docs_dsir_weights", "docs_pack_bins", "docs_global_shuffle",
+    "dedup_clusters", "dedup_cluster_keep_best", "corpus_curate",
+    "corpus_curate_full", "corpus_curate_dsir", "q1_pricing_summary",
+    "q3_top_orders", "q5_revenue_by_nation", "r4_customers_no_orders",
+    "events_sessionize", "events_session_window", "events_tumbling_window",
+    "events_asof_join",
+    # 51+: the rest of the r5 gate composition, then the oracled ops added
+    # after it froze (hash-verified in the committed local sweep)
+    "events_rollup", "events_pivot", "r11_json_extract", "events_funnel",
+    "text_tfidf_topk", "docs_pps_sample", "events_retention",
+    "docs_token_chunks", "docs_mix_rebalance", "events_anomaly",
+    "corpus_curate_decon", "decontaminate_jaccard", "docs_curriculum_order",
+    "docs_repeat_order", "docs_repeat_plan", "docs_split_holdout",
+    # rows-only: sketch hash families, iterative loops, the extraction corpus
+    "dedup_bloom_prior", "dedup_minhash_clusters", "dedup_semantic_trained",
+    "dedup_simhash", "embed_kmeans", "sim_ann_ivfpq", "text_bpe_encode",
+    "text_bpe_encode_trained", "text_length_stats_approx", "train_bpe_merges",
+    "docs_stratified_sample", "events_approx_users", "sim_ann_ivf_trained",
+    "extract_line_dedup", "extract_dedup_parity", "conv_dedup",
+    "train_embed_lr", "embed_pca",
+    # the simplest relational scaffolding last, where a capped run loses the
+    # least; hopping_window yielded its gate slot to corpus_curate_dsir (r5)
+    "events_hopping_window", "text_ngrams", "r6_order_window",
+    "r14_event_users", "r13_status_reassembly", "r15_set_ops",
+    "r11_string_funcs", "r8_union_tagged", "r7_distinct_flags", "r2_filter",
+    "r1_projection",
+)
+
+
+def _families():
+    """The operator-family modules, each with its own QUERIES and ORACLES."""
+    from pdfparse_spark.pipeline import (
+        ann_index,
+        bloom_index,
+        curate,
+        decon_index,
+        docorder,
+        dsir_model,
+        embed,
+        lr_model,
+        multimodal,
+        pandas_udfs,
+        relational,
+        textdedup,
+        textquality,
+    )
+
+    return (
+        ann_index, bloom_index, curate, decon_index, docorder, dsir_model,
+        embed, lr_model, multimodal, pandas_udfs, relational, textdedup,
+        textquality,
+    )
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every operator, in QUERY_ORDER: the entry's own extraction gates
+    plus each family's QUERIES."""
+    known = dict(_ENTRY_QUERIES)
+    for fam in _families():
+        known.update(fam.QUERIES)
+    return {name: known[name] for name in QUERY_ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    from pdfparse_spark.pipeline import multimodal, relational, textops
-
+    """DuckDB oracle SQL per hash-verifiable query, merged from the
+    family ORACLES.  The extract_* kernels and the xxhash64-family
+    sketches (dedup_minhash_lsh, dedup_simhash, ...) are rows-only:
+    kernels aren't SQL-expressible and the hash family has no DuckDB
+    equivalent; both are pinned by pytest."""
     o: dict[str, str] = {}
-    o.update(relational.ORACLES)
-    o.update(textops.ORACLES)
-    o.update(multimodal.ORACLES)
-    # the pandas_udf surface must produce the SAME result as the JVM surface
-    o["text_tokens_vectorized"] = textops.ORACLES["text_tokens"]
-    # extract_* and the xxhash64-family sketches (dedup_minhash_lsh,
-    # dedup_simhash) are rows-only: kernels aren't SQL-expressible and the
-    # hash family has no DuckDB equivalent; both are pinned by pytest.
+    for fam in _families():
+        o.update(fam.ORACLES)
     return o

@@ -215,7 +215,7 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
     # in-memory driver trainer (one corpus shuffle for the vocab, then
     # incremental in-memory rounds — the gate query's 8 rounds exercise
     # the identical path, this leg shows the round count is not a cost)
-    from pdfparse_spark.pipeline.textops import train_bpe_merges
+    from pdfparse_spark.pipeline.textquality import train_bpe_merges
 
     t0 = time.monotonic()
     n = train_bpe_merges(spark, SF_DIR, n_merges=256).count()

@@ -11,6 +11,16 @@ Layering (SURVEY.md §2, §7):
                      tag-checked meta, Hadoop-FS table swaps, scoped
                      persist/checkpoint release, per-batch verdict reads
     metrics.py     — throughput / match-rate aggregates (R5,R14)
-    textops.py     — training-data ops: dedup, similarity, text analysis
+    corpus.py      — shared base of the operator families: tables,
+                     tokenize/shingle expressions, tokenized checkpoints
+    textdedup.py   — exact / shingle / sketch dedup, clusters, spans
+    textquality.py — quality, perplexity, tf-idf and BPE ops
+    embed.py       — embedding similarity, ANN, k-means, SemDeDup, PCA
+    docorder.py    — deterministic order, sampling, chunking, packing
+    curate.py      — the composed curation decision and its legs
+    dsir_model.py, lr_model.py, decon_index.py, bloom_index.py,
+    ann_index.py   — each a family's gate ops plus its persisted
+                     model/index lifecycle and streaming face
+    relational.py  — relational operators (R1–R21)
     multimodal.py  — binary-column plumbing with stubbed decoders
 """

@@ -251,7 +251,7 @@ def release_rdds(spark: SparkSession, ids: Iterable[int]) -> None:
 
 def release_rdds_since(spark: SparkSession, pre: frozenset[int]) -> None:
     """Release every RDD persisted since the :func:`persistent_rdd_ids`
-    snapshot ``pre``.  Still a sweep, by necessity: the textops gate ops
+    snapshot ``pre``.  Still a sweep, by necessity: the family gate ops
     create localCheckpoints internally and return no handle to them, so
     a whole-run caller (``run_curate``) can only find its blocks by id
     diff.  In a shared session this also frees blocks a concurrent job

@@ -1,16 +1,17 @@
 """Persisted embedding-quality classifier: train the logistic-regression
 model once, score any frame — or a live stream — from storage.
 
-Production model-based filtering (CCNet / RefinedWeb style) is not one
-query that trains its classifier in-plan (that is ``train_embed_lr``,
-the gate form) plus a hardwired scoring pass (``embed_quality_score``) —
-it is a TRAIN job run when labeled data changes, and many SCORE jobs
-that apply the stored model to each new crawl increment.  This module is
-that split, the fourth instance of the engine's index-lifecycle pattern
-(``ann_index.py``, ``bloom_index.py``, ``dsir_model.py``):
+The in-plan form trains the classifier inside the query:
+:func:`train_embed_lr` (the gate form — its training trace) plus the
+hardwired scoring pass ``embed.embed_quality_score``.  Production
+model-based filtering (CCNet / RefinedWeb style) is instead a TRAIN job
+run when labeled data changes, and many SCORE jobs that apply the stored
+model to each new crawl increment — the fourth instance of the engine's
+index-lifecycle pattern (``ann_index.py``, ``bloom_index.py``,
+``dsir_model.py``):
 
 - :func:`train_lr_model` runs the distributed full-batch GD loop
-  (``textops._lr_fit`` — one aggregate job per iteration, ~dim+2 doubles
+  (:func:`_lr_fit` — one aggregate job per iteration, ~dim+2 doubles
   to the driver) over any (vec_id, embedding, label) frame, folds the
   per-dimension standardization into RAW-space coefficients driver-side
   (w'_j = w_j/sd_j, b' = b − Σ w_j·mu_j/sd_j, plain left fold in index
@@ -34,7 +35,7 @@ that split, the fourth instance of the engine's index-lifecycle pattern
   scheme).
 
 Scale: training is ``iters`` map-side-combinable aggregate jobs over a
-persisted standardized projection (textops.train_embed_lr's plan); the
+persisted standardized projection (train_embed_lr's plan); the
 stored model is dim+1 doubles; scoring a 100 TB increment is one scan
 with an embarrassingly-parallel projection — no shuffle, no UDF, the
 weight vector is ONE array Literal (never a per-dim expression chain —
@@ -53,16 +54,10 @@ from .artifact import (
     write_meta,
     write_rows,
 )
-from .textops import (
-    _LR_ITERS,
-    _LR_LABEL,
-    _LR_RATE,
-    _embed_centered_stats,
-    _lr_fit,
-    _sql_darray,
-)
+from .corpus import read_emb
 
 __all__ = [
+    "train_embed_lr",
     "train_lr_model",
     "score_with_lr_model",
     "start_stream_lr_score",
@@ -78,6 +73,152 @@ _TAG_MISMATCH = (
     "build scores with %r — applying it would be silently wrong, "
     "retrain the model"
 )
+
+_LR_ITERS = 25
+_LR_RATE = 5.0
+_LR_LABEL = 0  # one-vs-rest target class
+
+
+def sql_darray(vals) -> str:
+    """A literal array<double> SQL fragment.  Catalyst constant-folds it to
+    ONE Literal node, so shipping a dim-sized vector per iteration costs
+    nothing at plan time (the sign-LSH hyperplane lesson: never build
+    dim-sized +/- expression chains — they blow the Janino 64KB codegen
+    limit and fall back to interpreted eval)."""
+    return "array(%s)" % ", ".join("%rD" % float(v) for v in vals)
+
+
+def embed_centered_stats(
+    spark: SparkSession, sf_dir: str, embs: DataFrame | None = None
+):
+    """Shared prep for the iterative embedding loops (LR standardization,
+    PCA centering): the cast projection plus per-dimension mean /
+    population variance and the row count — all from ONE posexplode
+    aggregate job (dim rows cross the driver).  A single definition so a
+    fix to NULL/ragged handling cannot desynchronize the two consumers.
+    ``embs`` overrides the default sf_dir table (the lr_model lifecycle
+    trains on caller-supplied frames — the docs= pattern)."""
+    e = (embs if embs is not None else read_emb(spark, sf_dir)).select(
+        "vec_id",
+        "label",
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("x0"),
+    )
+    rows = (
+        e.select(F.posexplode("x0").alias("pos", "xv"))
+        .groupBy("pos")
+        .agg(
+            F.avg("xv").alias("m"),
+            F.var_pop("xv").alias("var"),
+            F.count("*").alias("n"),
+        )
+        .collect()
+    )
+    dim = len(rows)
+    stats = {r["pos"]: (r["m"], r["var"]) for r in rows}
+    n = rows[0]["n"] if rows else 0
+    return e, dim, stats, n
+
+
+def train_embed_lr(
+    spark: SparkSession,
+    sf_dir: str,
+    iters: int = _LR_ITERS,
+    rate: float = _LR_RATE,
+) -> DataFrame:
+    """Distributed logistic-regression training (one-vs-rest on the
+    embeddings table's label column) by full-batch gradient descent — the
+    quality-classifier training loop of a curation pipeline, run INSIDE
+    the engine: each iteration is ONE aggregate job computing the loss,
+    the bias gradient, and all dim weight gradients as plain JVM sum
+    aggregates (no explode, no UDF — sum((p−y)·x[j]) per dimension), so
+    only ~dim+2 doubles ever cross the driver per iteration.
+
+    Features are per-dimension standardized first (one posexplode
+    aggregate; dim rows to the driver) — without it the raw embeddings
+    need ~100× more iterations to separate.  Returns the training trace
+    (iter, loss, avg p̂ on positives/negatives): rows-only gate —
+    iterative and transcendental (sigmoid/log), not SQL-expressible —
+    with convergence invariants pinned in pytest.
+
+    Scale: the standardization aggregate and each GD iteration are
+    map-side-combinable aggregates over a persisted projection; nothing
+    grows with n on the driver.  At 10¹² rows switch full-batch to
+    mini-batch by sampling a deterministic doc_id slice per iteration —
+    the job shape is unchanged.
+    """
+    e, dim, stats, _n = embed_centered_stats(spark, sf_dir)
+    b, w, trace, _mu, _sd = _lr_fit(e, dim, stats, iters, rate)
+    return spark.createDataFrame(
+        trace, "iter: int, loss: double, p_pos: double, p_neg: double"
+    )
+
+
+def _lr_fit(
+    e: DataFrame,
+    dim: int,
+    stats: dict,
+    iters: int,
+    rate: float,
+    target_label: int = _LR_LABEL,
+):
+    """The full-batch GD loop shared by :func:`train_embed_lr` (returns
+    the trace) and ``lr_model.train_lr_model`` (persists the artifact).
+    ``e`` is the (label, x0) projection from :func:`embed_centered_stats`;
+    returns (bias, weights, trace, mu, sd) in STANDARDIZED space —
+    callers that score raw vectors must fold mu/sd into the weights."""
+    mu = [stats[j][0] for j in range(dim)]
+    sd = [
+        v ** 0.5 if v is not None and v > 1e-24 else 1.0
+        for v in (stats[j][1] for j in range(dim))
+    ]
+    ex = e.select(
+        (F.col("label") == target_label).cast("double").alias("y"),
+        F.expr(
+            f"zip_with(zip_with(x0, {sql_darray(mu)}, (a, m) -> a - m), "
+            f"{sql_darray(sd)}, (c, s) -> c / s)"
+        ).alias("x"),
+    ).persist()
+    try:
+        w = [0.0] * dim
+        b = 0.0
+        trace = []
+        n = None
+        for it in range(iters):
+            margin = F.expr(
+                f"aggregate(zip_with(x, {sql_darray(w)}, (a, b) -> a * b), "
+                f"{b!r}D, (acc, v) -> acc + v)"
+            )
+            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
+            withp = ex.select("y", "x", p.alias("p"))
+            loss = -(
+                F.col("y") * F.log(F.greatest(F.col("p"), F.lit(1e-12)))
+                + (1 - F.col("y")) * F.log(F.greatest(1 - F.col("p"), F.lit(1e-12)))
+            )
+            aggs = [
+                F.count("*").alias("n"),
+                F.avg(loss).alias("loss"),
+                F.avg(F.col("p") - F.col("y")).alias("gb"),
+                F.avg(F.when(F.col("y") == 1.0, F.col("p"))).alias("p_pos"),
+                F.avg(F.when(F.col("y") == 0.0, F.col("p"))).alias("p_neg"),
+            ] + [
+                F.sum(F.expr(f"(p - y) * x[{j}]")).alias(f"g{j}") for j in range(dim)
+            ]
+            row = withp.agg(*aggs).collect()[0]
+            n = row["n"]
+            trace.append(
+                (
+                    it,
+                    round(row["loss"], 6),
+                    round(row["p_pos"] or 0.0, 6),
+                    round(row["p_neg"] or 0.0, 6),
+                )
+            )
+            b -= rate * row["gb"]
+            w = [wj - rate * row[f"g{j}"] / n for j, wj in enumerate(w)]
+        return b, w, trace, mu, sd
+    finally:
+        ex.unpersist()
+
 
 # one schema definition for embedding-stream sources (mirrors the
 # embeddings parquet table so tests and pipelines can feed slices of it)
@@ -99,7 +240,7 @@ def train_lr_model(
     dimensions: ragged rows would NULL out of the standardized zip_with
     and silently deflate every gradient (the count stays in n while the
     sums drop them) — the train-time twin of the score-time dim guard."""
-    e, dim, stats, _n = _embed_centered_stats(spark, "", embs=embs)
+    e, dim, stats, _n = embed_centered_stats(spark, "", embs=embs)
     n_bad = embs.filter(F.size(F.col("embedding")) != dim).count()
     if n_bad:
         raise ValueError(
@@ -182,7 +323,7 @@ def _score_frame(
     margin = (
         F.expr(
             f"aggregate(zip_with(CAST({vec_col} AS array<double>), "
-            f"{_sql_darray(w)}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
+            f"{sql_darray(w)}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
         )
         + F.lit(bias)
     )
@@ -220,3 +361,11 @@ def start_stream_lr_score(
         available_now,
         out_dir=out_dir,
     )
+
+
+# rows-only: iterative and transcendental; convergence pinned by pytest
+ORACLES: dict[str, str] = {}
+
+QUERIES = {
+    "train_embed_lr": train_embed_lr,
+}

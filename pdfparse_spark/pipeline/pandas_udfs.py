@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["text_tokens_vectorized", "conv_reassemble"]
+from . import textquality
+
+__all__ = ["text_tokens_vectorized", "conv_reassemble", "QUERIES", "ORACLES"]
 
 # ASCII whitespace spelled out: Java's \s (the JVM surface / oracle) is
 # ASCII-only while Python's \s and str.split() cover Unicode whitespace —
@@ -47,7 +49,7 @@ def _ws_count(texts: pd.Series) -> pd.Series:
 
 
 def text_tokens_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result as textops.text_tokens, computed via scalar Arrow
+    """Same result as textquality.text_tokens, computed via scalar Arrow
     pandas_udfs instead of JVM expressions — pinned to the same DuckDB
     oracle, demonstrating result-parity between the two execution surfaces."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -90,3 +92,9 @@ def conv_reassemble(extracted: DataFrame) -> DataFrame:
     return extracted.select("conv_id", "turn_idx", "extracted_text").groupBy(
         "conv_id"
     ).applyInPandas(_reassemble_group, schema=_CONV_SCHEMA)
+
+
+QUERIES = {"text_tokens_vectorized": text_tokens_vectorized}
+
+# the pandas_udf surface must produce the SAME result as the JVM surface
+ORACLES = {"text_tokens_vectorized": textquality.ORACLES["text_tokens"]}

@@ -841,8 +841,6 @@ QUERIES = {
     "r11_json_extract": r11_json_extract,
     "text_ngrams": text_ngrams,
     "events_funnel": events_funnel,
+    "events_retention": events_retention,
+    "events_anomaly": events_anomaly,
 }
-
-# Queries with no ORACLES entry (physical/sketch/RNG ops) — see the
-# matching note in textops.ROWS_ONLY.
-ROWS_ONLY = frozenset(QUERIES) - frozenset(ORACLES)

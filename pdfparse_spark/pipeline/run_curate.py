@@ -34,16 +34,14 @@ import time
 from pyspark.sql import functions as F
 
 from .artifact import persistent_rdd_ids, release_rdds_since
+from .corpus import read_docs, tokenized_docs
+from .curate import curate_parts
+from .decon_index import decon_keep_ids
+from .docorder import docs_split_holdout, md5_shuffle_rank, quality_band_rank
+from .dsir_model import dsir_keep_ids
 from .session import get_spark
-from .textops import (
-    _curate_parts,
-    _tokenized_docs,
-    _docs,
-    _md5_shuffle_rank,
-    dedup_minhash_clusters,
-    docs_dsir_weights,
-    text_perplexity,
-)
+from .textdedup import dedup_minhash_clusters, strip_dup_spans
+from .textquality import lm_keep_ids, quality_expr
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -126,14 +124,12 @@ def main(argv: list[str] | None = None) -> int:
     # release the RDDs this run added, never a borrowed session's
     pre_persisted = persistent_rdd_ids(spark)
 
-    d = _docs(spark, args.sf_dir)
+    d = read_docs(spark, args.sf_dir)
     n_in = d.count()
 
     n_held = 0
     val_ids = None
     if args.holdout_dir:
-        from .textops import docs_split_holdout
-
         split = docs_split_holdout(spark, args.sf_dir)
         val = split.filter(F.col("split") == "val").select(
             "doc_id", "holdout_rank"
@@ -151,14 +147,14 @@ def main(argv: list[str] | None = None) -> int:
     # ONE shared tokenized checkpoint for every filter leg — including
     # the minhash pair source (the corpus_curate_full discipline:
     # tokenize once, not per leg)
-    docs_tok = _tokenized_docs(spark, args.sf_dir)
+    docs_tok = tokenized_docs(spark, args.sf_dir)
     if val_ids is not None:
         # every leg consumes docs_tok, so one anti-join restricts the
         # whole composed plan to the train split (the checkpoint itself
         # stays corpus-wide — the filter is a cheap join on top of it)
         docs_tok = docs_tok.join(val_ids, "doc_id", "left_anti")
     # the exact-pairs default is the gate query's own composition
-    # (_curate_parts IS corpus_curate); --pairs minhash swaps only the
+    # (curate_parts IS corpus_curate); --pairs minhash swaps only the
     # near-dup pair source, so the CLI can never drift from the oracle
     clusters = (
         dedup_minhash_clusters(spark, args.sf_dir, docs=docs_tok).select(
@@ -167,7 +163,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.pairs == "minhash"
         else None
     )
-    passed, dropped_dup, ranked = _curate_parts(
+    passed, dropped_dup, ranked = curate_parts(
         spark, args.sf_dir, clusters=clusters, docs=docs_tok
     )
     # each leg is an expensive corpus-wide aggregation consumed 2-3×
@@ -184,65 +180,35 @@ def main(argv: list[str] | None = None) -> int:
     n_dup_dropped = passed.join(dropped_dup, "doc_id", "inner").count()
 
     # optional composed filter legs, one (metric_key, keep-set builder)
-    # per flag — a new leg is one tuple here, and the persist/count/join
-    # discipline stays in a single loop
-    legs = []
-    if args.lm_filter:
-        legs.append((
-            "dropped_lm",
-            lambda: text_perplexity(spark, args.sf_dir, docs=docs_tok)
-            .filter(F.col("ppl_bucket") != "tail")
-            .select("doc_id"),
-        ))
-    if args.dsir_filter:
-        legs.append((
-            "dropped_dsir",
-            lambda: docs_dsir_weights(spark, args.sf_dir, docs=docs_tok)
-            .filter(F.col("keep") == 1)
-            .select("doc_id"),
-        ))
-    if args.decon_filter:
-        # keep set = train-split docs flagged by NEITHER decon op (docs
-        # too short to shingle are absent from the ops' outputs and must
-        # survive, so build keep by anti-joining the BAD sets — the
-        # corpus_curate_decon composition exactly)
-        def _decon_ok():
-            from .textops import _DECON_BENCH_MOD, decontaminate_jaccard, decontaminate_ngram
-
-            bad_ex = decontaminate_ngram(spark, args.sf_dir, docs=docs_tok).filter(
-                F.col("contaminated") == 1
-            ).select("doc_id")
-            bad_ja = decontaminate_jaccard(spark, args.sf_dir, docs=docs_tok).filter(
-                F.col("contaminated") == 1
-            ).select("doc_id")
-            return (
-                d.select("doc_id")
-                .filter(F.col("doc_id") % _DECON_BENCH_MOD != 0)
-                .join(bad_ex, "doc_id", "left_anti")
-                .join(bad_ja, "doc_id", "left_anti")
-            )
-
-        legs.append(("dropped_decon", _decon_ok))
+    # per flag — the builders corpus_curate_full/_dsir/_decon compose, so
+    # the CLI legs can never drift from the oracled ones
+    legs = [
+        (key, keep_ids)
+        for on, key, keep_ids in (
+            (args.lm_filter, "dropped_lm", lm_keep_ids),
+            (args.dsir_filter, "dropped_dsir", dsir_keep_ids),
+            (args.decon_filter, "dropped_decon", decon_keep_ids),
+        )
+        if on
+    ]
     drops = {"dropped_lm": 0, "dropped_dsir": 0, "dropped_decon": 0}
     extra_ok = []
     if legs:
         survivors = passed.join(dropped_dup, "doc_id", "left_anti")
-        for key, build in legs:
-            ok = build().persist()
+        for key, keep_ids in legs:
+            ok = keep_ids(spark, args.sf_dir, docs=docs_tok).persist()
             extra_ok.append(ok)
             drops[key] = survivors.join(ok, "doc_id", "left_anti").count()
             survivors = survivors.join(ok, "doc_id")
         # the rank is reassigned over the final survivor set —
         # corpus_curate_full's composition with more legs
-        ranked = _md5_shuffle_rank(survivors, "n_tokens")
+        ranked = md5_shuffle_rank(survivors, "n_tokens")
 
     if args.order == "curriculum":
         # quality-ascending curriculum over the SURVIVOR set: same banded
         # two-phase rank as docs_curriculum_order, quality recomputed from
         # the shared tokenized checkpoint (no extra corpus scan), emitted
         # under the same shuffle_rank loader contract
-        from .textops import _quality_band_rank, _quality_expr
-
         surv = (
             survivors
             if legs
@@ -250,9 +216,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         scored = docs_tok.join(
             surv.select("doc_id"), "doc_id", "left_semi"
-        ).select("doc_id", _quality_expr().alias("q"))
+        ).select("doc_id", quality_expr().alias("q"))
         ranked = (
-            _quality_band_rank(scored, rank_name="shuffle_rank")
+            quality_band_rank(scored, rank_name="shuffle_rank")
             .select("doc_id", "shuffle_rank")
             .join(surv.select("doc_id", "n_tokens"), "doc_id")
         )
@@ -265,27 +231,7 @@ def main(argv: list[str] | None = None) -> int:
         # design, it is exactly the stream dedup_span_strip sha-verifies.
         # Under --holdout-dir docs_tok is already anti-joined to the train
         # split, so coverage is train-split-only there.
-        from .textops import _dup_gram_cov
-
-        toks_arr = docs_tok.select("doc_id", "arr")
-        covered = (
-            _dup_gram_cov(spark, args.sf_dir, toks=toks_arr)
-            .select("doc_id", F.explode(F.sequence("s", "e")).alias("pos"))
-            .distinct()
-        )
-        tokpos = toks_arr.select(
-            "doc_id", F.posexplode("arr").alias("pos0", "tok")
-        ).select(
-            "doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "tok"
-        )
-        kept = tokpos.join(covered, ["doc_id", "pos"], "left_anti")
-        clean = kept.groupBy("doc_id").agg(
-            F.expr(
-                "concat_ws(' ', transform(array_sort(collect_list("
-                "struct(pos, tok))), p -> p.tok))"
-            ).alias("clean_text"),
-            F.count("*").alias("n_kept"),
-        )
+        clean = strip_dup_spans(spark, args.sf_dir, docs_tok.select("doc_id", "arr"))
         out = (
             ranked.join(d.select("doc_id", "lang", "source", "n_chars"), "doc_id")
             .join(clean, "doc_id", "left")

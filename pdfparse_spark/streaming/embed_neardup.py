@@ -6,7 +6,7 @@ completing the streaming story for the embedding family the way
 ``neardup.py`` does for MinHash: each incoming vector gets the SAME
 8-band/8-bit sign-LSH band keys as the batch op — the identical
 constant-folded hyperplane literal and left-fold dot product
-(``_spark_signbits_expr``), evaluated per row, so the sign decisions
+(``spark_signbits_expr``), evaluated per row, so the sign decisions
 cannot diverge — and candidates meet in a custom stateful operator
 keyed by ``band_key`` (``applyInPandasWithState``).
 
@@ -42,12 +42,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
 from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
-from ..pipeline.textops import (
-    _EMB_DIM,
-    _SIGNLSH_BANDS,
-    _SIGNLSH_BITS,
-    _spark_bandkeys_expr,
-    _spark_signbits_expr,
+from ..pipeline.corpus import EMB_DIM
+from ..pipeline.embed import (
+    SIGNLSH_BANDS,
+    SIGNLSH_BITS,
+    spark_bandkeys_expr,
+    spark_signbits_expr,
 )
 
 __all__ = [
@@ -93,10 +93,10 @@ def signlsh_cols(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         )
         .withColumn(
             "_sb",
-            F.expr(_spark_signbits_expr(_SIGNLSH_BANDS, _SIGNLSH_BITS, _EMB_DIM)),
+            F.expr(spark_signbits_expr(SIGNLSH_BANDS, SIGNLSH_BITS, EMB_DIM)),
         )
         .withColumn(
-            "bands", F.expr(_spark_bandkeys_expr(_SIGNLSH_BANDS, _SIGNLSH_BITS))
+            "bands", F.expr(spark_bandkeys_expr(SIGNLSH_BANDS, SIGNLSH_BITS))
         )
         .drop("_sb")
     )
@@ -155,7 +155,7 @@ def _make_bucket_updater(state_cap: int, state_ttl_ms: int, dim: int):
         for rid, v, nrm in rows:
             for sid, sv, snrm in zip(ids, vecs, nrms):
                 # left-fold dot over the same doubles the JVM fold sees:
-                # bit-identical to the batch _DOT aggregate
+                # bit-identical to the batch DOT aggregate
                 acc = 0.0
                 for x, y in zip(sv, v):
                     acc += x * y
@@ -212,12 +212,12 @@ def start_stream_embed_neardup(
         signlsh_cols(stream)
         # dim guard: a short/long embedding would still hash (zip_with
         # null-pads) but would corrupt the flattened fixed-stride state
-        .filter(F.size("v") == _EMB_DIM)
+        .filter(F.size("v") == EMB_DIM)
         .select("vec_id", "v", "nrm", F.explode("bands").alias("band_key"))
     )
     ttl_ms, timeout = state_timeout(state_ttl_minutes, available_now)
     pairs = banded.groupBy("band_key").applyInPandasWithState(
-        _make_bucket_updater(state_cap, ttl_ms, _EMB_DIM),
+        _make_bucket_updater(state_cap, ttl_ms, EMB_DIM),
         outputStructType=_PAIR_OUT_SCHEMA,
         stateStructType=_PAIR_STATE_SCHEMA,
         outputMode="append",

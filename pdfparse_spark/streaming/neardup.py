@@ -41,7 +41,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
 from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
-from ..pipeline.textops import _MINHASH_PERMS, _LSH_BANDS, _SHINGLES, _TOKS_T
+from ..pipeline.corpus import SHINGLES, TOKS_T
+from ..pipeline.textdedup import LSH_BANDS, MINHASH_PERMS
 from ..pipeline.transcripts import INPUT_SCHEMA
 
 __all__ = [
@@ -51,7 +52,7 @@ __all__ = [
     "start_stream_neardup",
 ]
 
-_ROWS_PER_BAND = _MINHASH_PERMS // _LSH_BANDS
+_ROWS_PER_BAND = MINHASH_PERMS // LSH_BANDS
 
 
 def minhash_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -59,7 +60,7 @@ def minhash_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
     (array<long>, 8 LSH band keys) computed per row from ``text_col``.
 
     Bit-identical to the batch signature/band pipeline in
-    ``textops.dedup_minhash_lsh`` (same shingles, same
+    ``textdedup.dedup_minhash_lsh`` (same shingles, same
     ``xxhash64(i, xxhash64(shingle))`` family, same band hash): the
     per-row ``array_min(transform(...))`` is the HOF form of the batch
     explode + ``groupBy.agg(min(...))`` over the identical distinct
@@ -76,14 +77,14 @@ def minhash_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
             "minhash_cols scratch/output column name collision: %s — "
             "rename or drop these input columns first" % sorted(clash)
         )
-    toks = _TOKS_T.format(col=text_col)
+    toks = TOKS_T.format(col=text_col)
     sig_items = ", ".join(
         "array_min(transform(_hs, h -> xxhash64(%d, h)))" % i
-        for i in range(_MINHASH_PERMS)
+        for i in range(MINHASH_PERMS)
     )
     out = (
         df.withColumn("arr", F.expr(toks))
-        .withColumn("_shs", F.expr(_SHINGLES))
+        .withColumn("_shs", F.expr(SHINGLES))
         .withColumn("has_sig", F.size("_shs") > 0)
         .withColumn(
             "_hs", F.expr("transform(_shs, s -> xxhash64(s))")
@@ -100,7 +101,7 @@ def minhash_cols(df: DataFrame, text_col: str = "text") -> DataFrame:
                 for r in range(_ROWS_PER_BAND)
             ],
         )
-        for b in range(_LSH_BANDS)
+        for b in range(LSH_BANDS)
     ]
     return out.withColumn(
         "bands", F.when(F.col("has_sig"), F.array(*band_items))
@@ -165,7 +166,7 @@ def _make_band_updater(state_cap: int, state_ttl_ms: int):
         if state.exists:
             ids, flat = state.get
             ids = list(ids)
-            sigs = [list(flat[k * _MINHASH_PERMS : (k + 1) * _MINHASH_PERMS]) for k in range(len(ids))]
+            sigs = [list(flat[k * MINHASH_PERMS : (k + 1) * MINHASH_PERMS]) for k in range(len(ids))]
         else:
             ids, sigs = [], []
         rows = []
@@ -184,7 +185,7 @@ def _make_band_updater(state_cap: int, state_ttl_ms: int):
             # may re-threshold in either direction (fold_band_verdicts)
             best_est, best_id = -1.0, ""
             for sid, ssig in zip(ids, sigs):
-                est = sum(a == b for a, b in zip(sig, ssig)) / _MINHASH_PERMS
+                est = sum(a == b for a, b in zip(sig, ssig)) / MINHASH_PERMS
                 if est > best_est or (est == best_est and sid < best_id):
                     best_est, best_id = est, sid
             out_id.append(rid)

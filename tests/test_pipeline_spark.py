@@ -196,6 +196,27 @@ def test_entry_contract(spark):
         )
 
 
+def test_query_registry_pins_the_committed_order():
+    """queries() is ONE ordered list: exactly the order of the committed
+    local oracle sweep; oracle_sql() covers exactly the sweep's
+    hash-verified queries; every family-registered query appears in
+    queries() exactly once."""
+    import json
+    import os
+
+    import __spark_entry__ as e
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "CORRECTNESS_LOCAL_r06_sf0.1.json")) as fh:
+        sweep = json.load(fh)
+    assert list(e.queries()) == list(sweep)
+    assert set(e.oracle_sql()) == {k for k, v in sweep.items() if v["err"] != "no_oracle"}
+    registered = list(e._ENTRY_QUERIES) + [
+        name for fam in e._families() for name in fam.QUERIES
+    ]
+    assert sorted(registered) == sorted(e.queries())
+
+
 def test_plan_hygiene_pushdown_and_broadcast(spark):
     """Scale discipline: filters reach the scan; tiny dims broadcast."""
     from pdfparse_spark.pipeline.relational import q1_pricing_summary, q5_revenue_by_nation
@@ -210,7 +231,8 @@ def test_sketch_ops_never_cartesian(spark):
     """The 100 TB dedup/ANN paths must generate candidates via equality
     joins on sketch keys — a CartesianProduct/BNLJ anywhere means the op
     silently degraded to O(n²)."""
-    from pdfparse_spark.pipeline.textops import dedup_minhash_lsh, dedup_simhash, sim_ann_lsh
+    from pdfparse_spark.pipeline.embed import sim_ann_lsh
+    from pdfparse_spark.pipeline.textdedup import dedup_minhash_lsh, dedup_simhash
 
     for op in (dedup_minhash_lsh, dedup_simhash, sim_ann_lsh):
         plan = op(spark, SF)._jdf.queryExecution().executedPlan().toString()

@@ -215,7 +215,7 @@ def test_streaming_bands_match_batch(spark):
     bit-identical to the batch explode + groupBy-min path it mirrors
     (textops.dedup_minhash_lsh's signature stage) — two independent plan
     shapes, one hash family."""
-    from pdfparse_spark.pipeline.textops import minhash_band_rows
+    from pdfparse_spark.pipeline.textdedup import minhash_band_rows
     from pdfparse_spark.streaming.neardup import minhash_cols
 
     sf = "/root/testdata/sf0.001"
@@ -293,7 +293,7 @@ def test_stream_neardup_matches_batch_simulation(spark, tmp_path):
     arrival-order matching), including est_j values."""
     import datetime as dt
 
-    from pdfparse_spark.pipeline.textops import _MINHASH_PERMS
+    from pdfparse_spark.pipeline.textdedup import MINHASH_PERMS as _MINHASH_PERMS
     from pdfparse_spark.pipeline.transcripts import INPUT_SCHEMA
     from pdfparse_spark.streaming.neardup import (
         minhash_cols, read_neardup_verdicts, start_stream_neardup,
@@ -502,7 +502,8 @@ def test_signlsh_cols_match_batch_band_keys(spark):
     """The per-row streaming band-key columns must be the SAME keys the
     batch signlsh_band_keys explode produces — same hyperplane literal,
     same fold — for every vector in the corpus."""
-    from pdfparse_spark.pipeline.textops import _emb, _emb_norm, signlsh_band_keys
+    from pdfparse_spark.pipeline.corpus import emb_norm as _emb_norm, read_emb as _emb
+    from pdfparse_spark.pipeline.embed import signlsh_band_keys
     from pdfparse_spark.streaming.embed_neardup import signlsh_cols
 
     sf = "/root/testdata/sf0.001"
@@ -530,7 +531,7 @@ def test_stream_embed_neardup_matches_batch(spark, tmp_path):
     pair set WITH bit-identical cos_sim values — the Python left-fold dot
     over the same doubles cannot drift from the JVM fold, and rounding/
     thresholding happen JVM-side at read time."""
-    from pdfparse_spark.pipeline.textops import dedup_embedding_cosine
+    from pdfparse_spark.pipeline.embed import dedup_embedding_cosine
     from pdfparse_spark.streaming.embed_neardup import (
         read_embed_neardup,
         start_stream_embed_neardup,
@@ -845,6 +846,37 @@ def test_stream_bloom_index_durable_and_replay_stable(spark, tmp_path):
     assert bloom_index_stats(spark, idx_dir) == before
 
 
+def test_stream_bloom_join_path_releases_checkpoints(spark, tmp_path):
+    """Past the literal cutover each micro-batch checkpoints its word
+    frame for the k join legs; the stream must release every such block
+    once the batch is written, so a long-lived stream holds none."""
+    import datetime as dt
+
+    from pdfparse_spark.pipeline.artifact import persistent_rdd_ids
+    from pdfparse_spark.pipeline.bloom_index import start_stream_bloom_index
+    from pdfparse_spark.pipeline.transcripts import INPUT_SCHEMA
+
+    ts = dt.datetime(2026, 1, 1, 9, 0, 0)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i, texts in enumerate((["alpha alpha", "beta beta"], ["alpha alpha"])):
+        spark.createDataFrame(
+            [("c%d" % i, j, "user", t, "", ts) for j, t in enumerate(texts)],
+            INPUT_SCHEMA,
+        ).coalesce(1).write.parquet(str(in_dir / ("f%d" % i)))
+
+    out_dir = str(tmp_path / "out")
+    before = persistent_rdd_ids(spark)
+    q = start_stream_bloom_index(
+        spark, str(in_dir) + "/f*", out_dir, str(tmp_path / "idx"),
+        str(tmp_path / "ck"), bits=1 << 25,
+    )
+    q.awaitTermination(120)
+    got = {r["id"]: r["bloom_hit"] for r in spark.read.parquet(out_dir).collect()}
+    assert got == {"c0#0": 0, "c0#1": 0, "c1#0": 1}
+    assert persistent_rdd_ids(spark) == before
+
+
 def test_stream_dsir_score_matches_batch(spark, tmp_path):
     """Streaming DSIR scoring with a persisted model: two document file
     drops score per micro-batch; the union of batch outputs equals the
@@ -861,7 +893,8 @@ def test_stream_dsir_score_matches_batch(spark, tmp_path):
         start_stream_dsir_score,
         train_dsir_model,
     )
-    from pdfparse_spark.pipeline.textops import _DSIR_TARGET_MOD, _docs
+    from pdfparse_spark.pipeline.corpus import read_docs as _docs
+    from pdfparse_spark.pipeline.dsir_model import _DSIR_TARGET_MOD
 
     sf = "/root/testdata/sf0.001"
     d = _docs(spark, sf)
@@ -927,11 +960,11 @@ def test_stream_decon_matches_gate_ops(spark, tmp_path):
         score_with_decon_index,
         start_stream_decon,
     )
-    from pdfparse_spark.pipeline.textops import (
-        _DECON_BENCH_MOD,
+    from pdfparse_spark.pipeline.corpus import read_docs as _docs
+    from pdfparse_spark.pipeline.decon_index import (
+        DECON_BENCH_MOD as _DECON_BENCH_MOD,
         decontaminate_jaccard,
         decontaminate_ngram,
-        _docs,
     )
 
     sf = "/root/testdata/sf0.001"

@@ -59,7 +59,7 @@ def test_query_matches_duckdb_oracle(spark, duck, name):
 def test_minhash_lsh_vs_exact_jaccard(spark):
     """LSH must find every high-similarity pair (j ≥ 0.9 ⇒ P(miss) ≈ 2e-3)
     and report only verified pairs (subset of exact ≥ 0.5)."""
-    from pdfparse_spark.pipeline.textops import dedup_minhash_lsh, dedup_ngram_jaccard
+    from pdfparse_spark.pipeline.textdedup import dedup_minhash_lsh, dedup_ngram_jaccard
 
     exact = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in dedup_ngram_jaccard(spark, SF).collect()}
     lsh = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in dedup_minhash_lsh(spark, SF).collect()}
@@ -89,7 +89,7 @@ def test_simhash_properties(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import dedup_simhash
+    from pdfparse_spark.pipeline.textdedup import dedup_simhash
 
     pairs = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in dedup_simhash(spark, d).collect()}
     assert pairs == {(1, 2): 0}
@@ -114,7 +114,7 @@ def test_langid_discriminates(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import text_langid
+    from pdfparse_spark.pipeline.textquality import text_langid
 
     got = {r["doc_id"]: r["lang_guess"] for r in text_langid(spark, d).collect()}
     assert got == {1: "en", 2: "de", 3: "fr", 4: "unknown"}
@@ -141,7 +141,7 @@ def test_tfidf_distinctive_term_wins(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import _TFIDF_TOPK, text_tfidf_topk
+    from pdfparse_spark.pipeline.textquality import _TFIDF_TOPK, text_tfidf_topk
 
     rows = text_tfidf_topk(spark, d).collect()
     by_doc: dict[int, list] = {}
@@ -173,7 +173,7 @@ def test_pps_sample_deterministic_and_clips_heavy(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import docs_pps_sample
+    from pdfparse_spark.pipeline.docorder import docs_pps_sample
 
     got1 = sorted(r["doc_id"] for r in docs_pps_sample(spark, d).collect())
     got2 = sorted(r["doc_id"] for r in docs_pps_sample(spark, d).collect())
@@ -185,7 +185,7 @@ def test_token_chunks_tile_the_stream(spark):
     """The per-doc token intervals must tile [0, total_tokens) contiguously
     in shuffle order — no gaps, no overlaps — and every chunk span must be
     consistent with integer division by the chunk budget."""
-    from pdfparse_spark.pipeline.textops import _CHUNK_TOKENS, docs_token_chunks
+    from pdfparse_spark.pipeline.docorder import _CHUNK_TOKENS, docs_token_chunks
 
     rows = sorted(docs_token_chunks(spark, SF).collect(), key=lambda r: r["shuffle_rank"])
     assert [r["shuffle_rank"] for r in rows] == list(range(1, len(rows) + 1))
@@ -205,7 +205,11 @@ def test_mix_rebalance_downsamples_toward_target(spark):
     """Strata above their target share shrink toward target_share * N;
     strata at/below target keep every doc (p clips at 1, no upsampling);
     and the summary is deterministic across runs."""
-    from pdfparse_spark.pipeline.textops import _MIX_DENOM, _MIX_TARGETS, docs_mix_rebalance
+    from pdfparse_spark.pipeline.docorder import (
+        _MIX_DENOM,
+        _MIX_TARGETS,
+        docs_mix_rebalance,
+    )
 
     got1 = {r["lang"]: (r["n_docs"], r["n_kept"]) for r in docs_mix_rebalance(spark, SF).collect()}
     got2 = {r["lang"]: (r["n_docs"], r["n_kept"]) for r in docs_mix_rebalance(spark, SF).collect()}
@@ -226,7 +230,7 @@ def test_mix_rebalance_downsamples_toward_target(spark):
 def test_ann_lsh_recall_vs_brute_force(spark):
     """Every ANN hit must be a true same-bucket neighbor with the exact
     cosine the brute-force path computes for that pair."""
-    from pdfparse_spark.pipeline.textops import sim_ann_lsh, sim_cosine_topk
+    from pdfparse_spark.pipeline.embed import sim_ann_lsh, sim_cosine_topk
 
     brute = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in sim_cosine_topk(spark, SF).collect()}
     ann = [(r["query_id"], r["neighbor_id"], r["cos_sim"]) for r in sim_ann_lsh(spark, SF).collect()]
@@ -237,7 +241,7 @@ def test_ann_lsh_recall_vs_brute_force(spark):
 
 
 def test_ivf_hits_agree_with_brute_force(spark):
-    from pdfparse_spark.pipeline.textops import sim_ann_ivf, sim_cosine_topk
+    from pdfparse_spark.pipeline.embed import sim_ann_ivf, sim_cosine_topk
 
     brute = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in sim_cosine_topk(spark, SF).collect()}
     ivf = [(r["query_id"], r["neighbor_id"], r["cos_sim"]) for r in sim_ann_ivf(spark, SF).collect()]
@@ -251,8 +255,9 @@ def test_embed_kmeans_invariants(spark):
     """Iterative k-means: all vectors assigned, k clusters, final inertia
     no worse than the seed assignment's, and every assignment actually is
     the nearest centroid (spot-checked via a one-step re-assignment)."""
-    from pdfparse_spark.pipeline import textops
-    from pdfparse_spark.pipeline.textops import _kmeans_assign, _emb_norm, embed_kmeans
+    from pdfparse_spark.pipeline import embed as textops
+    from pdfparse_spark.pipeline.corpus import emb_norm as _emb_norm
+    from pdfparse_spark.pipeline.embed import _kmeans_assign, embed_kmeans
 
     import pyspark.sql.functions as F
 
@@ -276,7 +281,7 @@ def test_shingle_df_cap_kills_hot_shingle_blowup(spark, tmp_path):
     shingle self-join quadratic on those keys; the df cap drops it while
     keeping genuinely duplicated content pairs."""
     import pandas as pd
-    from pdfparse_spark.pipeline import textops
+    from pdfparse_spark.pipeline import textdedup as textops
 
     boiler = "all rights reserved contact the site administrator for details"
     texts = [boiler + " unique payload %d alpha beta gamma delta " % i * 3 for i in range(28)]
@@ -310,7 +315,7 @@ def test_jaccard_cap_is_noop_on_fixture_corpus(spark, monkeypatch):
     """On the test corpora no shingle reaches _MAX_SHINGLE_DF (max df 25 at
     sf0.1), so capped and uncapped pair sets are identical — the cap only
     changes behavior on pathological boilerplate."""
-    from pdfparse_spark.pipeline import textops
+    from pdfparse_spark.pipeline import textdedup as textops
 
     capped = sorted(map(tuple, textops.dedup_ngram_jaccard(spark, SF).collect()))
     monkeypatch.setattr(textops, "_MAX_SHINGLE_DF", 1 << 40)
@@ -321,7 +326,10 @@ def test_jaccard_cap_is_noop_on_fixture_corpus(spark, monkeypatch):
 def test_approx_percentiles_within_band(spark):
     """approx_percentile (the 100 TB scale path) must sit within 5% of the
     exact per-group percentiles on the fixture corpus."""
-    from pdfparse_spark.pipeline.textops import text_length_stats, text_length_stats_approx
+    from pdfparse_spark.pipeline.textquality import (
+        text_length_stats,
+        text_length_stats_approx,
+    )
 
     exact = {r["lang"]: (r["p50_chars"], r["p90_chars"])
              for r in text_length_stats(spark, SF).collect()}
@@ -345,8 +353,8 @@ def test_signlsh_planted_neardup_recall(spark):
 
     from pyspark.sql import functions as F
 
-    from pdfparse_spark.pipeline.textops import (
-        _EMB_DIM,
+    from pdfparse_spark.pipeline.corpus import EMB_DIM as _EMB_DIM
+    from pdfparse_spark.pipeline.embed import (
         embedding_candidate_pairs,
         recommended_signlsh_bits,
     )
@@ -389,7 +397,7 @@ def test_recommended_ivf_cells_sizing():
     candidate-scan cost; floored at the 16-cell gate default."""
     import math
 
-    from pdfparse_spark.pipeline.textops import _N_CELLS, recommended_ivf_cells
+    from pdfparse_spark.pipeline.embed import _N_CELLS, recommended_ivf_cells
 
     assert recommended_ivf_cells(50) == _N_CELLS  # floor at tiny corpora
     assert recommended_ivf_cells(10**6, 4) == math.ceil(math.sqrt(4 * 10**6)) == 2000
@@ -406,7 +414,7 @@ def test_minhash_clusters_match_exact_clusters(spark):
     clusters as the exact-pair CC on the test corpora, where band recall
     at j >= 0.5 is total — pinning that swapping the scale-path pair
     generator does not change the dedup decision."""
-    from pdfparse_spark.pipeline.textops import dedup_clusters, dedup_minhash_clusters
+    from pdfparse_spark.pipeline.textdedup import dedup_clusters, dedup_minhash_clusters
 
     exact = {tuple(r) for r in dedup_clusters(spark, SF).collect()}
     lsh = {tuple(r) for r in dedup_minhash_clusters(spark, SF).collect()}
@@ -417,7 +425,7 @@ def test_cc_pointer_jumping_rounds(spark):
     """A 256-node PATH graph (worst case for plain min-label propagation:
     O(n) rounds) must converge in O(log n) rounds thanks to the pointer
     jump, and still label every node with the component minimum."""
-    from pdfparse_spark.pipeline.textops import _connected_components
+    from pdfparse_spark.pipeline.textdedup import _connected_components
 
     n = 256
     pairs = spark.createDataFrame(
@@ -434,7 +442,7 @@ def test_cc_pointer_jumping_rounds(spark):
 
 def test_cc_two_components_min_label(spark):
     """Disjoint components keep distinct min labels under the jump."""
-    from pdfparse_spark.pipeline.textops import _connected_components
+    from pdfparse_spark.pipeline.textdedup import _connected_components
 
     pairs = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("x", "y"), ("y", "z")],
@@ -453,9 +461,13 @@ def test_ivf_trained_codebook_beats_standin(spark):
     (b) not lose recall vs the exact brute-force top-3.  Measured on this
     corpus: inertia 754 -> 445, recall@3 0.27 -> 0.50 at sf0.01."""
     from pyspark.sql import functions as F
-    from pdfparse_spark.pipeline.textops import (
-        _emb_norm, _kmeans_assign, sim_ann_ivf, sim_ann_ivf_trained,
-        sim_cosine_topk, train_kmeans_centroids,
+    from pdfparse_spark.pipeline.corpus import emb_norm as _emb_norm
+    from pdfparse_spark.pipeline.embed import (
+        _kmeans_assign,
+        sim_ann_ivf,
+        sim_ann_ivf_trained,
+        sim_cosine_topk,
+        train_kmeans_centroids,
     )
 
     sf = "/root/testdata/sf0.01"
@@ -488,7 +500,7 @@ def test_cc_random_graphs_match_union_find(spark):
     sizes match, across shapes the fixture corpora never produce (isolated
     pairs, stars, multi-chains, dense blobs)."""
     import random
-    from pdfparse_spark.pipeline.textops import _connected_components
+    from pdfparse_spark.pipeline.textdedup import _connected_components
 
     for seed in (1, 2, 3):
         rng = random.Random(seed)
@@ -531,7 +543,7 @@ def test_boilerplate_strip_known_template(spark):
     lines survive in original order; blank lines are exempt from the df
     count (they never become 'boilerplate') and an all-template doc
     collapses to the blank survivors only."""
-    from pdfparse_spark.pipeline.textops import boilerplate_strip
+    from pdfparse_spark.pipeline.textdedup import boilerplate_strip
 
     nav, foot = "Home | About | Contact", "(c) 2026 Example Corp"
     rows = [
@@ -597,7 +609,7 @@ def test_embed_quality_score_matches_python(spark):
 
     import pyarrow.parquet as pq
 
-    from pdfparse_spark.pipeline.textops import (
+    from pdfparse_spark.pipeline.embed import (
         _quality_classifier_weights,
         embed_quality_score,
     )
@@ -624,7 +636,7 @@ def test_train_embed_lr_converges(spark):
     separates the target class (avg p̂ on positives ≫ on negatives —
     the embeddings' class structure is weak but real, cf. the kmeans
     inertia pin)."""
-    from pdfparse_spark.pipeline.textops import train_embed_lr
+    from pdfparse_spark.pipeline.lr_model import train_embed_lr
 
     rows = train_embed_lr(spark, SF).collect()
     assert len(rows) == 25
@@ -644,7 +656,7 @@ def test_embed_pca_matches_eigh(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    from pdfparse_spark.pipeline.textops import embed_pca
+    from pdfparse_spark.pipeline.embed import embed_pca
 
     rows = sorted(embed_pca(spark, SF).collect(), key=lambda r: r["component"])
     X = np.vstack(
@@ -668,7 +680,7 @@ def test_run_curate_cli(spark, tmp_path):
     import json
 
     from pdfparse_spark.pipeline.run_curate import main
-    from pdfparse_spark.pipeline.textops import corpus_curate
+    from pdfparse_spark.pipeline.curate import corpus_curate
 
     out = str(tmp_path / "curated")
     import contextlib, io
@@ -717,7 +729,7 @@ def test_dedup_semantic_flags_planted_dup(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/embeddings.parquet")
-    from pdfparse_spark.pipeline.textops import dedup_semantic
+    from pdfparse_spark.pipeline.embed import dedup_semantic
 
     rows = {r["vec_id"]: r for r in dedup_semantic(spark, d).collect()}
     assert set(rows) == set(range(n))
@@ -731,7 +743,7 @@ def test_dedup_semantic_flags_planted_dup(spark, tmp_path):
     # the TRAINED-cell production op makes the identical decision here:
     # identical vectors assign to the same max-cos cell under ANY
     # codebook, and orthogonal vectors never reach tau in any cell
-    from pdfparse_spark.pipeline.textops import dedup_semantic_trained
+    from pdfparse_spark.pipeline.embed import dedup_semantic_trained
 
     trows = {r["vec_id"]: r for r in dedup_semantic_trained(spark, d).collect()}
     assert set(trows) == set(range(n))
@@ -748,10 +760,7 @@ def test_dedup_semantic_trained_cells_more_balanced(spark):
     on the real gate corpus (measured: 63/45 = 1.4 vs 42/20 = 2.1)."""
     import pyspark.sql.functions as F
 
-    from pdfparse_spark.pipeline.textops import (
-        dedup_semantic,
-        dedup_semantic_trained,
-    )
+    from pdfparse_spark.pipeline.embed import dedup_semantic, dedup_semantic_trained
 
     sf = "/root/testdata/sf0.001"
 
@@ -781,7 +790,7 @@ def test_bpe_pairs_vocab_weighted_multiplicity(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import text_bpe_pairs
+    from pdfparse_spark.pipeline.textquality import text_bpe_pairs
 
     got = {r["pair"]: r["freq"] for r in text_bpe_pairs(spark, d).collect()}
     assert got == {"aa": 4, "ab": 1}
@@ -806,7 +815,7 @@ def test_perplexity_ranks_rare_token_doc_worst(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import text_perplexity
+    from pdfparse_spark.pipeline.textquality import text_perplexity
 
     rows = {r["doc_id"]: r for r in text_perplexity(spark, d).collect()}
     assert set(rows) == set(range(10))
@@ -835,7 +844,7 @@ def test_bpe_encode_hand_computed(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import text_bpe_encode
+    from pdfparse_spark.pipeline.textquality import text_bpe_encode
 
     rows = {r["doc_id"]: r for r in text_bpe_encode(spark, d).collect()}
     assert rows[1]["n_words"] == 2 and rows[1]["n_chars"] == 8
@@ -852,13 +861,13 @@ def test_ivfpq_recall_and_adc_sanity(spark):
     value for that pair."""
     from pyspark.sql import functions as F
 
-    from pdfparse_spark.pipeline.textops import (
-        _N_PROBE_PQ,
-        _emb_norm,
+    from pdfparse_spark.pipeline.ann_index import sim_ann_ivfpq
+    from pdfparse_spark.pipeline.corpus import emb_norm as _emb_norm
+    from pdfparse_spark.pipeline.embed import (
         _ivf_search,
-        _trained_coarse,
-        sim_ann_ivfpq,
+        N_PROBE_PQ as _N_PROBE_PQ,
         sim_cosine_topk,
+        trained_coarse as _trained_coarse,
     )
 
     sf = "/root/testdata/sf0.01"
@@ -909,11 +918,8 @@ def test_curate_full_is_subset_with_lm_leg(spark):
     """corpus_curate_full = corpus_curate ∧ LM-tercile: its doc set must be
     exactly corpus_curate's minus the perplexity 'tail' bucket, and ranks
     must stay contiguous from 1."""
-    from pdfparse_spark.pipeline.textops import (
-        corpus_curate,
-        corpus_curate_full,
-        text_perplexity,
-    )
+    from pdfparse_spark.pipeline.curate import corpus_curate, corpus_curate_full
+    from pdfparse_spark.pipeline.textquality import text_perplexity
 
     sf = "/root/testdata/sf0.001"
     base = {r["doc_id"] for r in corpus_curate(spark, sf).collect()}
@@ -946,7 +952,7 @@ def test_bpe_trainer_classic_example(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import (
+    from pdfparse_spark.pipeline.textquality import (
         text_bpe_encode_trained,
         train_bpe_merges,
     )
@@ -967,7 +973,7 @@ def test_bpe_trainer_driver_path_matches_distributed(spark):
     freqs, same early stop — as the fully distributed per-round loop, on
     the real gate corpus with enough rounds to exercise multi-char-token
     merges and incremental count updates."""
-    from pdfparse_spark.pipeline.textops import train_bpe_merges
+    from pdfparse_spark.pipeline.textquality import train_bpe_merges
 
     sf = "/root/testdata/sf0.001"
     fast = [
@@ -990,7 +996,7 @@ def test_bpe_merge_fold_matches_python_reference(spark):
     non-overlapping' on adversarial segmentations: overlapping runs
     (aaa), back-to-back matches (abab), match at start/end, no match,
     and single-token inputs."""
-    from pdfparse_spark.pipeline.textops import _bpe_merge_once_expr
+    from pdfparse_spark.pipeline.textquality import _bpe_merge_once_expr
 
     def ref(seg, a, b):
         out, i = [], 0
@@ -1051,7 +1057,7 @@ def test_run_curate_cli_lm_filter(spark, tmp_path):
     import contextlib, io, json
 
     from pdfparse_spark.pipeline.run_curate import main
-    from pdfparse_spark.pipeline.textops import corpus_curate_full
+    from pdfparse_spark.pipeline.curate import corpus_curate_full
 
     out = str(tmp_path / "curated_lm")
     buf = io.StringIO()
@@ -1084,7 +1090,7 @@ def test_ivfpq_index_roundtrip_matches_gate_op(spark, tmp_path):
         build_ivfpq_index,
         search_ivfpq_index,
     )
-    from pdfparse_spark.pipeline.textops import sim_ann_ivfpq
+    from pdfparse_spark.pipeline.ann_index import sim_ann_ivfpq
 
     sf = "/root/testdata/sf0.01"
     idx = str(tmp_path / "idx")
@@ -1099,6 +1105,42 @@ def test_ivfpq_index_roundtrip_matches_gate_op(spark, tmp_path):
         for r in sim_ann_ivfpq(spark, sf).collect()
     )
     assert got == want
+
+
+def test_ivfpq_gate_op_ignores_all_zero_vector(spark, tmp_path):
+    """An all-zero embedding has no direction to quantize: sim_ann_ivfpq
+    drops it before training (the zero-norm guard the index build and
+    appends share), so adding one to the corpus changes no output row.
+    vec_id 501 is never a k-means seed (% 7), a PQ seed (% 13) or a
+    query (% 50)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdfparse_spark.pipeline.ann_index import sim_ann_ivfpq
+
+    sf = os.path.join(os.path.dirname(SF), "sf0.01")
+    base = pq.read_table(sf + "/embeddings.parquet")
+    zero = pa.table(
+        {
+            "vec_id": pa.array([501], pa.int64()),
+            "embedding": pa.array([[0.0] * 64], pa.list_(pa.float32())),
+            "label": pa.array([0], pa.int32()),
+        }
+    )
+    pq.write_table(
+        pa.concat_tables([base.replace_schema_metadata(None), zero]),
+        str(tmp_path / "embeddings.parquet"),
+    )
+
+    def rows(sf_dir):
+        return sorted(
+            (r["query_id"], r["neighbor_id"], r["rank"], r["cos_sim"], r["adc_dist"])
+            for r in sim_ann_ivfpq(spark, sf_dir).collect()
+        )
+
+    assert rows(str(tmp_path)) == rows(sf)
 
 
 def test_ann_index_append_finds_planted_neighbor(spark, tmp_path):
@@ -1202,7 +1244,7 @@ def test_span_ngrams_planted_shared_run(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import dedup_span_ngrams
+    from pdfparse_spark.pipeline.textdedup import dedup_span_ngrams
 
     spans = {}
     for r in dedup_span_ngrams(spark, d).collect():
@@ -1239,7 +1281,7 @@ def test_span_hot_gram_salted_join_spreads(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import _dup_gram_cov, _SPAN_SALT
+    from pdfparse_spark.pipeline.textdedup import _dup_gram_cov, _SPAN_SALT
 
     coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
     bcast_key = "spark.sql.autoBroadcastJoinThreshold"
@@ -1302,7 +1344,7 @@ def test_dsir_scores_target_like_docs_positive(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import docs_dsir_weights
+    from pdfparse_spark.pipeline.dsir_model import docs_dsir_weights
 
     rows = {r["doc_id"]: r for r in docs_dsir_weights(spark, d).collect()}
     assert set(rows) == set(range(30)) | {31}
@@ -1330,11 +1372,8 @@ def test_bloom_prior_no_false_negatives_and_fp_bound(spark, tmp_path):
     sweeps the real sf0.01 corpus, which carries no cross-slice dups."""
     import pandas as pd
 
-    from pdfparse_spark.pipeline.textops import (
-        _BLOOM_PRIOR_MOD,
-        _docs,
-        dedup_bloom_prior,
-    )
+    from pdfparse_spark.pipeline.bloom_index import _BLOOM_PRIOR_MOD, dedup_bloom_prior
+    from pdfparse_spark.pipeline.corpus import read_docs as _docs
 
     texts = ["planted doc number %d with its own words %d" % (i, i * 7) for i in range(200)]
     for k in range(0, 40, 4):
@@ -1373,7 +1412,7 @@ def test_pack_bins_invariants(spark):
     once; bin indexes advance 0/+1 with position (next-fit never reopens
     a bin); no bin exceeds the token budget unless it holds exactly one
     oversize doc, and oversize docs always sit alone."""
-    from pdfparse_spark.pipeline.textops import _PACK_TOKENS, docs_pack_bins
+    from pdfparse_spark.pipeline.docorder import _PACK_TOKENS, docs_pack_bins
 
     rows = docs_pack_bins(spark, "/root/testdata/sf0.01").collect()
     n_docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").count()
@@ -1407,7 +1446,7 @@ def test_pack_bins_split_oversize_never_over_budget(spark, tmp_path):
     order with piece_idx 0..n_pieces-1, and every bin's fill ≤ budget."""
     import pandas as pd
 
-    from pdfparse_spark.pipeline.textops import docs_pack_bins
+    from pdfparse_spark.pipeline.docorder import docs_pack_bins
 
     budget = 16
     n_toks = {0: 40, 1: 16, 2: 7, 3: 33, 4: 3, 5: 16 * 4}
@@ -1477,7 +1516,7 @@ def test_span_strip_removes_exactly_planted_run(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import dedup_span_strip
+    from pdfparse_spark.pipeline.textdedup import dedup_span_strip
 
     rows = {r["doc_id"]: r for r in dedup_span_strip(spark, d).collect()}
     assert set(rows) == {0, 1, 2}
@@ -1568,7 +1607,8 @@ def test_run_curate_cli_dsir_filter(spark, tmp_path):
     import contextlib, io, json
 
     from pdfparse_spark.pipeline.run_curate import main
-    from pdfparse_spark.pipeline.textops import corpus_curate_full, docs_dsir_weights
+    from pdfparse_spark.pipeline.curate import corpus_curate_full
+    from pdfparse_spark.pipeline.dsir_model import docs_dsir_weights
 
     out = str(tmp_path / "curated_dsir")
     buf = io.StringIO()
@@ -1783,9 +1823,9 @@ def test_dsir_frames_face_matches_gate_split(spark):
     """dsir_weights_frames fed the gate op's own mod split must reproduce
     the gate op's scores exactly for the raw docs (the target side only
     trains p_target in both paths)."""
-    from pdfparse_spark.pipeline.textops import (
+    from pdfparse_spark.pipeline.corpus import read_docs as _docs
+    from pdfparse_spark.pipeline.dsir_model import (
         _DSIR_TARGET_MOD,
-        _docs,
         docs_dsir_weights,
         dsir_weights_frames,
     )
@@ -1798,7 +1838,7 @@ def test_dsir_frames_face_matches_gate_split(spark):
         for r in docs_dsir_weights(spark, SF).collect()
         if r["doc_id"] % _DSIR_TARGET_MOD != 0
     }
-    from pdfparse_spark.pipeline.textops import _DSIR_BUCKETS
+    from pdfparse_spark.pipeline.dsir_model import _DSIR_BUCKETS
 
     frames = {
         r["doc_id"]: (r["n_feats"], r["log_w"], r["keep"])
@@ -1814,10 +1854,10 @@ def test_dsir_log_domain_matches_cross_product(spark):
     ln(Tr+B)) must equal the gate's exact-integer cross-product λ to fp
     tolerance at gate scale — same buckets, same split, scores within one
     rounding step and identical keep verdicts."""
-    from pdfparse_spark.pipeline.textops import (
+    from pdfparse_spark.pipeline.corpus import read_docs as _docs
+    from pdfparse_spark.pipeline.dsir_model import (
         _DSIR_BUCKETS,
         _DSIR_TARGET_MOD,
-        _docs,
         dsir_weights_frames,
     )
 
@@ -1851,7 +1891,7 @@ def test_dsir_production_buckets_default(spark):
     bucket ids observed under the default exceed the gate's 1024 space
     (the one-constant scale-up is real, not cosmetic), and semantics hold
     (target-vocab docs keep, pool docs drop)."""
-    from pdfparse_spark.pipeline.textops import _DSIR_PROD_BUCKETS, _dsir_fb
+    from pdfparse_spark.pipeline.dsir_model import _dsir_fb, _DSIR_PROD_BUCKETS
 
     from pyspark.sql import functions as F
 
@@ -1882,11 +1922,8 @@ def test_dsir_model_roundtrip_matches_frames(spark, tmp_path):
         score_with_dsir_model,
         train_dsir_model,
     )
-    from pdfparse_spark.pipeline.textops import (
-        _DSIR_TARGET_MOD,
-        _docs,
-        dsir_weights_frames,
-    )
+    from pdfparse_spark.pipeline.corpus import read_docs as _docs
+    from pdfparse_spark.pipeline.dsir_model import _DSIR_TARGET_MOD, dsir_weights_frames
 
     d = _docs(spark, SF)
     raw = d.filter(f"doc_id % {_DSIR_TARGET_MOD} != 0")
@@ -1944,7 +1981,7 @@ def test_dsir_frames_colliding_ids_never_score_target(spark):
     never to that raw doc's features or score.  Pinned by giving the
     colliding target row a big distinct vocabulary: any leak would inflate
     the raw doc's n_feats and drag its log_w positive."""
-    from pdfparse_spark.pipeline.textops import dsir_weights_frames
+    from pdfparse_spark.pipeline.dsir_model import dsir_weights_frames
 
     raw = spark.createDataFrame(
         [
@@ -1996,7 +2033,7 @@ def test_decontaminate_jaccard_planted(spark, tmp_path):
     )
     d = str(tmp_path)
     pdf.to_parquet(d + "/documents.parquet")
-    from pdfparse_spark.pipeline.textops import decontaminate_jaccard
+    from pdfparse_spark.pipeline.decon_index import decontaminate_jaccard
 
     rows = {r["doc_id"]: r for r in decontaminate_jaccard(spark, d).collect()}
     assert set(rows) == {1, 2, 3}  # the benchmark split itself is not scored
@@ -2017,7 +2054,7 @@ def test_docs_repeat_plan_invariants(spark):
     unbiased estimate of Σx (4σ band over the fractional-part draws)."""
     import math
 
-    from pdfparse_spark.pipeline.textops import _REPEAT_MAX, docs_repeat_plan
+    from pdfparse_spark.pipeline.docorder import _REPEAT_MAX, docs_repeat_plan
 
     rows = docs_repeat_plan(spark, SF).collect()
     assert len(rows) == 500
@@ -2094,7 +2131,7 @@ def test_run_curate_cli_decon_filter(spark, tmp_path):
     import contextlib, io, json
 
     from pdfparse_spark.pipeline.run_curate import main
-    from pdfparse_spark.pipeline.textops import corpus_curate_decon, corpus_curate_dsir
+    from pdfparse_spark.pipeline.curate import corpus_curate_decon, corpus_curate_dsir
 
     out = str(tmp_path / "curated_decon")
     buf = io.StringIO()
@@ -2128,7 +2165,7 @@ def test_docs_repeat_order_invariants(spark):
     """The materialized order is a 1..N permutation over exactly the
     plan's copies: every doc with n_repeats = k contributes copies 1..k,
     and rank order follows the independent per-copy md5 keys."""
-    from pdfparse_spark.pipeline.textops import docs_repeat_order, docs_repeat_plan
+    from pdfparse_spark.pipeline.docorder import docs_repeat_order, docs_repeat_plan
 
     plan = {
         r["doc_id"]: r["n_repeats"]
@@ -2160,7 +2197,8 @@ def test_lr_model_roundtrip_scores_and_separates(spark, tmp_path):
         score_with_lr_model,
         train_lr_model,
     )
-    from pdfparse_spark.pipeline.textops import _LR_LABEL, _emb
+    from pdfparse_spark.pipeline.corpus import read_emb as _emb
+    from pdfparse_spark.pipeline.lr_model import _LR_LABEL
 
     e = _emb(spark, SF)
     model = str(tmp_path / "lr_model")
@@ -2212,7 +2250,7 @@ def test_lr_model_feature_tag_guard(spark, tmp_path, monkeypatch):
     at score time, not silently mis-applied — the bloom-index seed
     lesson, fourth lifecycle instance."""
     from pdfparse_spark.pipeline import lr_model as lm
-    from pdfparse_spark.pipeline.textops import _emb
+    from pdfparse_spark.pipeline.corpus import read_emb as _emb
 
     model = str(tmp_path / "m")
     lm.train_lr_model(spark, _emb(spark, SF).limit(200), model, iters=2)
@@ -2242,7 +2280,7 @@ def test_docs_split_holdout_invariants(spark):
     split is deterministic across runs (doc_id-keyed draw, no RNG)."""
     import math
 
-    from pdfparse_spark.pipeline.textops import _HOLDOUT_FRAC, docs_split_holdout
+    from pdfparse_spark.pipeline.docorder import _HOLDOUT_FRAC, docs_split_holdout
 
     rows = docs_split_holdout(spark, SF).collect()
     by_src = {}
@@ -2268,7 +2306,7 @@ def test_docs_split_holdout_invariants(spark):
 def test_docs_curriculum_order_invariants(spark):
     """Dense 1..N rank with quality non-decreasing along it (ties broken
     by doc_id) — the two-phase banded rank must equal a global sort."""
-    from pdfparse_spark.pipeline.textops import docs_curriculum_order
+    from pdfparse_spark.pipeline.docorder import docs_curriculum_order
 
     rows = sorted(
         docs_curriculum_order(spark, SF).collect(),
@@ -2286,7 +2324,8 @@ def test_run_curate_cli_curriculum_order(spark, tmp_path):
     import contextlib, io, json
 
     from pdfparse_spark.pipeline.run_curate import main
-    from pdfparse_spark.pipeline.textops import corpus_curate, docs_curriculum_order
+    from pdfparse_spark.pipeline.curate import corpus_curate
+    from pdfparse_spark.pipeline.docorder import docs_curriculum_order
 
     out = str(tmp_path / "curated")
     buf = io.StringIO()
@@ -2323,7 +2362,7 @@ def test_run_curate_cli_holdout(spark, tmp_path):
     import contextlib, io, json
 
     from pdfparse_spark.pipeline.run_curate import main
-    from pdfparse_spark.pipeline.textops import docs_split_holdout
+    from pdfparse_spark.pipeline.docorder import docs_split_holdout
 
     out = str(tmp_path / "curated")
     hold = str(tmp_path / "val")
