@@ -1,7 +1,7 @@
 """Turn-level extraction kernel: classify → route → extract.
 
 This is the function applied per transcript turn inside the Spark
-``mapInPandas`` stage (SURVEY.md §2 P8/R12).  Pure Python, no Spark imports:
+``mapInArrow`` stage (SURVEY.md §2 P8/R12).  Pure Python, no Spark imports:
 unit-testable standalone, shipped to executors via --py-files.
 
 Contract (BASELINE.json input_hint):
@@ -29,7 +29,7 @@ __all__ = [
     "extract_pdf_bytes",
     "extract_turn",
     "decode_pdf_payload",
-    "probe_pdf_pages",
+    "probe_pdf_pages_validated",
     "extract_pdf_segment",
     "merge_pdf_segments",
 ]
@@ -45,6 +45,19 @@ def classify_text(text: str) -> str:
     return "text"
 
 
+def _process_status(device, data: bytes, **window) -> str:
+    """Run the kernel chain into ``device``; the parse status it ends with.
+    Lenient — never raises: one bad PDF must not kill the batch, so any
+    failure (RecursionError included) becomes ``error:<class name>``."""
+    try:
+        process_pdf(device, data, **window)
+        return "ok"
+    except PDFNotImplementedError:
+        return "unsupported_filter"
+    except Exception as exc:
+        return "error:%s" % type(exc).__name__
+
+
 def extract_pdf_bytes(
     data: bytes, device_factory=SimpleTextDevice
 ) -> tuple[str, list[tuple[int, int, int]], str]:
@@ -54,15 +67,7 @@ def extract_pdf_bytes(
     parity, default) or AdvanceTextDevice (AFM-width word-spacing
     synthesis — an opt-in capability beyond the reference)."""
     device = device_factory()
-    try:
-        process_pdf(device, data)
-        status = "ok"
-    except PDFNotImplementedError:
-        status = "unsupported_filter"
-    except RecursionError:
-        status = "error:RecursionError"
-    except Exception as exc:  # lenient: one bad PDF must not kill the batch
-        status = "error:%s" % type(exc).__name__
+    status = _process_status(device, data)
     return device.get_text(), device.spans, status
 
 
@@ -125,25 +130,12 @@ def extract_turn(
 # no-newline-at-page-boundary case).
 
 
-def probe_pdf_pages(text: str) -> int:
-    """Page count for a pdf-classified turn; -1 when unparseable (the split
-    planner then routes the turn through the whole-doc path, which will
-    surface the real error status)."""
-    from .interp import count_pdf_pages
-
-    data = decode_pdf_payload(text)
-    if data is None:
-        return -1
-    try:
-        return count_pdf_pages(data)
-    except Exception:
-        return -1
-
-
 def probe_pdf_pages_validated(text: str) -> tuple[int, bool]:
     """(n_pages, counts_ok) for the split planner; (-1, False) when
-    unparseable.  counts_ok permits the Count-skipping fast window walk in
-    segments (O(window) instead of O(total pages) tree traversal)."""
+    unparseable (the planner then routes the turn through the whole-doc
+    path, which surfaces the real error status).  counts_ok permits the
+    Count-skipping fast window walk in segments (O(window) instead of
+    O(total pages) tree traversal)."""
     from .interp import count_pdf_pages_validated
 
     data = decode_pdf_payload(text)
@@ -168,8 +160,6 @@ def extract_pdf_segment(
     ``fast=True`` is only valid when probe_pdf_pages_validated returned
     counts_ok — it enables the /Count subtree-skipping window walk.
     """
-    from .interp import process_pdf
-
     device = SimpleTextDevice()
     data = decode_pdf_payload(text)
     if data is None:
@@ -177,16 +167,9 @@ def extract_pdf_segment(
             "seg_text": "", "spans": [], "status": "error:Base64DecodeError",
             "first_y": None, "last_y": None, "rendered_any": False,
         }
-    try:
-        process_pdf(device, data, page_start=page_start, page_end=page_end,
-                    fast_window=fast)
-        status = "ok"
-    except PDFNotImplementedError:
-        status = "unsupported_filter"
-    except RecursionError:
-        status = "error:RecursionError"
-    except Exception as exc:
-        status = "error:%s" % type(exc).__name__
+    status = _process_status(
+        device, data, page_start=page_start, page_end=page_end, fast_window=fast
+    )
     return {
         "seg_text": device.get_text(),
         "spans": device.spans,

@@ -12,7 +12,7 @@ oracle at once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # tokenization shared by every text op — MUST stay in sync with the DuckDB
@@ -94,13 +94,19 @@ def tokenized_docs(
     )
 
 
+def double_vector(col: str = "embedding") -> Column:
+    """The embedding cast every vector op starts from: ``col`` as an
+    array<double> (the oracles' ``list_transform`` twin)."""
+    return F.expr("transform(%s, x -> CAST(x AS DOUBLE))" % col)
+
+
 def norm_vectors(embs: DataFrame, *carry: str) -> DataFrame:
     """(vec_id, *carry, v, nrm) from an embeddings-schema frame: the
     double cast plus the L2 norm, summed left from 0D like DOT."""
     return embs.select(
         "vec_id",
         *carry,
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+        double_vector().alias("v"),
     ).withColumn("nrm", F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x))"))
 
 

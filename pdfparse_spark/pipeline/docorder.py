@@ -13,7 +13,7 @@ plan funnels through a SinglePartition exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .corpus import SQL_TOKS, TOKS, read_docs
@@ -37,11 +37,16 @@ def docs_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def md5_shuffle_rank(
-    d: DataFrame, *extra_cols: str, cumsum_col: str | None = None
+    d: DataFrame,
+    *extra_cols: str,
+    cumsum_col: str | None = None,
+    key: Column | None = None,
 ) -> DataFrame:
     """Two-phase deterministic global rank by md5(seed || doc_id) over any
     DataFrame with a doc_id column (see docs_global_shuffle for the scale
-    argument); ``extra_cols`` are carried through.
+    argument); ``extra_cols`` are carried through and, after doc_id,
+    break equal keys.  ``key`` replaces the md5 hex key (it must stay
+    uniform in its first byte).
 
     With ``cumsum_col`` set (must name a column of ``d``), also emits
     ``cum_start`` — the exclusive prefix sum of that column in shuffle
@@ -49,7 +54,10 @@ def md5_shuffle_rank(
     hashpartitioning plus a broadcast 256-row bucket-offset table, so the
     global prefix sum never funnels through a SinglePartition exchange.
     """
-    key = F.md5(F.encode(F.concat(F.lit("seed42:"), F.col("doc_id").cast("string")), "utf-8"))
+    if key is None:
+        key = F.md5(
+            F.encode(F.concat(F.lit("seed42:"), F.col("doc_id").cast("string")), "utf-8")
+        )
     cols = list(extra_cols)
     if cumsum_col is not None and cumsum_col not in cols:
         cols.append(cumsum_col)
@@ -72,7 +80,7 @@ def md5_shuffle_rank(
         )
         off_cols.append("bkt_woffset")
     offsets = offsets.select(*off_cols)
-    w = Window.partitionBy("bkt").orderBy("shuffle_key", "doc_id")
+    w = Window.partitionBy("bkt").orderBy("shuffle_key", "doc_id", *extra_cols)
     ranked = keyed.withColumn("bkt_rank", F.row_number().over(w))
     out_cols = [
         F.col("doc_id"),
@@ -306,25 +314,8 @@ def docs_repeat_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             "utf-8",
         )
     )
-    keyed = copies.withColumn("shuffle_key", key).withColumn(
-        "bkt", F.substring("shuffle_key", 1, 2)
-    )
-    counts = keyed.groupBy("bkt").agg(F.count("*").alias("n"))
-    prior = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "bkt_offset", F.coalesce(F.sum("n").over(prior), F.lit(0))
-    ).select("bkt", "bkt_offset")
-    w = Window.partitionBy("bkt").orderBy("shuffle_key", "doc_id", "copy_idx")
-    return (
-        keyed.withColumn("bkt_rank", F.row_number().over(w))
-        .join(F.broadcast(offsets), "bkt")
-        .select(
-            "doc_id",
-            "copy_idx",
-            "n_repeats",
-            "shuffle_key",
-            (F.col("bkt_offset") + F.col("bkt_rank")).cast("long").alias("train_rank"),
-        )
+    return md5_shuffle_rank(copies, "copy_idx", "n_repeats", key=key).withColumnRenamed(
+        "shuffle_rank", "train_rank"
     )
 
 

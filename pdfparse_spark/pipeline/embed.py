@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .corpus import DOT, EMB_DIM, SQL_DOT, SQL_EMB_NORM, emb_norm, read_emb
+from .corpus import DOT, EMB_DIM, SQL_DOT, SQL_EMB_NORM, double_vector, emb_norm, read_emb
 from .lr_model import embed_centered_stats, sql_darray
 
 
@@ -647,7 +647,7 @@ def embed_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_emb(spark, sf_dir).select(
         "vec_id",
         "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
+        double_vector().alias("v"),
     )
     margin = (
         F.expr(

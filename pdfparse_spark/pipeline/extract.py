@@ -37,16 +37,26 @@ from . import pyworker
 
 __all__ = [
     "DEDUP_KERNEL_SCHEMA",
+    "INPUT_COLS",
     "OUTPUT_SCHEMA",
     "TELEMETRY_SCHEMA",
-    "extract_batch",
-    "extract_batch_dedup",
-    "extract_batch_telemetry",
+    "TURN_KEY_COLS",
+    "extract_payloads",
+    "join_payloads",
+    "kernel_arrays",
+    "make_extract_batch",
+    "payload_frames",
     "payload_key",
     "run_extraction",
     "run_extraction_dedup",
     "salt_repartition",
+    "spans_array",
 ]
+
+# the columns that enter the Python stage (column pruning before the shuffle)
+INPUT_COLS = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
+# the per-turn identity columns that pass through extraction unchanged
+TURN_KEY_COLS = INPUT_COLS[:-1]
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -81,29 +91,54 @@ TELEMETRY_SCHEMA = T.StructType(
 )
 
 
-_TURN_KEY_COLS = ("conv_id", "turn_idx", "role", "tool", "ts")
 _KERNEL_COLS = ("content_type", "extracted_text", "spans", "parse_status", "n_chars")
 _ARROW_TYPES = {f.name: to_arrow_type(f.dataType) for f in TELEMETRY_SCHEMA.fields}
+
+
+def spans_array(rows: Iterable[Iterable[tuple[int, int, int]]]) -> pa.ListArray:
+    """The ``spans`` column as one ``ListArray`` over a ``StructArray``,
+    built from flat offset/page/start/end lists: ``rows`` holds one list of
+    (page, start, end) per row, as the kernel returns it.  No per-span dict
+    is built and no per-row converter runs on the way back to the JVM."""
+    offsets, pages, starts, ends = [0], [], [], []
+    for spans in rows:
+        for p, s, e in spans:
+            pages.append(p)
+            starts.append(s)
+            ends.append(e)
+        offsets.append(len(pages))
+    spans_type = _ARROW_TYPES["spans"]
+    values = pa.StructArray.from_arrays(
+        [pa.array(v, pa.int32()) for v in (pages, starts, ends)],
+        fields=list(spans_type.value_type),
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values, type=spans_type)
+
+
+def kernel_arrays(ctypes: list, texts: list, spans: list, statuses: list) -> list[pa.Array]:
+    """The five kernel output columns (``_KERNEL_COLS`` order) as typed
+    Arrow arrays; ``n_chars`` is derived from ``texts``."""
+    return [
+        pa.array(ctypes, _ARROW_TYPES["content_type"]),
+        pa.array(texts, _ARROW_TYPES["extracted_text"]),
+        spans_array(spans),
+        pa.array(statuses, _ARROW_TYPES["parse_status"]),
+        pa.array([len(t) for t in texts], _ARROW_TYPES["n_chars"]),
+    ]
 
 
 def make_extract_batch(
     device: str = "simple",
     telemetry: bool = False,
-    key_cols: tuple[str, ...] = _TURN_KEY_COLS,
+    key_cols: tuple[str, ...] = TURN_KEY_COLS,
 ):
     """mapInArrow body factory: one parameterized implementation for every
-    (layout device, telemetry, key-column) combination — the column assembly
-    lives in exactly one place.  ``key_cols`` are the pass-through identity
-    columns (turn keys for the per-turn path, the content hash for the
-    distinct-payload path); they leave as the input Arrow arrays, untouched.
-    The kernel is imported lazily inside the body so the module object is
-    constructed once per (reused) Python worker and the glyph/AFM tables
-    stay warm.
-
-    Output columns are built as typed Arrow arrays from flat Python lists:
-    ``spans`` is one ``ListArray`` over a ``StructArray`` made from flat
-    offset/page/start/end lists, so no per-row dict is built and no per-row
-    converter runs on the way back to the JVM.
+    (layout device, telemetry, key-column) combination.  ``key_cols`` are
+    the pass-through identity columns (turn keys for the per-turn path, the
+    content hash for the distinct-payload path); they leave as the input
+    Arrow arrays, untouched.  The kernel is imported lazily inside the body
+    so the module object is constructed once per (reused) Python worker and
+    the glyph/AFM tables stay warm.
 
     ``telemetry=True`` also emits ``kernel_us`` — wall microseconds spent
     in the kernel per turn, measured at the call site inside the worker.
@@ -114,8 +149,6 @@ def make_extract_batch(
     opt-in only because the extra column changes the output schema.
     """
     names = list(key_cols) + list(_KERNEL_COLS) + (["kernel_us"] if telemetry else [])
-    spans_type = _ARROW_TYPES["spans"]
-    span_fields = list(spans_type.value_type)
 
     def extract_batch_body(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pyworker.install()
@@ -125,45 +158,23 @@ def make_extract_batch(
 
         factory = get_device_factory(device)
         for batch in batches:
-            ctypes, texts, statuses, nchars, micros = [], [], [], [], []
-            offsets, pages, starts, ends = [0], [], [], []
+            ctypes, texts, spans, statuses, micros = [], [], [], [], []
             for text in batch.column("text").to_pylist():
                 t0 = perf_counter_ns()
-                ctype, extracted, spans, status = extract_turn(text, factory)
+                ctype, extracted, turn_spans, status = extract_turn(text, factory)
                 if telemetry:
                     micros.append((perf_counter_ns() - t0) // 1000)
                 ctypes.append(ctype)
                 texts.append(extracted)
+                spans.append(turn_spans)
                 statuses.append(status)
-                nchars.append(len(extracted))
-                for p, s, e in spans:
-                    pages.append(p)
-                    starts.append(s)
-                    ends.append(e)
-                offsets.append(len(pages))
-            span_values = pa.StructArray.from_arrays(
-                [pa.array(v, pa.int32()) for v in (pages, starts, ends)],
-                fields=span_fields,
-            )
-            cols = [batch.column(k) for k in key_cols] + [
-                pa.array(ctypes, _ARROW_TYPES["content_type"]),
-                pa.array(texts, _ARROW_TYPES["extracted_text"]),
-                pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()), span_values, type=spans_type
-                ),
-                pa.array(statuses, _ARROW_TYPES["parse_status"]),
-                pa.array(nchars, _ARROW_TYPES["n_chars"]),
-            ]
+            cols = [batch.column(k) for k in key_cols]
+            cols += kernel_arrays(ctypes, texts, spans, statuses)
             if telemetry:
                 cols.append(pa.array(micros, _ARROW_TYPES["kernel_us"]))
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return extract_batch_body
-
-
-# the two standard bodies (golden device), kept as module names for callers
-extract_batch = make_extract_batch()
-extract_batch_telemetry = make_extract_batch(telemetry=True)
 
 
 def salt_repartition(df: DataFrame, num_partitions: int, salt: int = 64) -> DataFrame:
@@ -193,18 +204,16 @@ def run_extraction(
     narrow op, so the id is the salted-shuffle partition that did the work).
     Aggregate with :func:`pdfparse_spark.pipeline.metrics.straggler_stats`.
     """
-    cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
-    df = df.select(*cols)  # column pruning before the shuffle
+    if telemetry and device != "simple":
+        raise ValueError("telemetry supports only the golden device")
+    df = df.select(*INPUT_COLS)  # column pruning before the shuffle
     if num_partitions:
         df = salt_repartition(df, num_partitions, salt)
-    if telemetry:
-        if device != "simple":
-            raise ValueError("telemetry supports only the golden device")
-        out = df.mapInArrow(extract_batch_telemetry, schema=TELEMETRY_SCHEMA)
-        return out.withColumn("part_id", F.spark_partition_id())
-    if device != "simple":
-        return df.mapInArrow(make_extract_batch(device), schema=OUTPUT_SCHEMA)
-    return df.mapInArrow(extract_batch, schema=OUTPUT_SCHEMA)
+    out = df.mapInArrow(
+        make_extract_batch(device, telemetry),
+        schema=TELEMETRY_SCHEMA if telemetry else OUTPUT_SCHEMA,
+    )
+    return out.withColumn("part_id", F.spark_partition_id()) if telemetry else out
 
 
 def payload_key():
@@ -225,7 +234,31 @@ DEDUP_KERNEL_SCHEMA = T.StructType(
 )
 
 
-extract_batch_dedup = make_extract_batch(key_cols=("payload_sha",))
+def payload_frames(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(keyed, uniq): the turns with their ``payload_sha`` added, and the
+    distinct (payload_sha, text) payloads — the two inputs of every
+    content-addressed path (batch and stream)."""
+    keyed = df.select(*INPUT_COLS).withColumn("payload_sha", payload_key())
+    uniq = keyed.select("payload_sha", "text").dropDuplicates(["payload_sha"])
+    return keyed, uniq
+
+
+def extract_payloads(uniq: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """The kernel over distinct payloads → ``DEDUP_KERNEL_SCHEMA`` rows,
+    repartitioned by content hash (unique by construction, so no salt)."""
+    if num_partitions:
+        uniq = uniq.repartition(num_partitions, F.col("payload_sha"))
+    return uniq.mapInArrow(
+        make_extract_batch(key_cols=("payload_sha",)), schema=DEDUP_KERNEL_SCHEMA
+    )
+
+
+def join_payloads(keyed: DataFrame, extracted: DataFrame) -> DataFrame:
+    """Every turn of ``keyed`` joined to its payload's extraction: the
+    skinny turn keys meet ``DEDUP_KERNEL_SCHEMA`` rows on ``payload_sha``
+    and leave in ``OUTPUT_SCHEMA`` column order."""
+    out = keyed.drop("text").join(extracted, "payload_sha", "left")
+    return out.select(*OUTPUT_SCHEMA.names)
 
 
 def run_extraction_dedup(
@@ -266,33 +299,23 @@ def run_extraction_dedup(
     distinct payloads run through the per-page-parallel extractor
     (split_extract) under pseudo turn keys (conv_id = content hash), so
     one huge DISTINCT document — which content-hash partitioning alone
-    can never split — still fans out into page-range segments."""
-    cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
-    df = df.select(*cols)
-    keyed = df.withColumn("payload_sha", payload_key())
-    uniq = keyed.select("payload_sha", "text").dropDuplicates(["payload_sha"])
-    if split_pages:
-        from .split_extract import run_extraction_split
+    can never split — still fans out into page-range segments.  Its
+    heavy-key probe is a Spark job that runs when this function is
+    called, not when the returned frame is."""
+    keyed, uniq = payload_frames(df)
+    if not split_pages:
+        return join_payloads(keyed, extract_payloads(uniq, num_partitions))
+    from .split_extract import run_extraction_split
 
-        pseudo = uniq.select(
-            F.col("payload_sha").alias("conv_id"),
-            F.lit(0).alias("turn_idx"),
-            F.lit(None).cast("string").alias("role"),
-            F.lit(None).cast("string").alias("tool"),
-            F.lit(None).cast("timestamp").alias("ts"),
-            "text",
-        )
-        extracted = run_extraction_split(pseudo, num_partitions=num_partitions).select(
-            F.col("conv_id").alias("payload_sha"),
-            "content_type",
-            "extracted_text",
-            "spans",
-            "parse_status",
-            "n_chars",
-        )
-    else:
-        if num_partitions:
-            uniq = uniq.repartition(num_partitions, F.col("payload_sha"))
-        extracted = uniq.mapInArrow(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
-    out = keyed.drop("text").join(extracted, "payload_sha", "left")
-    return out.select(*[f.name for f in OUTPUT_SCHEMA.fields])
+    pseudo = uniq.select(
+        F.col("payload_sha").alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.lit(None).cast("string").alias("role"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        "text",
+    )
+    extracted = run_extraction_split(pseudo, num_partitions=num_partitions).select(
+        F.col("conv_id").alias("payload_sha"), *_KERNEL_COLS
+    )
+    return join_payloads(keyed, extracted)

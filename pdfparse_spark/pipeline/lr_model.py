@@ -54,7 +54,7 @@ from .artifact import (
     write_meta,
     write_rows,
 )
-from .corpus import read_emb
+from .corpus import double_vector, read_emb
 
 __all__ = [
     "train_embed_lr",
@@ -101,7 +101,7 @@ def embed_centered_stats(
     e = (embs if embs is not None else read_emb(spark, sf_dir)).select(
         "vec_id",
         "label",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("x0"),
+        double_vector().alias("x0"),
     )
     rows = (
         e.select(F.posexplode("x0").alias("pos", "xv"))

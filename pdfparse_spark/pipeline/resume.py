@@ -139,9 +139,10 @@ def run_resumable(
 
     ``split_pages=True`` routes heavy documents through the per-page-
     parallel extractor (split_extract.run_extraction_split) — identical
-    output rows, no single-task straggler on a huge PDF.  Mutually
-    exclusive with ``telemetry`` (the split path has no per-turn timing
-    column).
+    output rows, no single-task straggler on a huge PDF.  Each wave's
+    heavy-key probe runs as its own Spark job when the wave's query is
+    built.  Mutually exclusive with ``telemetry`` (the split path has no
+    per-turn timing column).
 
     ``dedup_payloads=True`` routes each wave through the content-addressed
     extractor (extract.run_extraction_dedup) — kernel once per distinct

@@ -12,7 +12,7 @@ documents across tasks with an EXACT reassembly:
    land on different tasks.  The payload is replicated per segment — a
    deliberate, bounded cost (n_pages / pages_per_seg copies) paid only for
    the rare heavy docs, in exchange for removing the unbounded straggler.
-3. **Merge** — a grouped ``applyInPandas`` reapplies the |Δy|>3 newline
+3. **Merge** — a grouped ``applyInArrow`` reapplies the |Δy|>3 newline
    policy at segment boundaries from each segment's (first_y, last_y)
    metadata (kernel.extract.merge_pdf_segments), making the output
    byte-identical to whole-doc extraction — pinned by
@@ -20,22 +20,34 @@ documents across tasks with an EXACT reassembly:
    no-newline-at-page-boundary case.
 
 Light docs (and non-pdf turns) take the normal ``run_extraction`` path
-untouched; the heavy key set is broadcast (heavy docs are rare by
-definition, and the planner degrades gracefully: an unparseable probe
-routes the turn to the whole-doc path, which surfaces the real error).
+untouched; the heavy key set is collected and broadcast (heavy docs are
+rare by definition, and the planner degrades gracefully: an unparseable
+probe routes the turn to the whole-doc path, which surfaces the real
+error).  All three bodies are Arrow bodies (``mapInArrow`` /
+``applyInArrow``) that build ``spans`` with the main body's
+``extract.spans_array``; no pandas frame sits in the path.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from .extract import OUTPUT_SCHEMA, run_extraction
+from . import pyworker
+from .extract import (
+    INPUT_COLS,
+    OUTPUT_SCHEMA,
+    TURN_KEY_COLS,
+    kernel_arrays,
+    run_extraction,
+    spans_array,
+)
 
 __all__ = ["run_extraction_split"]
 
@@ -50,116 +62,72 @@ _PROBE_SCHEMA = T.StructType(
     ]
 )
 
+# extract_pdf_segment's result keys, in schema order
+_SEG_COLS = ("seg_text", "spans", "status", "first_y", "last_y", "rendered_any")
 _SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
+    [OUTPUT_SCHEMA[k] for k in TURN_KEY_COLS]
+    + [
         T.StructField("seg_idx", T.IntegerType(), False),
         T.StructField("seg_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("page", T.IntegerType(), False),
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            True,
-        ),
+        OUTPUT_SCHEMA["spans"],
         T.StructField("status", T.StringType(), False),
         T.StructField("first_y", T.DoubleType(), True),
         T.StructField("last_y", T.DoubleType(), True),
         T.StructField("rendered_any", T.BooleanType(), False),
     ]
 )
+_SEG_TYPES = {f.name: to_arrow_type(f.dataType) for f in _SEGMENT_SCHEMA.fields}
 
 
-def _probe_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _probe_batch(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    pyworker.install()
     from ..kernel.extract import probe_pdf_pages_validated
 
-    for pdf in batches:
-        probed = [probe_pdf_pages_validated(t) for t in pdf["text"]]
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"],
-                "n_pages": [n for n, _ in probed],
-                "fast": [ok for _, ok in probed],
-            }
+    for batch in batches:
+        probed = [probe_pdf_pages_validated(t) for t in batch.column("text").to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("conv_id"),
+                batch.column("turn_idx"),
+                pa.array([n for n, _ in probed], pa.int32()),
+                pa.array([ok for _, ok in probed], pa.bool_()),
+            ],
+            names=_PROBE_SCHEMA.names,
         )
 
 
-def _segment_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _segment_batch(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    pyworker.install()
     from ..kernel.extract import extract_pdf_segment
 
-    for pdf in batches:
-        rows: dict[str, list] = {k: [] for k in
-                                 ("seg_text", "spans", "status",
-                                  "first_y", "last_y", "rendered_any")}
-        for text, p_start, p_end, fast in zip(
-            pdf["text"], pdf["p_start"], pdf["p_end"], pdf["fast"]
-        ):
-            seg = extract_pdf_segment(text, int(p_start), int(p_end), fast=bool(fast))
-            rows["seg_text"].append(seg["seg_text"])
-            rows["spans"].append(
-                [{"page": p, "start": s, "end": e} for (p, s, e) in seg["spans"]]
-            )
-            rows["status"].append(seg["status"])
-            rows["first_y"].append(seg["first_y"])
-            rows["last_y"].append(seg["last_y"])
-            rows["rendered_any"].append(seg["rendered_any"])
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"],
-                "role": pdf["role"],
-                "tool": pdf["tool"],
-                "ts": pdf["ts"],
-                "seg_idx": pdf["seg_idx"],
-                **rows,
-            }
-        )
+    for batch in batches:
+        args = [batch.column(k).to_pylist() for k in ("text", "p_start", "p_end", "fast")]
+        segs = [extract_pdf_segment(t, s, e, fast=f) for t, s, e, f in zip(*args)]
+        cols = [batch.column(k) for k in TURN_KEY_COLS + ("seg_idx",)]
+        for k in _SEG_COLS:
+            vals = [seg[k] for seg in segs]
+            cols.append(spans_array(vals) if k == "spans" else pa.array(vals, _SEG_TYPES[k]))
+        yield pa.RecordBatch.from_arrays(cols, names=_SEGMENT_SCHEMA.names)
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _merge_group(table: pa.Table) -> pa.Table:
+    pyworker.install()
     from ..kernel.extract import merge_pdf_segments
 
-    pdf = pdf.sort_values("seg_idx")
-    segs = [
-        {
-            "seg_text": r.seg_text,
-            "spans": [
-                (d["page"], d["start"], d["end"])
-                for d in (r.spans if r.spans is not None else [])
-            ],
-            "status": r.status,
-            "first_y": r.first_y if pd.notna(r.first_y) else None,
-            "last_y": r.last_y if pd.notna(r.last_y) else None,
-            "rendered_any": bool(r.rendered_any),
-        }
-        for r in pdf.itertuples()
-    ]
-    text, spans, status = merge_pdf_segments(segs)
-    first = pdf.iloc[0]
-    return pd.DataFrame(
-        {
-            "conv_id": [first["conv_id"]],
-            "turn_idx": [first["turn_idx"]],
-            "role": [first["role"]],
-            "tool": [first["tool"]],
-            "ts": [first["ts"]],
-            "content_type": ["pdf"],
-            "extracted_text": [text],
-            "spans": [[{"page": p, "start": s, "end": e} for (p, s, e) in spans]],
-            "parse_status": [status],
-            "n_chars": [len(text)],
-        }
+    table = table.sort_by("seg_idx")
+    cols = {k: table.column(k).to_pylist() for k in _SEG_COLS if k != "spans"}
+    # spans back to per-segment (page, start, end) lists from the flat
+    # child arrays: absolute offsets into the struct values, no per-span dict
+    spans = table.column("spans").combine_chunks()
+    flat = list(zip(*(c.to_pylist() for c in spans.values.flatten())))
+    offsets = spans.offsets.to_pylist()
+    cols["spans"] = [flat[a:b] for a, b in zip(offsets, offsets[1:])]
+    segs = [dict(zip(cols, vals)) for vals in zip(*cols.values())]
+    text, merged_spans, status = merge_pdf_segments(segs)
+    keys = [table.column(k).slice(0, 1) for k in TURN_KEY_COLS]
+    return pa.Table.from_arrays(
+        keys + kernel_arrays(["pdf"], [text], [merged_spans], [status]),
+        names=OUTPUT_SCHEMA.names,
     )
 
 
@@ -174,6 +142,12 @@ def run_extraction_split(
 ) -> DataFrame:
     """Extraction with per-page parallelism for heavy documents.  Output
     rows are identical to :func:`run_extraction` (schema and values).
+
+    The page-count probe runs once, when this function is called: the
+    heavy keys (broadcast-sized by construction — heavy docs are rare) are
+    collected to the driver and broadcast back as a local frame that feeds
+    both the heavy join and the light anti-join.  Nothing is persisted, so
+    the query leaves no cached RDD behind.
 
     ``probe_min_bytes`` skips the page-count probe for payloads below the
     threshold (a JVM-side length check): kernel time scales with content
@@ -191,35 +165,28 @@ def run_extraction_split(
     O(pages x segments) — capping segments bounds that overhead factor
     while 64-way fan-out already removes the straggler.
     """
-    cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
-    df = df.select(*cols)
+    df = df.select(*INPUT_COLS)
     if probe_min_bytes is None:
         probe_min_bytes = page_threshold * 24
-    is_pdf = F.col("text").startswith("pdfb64:") | F.col("text").startswith("%PDF-")
-    probe_pred = is_pdf
+    probe_pred = F.col("text").startswith("pdfb64:") | F.col("text").startswith("%PDF-")
     if probe_min_bytes > 0:
         probe_pred = probe_pred & (F.length("text") >= probe_min_bytes)
-    probe = (
+    heavy_rows = (
         df.filter(probe_pred)
         .select("conv_id", "turn_idx", "text")
-        .mapInPandas(_probe_batch, schema=_PROBE_SCHEMA)
+        .mapInArrow(_probe_batch, schema=_PROBE_SCHEMA)
+        .filter(F.col("n_pages") > page_threshold)
+        .collect()
     )
-    # persist the heavy key set: it is broadcast-sized by construction
-    # (heavy docs are rare) and feeds BOTH the heavy join and the light
-    # anti-join — without the persist the page-count probe would run over
-    # every pdf turn twice.  persist (not a driver collect) keeps plan
-    # construction lazy: building this DataFrame runs no jobs, and the
-    # probe snapshot is taken when the query executes, not when it is
-    # planned.
-    heavy_keys = probe.filter(F.col("n_pages") > page_threshold).persist()
+    heavy_keys = df.sparkSession.createDataFrame(heavy_rows, _PROBE_SCHEMA)
 
-    heavy = df.join(F.broadcast(heavy_keys), ["conv_id", "turn_idx"])
     seg_pages = F.greatest(
         F.lit(pages_per_seg),
         F.ceil(F.col("n_pages") / F.lit(max_segments_per_doc)).cast("int"),
     )
     segs_in = (
-        heavy.withColumn("seg_pages", seg_pages)
+        df.join(F.broadcast(heavy_keys), ["conv_id", "turn_idx"])
+        .withColumn("seg_pages", seg_pages)
         .withColumn(
             "p_start",
             F.explode(F.sequence(F.lit(1), F.col("n_pages"), F.col("seg_pages"))),
@@ -235,8 +202,8 @@ def run_extraction_split(
         segs_in = segs_in.repartition(
             num_partitions, F.col("conv_id"), F.col("turn_idx"), F.col("seg_idx")
         )
-    seg_out = segs_in.mapInPandas(_segment_batch, schema=_SEGMENT_SCHEMA)
-    merged = seg_out.groupBy("conv_id", "turn_idx").applyInPandas(
+    seg_out = segs_in.mapInArrow(_segment_batch, schema=_SEGMENT_SCHEMA)
+    merged = seg_out.groupBy("conv_id", "turn_idx").applyInArrow(
         _merge_group, schema=OUTPUT_SCHEMA
     )
 

@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
 from ..pipeline.artifact import read_stream, start_parquet_sink, state_timeout
-from ..pipeline.corpus import EMB_DIM
+from ..pipeline.corpus import EMB_DIM, double_vector
 from ..pipeline.embed import (
     SIGNLSH_BANDS,
     SIGNLSH_BITS,
@@ -82,9 +82,7 @@ def signlsh_cols(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
             "signlsh_cols scratch/output column collision: %s" % sorted(clash)
         )
     return (
-        df.withColumn(
-            "v", F.expr("transform(%s, x -> CAST(x AS DOUBLE))" % vec_col)
-        )
+        df.withColumn("v", double_vector(vec_col))
         .withColumn(
             "nrm",
             F.expr(

@@ -30,10 +30,9 @@ from ..pipeline.artifact import (
     write_batch,
 )
 from ..pipeline.extract import (
-    OUTPUT_SCHEMA,
-    DEDUP_KERNEL_SCHEMA,
-    extract_batch_dedup,
-    payload_key,
+    extract_payloads,
+    join_payloads,
+    payload_frames,
     run_extraction,
 )
 from ..pipeline.transcripts import INPUT_SCHEMA
@@ -114,14 +113,10 @@ def start_stream_extraction_dedup(
     coordinated append-only store, not this overwrite protocol.
     """
     stream = read_stream(spark, INPUT_SCHEMA, input_dir, max_files_per_trigger)
-    out_fields = [f.name for f in OUTPUT_SCHEMA.fields]
     cache_root = "%s/ck=%s" % (cache_dir, checkpoint_scope(checkpoint_dir))
 
     def _process_batch(batch_df, batch_id: int) -> DataFrame:
-        keyed = batch_df.select(
-            "conv_id", "turn_idx", "role", "tool", "ts", "text"
-        ).withColumn("payload_sha", payload_key())
-        uniq = keyed.select("payload_sha", "text").dropDuplicates(["payload_sha"])
+        keyed, uniq = payload_frames(batch_df)
         try:
             prior = read_batches(spark, cache_root).filter(
                 F.col("batch") != batch_id  # replay-stable probe
@@ -129,10 +124,7 @@ def start_stream_extraction_dedup(
             new = uniq.join(prior.select("payload_sha"), "payload_sha", "left_anti")
         except AnalysisException:  # first batch: no cache dir yet
             new = uniq
-        if num_partitions:
-            new = new.repartition(num_partitions, F.col("payload_sha"))
-        fresh = new.mapInArrow(extract_batch_dedup, schema=DEDUP_KERNEL_SCHEMA)
-        write_batch(fresh, cache_root, batch_id)
+        write_batch(extract_payloads(new, num_partitions), cache_root, batch_id)
         cache = (
             read_batches(spark, cache_root)
             .drop("batch")
@@ -141,8 +133,7 @@ def start_stream_extraction_dedup(
             .join(uniq.select("payload_sha"), "payload_sha", "left_semi")
             .dropDuplicates(["payload_sha"])
         )
-        out = keyed.drop("text").join(cache, "payload_sha", "left").select(*out_fields)
-        return out.withColumn("batch_id", F.lit(batch_id))
+        return join_payloads(keyed, cache).withColumn("batch_id", F.lit(batch_id))
 
     return start_foreach_batch(
         stream, _process_batch, checkpoint_dir, available_now, out_dir=out_dir

@@ -107,3 +107,34 @@ def test_arrow_dedup_body_matches_plain_path(spark, turns):
     expected = _expected(rows)
     expected.update({(c + "b", i): v for (c, i), v in list(expected.items())})
     assert _actual(run_extraction_dedup(dup, num_partitions=2)) == expected
+
+
+def test_arrow_split_path_matches_driver_kernel(spark, turns):
+    """Every probed PDF is heavy at threshold 1, so multi-page fixtures go
+    through the segment and merge bodies; NULL keys and error statuses
+    must come back as the driver-side kernel gives them."""
+    from pdfparse_spark.pipeline.extract import OUTPUT_SCHEMA
+    from pdfparse_spark.pipeline.split_extract import run_extraction_split
+
+    df, rows = turns
+    out = run_extraction_split(
+        df, num_partitions=3, page_threshold=1, pages_per_seg=1, probe_min_bytes=0
+    )
+    assert out.schema == OUTPUT_SCHEMA
+    assert _actual(out) == _expected(rows)
+
+
+def test_split_query_leaves_no_persisted_rdd(spark, turns):
+    from pdfparse_spark.pipeline.split_extract import run_extraction_split
+
+    sc = spark.sparkContext
+    df, _ = turns
+    # a plan no earlier query ran: a cached twin would hide a new persist
+    df = df.withColumn("conv_id", F.concat(F.col("conv_id"), F.lit("#rdd")))
+    # RDD ids only grow, so whatever the query persists lands past this
+    # mark.  Entries of earlier tests are left out: the context holds them
+    # weakly and lists them unstably (an id can drop out and come back).
+    mark = sc.emptyRDD().id()
+    out = run_extraction_split(df, page_threshold=1, pages_per_seg=1, probe_min_bytes=0)
+    assert out.count() == df.count()
+    assert {k for k in sc._jsc.getPersistentRDDs().keys() if k > mark} == set()

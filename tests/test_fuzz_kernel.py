@@ -344,7 +344,7 @@ def test_fuzz_split_merge_parity_on_corrupted_pdfs():
 
     from pdfparse_spark.fixtures.pdf_gen import build_pdf_fixtures, make_big_pdf
     from pdfparse_spark.kernel.extract import (
-        extract_pdf_segment, extract_turn, merge_pdf_segments, probe_pdf_pages)
+        extract_pdf_segment, extract_turn, merge_pdf_segments, probe_pdf_pages_validated)
 
     rng = random.Random(1234)
     fixtures = [fx.data for fx in build_pdf_fixtures()[:8]]
@@ -367,7 +367,7 @@ def test_fuzz_split_merge_parity_on_corrupted_pdfs():
         for v in variants:
             t = "pdfb64:" + base64.b64encode(v).decode()
             _, text, spans, status = extract_turn(t)
-            n = probe_pdf_pages(t)
+            n = probe_pdf_pages_validated(t)[0]
             if n <= 0:
                 continue  # planner uses the whole-doc path for these
             for pps in (1, 3):

@@ -349,7 +349,7 @@ def test_split_merge_mid_doc_error_parity():
 
     from pdfparse_spark.fixtures.pdf_gen import _assemble, _stream
     from pdfparse_spark.kernel.extract import (
-        extract_pdf_segment, extract_turn, merge_pdf_segments, probe_pdf_pages)
+        extract_pdf_segment, extract_turn, merge_pdf_segments, probe_pdf_pages_validated)
 
     bodies = {
         1: b"<< /Type /Catalog /Pages 2 0 R >>",
@@ -369,7 +369,7 @@ def test_split_merge_mid_doc_error_parity():
     t = "pdfb64:" + base64.b64encode(_assemble(bodies)).decode()
     _, text, spans, status = extract_turn(t)
     assert status.startswith("error:") and text.endswith("page 2 text")
-    n = probe_pdf_pages(t)
+    n = probe_pdf_pages_validated(t)[0]
     for pps in (1, 2, 3):
         segs = [extract_pdf_segment(t, a, a + pps) for a in range(1, n + 1, pps)]
         assert merge_pdf_segments(segs) == (text, [tuple(s) for s in spans], status), pps

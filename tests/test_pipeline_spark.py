@@ -476,7 +476,7 @@ def test_split_extraction_spreads_heavy_doc(spark):
     turn = "pdfb64:" + base64.b64encode(make_big_pdf(64, 8, seed=1).data).decode()
     df = transcripts_df(
         spark, [("conv", 0, "user", turn, "", dt.datetime(2026, 1, 1))], partitions=1)
-    probe = df.select("conv_id", "turn_idx", "text").mapInPandas(
+    probe = df.select("conv_id", "turn_idx", "text").mapInArrow(
         _probe_batch, schema=_PROBE_SCHEMA)
     assert probe.collect()[0]["n_pages"] == 64
     segs = (
@@ -486,7 +486,7 @@ def test_split_extraction_spreads_heavy_doc(spark):
         .withColumn("seg_idx", ((F.col("p_start") - 1) / F.lit(8)).cast("int"))
         .repartition(8, "conv_id", "turn_idx", "seg_idx")
     )
-    out = segs.mapInPandas(_segment_batch, schema=_SEGMENT_SCHEMA)
+    out = segs.mapInArrow(_segment_batch, schema=_SEGMENT_SCHEMA)
     parts = out.select(F.spark_partition_id().alias("pid")).distinct().count()
     assert parts >= 4  # 8 segments over 8 partitions; hash collisions allowed
 
