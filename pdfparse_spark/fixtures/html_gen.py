@@ -5,7 +5,9 @@ frozen here; the invariant under test is determinism + policy conformance.
 
 from __future__ import annotations
 
-__all__ = ["HTML_FIXTURES", "HTMLFixture", "build_html_fixtures"]
+import random
+
+__all__ = ["HTML_FIXTURES", "HTMLFixture", "build_html_fixtures", "generate_pages"]
 
 
 class HTMLFixture:
@@ -96,6 +98,75 @@ def build_html_fixtures() -> list[HTMLFixture]:
         ("html_malformed", _MALFORMED),
     ]
     return [HTMLFixture(n, h, extract_html(h)) for n, h in fixtures]
+
+
+_WORDS = (
+    "data pipeline extraction spark arrow column partition shuffle golden "
+    "turn parser density paragraph the of and to in a is that for with as"
+).split()
+_ENTITY = ["&amp;", "&lt;", "&gt;", "&quot;", "&#39;", "&#x2014;", "&nbsp;",
+           "&pound;", "&copy", "&amp"]
+_BLOCKS = ["p", "div", "li", "td", "h2", "blockquote", "pre", "dd", "section",
+           "article", "span", "em", "b"]
+_BOILER = ["nav", "header", "footer", "aside", "form"]
+
+
+def _attrs(rng: random.Random) -> str:
+    forms = [
+        ' class="c%d"', " id='i%d'", " data-n=%d", " hidden", ' title = "t %d"',
+        " href=/p/%d", ' style="color:red"', " tabindex=%d ",
+    ]
+    return "".join(
+        (f % rng.randrange(100)) if "%d" in f else f
+        for f in rng.sample(forms, rng.randrange(4))
+    )
+
+
+def _sentence(rng: random.Random) -> str:
+    words = [rng.choice(_WORDS) for _ in range(rng.randrange(3, 18))]
+    if rng.random() < 0.3:
+        words.insert(rng.randrange(len(words)), rng.choice(_ENTITY))
+    return " ".join(words)
+
+
+def _element(rng: random.Random, depth: int) -> str:
+    roll = rng.random()
+    if depth > 3 or roll < 0.3:
+        text = _sentence(rng)
+        if rng.random() < 0.2:
+            text += "<a%s>%s</a>" % (_attrs(rng), _sentence(rng))
+        if rng.random() < 0.1:
+            text += rng.choice(["<br>", "<br/>", "<BR />", "<img src=x.png>", "<hr/>"])
+        return text
+    if roll < 0.32:
+        return rng.choice([
+            "<!-- %s -->" % _sentence(rng),
+            "<script%s>var s = '</p>' + %d;</script>" % (_attrs(rng), rng.randrange(9)),
+            "<style>.x{margin:%dpx}</style>" % rng.randrange(9),
+            "<noscript>%s</noscript>" % _sentence(rng),
+        ])
+    tag = rng.choice(_BOILER if roll < 0.38 else _BLOCKS)
+    if rng.random() < 0.1:
+        tag = tag.upper()
+    body = " ".join(_element(rng, depth + 1) for _ in range(rng.randrange(1, 4)))
+    close = "" if rng.random() < 0.08 else "</%s>" % tag  # unclosed, as in the wild
+    return "<%s%s>%s%s" % (tag, _attrs(rng), body, close)
+
+
+def generate_pages(n: int, seed: int = 0) -> list[str]:
+    """``n`` distinct well-formed-ish pages of varied structure: nested
+    blocks, boilerplate containers, links, every attribute value form,
+    entities with and without ';', comments, scripts, styles, void and
+    self-closing tags, uppercase names and unclosed elements.  Seed-stable;
+    for timing and differential tests over distinct documents."""
+    rng = random.Random(seed)
+    pages = []
+    for i in range(n):
+        body = "\n".join(_element(rng, 0) for _ in range(rng.randrange(3, 10)))
+        head = "<head><title>page %d</title><meta charset=utf-8></head>" % i
+        doctype = "<!DOCTYPE html>" if rng.random() < 0.7 else ""
+        pages.append("%s<html>%s<body>%s</body></html>" % (doctype, head, body))
+    return pages
 
 
 HTML_FIXTURES = None  # built lazily

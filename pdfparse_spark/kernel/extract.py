@@ -20,7 +20,7 @@ import base64
 import binascii
 
 from .device import SimpleTextDevice
-from .html_extract import extract_html, html_signals
+from .html_extract import extract_html_status, html_signals
 from .interp import process_pdf
 from .pdftypes import PDFNotImplementedError
 
@@ -114,8 +114,8 @@ def extract_turn(
         extracted, spans, status = extract_pdf_bytes(data, device_factory)
         return ("pdf", extracted, spans, status)
     if ctype == "html":
-        extracted = extract_html(text)
-        return ("html", extracted, [(0, 0, len(extracted))], "ok")
+        extracted, status = extract_html_status(text)
+        return ("html", extracted, [(0, 0, len(extracted))], status)
     return ("text", text, [(0, 0, len(text))], "ok")
 
 
