@@ -299,18 +299,23 @@ def _walk(node: _Node, out: list[str]) -> None:
 
 
 def extract_html_status(html: str) -> tuple[str, str]:
-    """(main-content text, parse status).  Never raises: a document
-    html.parser itself rejects (it raises AssertionError on "<![ x") gives
-    ("", "error:<class name>"), the status a failed PDF turn gets."""
+    """(main-content text, parse status).  Never raises: when html.parser
+    itself rejects the document (it raises AssertionError on "<![ x"), the
+    text comes from the tree built up to the failing construct and the
+    status is "error:<class name>" — a failed PDF turn likewise keeps the
+    text of the pages before the failure."""
+    builder = _TreeBuilder()
+    status = "ok"
     try:
-        root = _scan_tree(html)
-        if root is None:
-            root = _parse_tree(html)
+        if not _scan_into(builder, html):
+            builder = _TreeBuilder()
+            builder.feed(html)
+            builder.close()
     except Exception as exc:
-        return "", "error:%s" % type(exc).__name__
+        status = "error:%s" % type(exc).__name__
     out: list[str] = []
-    _walk(root, out)
-    return "\n".join(out), "ok"
+    _walk(builder.root, out)
+    return "\n".join(out), status
 
 
 def extract_html(html: str) -> str:

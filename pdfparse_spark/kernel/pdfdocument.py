@@ -255,6 +255,11 @@ class PDFDocument:
 
     def _getobj_parse(self, pos: int, objid: int):
         parser = self._parser
+        stack = parser.object_stack_fast(pos, objid)
+        if stack is not None:
+            # do_keyword(endobj) pops the last four stack items and
+            # nextobject returns the first of them
+            return stack[-4:][0]
         parser.seek(pos)
         try:
             _, objid1 = parser.nexttoken()

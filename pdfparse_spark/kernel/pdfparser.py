@@ -11,6 +11,18 @@ favor of PDF-spec semantics so fixture goldens are self-consistent):
   pdfparse.lisp:1901-1912).
 - xref-stream field 1 unpacks ent[0:fl1] (the reference's subseq start of 9
   at pdfparse.lisp:1277 cannot work for any real W array).
+
+Whole-buffer fast path: a page's content streams and a non-stream indirect
+object's body are tokenized in one regex pass (``psparse.scan_values``) and
+assembled by ``_assemble``, with the per-token parser (``nextobject`` and
+the ``iter_objects`` generator) kept as the authority.  A whole buffer
+falls back to it on any uncovered byte; for content streams also on
+``BI``/``ID`` (inline images need byte positions) and on an odd dict (the
+authority raises PSSyntaxError after the operators before it ran); for
+objects on anything but a strict ``N G obj`` header naming the object, a
+``stream`` before the first ``endobj``, an ``endobj`` not standing as its own
+token, ``obj``/``xref``/``startxref`` in the body, ``R`` over anything but
+two ints, an open collection at ``endobj`` and an empty stack.
 """
 
 from __future__ import annotations
@@ -30,8 +42,9 @@ from .psparse import (
     PSKeyword,
     PSLiteral,
     PSStackParser,
-    PSSyntaxError,
     PSTypeError,
+    dict_of_pairs,
+    scan_values,
 )
 from .pdftypes import (
     PDFObjRef,
@@ -68,6 +81,83 @@ LITERAL_SIZE = LIT("Size")
 LITERAL_INDEX = LIT("Index")
 LITERAL_W = LIT("W")
 LITERAL_LENGTH = LIT("Length")
+
+
+# Whole-buffer assembly: what a keyword does to the object stack.  "a"/"d"/
+# "p" open an array/dict/proc, "/a"/"/d"/"/p" close one, "R" and "null" are
+# the indirect-object keywords, and "!" hands the whole buffer back to the
+# per-token parser.
+_COLLECTIONS = {
+    KEYWORD_ARRAY_BEGIN: "a",
+    KEYWORD_ARRAY_END: "/a",
+    KEYWORD_DICT_BEGIN: "d",
+    KEYWORD_DICT_END: "/d",
+    KEYWORD_PROC_BEGIN: "p",
+    KEYWORD_PROC_END: "/p",
+}
+# inline images need byte positions
+_CONTENT_ACTIONS = {**_COLLECTIONS, KEYWORD_BI: "!", KEYWORD_ID: "!"}
+_OBJECT_ACTIONS = {
+    **_COLLECTIONS,
+    KEYWORD_R: "R",
+    KEYWORD_NULL: "null",
+    KEYWORD_OBJ: "!",
+    KEYWORD_XREF: "!",
+    KEYWORD_STARTXREF: "!",
+}
+
+
+def _assemble(values: list, actions: dict, doc=None, open_ok: bool = True) -> list | None:
+    """The top-level objects ``values`` assemble into, as the per-token
+    parser builds them (positions dropped): stray closers are dropped, and
+    collections still open at the end are dropped when ``open_ok``.  None
+    hands the buffer back to the per-token parser: a "!" keyword, an odd
+    dict (the authority raises PSSyntaxError at that point), ``R`` over
+    anything but two ints, or an open collection when not ``open_ok``."""
+    out: list = []
+    cur = out
+    curtype = None
+    frames: list = []  # (enclosing type, enclosing items)
+    get = actions.get
+    for v in values:
+        act = get(v) if v.__class__ is PSKeyword else None
+        if act is None:
+            cur.append(v)
+        elif act[0] == "/":
+            if act[1] != curtype:
+                continue  # stray closer (lenient, nextobject parity)
+            items = cur
+            curtype, cur = frames.pop()
+            if act == "/d":
+                if len(items) % 2:
+                    return None
+                items = dict_of_pairs(items)
+            cur.append(items)
+        elif act == "R":
+            if len(cur) < 2 or cur[-1].__class__ is not int or cur[-2].__class__ is not int:
+                return None
+            objid = cur[-2]
+            del cur[-2:]
+            cur.append(PDFObjRef(doc, objid))
+        elif act == "null":
+            cur.append(None)
+        elif act == "!":
+            return None
+        else:
+            frames.append((curtype, cur))
+            curtype = act
+            cur = []
+    if frames and not open_ok:
+        return None
+    return out
+
+
+# "N G obj" with both numbers plain digits and "obj" a whole keyword
+_OBJ_HEADER = re.compile(rb"\s*+([0-9]++)\s++[0-9]++\s++obj(?![^#/%\[\]()<>{}\s])")
+# "endobj" as a token of its own: the byte before ends the previous token
+# without joining it (after a '/' it would be a name, after a letter or
+# digit part of a keyword or number), and the keyword ends after it
+_ENDOBJ = re.compile(rb"(?<=[\s()<>\[\]{}])endobj(?![^#/%\[\]()<>{}\s])")
 
 
 class PDFNoValidXRef(Exception):
@@ -261,6 +351,25 @@ class PDFParser(PSStackParser):
         else:
             self.push((pos, token))
 
+    def object_stack_fast(self, pos: int, objid: int) -> list | None:
+        """The object stack at ``endobj`` for object ``objid`` at ``pos``,
+        from one whole-buffer scan of its body, or None when nextobject
+        must parse it.  The fast path takes only a strict ``N G obj``
+        header naming ``objid``, a body with no ``stream`` before the first
+        ``endobj``, and that ``endobj`` standing as a token of its own."""
+        data = self.data
+        m = _OBJ_HEADER.match(data, pos)
+        if m is None or int(m.group(1)) != objid:
+            return None
+        start = m.end()
+        end = data.find(b"endobj", start)
+        if end < 0 or data.find(b"stream", start, end) >= 0 or not _ENDOBJ.match(data, end):
+            return None
+        values = scan_values(data[start:end])
+        if values is None:
+            return None
+        return _assemble(values, _OBJECT_ACTIONS, self.doc, open_ok=False) or None
+
     def _capture_stream(self, kw_pos: int) -> None:
         popped = self.pop(1)
         dic = dict_value(popped[0][1]) if popped else {}
@@ -429,15 +538,29 @@ class PDFContentParser(PSStackParser):
         return pos, captured
 
     def iter_objects(self):
-        """Specialized object assembler for the interpreter's execute loop.
+        """Object iterator for the interpreter's execute loop: the same
+        object sequence ``nextobject`` would produce, minus the positions,
+        which execute ignores.
 
-        Yields the same object sequence ``nextobject`` would produce (minus
-        the positions, which execute ignores) but without the generic
-        stack-machine protocol — scalars stream straight through, and only
-        genuine collections ([...]  <<...>>  {...}  BI..ID dicts) allocate a
-        frame.  ``nextobject`` remains the semantic authority; the
-        differential test pins this generator against it on arbitrary soup.
+        Fast path: the whole buffer is scanned in one regex pass and
+        assembled into a list (``scan_values`` + ``_assemble``).  Any byte
+        outside the bulk grammar, a ``BI``/``ID`` (inline images need byte
+        positions) or an odd dict (the authority raises PSSyntaxError only
+        after the operators before it ran) sends the WHOLE stream to the
+        per-token loop below.  ``nextobject`` remains the semantic
+        authority; the differential tests pin both paths against it.
         """
+        values = scan_values(self.data)
+        if values is not None:
+            objs = _assemble(values, _CONTENT_ACTIONS)
+            if objs is not None:
+                return iter(objs)
+        return self._iter_objects_per_token()
+
+    def _iter_objects_per_token(self):
+        """The per-token object generator: scalars stream straight through,
+        and only genuine collections ([...]  <<...>>  {...}  BI..ID dicts)
+        allocate a frame."""
         nexttoken = self.nexttoken
         frames: list = []  # (type, items) — 'a' array, 'p' proc, 'd'/'i' dict
         while True:
@@ -467,18 +590,7 @@ class PDFContentParser(PSStackParser):
             elif token is KEYWORD_DICT_END:
                 if frames and frames[-1][0] == "d":
                     _t, items = frames.pop()
-                    if len(items) % 2 != 0:
-                        raise PSSyntaxError("invalid dictionary construct: %r" % items)
-                    # unhashable key (array/dict in key position of a
-                    # malformed << >>): skip the pair leniently — a
-                    # TypeError is not a PS* error and would abort the
-                    # whole document instead of degrading
-                    d = {}
-                    for i in range(0, len(items), 2):
-                        try:
-                            d[items[i]] = items[i + 1]
-                        except TypeError:
-                            continue
+                    d = dict_of_pairs(items)
                     if frames:
                         frames[-1][1].append(d)
                     else:

@@ -6,6 +6,17 @@ Operates on real ``bytes`` end-to-end (the reference fakes bytes with latin-1
 chars, pdfparse.lisp:2781-2794); token positions are byte offsets so the
 reference's own golden token tests (pdfparse.lisp:691-743) port verbatim.
 
+Two token sources share one branch table (``_TOKEN_BRANCHES``):
+
+- ``nexttoken`` matches one token at a time; anything its fused regex does
+  not cover falls through to the full scanner, the semantic authority.
+- ``scan_values`` tokenizes a WHOLE buffer with one ``findall`` and converts
+  the matches through one capped value cache.  It answers None when any
+  byte is uncovered (comments, escaped or nested strings, '#' escapes,
+  lone '>', malformed numbers, NUL), and the caller then hands the whole
+  buffer to the per-token parser.  Its users are
+  ``PDFContentParser.iter_objects`` and ``PDFParser.object_stack_fast``.
+
 Deviation from the reference, per SURVEY.md §5.2: ``false`` parses to boolean
 False (the reference tests "true" twice and never matches false,
 pdfparse.lisp:416-421).
@@ -13,6 +24,7 @@ pdfparse.lisp:416-421).
 
 from __future__ import annotations
 
+import binascii
 import re
 
 __all__ = [
@@ -25,6 +37,8 @@ __all__ = [
     "PSSyntaxError",
     "PSBaseParser",
     "PSStackParser",
+    "dict_of_pairs",
+    "scan_values",
     "KEYWORD_ARRAY_BEGIN",
     "KEYWORD_ARRAY_END",
     "KEYWORD_DICT_BEGIN",
@@ -115,27 +129,63 @@ _LIT_CACHE: dict[bytes, object] = {}
 # single-char operator tokens, preinterned
 _KW1 = [PSKeyword(chr(c)) for c in range(256)]
 
-# Fused fast-path token regex (Python 3.11 possessive quantifiers prevent
-# the backtracking that would mis-split "12." into int 1 + junk).  Branches
-# deliberately cover ONLY cases whose semantics equal the full scanner's:
-#   flt  "12.", "12.5" (digits then '.'), trailing digits optional
-#   int  "12", "+3", "-4" — not followed by '.' or another digit
-#   lit  /Name with no '#' escape ahead
+
+def _bytes_except(excluded: bytes) -> bytes:
+    """A regex class of every byte not in ``excluded``, spelled as ranges:
+    sre matches a range class through a bitmap, about twice as fast as the
+    equivalent negated class ``[^...]``."""
+    ranges = []
+    lo = 0
+    for c in sorted(set(excluded)) + [256]:
+        if c > lo:
+            ranges.append(re.escape(bytes((lo,))) + b"-" + re.escape(bytes((c - 1,))))
+        lo = c + 1
+    return b"[" + b"".join(ranges) + b"]"
+
+
+# A name or keyword runs until a delimiter or whitespace (regex \s for bytes).
+_NAME_BYTE = _bytes_except(b"#/%[]()<>{} \t\n\r\x0b\x0c")
+
+# Token branch patterns, shared by the per-token fast path (_SIMPLE_TOKEN)
+# and the whole-buffer scanner (_BULK_TOKEN).  Python 3.11 possessive
+# quantifiers prevent the backtracking that would mis-split "12." into int 1
+# + junk.  Branches deliberately cover ONLY cases whose semantics equal the
+# full scanner's:
 #   kw   letter-initial operator/keyword run
 #   str  (...) with no escape, nesting, or unbalanced paren inside —
 #        inner bytes returned as-is, exactly matching _parse_string (the
 #        authority here): like the reference, neither scanner normalizes
 #        raw CR/CRLF to LF inside literals as PDF 32000 7.3.4.2 mandates
+#   int  "12", "+3", "-4" — not followed by '.' or another digit
+#   flt  "12.", "12.5", ".5", "-.5" (a '.' with digits on at least one side)
+#   lit  /Name with no '#' escape ahead
+#   d2   dict delimiters
+#   d1   array/proc delimiters
+# No two branches can match at the same position, so their order only sets
+# speed: the most common content-stream tokens are tried first.
+_TOKEN_BRANCHES = (
+    ("kw", rb"[A-Za-z]" + _NAME_BYTE + rb"*+"),
+    ("str", rb"\(" + _bytes_except(b"()\\") + rb"*+\)"),
+    ("int", rb"[+-]?+[0-9]++(?![.0-9])"),
+    ("flt", rb"[+-]?+(?:[0-9]++\.[0-9]*+|\.[0-9]++)"),
+    ("lit", rb"/" + _NAME_BYTE + rb"*+(?!\#)"),
+    ("d2", rb"<<|>>"),
+    ("d1", rb"[\[\]{}]"),
+)
 _SIMPLE_TOKEN = re.compile(
     rb"\s*+(?:"
-    rb"(?P<flt>[+-]?+[0-9]++\.[0-9]*+(?![0-9]))"
-    rb"|(?P<int>[+-]?+[0-9]++(?![.0-9]))"
-    rb"|(?P<lit>/[^#/%\[\]()<>{}\s]*+(?!\#))"
-    rb"|(?P<kw>[A-Za-z][^#/%\[\]()<>{}\s]*+)"
-    rb"|\((?P<str>[^()\\]*+)\)"  # escape-free string
-    rb"|(?P<d2><<|>>)"  # dict delimiters
-    rb"|(?P<d1>[\[\]{}])"  # array/proc delimiters
-    rb")"
+    + rb"|".join(b"(?P<%s>%s)" % (name.encode(), pat) for name, pat in _TOKEN_BRANCHES)
+    + rb")"
+)
+# The same branches plus hex strings (tried after "<<"), without groups:
+# findall then returns each token with its leading whitespace.  A hex
+# string's closing '>' is consumed here while _parse_hexstring leaves it to
+# the main dispatch, which pairs it with a following '>' into a dict end.
+# On a fully covered buffer the two agree: a run of k '>' after "<AB" gives
+# k // 2 dict ends both ways when k is odd, and when k is even the bulk scan
+# leaves a lone '>' uncovered.
+_BULK_TOKEN = re.compile(
+    rb"\s*+(?:" + rb"|".join(pat for _, pat in _TOKEN_BRANCHES) + rb"|<[0-9A-Fa-f\s]*+>)"
 )
 
 # Character classes; byte-level equivalents of pdfparse.lisp:42-53.
@@ -162,7 +212,94 @@ _ESC_STRING = {
 _NUMBER_START = frozenset(b"+-0123456789")
 _KEYWORD_START = frozenset(b"abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
 
-_WS = b" \t\r\n"
+
+def _keyword(tok: bytes):
+    """``true``/``false`` or the interned keyword for ``tok``, through _KW_CACHE."""
+    val = _KW_CACHE.get(tok)
+    if val is None:
+        if tok == b"true":
+            val = True
+        elif tok == b"false":
+            val = False
+        else:
+            val = KWD(tok.decode("latin-1"))
+        if len(_KW_CACHE) < _TOKEN_CACHE_MAX:
+            _KW_CACHE[tok] = val
+    return val
+
+
+def _literal(raw: bytes) -> PSLiteral:
+    """The interned name for escape-free name bytes, through _LIT_CACHE."""
+    lit = _LIT_CACHE.get(raw)
+    if lit is None:
+        lit = LIT(raw.decode("latin-1"))
+        if len(_LIT_CACHE) < _TOKEN_CACHE_MAX:
+            _LIT_CACHE[raw] = lit
+    return lit
+
+
+def _hex_bytes(digits: bytes) -> bytes:
+    """Decode a hex string body: whitespace is ignored, digits pair up, and
+    an odd trailing digit is parsed alone (pdfparse.lisp:514-538)."""
+    raw = _SPC.sub(b"", digits)
+    if len(raw) % 2:
+        return binascii.unhexlify(raw[:-1]) + bytes((int(raw[-1:], 16),))
+    return binascii.unhexlify(raw)
+
+
+# Whole-buffer token values keyed by the raw match (leading whitespace
+# included): numbers, names, keywords, true/false and delimiters.  Strings
+# are never cached.  Capped like _KW_CACHE.
+_VALUE_CACHE: dict[bytes, object] = {}
+
+
+def _token_value(raw: bytes):
+    """Value of one _BULK_TOKEN match; raises ValueError on an integer too
+    long for int() (the authority drops such a token)."""
+    tok = raw.lstrip()
+    c = tok[0]
+    if c == 0x28:  # '('
+        return tok[1:-1]
+    if c == 0x3C and tok != b"<<":
+        return _hex_bytes(tok[1:-1])
+    if c == 0x2F:  # '/'
+        val = _literal(tok[1:])
+    elif c in _KEYWORD_START:
+        val = _keyword(tok)
+    elif c == 0x3C:
+        val = KEYWORD_DICT_BEGIN
+    elif c == 0x3E:
+        val = KEYWORD_DICT_END
+    elif c in b"[]{}":
+        val = _KW1[c]
+    elif b"." in tok:
+        val = float(tok)
+    else:
+        val = int(tok)
+    if len(_VALUE_CACHE) < _TOKEN_CACHE_MAX:
+        _VALUE_CACHE[raw] = val
+    return val
+
+
+def scan_values(data: bytes) -> list | None:
+    """Every token value of ``data`` in order, from one regex pass, or None
+    when the per-token scanner must decide: some byte is outside the bulk
+    grammar (comments, escaped or nested strings, '#' escapes, lone '>',
+    malformed numbers, any other byte), or an integer is too long for int().
+
+    Covered means the matches, which never overlap and each end on a
+    non-space byte, add up to the buffer without its trailing whitespace;
+    then they are exactly the tokens nexttoken would return, one after the
+    other.  Regex whitespace excludes NUL, so a NUL byte is never covered.
+    """
+    toks = _BULK_TOKEN.findall(data)
+    if sum(map(len, toks)) != len(data.rstrip()):
+        return None
+    get = _VALUE_CACHE.get
+    try:
+        return [_token_value(raw) if (val := get(raw)) is None else val for raw in toks]
+    except ValueError:
+        return None
 
 
 class PSBaseParser:
@@ -237,29 +374,21 @@ class PSBaseParser:
             if g == "flt":
                 return start, float(tok)
             if g == "int":
-                return start, int(tok)
+                try:
+                    return start, int(tok)
+                except ValueError:
+                    # too many digits for int(): the full scanner drops it
+                    self.pos = start
+                    return self._nexttoken_slow()
             if g == "kw":
                 val = _KW_CACHE.get(tok)
-                if val is None:
-                    if tok == b"true":
-                        val = True
-                    elif tok == b"false":
-                        val = False
-                    else:
-                        val = KWD(tok.decode("latin-1"))
-                    if len(_KW_CACHE) < _TOKEN_CACHE_MAX:
-                        _KW_CACHE[tok] = val
-                return start, val
+                return start, _keyword(tok) if val is None else val
             if g == "str":
-                return start - 1, tok  # start - 1: the opening '('
+                return start, tok[1:-1]
             if g == "lit":
                 raw = tok[1:]
                 lit = _LIT_CACHE.get(raw)
-                if lit is None:
-                    lit = LIT(raw.decode("latin-1"))
-                    if len(_LIT_CACHE) < _TOKEN_CACHE_MAX:
-                        _LIT_CACHE[raw] = lit
-                return start, lit
+                return start, _literal(raw) if lit is None else lit
             if g == "d2":
                 return start, KEYWORD_DICT_BEGIN if tok == b"<<" else KEYWORD_DICT_END
             return start, _KW1[tok[0]]  # d1
@@ -316,14 +445,8 @@ class PSBaseParser:
         if m0 is not None and data[m0.start()] != 0x23:
             # fast path: no '#' escape — intern straight from the raw bytes
             j = m0.start()
-            raw = data[i:j]
-            lit = _LIT_CACHE.get(raw)
-            if lit is None and len(_LIT_CACHE) < _TOKEN_CACHE_MAX:
-                lit = _LIT_CACHE[raw] = LIT(raw.decode("latin-1"))
-            elif lit is None:
-                lit = LIT(raw.decode("latin-1"))
             self.pos = j
-            return start, lit
+            return start, _literal(data[i:j])
         parts = bytearray()
         while True:
             m = _END_LITERAL.search(data, i)
@@ -380,18 +503,7 @@ class PSBaseParser:
         m = _END_KEYWORD.search(data, start + 1)
         j = len(data) if m is None else m.start()
         self.pos = j
-        tok = data[start:j]
-        val = _KW_CACHE.get(tok)
-        if val is None:
-            if tok == b"true":
-                val = True
-            elif tok == b"false":
-                val = False
-            else:
-                val = KWD(tok.decode("latin-1"))
-            if len(_KW_CACHE) < _TOKEN_CACHE_MAX:
-                _KW_CACHE[tok] = val
-        return start, val
+        return start, _keyword(data[start:j])
 
     def _parse_string(self, start: int) -> tuple[int, bytes]:
         data = self.data
@@ -449,17 +561,28 @@ class PSBaseParser:
         i = start + 1
         m = _END_HEX_STRING.search(data, i)
         j = len(data) if m is None else m.start()
-        raw = _SPC.sub(b"", data[i:j])
-        out = bytearray()
-        for k in range(0, len(raw) - 1, 2):
-            out.append(int(raw[k : k + 2], 16))
-        if len(raw) % 2:  # odd trailing digit parsed alone (pdfparse.lisp:514-538)
-            out.append(int(raw[-1:], 16))
         # leave pos at the terminator: a lone '>' is consumed tokenlessly by
         # the main dispatch (pdfparse.lisp:531-538), and '>>' still forms a
         # dict-end keyword there
         self.pos = j
-        return start, bytes(out)
+        return start, _hex_bytes(data[i:j])
+
+
+def dict_of_pairs(items: list) -> dict:
+    """The dict ``<< k1 v1 k2 v2 ... >>`` builds.  Raises PSSyntaxError on
+    an odd item count.  Unhashable keys (an array or dict in key position of
+    a malformed << >>) are skipped leniently: a TypeError is not a PS* error
+    and would abort the whole document instead of degrading (the
+    reference's hash tables accept any key)."""
+    if len(items) % 2 != 0:
+        raise PSSyntaxError("invalid dictionary construct: %r" % items)
+    d = {}
+    for i in range(0, len(items), 2):
+        try:
+            d[items[i]] = items[i + 1]
+        except TypeError:
+            continue
+    return d
 
 
 class PSStackParser(PSBaseParser):
@@ -548,20 +671,7 @@ class PSStackParser(PSBaseParser):
             elif token is KEYWORD_DICT_END:
                 try:
                     pos_, objs = self.end_type("d")
-                    if len(objs) % 2 != 0:
-                        raise PSSyntaxError("invalid dictionary construct: %r" % objs)
-                    # unhashable keys (array/dict in key position of a
-                    # malformed << >>) are skipped leniently: a TypeError
-                    # here is not a PS* error and would abort the whole
-                    # document instead of degrading (the reference's hash
-                    # tables accept any key)
-                    d = {}
-                    for i in range(0, len(objs), 2):
-                        try:
-                            d[objs[i]] = objs[i + 1]
-                        except TypeError:
-                            continue
-                    self.push((pos_, d))
+                    self.push((pos_, dict_of_pairs(objs)))
                 except PSTypeError:
                     pass
             elif token is KEYWORD_PROC_BEGIN:

@@ -19,7 +19,9 @@ def _norm(obj):
         return ("DICT", tuple(sorted((repr(k), _norm(v)) for k, v in obj.items())))
     if isinstance(obj, list):
         return ("LIST", tuple(_norm(v) for v in obj))
-    return obj
+    # type-strict: True == 1 and 1 == 1.0, so a bare scalar would let a
+    # true -> 1 or 1 -> 1.0 slip through
+    return (type(obj).__name__, obj)
 
 
 def _via_nextobject(data: bytes):

@@ -29,9 +29,18 @@ def test_stray_end_tags_cost_linear_time(build):
 def test_rejected_html_reports_an_error_status():
     page = "<html><body><p>%s</p><![ x" % ("c" * 40)
     ctype, text, spans, status = extract_turn(page)
-    assert (ctype, text, spans) == ("html", "", [(0, 0, 0)])
+    assert (ctype, spans) == ("html", [(0, 0, len(text))])
     assert status == "error:AssertionError"
-    assert extract_html(page) == ""  # the never-raises contract holds
+    assert extract_html(page) == text  # the never-raises contract holds
+
+
+def test_rejected_html_keeps_the_text_before_the_failure():
+    # html.parser raises on "<![ x" after the <p> is built; the partial
+    # tree still holds the paragraph
+    page = "<html><body><p>%s</p><![ x" % ("c" * 40)
+    assert extract_html_status(page) == ("c" * 40, "error:AssertionError")
+    page = "<div><p>%s</p><p>%s</p></div><![ x <p>never reached</p>" % ("a" * 30, "b" * 30)
+    assert extract_html_status(page) == ("a" * 30 + "\n" + "b" * 30, "error:AssertionError")
 
 
 def test_accepted_html_reports_ok():

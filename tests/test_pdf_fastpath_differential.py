@@ -1,0 +1,269 @@
+"""Differential tests for the PDF kernel's whole-buffer fast path.
+
+One regex pass (``psparse.scan_values``) tokenizes a whole content stream
+(``PDFContentParser.iter_objects``) or a whole indirect-object body
+(``PDFParser.object_stack_fast``); the per-token parser stays the authority.
+These tests pin fast == per-token, type-strict (``True`` is not ``1`` and
+``1`` is not ``1.0``), check that well-formed input takes the fast path,
+and that every input outside its grammar goes whole to the authority."""
+
+from __future__ import annotations
+
+import types
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from pdfparse_spark.fixtures.pdf_gen import make_big_pdf
+from pdfparse_spark.kernel.pdfdocument import PDFDocument
+from pdfparse_spark.kernel.pdfparser import PDFContentParser, PDFParser
+from pdfparse_spark.kernel.pdftypes import PDFObjRef, PDFStream, stream_value
+from pdfparse_spark.kernel.psparse import KWD, LIT, PSBaseParser, PSSyntaxError, scan_values
+
+_SETTINGS = dict(deadline=4000, suppress_health_check=[HealthCheck.too_slow])
+
+
+def _norm(obj):
+    if isinstance(obj, PDFStream):
+        return ("STREAM", tuple(sorted(map(repr, obj.attrs))), obj.rawdata)
+    if isinstance(obj, PDFObjRef):
+        return ("REF", obj.objid)
+    if isinstance(obj, dict):
+        return ("DICT", tuple(sorted((repr(k), _norm(v)) for k, v in obj.items())))
+    if isinstance(obj, list):
+        return ("LIST", tuple(_norm(v) for v in obj))
+    return (type(obj).__name__, obj)
+
+
+# --- content streams ---------------------------------------------------------
+
+
+def _drain(it) -> list:
+    out = []
+    try:
+        for obj in it:
+            out.append(_norm(obj))
+    except PSSyntaxError:
+        out.append(("SYNTAXERROR",))
+    return out
+
+
+def _content(data: bytes) -> tuple[bool, list, list]:
+    """(fast path taken, iter_objects result, per-token result)."""
+    it = PDFContentParser([PDFStream({}, data)]).iter_objects()
+    fast = not isinstance(it, types.GeneratorType)
+    slow = PDFContentParser([PDFStream({}, data)])._iter_objects_per_token()
+    return fast, _drain(it), _drain(slow)
+
+
+_SCALARS = [
+    b"12.", b"+3", b"-0", b".5", b"-.5", b"0.25", b"7", b"-12.75",
+    b"/F1", b"/Name", b"/", b"true", b"false", b"null",
+    b"()", b"(Hello, world)", b"(a\tb)",
+    b"<>", b"<4142>", b"<414>", b"<41 4>", b"< a B\nc >",
+]
+_OPERATORS = [b"Tj", b"TJ", b"T*", b"Tf", b"Td", b"cm", b"q", b"Q", b"BT", b"ET", b"re", b"R", b"EI"]
+_SEPARATORS = st.sampled_from([b" ", b"\n", b"\r\n", b"\t", b"  ", b" \r"])
+
+
+def _collections(inner):
+    return st.one_of(
+        st.lists(inner, max_size=5).map(lambda xs: b"[" + b" ".join(xs) + b"]"),
+        st.lists(st.tuples(st.sampled_from([b"/A", b"/B", b"/Font"]), inner), max_size=4).map(
+            lambda kvs: b"<<" + b" ".join(k + b" " + v for k, v in kvs) + b">>"
+        ),
+        st.lists(inner, max_size=5).map(lambda xs: b"{ " + b" ".join(xs) + b" }"),
+    )
+
+
+_ITEM = st.recursive(st.sampled_from(_SCALARS + _OPERATORS), _collections, max_leaves=8)
+# unbalanced pieces: stray closers, and openers that are never closed
+_STRAY = st.sampled_from([b"]", b">>", b"}", b"[", b"{"])
+
+
+@st.composite
+def _streams(draw) -> bytes:
+    items = draw(st.lists(_ITEM, max_size=12))
+    for _ in range(draw(st.integers(0, 2))):
+        items.insert(draw(st.integers(0, len(items))), draw(_STRAY))
+    if draw(st.booleans()):
+        # a dict left open at the end of the stream (its items are dropped);
+        # an open "<<" earlier could meet a stray ">>" and make an odd dict
+        items += [b"<<"] + draw(st.lists(_ITEM, max_size=3))
+    out = b""
+    for item in items:
+        out += item + draw(_SEPARATORS)
+    return out
+
+
+@given(st.lists(_streams(), min_size=10, max_size=10))
+@settings(max_examples=60, **_SETTINGS)
+def test_content_fast_path_matches_per_token(batch):
+    n_fast = 0
+    for data in batch:
+        fast, got, want = _content(data)
+        assert got == want, data
+        n_fast += fast
+    assert n_fast >= 0.9 * len(batch), [d for d in batch if not _content(d)[0]][:5]
+
+
+def test_content_scalars_keep_their_types():
+    fast, got, _ = _content(b"true 1 1.0 false 0 -0 .5 12. <414> (s) /N null")
+    assert fast
+    assert got == [
+        ("bool", True), ("int", 1), ("float", 1.0), ("bool", False), ("int", 0),
+        ("int", 0), ("float", 0.5), ("float", 12.0), ("bytes", b"A\x04"),
+        ("bytes", b"s"), ("PSLiteral", LIT("N")), ("PSKeyword", KWD("null")),
+    ]
+
+
+def test_hex_closer_pairs_like_the_authority():
+    # "<AB>>>": the per-token scanner leaves the hex string's '>' to pair
+    # with the next one; the bulk scan consumes it — same tokens either way
+    for data in [b"<AB>>> x", b"<<<AB>>> y", b"[<AB>] z", b"<AB>> w"]:
+        fast, got, want = _content(data)
+        assert got == want, data
+    assert _content(b"<AB>>> x")[0] and not _content(b"<AB>> w")[0]
+
+
+def test_content_fallbacks_go_whole_to_the_authority():
+    for data in [
+        b"BT % comment\n(x) Tj ET",  # comment
+        b"(a\\)b) Tj",  # escaped string
+        b"(a(b)c) Tj",  # nested string
+        b"/A#42 Tf",  # '#' escape in a name
+        b"q > Q",  # lone '>'
+        b"q \x00 Q",  # NUL is not whitespace
+        b"' \" Tj",  # single-byte operators outside the bulk grammar
+        b"1" * 5000 + b" 2 Td",  # too many digits for int()
+        b"<41 Tj",  # unterminated hex string
+        b"BI /W 4 /H 4 ID rawbytes EI Q",  # inline image
+        b"q ID x EI",  # stray ID
+        b"1 2 re << /odd >> f",  # odd dict: raises after re ran
+    ]:
+        fast, got, want = _content(data)
+        assert not fast, data
+        assert got == want, data
+    # the operators before the odd dict still come out, then the error
+    assert _content(b"1 2 re << /odd >> f")[1] == [
+        ("int", 1), ("int", 2), ("PSKeyword", KWD("re")), ("SYNTAXERROR",),
+    ]
+
+
+def test_long_integer_is_dropped_by_the_per_token_fast_path():
+    # int() refuses more than 4300 digits; the full scanner drops the token
+    p = PSBaseParser(b"1" * 5000 + b" 2")
+    assert p.nexttoken() == (5001, 2)
+    assert scan_values(b"1" * 5000 + b" 2") is None
+
+
+# --- indirect objects --------------------------------------------------------
+
+
+def _open(data: bytes) -> PDFDocument:
+    parser = PDFParser(data)
+    doc = PDFDocument()
+    parser.set_document(doc)
+    doc._parser = parser  # object fetch only: no xref needed
+    return doc
+
+
+def _getobj_both(data: bytes, pos: int, objid: int):
+    """(fast path taken, result with it, result of nextobject alone)."""
+    doc = _open(data)
+    fast = doc._parser.object_stack_fast(pos, objid) is not None
+
+    def authority():
+        doc = _open(data)
+        doc._parser.object_stack_fast = lambda pos, objid: None
+        try:
+            return _norm(doc._getobj_parse(pos, objid))
+        except PSSyntaxError:
+            return ("SYNTAXERROR",)
+
+    try:
+        got = _norm(doc._getobj_parse(pos, objid))
+    except PSSyntaxError:
+        got = ("SYNTAXERROR",)
+    return fast, got, authority()
+
+
+_OBJ_SCALARS = [
+    b"0", b"12", b"-3", b"4.5", b".5", b"true", b"false", b"null",
+    b"/Type", b"/Page", b"(text)", b"<4142>", b"<414>", b"3 0 R", b"12 5 R",
+]
+
+
+def _obj_collections(inner):
+    return st.one_of(
+        st.lists(inner, max_size=5).map(lambda xs: b"[" + b" ".join(xs) + b"]"),
+        st.lists(st.tuples(st.sampled_from([b"/A", b"/Kids", b"/Count"]), inner), max_size=4).map(
+            lambda kvs: b"<< " + b" ".join(k + b" " + v for k, v in kvs) + b" >>"
+        ),
+    )
+
+
+_OBJ_ITEM = st.recursive(st.sampled_from(_OBJ_SCALARS), _obj_collections, max_leaves=12)
+
+
+@given(st.lists(_OBJ_ITEM, max_size=6), _SEPARATORS)
+@settings(max_examples=200, **_SETTINGS)
+def test_object_fast_path_matches_nextobject(items, sep):
+    body = sep.join(items)
+    data = b"7 0 obj" + sep + body + sep + b"endobj\n"
+    fast, got, want = _getobj_both(data, 0, 7)
+    assert got == want, data
+    assert fast == bool(items), data
+
+
+def test_object_cases():
+    for body, fast in [
+        (b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>", True),
+        (b"null", True),
+        (b"1 2 3 4 5 6", True),  # first of the last four stack items
+        (b"[1 2 R] 3", True),
+        (b"", False),  # empty stack: the authority reads on past endobj
+        (b"1.5 0 R", False),  # R after a float
+        (b"true 0 R", False),  # R after a bool
+        (b"(12) 0 R", False),  # R after a string
+        (b"0 R", False),  # R over one operand
+        (b"/Xendobj 1", False),  # endobj inside a name
+        (b"/endobj 1", False),  # ... right after the '/'
+        (b"1 2 3 4 endobjx 5", False),  # a longer keyword
+        (b"(a endobj b) 1", False),  # endobj inside a string
+        (b"[1 2", False),  # collection open at endobj
+        (b"1 [2 3", False),  # ... the authority pops endobj's four from it
+        (b"<< /A >>", False),  # odd dict
+        (b"1 xref 2", False),
+        (b"% c\n1", False),
+    ]:
+        data = b"5 0 obj " + body + b" endobj\n" + b"6 0 obj (tail) endobj\n"
+        took, got, want = _getobj_both(data, 0, 5)
+        assert got == want, body
+        assert took == fast, body
+
+
+def test_two_objects_back_to_back():
+    data = b"1 0 obj << /A 2 0 R >> endobj 2 0 obj [true false null] endobj"
+    for pos, objid in [(0, 1), (data.index(b"2 0 obj"), 2)]:
+        fast, got, want = _getobj_both(data, pos, objid)
+        assert fast and got == want
+    assert _getobj_both(data, 0, 2)[0] is False  # header names another object
+
+
+def test_big_pdf_takes_no_fallback():
+    fx = make_big_pdf(20, 40)
+    parser = PDFParser(fx.data)
+    doc = PDFDocument()
+    parser.set_document(doc)
+    doc.set_parser(parser)
+    doc.initialize(b"")
+    pages = list(doc.get_pages())
+    assert len(pages) == 20
+    streams = {c.objid for page in pages for c in page.contents}
+    for objid, (_, pos) in doc.xrefs[0].offsets.items():
+        if objid not in streams:
+            assert parser.object_stack_fast(pos, objid) is not None, objid
+    for page in pages:
+        it = PDFContentParser([stream_value(c) for c in page.contents]).iter_objects()
+        assert not isinstance(it, types.GeneratorType)
