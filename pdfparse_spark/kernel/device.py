@@ -14,26 +14,34 @@ Golden-defining quirks replicated exactly:
 
 from __future__ import annotations
 
-from .fonts import PDFUnicodeNotDefined
-
 __all__ = ["SimpleTextDevice", "AdvanceTextDevice", "ColumnTextDevice"]
 
 
-class SimpleTextDevice:
-    """Accumulates reading-order text + per-page character spans."""
+def _show_text(font, seq) -> str:
+    """The text of a show operand: only the strings at even positions of a
+    TJ sequence are decoded (the kern numbers at odd positions are skipped
+    without inspection)."""
+    decode_text = font.decode_text
+    if len(seq) == 1:  # Tj, ' and " show one string
+        return decode_text(seq[0]) if isinstance(seq[0], bytes) else ""
+    text = ""
+    for i in range(0, len(seq), 2):
+        item = seq[i]
+        if isinstance(item, bytes):
+            text += decode_text(item)
+    return text
+
+
+class _TextDevice:
+    """What every text device shares: the no-op callbacks
+    (simple-device.lisp:10-18), the written text and its per-page spans."""
 
     def __init__(self):
         self._parts: list[str] = []
         self._len = 0
-        self._last_y = -1e20
         self._page_no = 0
         self._page_start = 0
         self.spans: list[tuple[int, int, int]] = []
-        # segment-merge metadata (per-page split extraction): y of the first
-        # rendered string and the final last_y, so a reassembly step can
-        # apply the |Δy|>3 newline policy EXACTLY across segment boundaries
-        self.first_y: float | None = None
-        self.rendered_any = False
 
     # --- page lifecycle ---------------------------------------------------
     def begin_page(self, page, ctm) -> None:
@@ -43,7 +51,7 @@ class SimpleTextDevice:
     def end_page(self, page) -> None:
         self.spans.append((self._page_no, self._page_start, self._len))
 
-    # --- no-op callbacks (simple-device.lisp:10-18) -------------------------
+    # --- no-op callbacks ----------------------------------------------------
     def begin_tag(self, tag, props=None) -> None:
         pass
 
@@ -66,71 +74,7 @@ class SimpleTextDevice:
         pass
 
     def set_ctm(self, ctm) -> None:
-        pass  # the simple device ignores CTM entirely
-
-    # --- the policy ---------------------------------------------------------
-    def render_string(self, textstate, seq) -> None:
-        y = textstate.matrix[5]
-        if not self.rendered_any:
-            self.first_y = y
-            self.rendered_any = True
-        chars: list[str] = []
-        if abs(self._last_y - y) > 3:
-            chars.append("\n")
-        self._last_y = y
-        font = textstate.font
-        trans = font is not None and getattr(font, "_trans_cache", None)
-        if trans:
-            # hot single-byte font: decode() is the identity byte→cid map,
-            # so the whole item renders in one C-level str.translate over
-            # the prebuilt 256-entry table ('' drops a char)
-            append = chars.append
-            for i in range(0, len(seq), 2):
-                item = seq[i]
-                if isinstance(item, bytes):
-                    append(item.decode("latin-1").translate(trans))
-        elif font is not None:
-            # per-cid loop with a memo cache (mapping is immutable once the
-            # font is built); single-byte fonts graduate to the translate
-            # fast path after ~200 rendered chars — building the 256-entry
-            # table up front would cost more than a small doc renders
-            cache = getattr(font, "_render_cache", None)
-            if cache is None:
-                cache = font._render_cache = {}
-            cache_get = cache.get
-            append = chars.append
-            rendered = 0
-            for i in range(0, len(seq), 2):
-                item = seq[i]
-                if not isinstance(item, bytes):
-                    continue  # fixtures place strings at even positions only
-                rendered += len(item)
-                for cid in font.decode(item):
-                    ch = cache_get(cid)
-                    if ch is None:
-                        try:
-                            ch = font.to_unichr(cid)
-                        except (PDFUnicodeNotDefined, KeyError):
-                            ch = "<CID %X>" % cid
-                        cache[cid] = ch
-                    if ch:
-                        append(ch)
-            if not font.is_multibyte():
-                total = getattr(font, "_nrendered", 0) + rendered
-                font._nrendered = total
-                if total > 200:
-                    trans = dict(cache)
-                    for cid in range(256):
-                        if cid not in trans:
-                            try:
-                                trans[cid] = font.to_unichr(cid) or ""
-                            except (PDFUnicodeNotDefined, KeyError):
-                                trans[cid] = "<CID %X>" % cid
-                        elif not trans[cid]:
-                            trans[cid] = ""
-                    font._trans_cache = trans
-        if chars:
-            self._write("".join(chars))
+        pass  # text devices ignore CTM entirely
 
     def _write(self, s: str) -> None:
         self._parts.append(s)
@@ -138,6 +82,32 @@ class SimpleTextDevice:
 
     def get_text(self) -> str:
         return "".join(self._parts)
+
+
+class SimpleTextDevice(_TextDevice):
+    """Accumulates reading-order text + per-page character spans."""
+
+    def __init__(self):
+        super().__init__()
+        self._last_y = -1e20
+        # segment-merge metadata (per-page split extraction): y of the first
+        # rendered string and the final last_y, so a reassembly step can
+        # apply the |Δy|>3 newline policy EXACTLY across segment boundaries
+        self.first_y: float | None = None
+        self.rendered_any = False
+
+    # --- the policy ---------------------------------------------------------
+    def render_string(self, textstate, seq) -> None:
+        y = textstate.matrix[5]
+        if not self.rendered_any:
+            self.first_y = y
+            self.rendered_any = True
+        text = "" if textstate.font is None else _show_text(textstate.font, seq)
+        if abs(self._last_y - y) > 3:
+            text = "\n" + text
+        self._last_y = y
+        if text:
+            self._write(text)
 
     @property
     def last_y(self) -> float:
@@ -211,13 +181,8 @@ class AdvanceTextDevice(SimpleTextDevice):
             if isinstance(item, bytes) and font is not None:
                 if i % 2 != 0:
                     continue  # strings at even positions only (golden policy)
+                chars.append(font.decode_text(item))
                 for cid in font.decode(item):
-                    try:
-                        ch = font.to_unichr(cid)
-                    except (PDFUnicodeNotDefined, KeyError):
-                        ch = "<CID %X>" % cid
-                    if ch:
-                        chars.append(ch)
                     adv = font.char_width(cid) * fs + textstate.charspace
                     if cid == 32 and not font.is_multibyte():
                         adv += textstate.wordspace
@@ -228,11 +193,12 @@ class AdvanceTextDevice(SimpleTextDevice):
                     chars.append(" ")
                 x += dx
         self._end_x = x if m0 > 0 else None
-        if chars:
-            self._write("".join(chars))
+        text = "".join(chars)
+        if text:
+            self._write(text)
 
 
-class ColumnTextDevice:
+class ColumnTextDevice(_TextDevice):
     """Column-aware reading-order device (opt-in, beyond the reference):
     buffers each show op as a positioned run, clusters run x-origins into
     columns by a 1-D gap threshold at page end, and emits column-major
@@ -249,25 +215,18 @@ class ColumnTextDevice:
     """
 
     def __init__(self, col_gap: float = 36.0):
+        super().__init__()
         self._col_gap = col_gap
         self._runs: list[tuple[float, float, str]] = []  # (x, y, text) this page
-        self._parts: list[str] = []
-        self._len = 0
-        self._page_no = 0
-        self._page_start = 0
-        self.spans: list[tuple[int, int, int]] = []
 
     # --- page lifecycle ---------------------------------------------------
     def begin_page(self, page, ctm) -> None:
-        self._page_no += 1
-        self._page_start = self._len
+        super().begin_page(page, ctm)
         self._runs = []
 
     def end_page(self, page) -> None:
-        text = self._layout(self._runs)
-        self._parts.append(text)
-        self._len += len(text)
-        self.spans.append((self._page_no, self._page_start, self._len))
+        self._write(self._layout(self._runs))
+        super().end_page(page)
 
     def _layout(self, runs: list[tuple[float, float, str]]) -> str:
         if not runs:
@@ -300,51 +259,11 @@ class ColumnTextDevice:
                 out.append(t)
         return "".join(out)
 
-    # --- no-op callbacks --------------------------------------------------
-    def begin_tag(self, tag, props=None) -> None:
-        pass
-
-    def end_tag(self) -> None:
-        pass
-
-    def do_tag(self, tag, props=None) -> None:
-        pass
-
-    def begin_figure(self, bbox, matrix) -> None:
-        pass
-
-    def end_figure(self) -> None:
-        pass
-
-    def paint_path(self, graphicstate, stroke, fill, evenodd, path) -> None:
-        pass
-
-    def render_image(self, stream) -> None:
-        pass
-
-    def set_ctm(self, ctm) -> None:
-        pass
-
     # --- run capture ------------------------------------------------------
     def render_string(self, textstate, seq) -> None:
-        font = textstate.font
-        if font is None:
+        if textstate.font is None:
             return
-        chars: list[str] = []
-        for i in range(0, len(seq), 2):
-            item = seq[i]
-            if not isinstance(item, bytes):
-                continue
-            for cid in font.decode(item):
-                try:
-                    ch = font.to_unichr(cid)
-                except (PDFUnicodeNotDefined, KeyError):
-                    ch = "<CID %X>" % cid
-                if ch:
-                    chars.append(ch)
-        if chars:
+        text = _show_text(textstate.font, seq)
+        if text:
             m = textstate.matrix
-            self._runs.append((m[4], m[5], "".join(chars)))
-
-    def get_text(self) -> str:
-        return "".join(self._parts)
+            self._runs.append((m[4], m[5], text))

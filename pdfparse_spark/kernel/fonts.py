@@ -9,7 +9,7 @@ favor of pdfminer/PDF-spec semantics (SURVEY.md §5.2 lists the policy):
 - simple-font to_unichr falls back to cid2unicode when there is no ToUnicode
   map (the reference returns nothing at pdfparse.lisp:3459-3467, which would
   blank every simple font without /ToUnicode) and raises KeyError when the
-  cid is unmapped so the device can emit the ``<CID x>`` fallback.
+  cid is unmapped so ``decode_text`` can emit the ``<CID x>`` fallback.
 - endbfrange unpacks the range end from `e` (reference bug `(nunpack 3)`,
   pdfparse.lisp:3892).
 - endcidrange compares code *prefixes* (reference compares suffixes,
@@ -25,6 +25,7 @@ from __future__ import annotations
 import struct
 
 from .psparse import KWD, LIT, PSEOF, PSKeyword, PSLiteral, PSStackParser
+from .pdfparser import nunpack
 from .pdftypes import (
     dict_value,
     int_value,
@@ -192,12 +193,6 @@ def get_predefined_unicode_map(cidcoding, vertical: bool):
 # crafted <00000000> <ffffffff> range is a 4-billion-iteration bomb that
 # would pin an executor; real CMaps stay within one 2-byte prefix.
 _MAX_CMAP_RANGE = 1 << 16
-
-
-def nunpack(s: bytes, default: int = 0) -> int:
-    if not s:
-        return default
-    return int.from_bytes(s, "big")
 
 
 class CMapParser(PSStackParser):
@@ -632,6 +627,9 @@ class PDFFont:
         self.leading = num_value(descriptor.get(LIT("Leading"), 0))
         self.bbox = list_value(descriptor.get(LIT("FontBBox"), [0, 0, 0, 0]))
         self.hscale = self.vscale = 0.001
+        self._text: dict[int, str] = {}  # cid -> text memo (mapping is fixed)
+        self._trans: dict[int, str] | None = None  # 256-entry str.translate table
+        self._nrendered = 0
 
     def is_vertical(self) -> bool:
         return False
@@ -648,6 +646,37 @@ class PDFFont:
 
     def to_unichr(self, cid: int) -> str:
         raise PDFUnicodeNotDefined(cid)
+
+    def _cid_text(self, cid: int) -> str:
+        try:
+            return self.to_unichr(cid) or ""
+        except (PDFUnicodeNotDefined, KeyError):
+            return "<CID %X>" % cid
+
+    def decode_text(self, data: bytes) -> str:
+        """The text a string operand renders: each cid as ``to_unichr``
+        maps it, ``<CID x>`` (uppercase hex) when unmapped; an empty
+        mapping drops the cid.
+
+        Per cid through a memo, until a single-byte font has rendered more
+        than 200 chars; from then on one C-level str.translate over a
+        256-entry table ('' drops a char).  Building the table up front
+        would cost more than a small document renders."""
+        trans = self._trans
+        if trans is not None:
+            return data.decode("latin-1").translate(trans)
+        memo = self._text
+        chars = []
+        for cid in self.decode(data):
+            ch = memo.get(cid)
+            if ch is None:
+                ch = memo[cid] = self._cid_text(cid)
+            chars.append(ch)
+        if not self.is_multibyte():
+            self._nrendered += len(data)
+            if self._nrendered > 200:
+                self._trans = {cid: memo.get(cid) or self._cid_text(cid) for cid in range(256)}
+        return "".join(chars)
 
 
 class PDFSimpleFont(PDFFont):

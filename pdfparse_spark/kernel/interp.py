@@ -131,15 +131,14 @@ PREDEFINED_COLORSPACE = {
 class PDFResourceManager:
     """Shared font cache keyed by objid (pdfparse.lisp:2080-2147)."""
 
-    def __init__(self, caching: bool = True):
-        self.caching = caching
+    def __init__(self):
         self._cached_fonts: dict[int, object] = {}
 
     def get_font(self, objid, spec: dict):
         if objid is not None and objid in self._cached_fonts:
             return self._cached_fonts[objid]
         font = get_font(spec)
-        if objid is not None and self.caching:
+        if objid is not None:
             self._cached_fonts[objid] = font
         return font
 
@@ -631,12 +630,20 @@ def _first(vals: list):
     return vals[0] if vals else None
 
 
+def _open_document(data: bytes, password: bytes) -> PDFDocument:
+    """Parse the xref chain and trailer of ``data`` and unlock it."""
+    parser = PDFParser(data)
+    doc = PDFDocument()
+    parser.set_document(doc)
+    doc.set_parser(parser)
+    doc.initialize(password)
+    return doc
+
+
 def process_pdf(
     device,
     data: bytes,
     password: bytes = b"",
-    maxpages: int = 0,
-    caching: bool = True,
     page_start: int = 1,
     page_end: int | None = None,
     fast_window: bool = False,
@@ -653,20 +660,14 @@ def process_pdf(
     validated — ``count_pdf_pages_validated``) skips whole pre-window
     subtrees via /Count instead of walking every page node: the walk cost
     drops from O(total pages) to O(window + tree breadth) per segment."""
-    parser = PDFParser(data)
-    doc = PDFDocument(caching=caching)
-    parser.set_document(doc)
-    doc.set_parser(parser)
-    doc.initialize(password)
-    rsrcmgr = PDFResourceManager(caching)
+    doc = _open_document(data, password)
+    rsrcmgr = PDFResourceManager()
     interpreter = PDFPageInterpreter(rsrcmgr, device)
     if fast_window and page_end is not None:
         for _pageno, page in doc.get_pages_window(page_start, page_end):
             interpreter.process_page(page)
         return
     for pageno, page in enumerate(doc.get_pages(), 1):
-        if maxpages and pageno > maxpages:
-            break
         if pageno < page_start:
             continue
         if page_end is not None and pageno >= page_end:
@@ -677,21 +678,11 @@ def process_pdf(
 def count_pdf_pages(data: bytes, password: bytes = b"") -> int:
     """Page count via xref + page-tree walk only — no content decode, so
     this probe is ~100x cheaper than extraction for content-heavy docs."""
-    parser = PDFParser(data)
-    doc = PDFDocument()
-    parser.set_document(doc)
-    doc.set_parser(parser)
-    doc.initialize(password)
-    return sum(1 for _ in doc.get_pages())
+    return sum(1 for _ in _open_document(data, password).get_pages())
 
 
 def count_pdf_pages_validated(data: bytes, password: bytes = b"") -> tuple[int, bool]:
     """(n_pages, counts_ok) — the probe for the split planner: counts_ok
     means every /Pages node's /Count matched its actual subtree and no
     cycles exist, so segments may use the Count-skipping fast window walk."""
-    parser = PDFParser(data)
-    doc = PDFDocument()
-    parser.set_document(doc)
-    doc.set_parser(parser)
-    doc.initialize(password)
-    return doc.count_pages_validated()
+    return _open_document(data, password).count_pages_validated()

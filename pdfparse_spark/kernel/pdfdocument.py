@@ -99,8 +99,7 @@ class PDFPage:
 class PDFDocument:
     """Xref chain + trailers + catalog + object cache (pdfparse.lisp:1353-1627)."""
 
-    def __init__(self, caching: bool = True):
-        self.caching = caching
+    def __init__(self):
         self.catalog: dict | None = None
         self.encryption = None
         self.decipher = None
@@ -212,7 +211,7 @@ class PDFDocument:
         # survived because decipher_all mutates them in place)
         if self.decipher:
             obj = decipher_all(self.decipher, objid, genno, obj)
-        if self.caching and objid not in self._cached_objs:
+        if objid not in self._cached_objs:
             self._cached_objs[objid] = obj
         return obj
 

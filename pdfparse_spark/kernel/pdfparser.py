@@ -14,20 +14,21 @@ favor of PDF-spec semantics so fixture goldens are self-consistent):
 
 Whole-buffer fast path: a page's content streams and a non-stream indirect
 object's body are tokenized in one regex pass (``psparse.scan_values``) and
-assembled by ``_assemble``, with the per-token parser (``nextobject`` and
-the ``iter_objects`` generator) kept as the authority.  A whole buffer
-falls back to it on any uncovered byte; for content streams also on
-``BI``/``ID`` (inline images need byte positions) and on an odd dict (the
-authority raises PSSyntaxError after the operators before it ran); for
-objects on anything but a strict ``N G obj`` header naming the object, a
-``stream`` before the first ``endobj``, an ``endobj`` not standing as its own
-token, ``obj``/``xref``/``startxref`` in the body, ``R`` over anything but
-two ints, an open collection at ``endobj`` and an empty stack.
+assembled by ``_assemble``, with ``nextobject`` kept as the authority.  A
+content stream falls back on any uncovered byte and on ``BI``/``ID`` (inline
+images need byte positions); its fallback feeds ``nexttoken`` values into
+the same ``_assemble``.  An object body falls back to ``nextobject`` on any
+uncovered byte, anything but a strict ``N G obj`` header naming the object,
+a ``stream`` before the first ``endobj``, an ``endobj`` not standing as its
+own token, ``obj``/``xref``/``startxref`` in the body, ``R`` over anything
+but two ints, an odd dict, an open collection at ``endobj`` and an empty
+stack.
 """
 
 from __future__ import annotations
 
 import re
+from itertools import chain
 
 from .psparse import (
     KEYWORD_ARRAY_BEGIN,
@@ -40,8 +41,8 @@ from .psparse import (
     LIT,
     PSEOF,
     PSKeyword,
-    PSLiteral,
     PSStackParser,
+    PSSyntaxError,
     PSTypeError,
     dict_of_pairs,
     scan_values,
@@ -83,10 +84,10 @@ LITERAL_W = LIT("W")
 LITERAL_LENGTH = LIT("Length")
 
 
-# Whole-buffer assembly: what a keyword does to the object stack.  "a"/"d"/
-# "p" open an array/dict/proc, "/a"/"/d"/"/p" close one, "R" and "null" are
-# the indirect-object keywords, and "!" hands the whole buffer back to the
-# per-token parser.
+# Object assembly: what a keyword does to the object stack.  "a"/"d"/"p"
+# open an array/dict/proc, "/a"/"/d"/"/p" close one, "i" opens an inline
+# image dict that "ID" closes, "R" and "null" are the indirect-object
+# keywords, and "!" hands the whole buffer back to the per-token parser.
 _COLLECTIONS = {
     KEYWORD_ARRAY_BEGIN: "a",
     KEYWORD_ARRAY_END: "/a",
@@ -95,8 +96,10 @@ _COLLECTIONS = {
     KEYWORD_PROC_BEGIN: "p",
     KEYWORD_PROC_END: "/p",
 }
-# inline images need byte positions
+# content streams, whole buffer: inline images need byte positions
 _CONTENT_ACTIONS = {**_COLLECTIONS, KEYWORD_BI: "!", KEYWORD_ID: "!"}
+# content streams, per token
+_INLINE_ACTIONS = {**_COLLECTIONS, KEYWORD_BI: "i", KEYWORD_ID: "ID"}
 _OBJECT_ACTIONS = {
     **_COLLECTIONS,
     KEYWORD_R: "R",
@@ -107,14 +110,17 @@ _OBJECT_ACTIONS = {
 }
 
 
-def _assemble(values: list, actions: dict, doc=None, open_ok: bool = True) -> list | None:
-    """The top-level objects ``values`` assemble into, as the per-token
-    parser builds them (positions dropped): stray closers are dropped, and
-    collections still open at the end are dropped when ``open_ok``.  None
-    hands the buffer back to the per-token parser: a "!" keyword, an odd
-    dict (the authority raises PSSyntaxError at that point), ``R`` over
-    anything but two ints, or an open collection when not ``open_ok``."""
-    out: list = []
+def _assemble(values, actions: dict, out: list, doc=None, open_ok: bool = True,
+              inline_data=None) -> bool:
+    """Append to ``out`` the top-level objects ``values`` assemble into, as
+    the per-token parser builds them (positions dropped): stray closers are
+    dropped, and collections still open at the end are dropped when
+    ``open_ok``.  An ``ID`` closing a ``BI`` dict appends the inline image,
+    its bytes from ``inline_data()``, and ``EI``; an odd inline dict and an
+    ``ID`` without ``BI`` are dropped.  An odd dict raises PSSyntaxError,
+    with the objects before it already in ``out``.  False hands the buffer
+    back to the per-token parser: a "!" keyword, ``R`` over anything but
+    two ints, or an open collection when not ``open_ok``."""
     cur = out
     curtype = None
     frames: list = []  # (enclosing type, enclosing items)
@@ -128,28 +134,37 @@ def _assemble(values: list, actions: dict, doc=None, open_ok: bool = True) -> li
                 continue  # stray closer (lenient, nextobject parity)
             items = cur
             curtype, cur = frames.pop()
-            if act == "/d":
-                if len(items) % 2:
-                    return None
-                items = dict_of_pairs(items)
-            cur.append(items)
+            cur.append(dict_of_pairs(items) if act == "/d" else items)
         elif act == "R":
             if len(cur) < 2 or cur[-1].__class__ is not int or cur[-2].__class__ is not int:
-                return None
+                return False
             objid = cur[-2]
             del cur[-2:]
             cur.append(PDFObjRef(doc, objid))
         elif act == "null":
             cur.append(None)
         elif act == "!":
-            return None
+            return False
+        elif act == "ID":
+            if curtype != "i":
+                continue  # ID without BI (do_keyword parity)
+            items = cur
+            curtype, cur = frames.pop()
+            if len(items) % 2 == 0:
+                d = {items[i]: items[i + 1] for i in range(0, len(items), 2)}
+                cur.append(PDFStream(d, inline_data()))
+                cur.append(KEYWORD_EI)
         else:
             frames.append((curtype, cur))
             curtype = act
             cur = []
-    if frames and not open_ok:
-        return None
-    return out
+    return open_ok or not frames
+
+
+def _raising(exc: Exception):
+    """An iterator that raises ``exc`` when first advanced."""
+    raise exc
+    yield  # makes this a generator: the raise waits for the first next()
 
 
 # "N G obj" with both numbers plain digits and "obj" a whole keyword
@@ -340,16 +355,20 @@ class PDFParser(PSStackParser):
         elif token is KEYWORD_NULL:
             self.push((pos, None))
         elif token is KEYWORD_R:
-            vals = self.pop(2)
-            try:
-                objid, genno = (int(v[1]) for v in vals)
-                self.push((pos, PDFObjRef(self.doc, objid)))
-            except (TypeError, ValueError):
-                pass
+            self._push_ref(pos)
         elif token is KEYWORD_STREAM:
             self._capture_stream(pos)
         else:
             self.push((pos, token))
+
+    def _push_ref(self, pos: int) -> None:
+        """``N G R``: the two operands become a reference; dropped unless ints."""
+        vals = self.pop(2)
+        try:
+            objid, genno = (int(v[1]) for v in vals)
+            self.push((pos, PDFObjRef(self.doc, objid)))
+        except (TypeError, ValueError):
+            pass
 
     def object_stack_fast(self, pos: int, objid: int) -> list | None:
         """The object stack at ``endobj`` for object ``objid`` at ``pos``,
@@ -368,7 +387,13 @@ class PDFParser(PSStackParser):
         values = scan_values(data[start:end])
         if values is None:
             return None
-        return _assemble(values, _OBJECT_ACTIONS, self.doc, open_ok=False) or None
+        out: list = []
+        try:
+            if not _assemble(values, _OBJECT_ACTIONS, out, self.doc, open_ok=False):
+                return None
+        except PSSyntaxError:
+            return None  # odd dict
+        return out or None
 
     def _capture_stream(self, kw_pos: int) -> None:
         popped = self.pop(1)
@@ -464,23 +489,22 @@ class PDFParser(PSStackParser):
             return [xref]
 
 
+def _flush_results(self) -> None:
+    """Top-level objects are results as soon as they are complete."""
+    if self.curstack:
+        self.results.extend(self.curstack)
+        self.curstack = []
+
+
 class PDFStreamParser(PDFParser):
     """Parser for ObjStm contents: keywords flow through, R still resolves
     (pdfparse.lisp:1934-1955)."""
 
-    def flush(self) -> None:
-        if self.curstack:
-            self.results.extend(self.curstack)
-            self.curstack = []
+    flush = _flush_results
 
     def do_keyword(self, pos: int, token: PSKeyword) -> None:
         if token is KEYWORD_R:
-            vals = self.pop(2)
-            try:
-                objid, genno = (int(v[1]) for v in vals)
-                self.push((pos, PDFObjRef(self.doc, objid)))
-            except (TypeError, ValueError):
-                pass
+            self._push_ref(pos)
         else:
             self.push((pos, token))
 
@@ -496,10 +520,7 @@ class PDFContentParser(PSStackParser):
         data = b"".join(stream_value(s).get_data() for s in streams)
         super().__init__(data)
 
-    def flush(self) -> None:
-        if self.curstack:
-            self.results.extend(self.curstack)
-            self.curstack = []
+    flush = _flush_results
 
     def get_inline_data(self, pos: int, target: bytes = b"EI") -> tuple[int, bytes]:
         """Capture raw bytes until 'EI' followed by one whitespace char
@@ -538,92 +559,44 @@ class PDFContentParser(PSStackParser):
         return pos, captured
 
     def iter_objects(self):
-        """Object iterator for the interpreter's execute loop: the same
-        object sequence ``nextobject`` would produce, minus the positions,
-        which execute ignores.
+        """Object iterator for the interpreter's execute loop: the objects
+        ``nextobject`` would produce, minus the positions, which execute
+        ignores.  ``nextobject`` stays the semantic authority; the
+        differential tests pin this against it.
 
-        Fast path: the whole buffer is scanned in one regex pass and
-        assembled into a list (``scan_values`` + ``_assemble``).  Any byte
-        outside the bulk grammar, a ``BI``/``ID`` (inline images need byte
-        positions) or an odd dict (the authority raises PSSyntaxError only
-        after the operators before it ran) sends the WHOLE stream to the
-        per-token loop below.  ``nextobject`` remains the semantic
-        authority; the differential tests pin both paths against it.
+        The objects are assembled up front by ``_assemble`` and handed over
+        as a list iterator.  Fast path: the whole buffer is scanned in one
+        regex pass (``scan_values``).  A byte outside the bulk grammar or a
+        ``BI``/``ID`` (inline images need byte positions) sends the WHOLE
+        stream to ``nexttoken``, one token at a time, into the same
+        assembler.  An error while assembling (PSSyntaxError for an odd
+        dict, TypeError for an unhashable inline-image key) comes out of the
+        iterator after the objects before it, as it does from
+        ``nextobject``.
         """
-        values = scan_values(self.data)
-        if values is not None:
-            objs = _assemble(values, _CONTENT_ACTIONS)
-            if objs is not None:
-                return iter(objs)
-        return self._iter_objects_per_token()
+        objs: list = []
+        try:
+            values = scan_values(self.data)
+            if values is None or not _assemble(values, _CONTENT_ACTIONS, objs):
+                objs = []
+                _assemble(
+                    self._token_values(), _INLINE_ACTIONS, objs,
+                    inline_data=lambda: self.get_inline_data(self.pos + 1)[1],
+                )
+        except Exception as exc:  # not swallowed: raised once execute reaches it
+            return chain(objs, _raising(exc))
+        return iter(objs)
 
-    def _iter_objects_per_token(self):
-        """The per-token object generator: scalars stream straight through,
-        and only genuine collections ([...]  <<...>>  {...}  BI..ID dicts)
-        allocate a frame."""
+    def _token_values(self):
+        """The token values from ``nexttoken`` to the end of the buffer; a
+        consumer may move ``pos`` between two of them (``ID`` data)."""
         nexttoken = self.nexttoken
-        frames: list = []  # (type, items) — 'a' array, 'p' proc, 'd'/'i' dict
         while True:
             try:
-                pos, token = nexttoken()
+                _, token = nexttoken()
             except PSEOF:
                 return
-            cls = token.__class__
-            if cls is int or cls is float or cls is bytes or cls is PSLiteral or cls is bool:
-                if frames:
-                    frames[-1][1].append(token)
-                else:
-                    yield token
-                continue
-            if token is KEYWORD_ARRAY_BEGIN:
-                frames.append(("a", []))
-            elif token is KEYWORD_ARRAY_END:
-                if frames and frames[-1][0] == "a":
-                    _t, items = frames.pop()
-                    if frames:
-                        frames[-1][1].append(items)
-                    else:
-                        yield items
-                # else: stray ']' dropped (lenient, nextobject parity)
-            elif token is KEYWORD_DICT_BEGIN:
-                frames.append(("d", []))
-            elif token is KEYWORD_DICT_END:
-                if frames and frames[-1][0] == "d":
-                    _t, items = frames.pop()
-                    d = dict_of_pairs(items)
-                    if frames:
-                        frames[-1][1].append(d)
-                    else:
-                        yield d
-            elif token is KEYWORD_PROC_BEGIN:
-                frames.append(("p", []))
-            elif token is KEYWORD_PROC_END:
-                if frames and frames[-1][0] == "p":
-                    _t, items = frames.pop()
-                    if frames:
-                        frames[-1][1].append(items)
-                    else:
-                        yield items
-            elif token is KEYWORD_BI:
-                frames.append(("i", []))
-            elif token is KEYWORD_ID:
-                if frames and frames[-1][0] == "i":
-                    _t, items = frames.pop()
-                    if len(items) % 2 == 0:
-                        d = {items[i]: items[i + 1] for i in range(0, len(items), 2)}
-                        _dpos, data = self.get_inline_data(pos + 3)
-                        obj = PDFStream(d, data)
-                        if frames:
-                            frames[-1][1].append(obj)
-                            frames[-1][1].append(KEYWORD_EI)
-                        else:
-                            yield obj
-                            yield KEYWORD_EI
-                    # odd dict: dropped (lenient, do_keyword parity)
-            elif frames:
-                frames[-1][1].append(token)  # keyword inside a collection
-            else:
-                yield token
+            yield token
 
     def do_keyword(self, pos: int, token: PSKeyword) -> None:
         if token is KEYWORD_BI:

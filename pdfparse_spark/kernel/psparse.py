@@ -414,10 +414,13 @@ class PSBaseParser:
                 continue
             if c == 0x2F:  # '/' literal name
                 return self._parse_literal(j)
-            if c in _NUMBER_START:
-                return self._parse_number(j)
-            if c == 0x2E:  # '.'
-                return self._parse_float(j, j + 1)
+            if c in _NUMBER_START or c == 0x2E:  # number or '.'
+                tok = self._parse_float(j, j + 1) if c == 0x2E else self._parse_number(j)
+                if tok is not None:
+                    return tok
+                # reference drops unparseable numbers (ignore-errors, :389-404)
+                pos = self.pos
+                continue
             if c in _KEYWORD_START:
                 return self._parse_keyword(j)
             if c == 0x28:  # '('
@@ -470,7 +473,8 @@ class PSBaseParser:
             break
         return start, LIT(parts.decode("latin-1"))
 
-    def _parse_number(self, start: int) -> tuple[int, object]:
+    def _parse_number(self, start: int) -> tuple[int, object] | None:
+        """The number at ``start``, or None (pos past it) when unparseable."""
         data = self.data
         m = _END_NUMBER.search(data, start + 1)
         if m is None:
@@ -484,10 +488,9 @@ class PSBaseParser:
         try:
             return start, int(tok)
         except ValueError:
-            # reference drops unparseable numbers (ignore-errors, :389-404)
-            return self.nexttoken()
+            return None
 
-    def _parse_float(self, start: int, cont: int) -> tuple[int, object]:
+    def _parse_float(self, start: int, cont: int) -> tuple[int, object] | None:
         data = self.data
         m = _END_NUMBER.search(data, cont)
         j = len(data) if m is None else m.start()
@@ -496,7 +499,7 @@ class PSBaseParser:
         try:
             return start, float(tok)
         except ValueError:
-            return self.nexttoken()
+            return None
 
     def _parse_keyword(self, start: int) -> tuple[int, object]:
         data = self.data

@@ -89,5 +89,10 @@ def test_iter_objects_edge_cases():
         b"BI /A [1 2] ID x EI",
         b"(unterminated",
         b"[1 (s",
+        b"[1 BI /W 4 /H 4 ID ab EI 2] TJ",  # inline image inside an array
+        b"BI /W 4 /H ID ab EI (x) Tj",  # odd inline dict: dropped
+        b"q ID ab EI Q",  # ID with no BI: dropped, its bytes stay tokens
+        b"[1 2 ID ab EI] TJ",  # ... also inside an array
+        b"1 0 0 1 2 3 cm q << /A 1 /B >> Q",  # odd dict after operators
     ]:
         _assert_same(data)

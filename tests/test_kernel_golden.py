@@ -494,6 +494,54 @@ def test_column_device_reading_order():
     assert extract_pdf_bytes(sdata, ColumnTextDevice)[0] == extract_pdf_bytes(sdata)[0]
 
 
+def _glyph_rule_doc() -> bytes:
+    """A Helvetica page whose ToUnicode maps A to nothing (dropped) and B to
+    Q; 0x01 and 0x02 are unmapped ("<CID x>"); 0xE9 is Oslash in
+    StandardEncoding.  It renders 360 codes, past the 200 after which a
+    single-byte font decodes through its translate table."""
+    from pdfparse_spark.fixtures.pdf_gen import (
+        _TOUNICODE_FOOTER, _TOUNICODE_HEADER, _assemble, _doc_skeleton, _stream)
+
+    cmap = (_TOUNICODE_HEADER + b"2 beginbfchar\n<41> <>\n<42> <0051>\nendbfchar\n"
+            + _TOUNICODE_FOOTER)
+    font = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 6 0 R >>"
+    line = b"[(AB\x01Caf\xe9) -600 (x\x02B) 80 (A)] TJ 0 -14 Td (BA\x01) Tj 0 -14 Td "
+    content = b"BT /F1 12 Tf 72 760 Td " + line * 30 + b"ET"
+    return _assemble(_doc_skeleton(content, font_body=font, extra_objs={6: _stream(b"", cmap)}))
+
+
+@pytest.mark.parametrize("doc, device, sha256, spans", [
+    ("big", "AdvanceTextDevice",
+     "14c617d8af9e12e4629c8b4888db90dcd8f98bcd5c3b3dcd2084f69734a969d1",
+     [(1, 0, 722), (2, 722, 1444), (3, 1444, 2166)]),
+    ("big", "ColumnTextDevice",
+     "14c617d8af9e12e4629c8b4888db90dcd8f98bcd5c3b3dcd2084f69734a969d1",
+     [(1, 0, 722), (2, 722, 1444), (3, 1444, 2166)]),
+    ("glyph", "SimpleTextDevice",
+     "020c403374a0d0b66a34664efcd77e0641c2a6dd1b38673de6ad3c71c91d1991", [(1, 0, 930)]),
+    ("glyph", "AdvanceTextDevice",
+     "87f89b1a64e966dc4b7a50fcaad320687a19e81275f1fa2e7f4b19f169283bf5", [(1, 0, 960)]),
+    ("glyph", "ColumnTextDevice",
+     "020c403374a0d0b66a34664efcd77e0641c2a6dd1b38673de6ad3c71c91d1991", [(1, 0, 930)]),
+])
+def test_devices_pinned_past_the_translate_threshold(doc, device, sha256, spans):
+    """Every device decodes glyphs through the font's one rule; these
+    documents render well past 200 codes per font, so the shared translate
+    table serves most of them.  Hashes of the text each device gave before
+    the rule moved into the font."""
+    import hashlib
+
+    from pdfparse_spark.fixtures.pdf_gen import make_big_pdf
+    from pdfparse_spark.kernel import device as devices
+    from pdfparse_spark.kernel.extract import extract_pdf_bytes
+
+    data = make_big_pdf(3, 12, seed=4).data if doc == "big" else _glyph_rule_doc()
+    text, got_spans, status = extract_pdf_bytes(data, getattr(devices, device))
+    assert status == "ok"
+    assert got_spans == spans
+    assert hashlib.sha256(text.encode()).hexdigest() == sha256
+
+
 def test_names_cycle_fixture_end_to_end():
     """The pdf_names_cycle FIXTURE (a whole file, opened through the normal
     parser/xref path — not a hand-wired document) extracts its page text

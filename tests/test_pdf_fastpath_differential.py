@@ -2,15 +2,15 @@
 
 One regex pass (``psparse.scan_values``) tokenizes a whole content stream
 (``PDFContentParser.iter_objects``) or a whole indirect-object body
-(``PDFParser.object_stack_fast``); the per-token parser stays the authority.
-These tests pin fast == per-token, type-strict (``True`` is not ``1`` and
-``1`` is not ``1.0``), check that well-formed input takes the fast path,
-and that every input outside its grammar goes whole to the authority."""
+(``PDFParser.object_stack_fast``); ``nextobject`` stays the authority.
+These tests pin fast == ``nextobject``, type-strict (``True`` is not ``1``
+and ``1`` is not ``1.0``), check that well-formed input takes the fast path,
+and that every input outside its grammar goes whole to the per-token
+path."""
 
 from __future__ import annotations
 
-import types
-
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -18,7 +18,7 @@ from pdfparse_spark.fixtures.pdf_gen import make_big_pdf
 from pdfparse_spark.kernel.pdfdocument import PDFDocument
 from pdfparse_spark.kernel.pdfparser import PDFContentParser, PDFParser
 from pdfparse_spark.kernel.pdftypes import PDFObjRef, PDFStream, stream_value
-from pdfparse_spark.kernel.psparse import KWD, LIT, PSBaseParser, PSSyntaxError, scan_values
+from pdfparse_spark.kernel.psparse import KWD, LIT, PSEOF, PSBaseParser, PSSyntaxError, scan_values
 
 _SETTINGS = dict(deadline=4000, suppress_health_check=[HealthCheck.too_slow])
 
@@ -38,22 +38,39 @@ def _norm(obj):
 # --- content streams ---------------------------------------------------------
 
 
-def _drain(it) -> list:
+def _iter_objects(streams: list) -> tuple[bool, list]:
+    """(fast path taken, iter_objects result): the fast path takes no
+    token from ``nexttoken``."""
+    parser = PDFContentParser(streams)
+    nexttoken, calls = parser.nexttoken, []
+    parser.nexttoken = lambda: calls.append(1) or nexttoken()
     out = []
     try:
-        for obj in it:
+        for obj in parser.iter_objects():
             out.append(_norm(obj))
     except PSSyntaxError:
         out.append(("SYNTAXERROR",))
-    return out
+    return not calls, out
+
+
+def _via_nextobject(parser: PDFContentParser):
+    try:
+        while True:
+            yield parser.nextobject()[1]
+    except PSEOF:
+        return
 
 
 def _content(data: bytes) -> tuple[bool, list, list]:
-    """(fast path taken, iter_objects result, per-token result)."""
-    it = PDFContentParser([PDFStream({}, data)]).iter_objects()
-    fast = not isinstance(it, types.GeneratorType)
-    slow = PDFContentParser([PDFStream({}, data)])._iter_objects_per_token()
-    return fast, _drain(it), _drain(slow)
+    """(fast path taken, iter_objects result, nextobject result)."""
+    fast, got = _iter_objects([PDFStream({}, data)])
+    want = []
+    try:
+        for obj in _via_nextobject(PDFContentParser([PDFStream({}, data)])):
+            want.append(_norm(obj))
+    except PSSyntaxError:
+        want.append(("SYNTAXERROR",))
+    return fast, got, want
 
 
 _SCALARS = [
@@ -139,15 +156,26 @@ def test_content_fallbacks_go_whole_to_the_authority():
         b"<41 Tj",  # unterminated hex string
         b"BI /W 4 /H 4 ID rawbytes EI Q",  # inline image
         b"q ID x EI",  # stray ID
-        b"1 2 re << /odd >> f",  # odd dict: raises after re ran
     ]:
         fast, got, want = _content(data)
         assert not fast, data
         assert got == want, data
-    # the operators before the odd dict still come out, then the error
-    assert _content(b"1 2 re << /odd >> f")[1] == [
-        ("int", 1), ("int", 2), ("PSKeyword", KWD("re")), ("SYNTAXERROR",),
-    ]
+
+
+def test_odd_dict_raises_after_the_objects_before_it():
+    # the fast path keeps it: the operators before the odd dict come out,
+    # then the error, on both paths
+    for data, fast in [(b"1 2 re << /odd >> f", True), (b"% c\n1 2 re << /odd >> f", False)]:
+        took, got, want = _content(data)
+        assert took == fast and got == want, data
+        assert got[-4:] == [("int", 1), ("int", 2), ("PSKeyword", KWD("re")), ("SYNTAXERROR",)]
+    # any other assembly error waits the same way (an unhashable inline key)
+    for parse in (PDFContentParser.iter_objects, _via_nextobject):
+        got = []
+        with pytest.raises(TypeError):
+            for obj in parse(PDFContentParser([PDFStream({}, b"1 2 re BI [1] 2 ID x EI Q")])):
+                got.append(_norm(obj))
+        assert got == [("int", 1), ("int", 2), ("PSKeyword", KWD("re"))]
 
 
 def test_long_integer_is_dropped_by_the_per_token_fast_path():
@@ -265,5 +293,4 @@ def test_big_pdf_takes_no_fallback():
         if objid not in streams:
             assert parser.object_stack_fast(pos, objid) is not None, objid
     for page in pages:
-        it = PDFContentParser([stream_value(c) for c in page.contents]).iter_objects()
-        assert not isinstance(it, types.GeneratorType)
+        assert _iter_objects([stream_value(c) for c in page.contents])[0]

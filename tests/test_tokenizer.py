@@ -3,6 +3,10 @@
 SURVEY.md §5.1.  Positions are byte offsets.
 """
 
+import base64
+
+from pdfparse_spark.fixtures.pdf_gen import _assemble, _doc_skeleton
+from pdfparse_spark.kernel.extract import extract_turn
 from pdfparse_spark.kernel.psparse import (
     KWD,
     LIT,
@@ -174,6 +178,13 @@ def test_string_escape_edge_cases():
 def test_number_edge_cases():
     toks = get_tokens(b"16 -5 3.14 .5 1. 007")
     assert toks == [(0, 16), (3, -5), (6, 3.14), (11, 0.5), (14, 1.0), (17, 7)]
+    # unparseable numbers are dropped; a long run of them must not recurse
+    assert get_tokens(b"- + . -. " * 1500 + b"9") == [(13500, 9)]
+    content = b"BT /F1 12 Tf 72 720 Td (Hello) Tj " + b"- " * 3000 + b"(World) Tj ET"
+    data = _assemble(_doc_skeleton(content))
+    assert extract_turn("pdfb64:" + base64.b64encode(data).decode()) == (
+        "pdf", "\nHelloWorld", [(1, 0, 11)], "ok"
+    )
 
 
 def test_octal_escape_overflow_wraps():
