@@ -23,6 +23,7 @@ glyph internals are not decoded (parsed-but-unused in the reference).
 from __future__ import annotations
 
 import struct
+from codecs import charmap_decode
 
 from .psparse import KWD, LIT, PSEOF, PSKeyword, PSLiteral, PSStackParser
 from .pdfparser import nunpack
@@ -34,7 +35,7 @@ from .pdftypes import (
     resolve1,
     stream_value,
 )
-from .encodings import get_encoding, name2unicode
+from .encodings import ENCODINGS, get_encoding, name2unicode
 
 __all__ = [
     "CMapNotFound",
@@ -628,6 +629,7 @@ class PDFFont:
         self.bbox = list_value(descriptor.get(LIT("FontBBox"), [0, 0, 0, 0]))
         self.hscale = self.vscale = 0.001
         self._text: dict[int, str] = {}  # cid -> text memo (mapping is fixed)
+        self._table: str | None = None  # 256-char charmap_decode table
         self._trans: dict[int, str] | None = None  # 256-entry str.translate table
         self._nrendered = 0
 
@@ -658,25 +660,54 @@ class PDFFont:
         maps it, ``<CID x>`` (uppercase hex) when unmapped; an empty
         mapping drops the cid.
 
-        Per cid through a memo, until a single-byte font has rendered more
-        than 200 chars; from then on one C-level str.translate over a
-        256-entry table ('' drops a char).  Building the table up front
-        would cost more than a small document renders."""
-        trans = self._trans
-        if trans is not None:
-            return data.decode("latin-1").translate(trans)
-        memo = self._text
-        chars = []
-        for cid in self.decode(data):
-            ch = memo.get(cid)
-            if ch is None:
-                ch = memo[cid] = self._cid_text(cid)
-            chars.append(ch)
-        if not self.is_multibyte():
-            self._nrendered += len(data)
-            if self._nrendered > 200:
-                self._trans = {cid: memo.get(cid) or self._cid_text(cid) for cid in range(256)}
-        return "".join(chars)
+        Per cid through a memo until ``_decode_tables`` hands over the
+        256-entry tables of a single-byte font; from then on one C-level
+        ``codecs.charmap_decode`` over a 256-char table.  A code whose text
+        is not exactly one char (``<CID x>``, a dropped code, a multi-char
+        ToUnicode value) is U+FFFE there, which the codec reads as
+        undefined, as is U+FFFE itself; a string holding one goes through
+        ``str.translate`` over the 256-entry dict ('' drops a char), which
+        gives the same text for every code."""
+        table = self._table
+        if table is None:
+            tables = self._decode_tables()
+            if tables is None:
+                self._nrendered += len(data)
+                memo = self._text
+                chars = []
+                for cid in self.decode(data):
+                    ch = memo.get(cid)
+                    if ch is None:
+                        ch = memo[cid] = self._cid_text(cid)
+                    chars.append(ch)
+                return "".join(chars)
+            self._table, self._trans = tables
+            table = self._table
+        try:
+            return charmap_decode(data, "strict", table)[0]
+        except UnicodeDecodeError:
+            return data.decode("latin-1").translate(self._trans)
+
+    def _decode_tables(self) -> tuple[str, dict[int, str]] | None:
+        """The decode tables once a single-byte font has rendered more than
+        200 chars, else None: building them up front would cost more than a
+        small document renders."""
+        if self._nrendered <= 200 or self.is_multibyte():
+            return None
+        return _charmap_tables({cid: self._text.get(cid) or self._cid_text(cid) for cid in range(256)})
+
+
+def _charmap_tables(trans: dict[int, str]) -> tuple[str, dict[int, str]]:
+    """(``charmap_decode`` table, ``str.translate`` dict) of the 256-entry
+    cid → text map ``trans``: U+FFFE, the codec's undefined, stands for
+    every text that is not exactly one char."""
+    return "".join(t if len(t) == 1 else "\ufffe" for t in trans.values()), trans
+
+
+# the decode tables of the shared base encodings, built once per process
+_BASE_ENCODING_TABLES: dict[int, tuple[str, dict[int, str]] | None] = {
+    id(table): None for table in ENCODINGS.values()
+}
 
 
 class PDFSimpleFont(PDFFont):
@@ -709,6 +740,21 @@ class PDFSimpleFont(PDFFont):
             return self.cid2unicode[cid]
         except KeyError:
             raise PDFUnicodeNotDefined(cid)
+
+    def _decode_tables(self) -> tuple[str, dict[int, str]] | None:
+        """With no ToUnicode and a shared base encoding as its whole
+        mapping (no /Differences, no Type1 header encoding), every code
+        decodes as in every other such font: the tables are built once per
+        process, and the font decodes through them from its first string."""
+        key = id(self.cid2unicode)
+        if self.unicode_map is None and key in _BASE_ENCODING_TABLES:
+            tables = _BASE_ENCODING_TABLES[key]
+            if tables is None:
+                tables = _BASE_ENCODING_TABLES[key] = _charmap_tables(
+                    {cid: self._cid_text(cid) for cid in range(256)}
+                )
+            return tables
+        return super()._decode_tables()
 
 
 class PDFType1Font(PDFSimpleFont):

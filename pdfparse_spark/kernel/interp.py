@@ -15,6 +15,14 @@ Lenient deviations from hard errors in the reference: Tf with an undefined
 font id raises PDFInterpreterError (the reference errors unconditionally,
 pdfparse.lisp:2622) — the turn kernel maps it to parse_status="error";
 unknown operators are ignored (non-strict mode).
+
+Show path inlined for the golden device: when the device is exactly a
+``SimpleTextDevice``, ``execute`` runs Tj and T* inline
+(``_execute_simple``), with what ``do_Tj`` + ``SimpleTextDevice.render_string``
+and ``do_T_star`` do; they are 1,600 of the 1,700 operators of a
+``make_big_pdf(20, 40)`` document.  Every other operator, and every other
+device (subclasses included), goes through the ``do_*`` dispatch, which
+stays the authority (tests/test_page_loop_differential.py).
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from .pdftypes import (
     stream_value,
 )
 from .fonts import get_font
+from .device import SimpleTextDevice
 
 __all__ = [
     "PDFInterpreterError",
@@ -46,6 +55,10 @@ MATRIX_IDENTITY = (1, 0, 0, 1, 0, 0)
 
 LITERAL_FORM = LIT("Form")
 LITERAL_IMAGE = LIT("Image")
+
+# the operators _execute_simple runs inline
+_OP_TJ = KWD("Tj")
+_OP_T_STAR = KWD("T*")
 
 
 class PDFInterpreterError(Exception):
@@ -574,33 +587,93 @@ class PDFPageInterpreter:
         '"': "do_dquote",
     }
 
+    def _operator(self, kw: PSKeyword):
+        """The bound ``do_*`` method of operator ``kw``; False when unknown."""
+        name = kw.name
+        return getattr(self, self._OP_NAME_SPECIAL.get(name) or "do_" + name, False)
+
     def execute(self, streams: list) -> None:
         try:
             parser = PDFContentParser(streams)
         except PSEOF:
             return
-        # keyword→bound-method cache: PSKeywords are interned, so identity
-        # is stable; False marks known-unknown operators (non-strict skip).
         # Objects come from the specialized iter_objects assembler (pinned
         # differentially against nextobject).
+        objects = parser.iter_objects()
+        if self.device.__class__ is SimpleTextDevice:
+            self._execute_simple(objects)
+            return
+        # keyword→bound-method cache: PSKeywords are interned, so identity
+        # is stable; False marks known-unknown operators (non-strict skip).
         dispatch: dict = {}
         dispatch_get = dispatch.get
         push = self.push
-        for obj in parser.iter_objects():
+        for obj in objects:
             if obj.__class__ is PSKeyword:
                 fn = dispatch_get(obj)
                 if fn is None:
-                    name = obj.name
-                    method = self._OP_NAME_SPECIAL.get(name)
-                    if method is None:
-                        method = "do_" + name
-                    fn = getattr(self, method, False)
-                    dispatch[obj] = fn
+                    fn = dispatch[obj] = self._operator(obj)
                 if fn:
                     fn()
                 # unknown operators ignored (non-strict)
             else:
                 push(obj)
+
+    def _execute_simple(self, objects) -> None:
+        """``execute`` for exactly a SimpleTextDevice: Tj and T* run inline,
+        doing what ``do_Tj`` + ``SimpleTextDevice.render_string`` and
+        ``do_T_star`` do, with the argument stack, text state, font and
+        device state held in locals.  Every other operator runs its
+        ``do_*`` method, with the device state written back before the call
+        and read again after it (a Form XObject's ``Do`` renders into the
+        same device; ``Q`` replaces the text state; a short ``pop``
+        replaces the argument stack)."""
+        device = self.device
+        parts = device._parts
+        length, last_y, rendered = device._len, device._last_y, device.rendered_any
+        stack = self.argstack
+        ts = self.textstate
+        font = ts.font
+        dispatch: dict = {}
+        dispatch_get = dispatch.get
+        try:
+            for obj in objects:
+                if obj.__class__ is not PSKeyword:
+                    stack.append(obj)
+                elif obj is _OP_TJ:
+                    s = stack.pop() if stack else None
+                    y = ts.matrix[5]
+                    if not rendered:
+                        device.first_y = y
+                        rendered = device.rendered_any = True
+                    text = font.decode_text(s) if font is not None and isinstance(s, bytes) else ""
+                    if abs(last_y - y) > 3:
+                        text = "\n" + text
+                    last_y = y
+                    if text:
+                        parts.append(text)
+                        length += len(text)
+                elif obj is _OP_T_STAR:
+                    a, b, c, d, e, f = ts.matrix
+                    leading = ts.leading
+                    ts.matrix = (a, b, c, d, c * leading + e, d * leading + f)
+                    ts.linematrix = (0, 0)
+                else:
+                    fn = dispatch_get(obj)
+                    if fn is None:
+                        fn = dispatch[obj] = self._operator(obj)
+                    if fn:
+                        device._len, device._last_y = length, last_y
+                        try:
+                            fn()
+                        finally:
+                            length, last_y = device._len, device._last_y
+                            rendered = device.rendered_any
+                            stack = self.argstack
+                            ts = self.textstate
+                            font = ts.font
+        finally:
+            device._len, device._last_y = length, last_y
 
     def render_contents(self, resources, streams, ctm=MATRIX_IDENTITY) -> None:
         self.init_resources(resources)

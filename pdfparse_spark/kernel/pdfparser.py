@@ -12,17 +12,21 @@ favor of PDF-spec semantics so fixture goldens are self-consistent):
 - xref-stream field 1 unpacks ent[0:fl1] (the reference's subseq start of 9
   at pdfparse.lisp:1277 cannot work for any real W array).
 
-Whole-buffer fast path: a page's content streams and a non-stream indirect
-object's body are tokenized in one regex pass (``psparse.scan_values``) and
+Whole-buffer fast path: a page's content streams and an indirect object's
+body are tokenized in one regex pass (``psparse.scan_values``) and
 assembled by ``_assemble``, with ``nextobject`` kept as the authority.  A
 content stream falls back on any uncovered byte and on ``BI``/``ID`` (inline
 images need byte positions); its fallback feeds ``nexttoken`` values into
 the same ``_assemble``.  An object body falls back to ``nextobject`` on any
 uncovered byte, anything but a strict ``N G obj`` header naming the object,
-a ``stream`` before the first ``endobj``, an ``endobj`` not standing as its
-own token, ``obj``/``xref``/``startxref`` in the body, ``R`` over anything
-but two ints, an odd dict, an open collection at ``endobj`` and an empty
-stack.
+an ``endobj`` not standing as its own token, ``obj``/``xref``/``startxref``
+in the body, ``R`` over anything but two ints, an odd dict, an open
+collection at ``endobj`` and an empty stack.  A stream object takes the fast
+path too (its data sliced as ``_capture_stream`` captures it) when its dict
+is the only value before a ``stream`` keyword of its own, ``/Length`` is a
+direct non-negative int, the xref was not rebuilt by the fallback scan, and
+``endstream``, whitespace and ``endobj`` follow the data; any other stream
+object falls back to ``nextobject`` and ``_capture_stream``.
 """
 
 from __future__ import annotations
@@ -168,11 +172,15 @@ def _raising(exc: Exception):
 
 
 # "N G obj" with both numbers plain digits and "obj" a whole keyword
-_OBJ_HEADER = re.compile(rb"\s*+([0-9]++)\s++[0-9]++\s++obj(?![^#/%\[\]()<>{}\s])")
+_OBJ_HEADER = re.compile(rb"\s*+([0-9]++)\s++([0-9]++)\s++obj(?![^#/%\[\]()<>{}\s])")
 # "endobj" as a token of its own: the byte before ends the previous token
 # without joining it (after a '/' it would be a name, after a letter or
 # digit part of a keyword or number), and the keyword ends after it
 _ENDOBJ = re.compile(rb"(?<=[\s()<>\[\]{}])endobj(?![^#/%\[\]()<>{}\s])")
+# the "stream" keyword as a token of its own after a complete value, and the
+# rest of its line through the EOL, as nextline reads it ("\r\n" is one EOL)
+_STREAM_LINE = re.compile(rb"(?<=[\s)>\]}])stream(?![^#/%\[\]()<>{}\s])[^\r\n]*+(?:\r\n?|\n)")
+_ENDSTREAM_ENDOBJ = re.compile(rb"endstream\s++endobj(?![^#/%\[\]()<>{}\s])")
 
 
 class PDFNoValidXRef(Exception):
@@ -374,17 +382,26 @@ class PDFParser(PSStackParser):
         """The object stack at ``endobj`` for object ``objid`` at ``pos``,
         from one whole-buffer scan of its body, or None when nextobject
         must parse it.  The fast path takes only a strict ``N G obj``
-        header naming ``objid``, a body with no ``stream`` before the first
-        ``endobj``, and that ``endobj`` standing as a token of its own."""
+        header naming ``objid``; then either a body with no ``stream``
+        before the first ``endobj``, that ``endobj`` standing as a token
+        of its own, or a stream object (``_stream_fast``)."""
         data = self.data
         m = _OBJ_HEADER.match(data, pos)
         if m is None or int(m.group(1)) != objid:
             return None
         start = m.end()
         end = data.find(b"endobj", start)
-        if end < 0 or data.find(b"stream", start, end) >= 0 or not _ENDOBJ.match(data, end):
+        kw = data.find(b"stream", start, end if end >= 0 else len(data))
+        if kw >= 0:
+            return self._stream_fast(start, kw, objid, int(m.group(2)))
+        if end < 0 or not _ENDOBJ.match(data, end):
             return None
-        values = scan_values(data[start:end])
+        return self._object_values(data[start:end]) or None
+
+    def _object_values(self, body: bytes) -> list | None:
+        """The top-level values of an object body from one scan, or None
+        when the scan does not cover it or ``_assemble`` hands it back."""
+        values = scan_values(body)
         if values is None:
             return None
         out: list = []
@@ -393,14 +410,45 @@ class PDFParser(PSStackParser):
                 return None
         except PSSyntaxError:
             return None  # odd dict
-        return out or None
+        return out
+
+    def _stream_fast(self, start: int, kw: int, objid: int, genno: int) -> list | None:
+        """``[stream]`` for ``N G obj << … >> stream … endstream endobj``
+        whose body starts at ``start`` and whose first ``stream`` bytes are
+        at ``kw``, as ``_capture_stream`` builds it; None unless the dict is
+        the only value before a ``stream`` keyword standing as a token of
+        its own, ``/Length`` is a direct non-negative int (0 when absent),
+        the xref was not rebuilt by the fallback scan, and ``endstream``,
+        whitespace and ``endobj`` follow the data.  The data runs from the
+        end of the ``stream`` line to the first ``endstream`` at or after
+        ``/Length`` bytes into it."""
+        data = self.data
+        line = _STREAM_LINE.match(data, kw)
+        if self.fallback or line is None:
+            return None
+        out = self._object_values(data[start:kw])
+        if out is None or len(out) != 1 or out[0].__class__ is not dict:
+            return None
+        dic = out[0]
+        length = dic.get(LITERAL_LENGTH, 0)
+        if length.__class__ is not int or length < 0:
+            return None
+        body = line.end()
+        stop = data.find(b"endstream", body + length)
+        if stop < 0 or not _ENDSTREAM_ENDOBJ.match(data, stop):
+            return None
+        decipher = self.doc.decipher if self.doc is not None else None
+        stream = PDFStream(dic, data[body:stop], decipher)
+        stream.set_objid(objid, genno)
+        return [stream]
 
     def _capture_stream(self, kw_pos: int) -> None:
         popped = self.pop(1)
         dic = dict_value(popped[0][1]) if popped else {}
         objlen = 0
         if not self.fallback:
-            objlen = int_value(dic.get(LITERAL_LENGTH, 0))
+            # a negative /Length would seek back into the 'stream' line
+            objlen = max(0, int_value(dic.get(LITERAL_LENGTH, 0)))
         self.seek(kw_pos)
         try:
             _, line = self.nextline()  # 'stream\r\n'

@@ -116,6 +116,19 @@ def test_big_pdf_generator_golden():
         assert len(spans) == pages
 
 
+@pytest.mark.parametrize("length", [b"-20", b"-1 ", b"000", b"109"])
+def test_negative_stream_length_reads_to_endstream(length):
+    """A negative /Length counts as 0 (the data runs to endstream, as for
+    any wrong /Length) instead of seeking back into the 'stream' line and
+    failing the document."""
+    from pdfparse_spark.fixtures.pdf_gen import make_big_pdf
+
+    fx = make_big_pdf(2, 3, seed=1)
+    assert b"/Length 109 " in fx.data
+    data = fx.data.replace(b"/Length 109 ", b"/Length " + length + b" ", 1)
+    assert extract_pdf_bytes(data) == (fx.golden_text, fx.golden_spans, "ok")
+
+
 def test_text_state_ops_no_output_effect():
     """Tc/Tw/Tz/Ts/Tr mutate text state but not the simple device's output
     (simple-device.lisp only reads matrix f); Td with |ty| <= 3 must not

@@ -1,8 +1,9 @@
 """Differential tests for the PDF kernel's whole-buffer fast path.
 
 One regex pass (``psparse.scan_values``) tokenizes a whole content stream
-(``PDFContentParser.iter_objects``) or a whole indirect-object body
-(``PDFParser.object_stack_fast``); ``nextobject`` stays the authority.
+(``PDFContentParser.iter_objects``) or a whole indirect-object body, stream
+objects included (``PDFParser.object_stack_fast``); ``nextobject`` with
+``_capture_stream`` stays the authority.
 These tests pin fast == ``nextobject``, type-strict (``True`` is not ``1``
 and ``1`` is not ``1.0``), check that well-formed input takes the fast path,
 and that every input outside its grammar goes whole to the per-token
@@ -14,7 +15,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pdfparse_spark.fixtures.pdf_gen import make_big_pdf
+from pdfparse_spark.fixtures.pdf_gen import _assemble, _doc_skeleton, build_pdf_fixtures, make_big_pdf
+from pdfparse_spark.kernel.extract import extract_pdf_bytes
 from pdfparse_spark.kernel.pdfdocument import PDFDocument
 from pdfparse_spark.kernel.pdfparser import PDFContentParser, PDFParser
 from pdfparse_spark.kernel.pdftypes import PDFObjRef, PDFStream, stream_value
@@ -25,7 +27,8 @@ _SETTINGS = dict(deadline=4000, suppress_health_check=[HealthCheck.too_slow])
 
 def _norm(obj):
     if isinstance(obj, PDFStream):
-        return ("STREAM", tuple(sorted(map(repr, obj.attrs))), obj.rawdata)
+        return ("STREAM", _norm(obj.attrs), obj.rawdata, obj.objid, obj.genno,
+                obj.decipher is not None)
     if isinstance(obj, PDFObjRef):
         return ("REF", obj.objid)
     if isinstance(obj, dict):
@@ -279,6 +282,124 @@ def test_two_objects_back_to_back():
     assert _getobj_both(data, 0, 2)[0] is False  # header names another object
 
 
+# --- stream objects -----------------------------------------------------------
+
+
+def _stream_obj(dict_body: bytes, data: bytes, eol: bytes = b"\n", tail: bytes = b"endstream\nendobj\n",
+                objid: int = 5, genno: int = 0) -> bytes:
+    return b"%d %d obj\n%s\nstream%s%s%s" % (objid, genno, dict_body, eol, data, tail)
+
+
+_NEXT = b"6 0 obj\n<< /Length 3 >>\nstream\nnxt\nendstream\nendobj\n"
+
+
+@pytest.mark.parametrize("dict_body, data, eol, tail, fast", [
+    (b"<< /Length 5 >>", b"BT ET", b"\n", b"endstream\nendobj\n", True),
+    (b"<< /Length 5 >>", b"BT ET", b"\r\n", b"endstream\nendobj\n", True),
+    (b"<< /Length 5 >>", b"BT ET", b"\r", b"endstream\nendobj\n", True),
+    (b"<< /Length 5 >>", b"BT ET", b" \n", b"endstream\nendobj\n", True),
+    (b"<< /Length 5 >>", b"BT ET", b"  \r\n", b"\r\nendstream\r\nendobj\r", True),
+    (b"<< /Length 5 >>", b"BT ET", b"\n", b"\nendstream endobj\n", True),  # EOL kept in data
+    (b"<< /Length 2 >>", b"BT ET", b"\n", b"endstream\nendobj\n", True),  # short
+    (b"<< /Length 0 >>", b"BT ET", b"\n", b"endstream\nendobj\n", True),
+    (b"<< /Filter /FlateDecode >>", b"BT ET", b"\n", b"endstream\nendobj\n", True),  # no /Length
+    (b"<<>>", b"x endstrea y", b"\n", b"endstream\nendobj\n", True),
+    (b"<< /Length 40 >>", b"BT ET", b"\n", b"endstream\nendobj\n", True),  # long: next one's
+    (b"<< /Length 900 >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),  # past every one
+    (b"<< /Length -3 >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),  # negative
+    (b"<< /Length 5.0 >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),
+    (b"<< /Length true >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),
+    (b"<< /Length 5 >>", b"BT ET", b"\n", b"", False),  # missing endstream
+    (b"<< /Length 5 >>", b"BT ET", b"\n", b"endstream 1 2 3 endobj\n", False),
+    (b"<< /Length 5 >>", b"BT ET", b"\n", b"endstreamendobj\n", False),
+    (b"<< /Length 5 >>", b"BT ET", b" ", b"endstream\nendobj\n", True),  # the "stream" line runs on
+    (b"<< /Length 5 >>", b"BT ET", b"", b"endstream\nendobj\n", False),  # one keyword "streamBT"
+    (b"1 << /Length 5 >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),  # two values
+    (b"[<< /Length 5 >>]", b"BT ET", b"\n", b"endstream\nendobj\n", False),  # not a dict
+    (b"<< /Length 5 /T (a stream) >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),
+    (b"<< /Length 5 /Substream 1 >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),
+    (b"<< /Length 5 >> % c", b"BT ET", b"\n", b"endstream\nendobj\n", False),
+    (b"<< /Length 5 /A >>", b"BT ET", b"\n", b"endstream\nendobj\n", False),  # odd dict
+])
+def test_stream_object_cases(dict_body, data, eol, tail, fast):
+    obj = _stream_obj(dict_body, data, eol, tail)
+    doc_data = obj + (_NEXT if tail else b"")
+    took, got, want = _getobj_both(doc_data, 0, 5)
+    assert got == want, (dict_body, data, eol, tail)
+    assert took == fast, (dict_body, data, eol, tail)
+    if fast:
+        assert got[0] == "STREAM" and got[3:5] == (5, 0)
+
+
+def _indirect_length_doc() -> bytes:
+    bodies = _doc_skeleton(b"")
+    content = b"BT /F1 12 Tf 72 720 Td (indirect) Tj ET"
+    bodies[5] = b"<< /Length 6 0 R >>\nstream\n%s\nendstream" % content
+    bodies[6] = b"%d" % len(content)
+    return _assemble(bodies)
+
+
+@pytest.mark.parametrize("data", [fx.data for fx in build_pdf_fixtures()]
+                         + [_indirect_length_doc(), make_big_pdf(3, 4, seed=2).data])
+def test_documents_match_without_the_object_fast_path(data):
+    want_fast = extract_pdf_bytes(data)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(PDFParser, "object_stack_fast", lambda self, pos, objid: None)
+        assert extract_pdf_bytes(data) == want_fast
+
+
+def test_indirect_length_goes_to_the_authority():
+    data = _indirect_length_doc()
+    assert extract_pdf_bytes(data) == ("\nindirect", [(1, 0, 9)], "ok")
+    doc = PDFDocument()
+    parser = PDFParser(data)
+    parser.set_document(doc)
+    doc.set_parser(parser)
+    doc.initialize(b"")
+    assert parser.object_stack_fast(doc.xrefs[0].offsets[5][1], 5) is None
+
+
+def test_stream_object_keeps_genno_and_offset_body():
+    data = b"junk " + _stream_obj(b"<</Length 3>>", b"abc", genno=7, objid=12)
+    took, got, want = _getobj_both(data, 5, 12)
+    assert took and got == want
+    assert got[2] == b"abc" and got[3:5] == (12, 7)
+
+
+def test_stream_object_declines_in_xref_fallback():
+    data = _stream_obj(b"<< /Length 5 >>", b"BT ET")
+    doc = _open(data)
+    assert doc._parser.object_stack_fast(0, 5) is not None
+    doc._parser.fallback = True  # /Length is ignored once the xref was rebuilt
+    assert doc._parser.object_stack_fast(0, 5) is None
+    assert stream_value(doc._getobj_parse(0, 5)).rawdata == b"BT ET"
+
+
+_STREAM_DICTS = [b"<< /Length %d >>", b"<< /Filter /FlateDecode /Length %d /DL 9 >>",
+                 b"<</Length %d/Type/XObject>>", b"<< /Length %d /Kids [1 0 R] >>"]
+_DATA_BYTES = st.binary(max_size=40) | st.sampled_from(
+    [b"BT (x) Tj ET", b"endstrea", b"\nendstream", b"stream\r\n", b"endobj", b"\r\n\r"])
+
+
+@given(
+    st.sampled_from(_STREAM_DICTS), st.lists(_DATA_BYTES, max_size=3).map(b"".join),
+    st.integers(-5, 60) | st.none(), st.sampled_from([b"\n", b"\r\n", b"\r", b" \n", b"\t\r\n"]),
+    st.sampled_from([b"endstream\nendobj\n", b"\nendstream\nendobj\n", b"\r\nendstream endobj\r",
+                     b"endstream\r\nendobj ", b"endstream endobj\n", b"endstream endobj%\n",
+                     b"endstream\nendobj<<"]),
+)
+@settings(max_examples=300, **_SETTINGS)
+def test_stream_fast_path_matches_nextobject(dict_form, data, length, eol, tail):
+    if length is None:
+        length = len(data)
+    body = dict_form % length
+    doc_data = _stream_obj(body, data, eol, tail) + _NEXT
+    took, got, want = _getobj_both(doc_data, 0, 5)
+    assert got == want, doc_data
+    if 0 <= length <= len(data) and b"endstream" not in data:
+        assert took, doc_data  # a direct /Length at or short of the data
+
+
 def test_big_pdf_takes_no_fallback():
     fx = make_big_pdf(20, 40)
     parser = PDFParser(fx.data)
@@ -286,11 +407,14 @@ def test_big_pdf_takes_no_fallback():
     parser.set_document(doc)
     doc.set_parser(parser)
     doc.initialize(b"")
+    calls = []
+    nextobject = parser.nextobject
+    parser.nextobject = lambda: calls.append(1) or nextobject()
     pages = list(doc.get_pages())
     assert len(pages) == 20
-    streams = {c.objid for page in pages for c in page.contents}
     for objid, (_, pos) in doc.xrefs[0].offsets.items():
-        if objid not in streams:
-            assert parser.object_stack_fast(pos, objid) is not None, objid
+        assert parser.object_stack_fast(pos, objid) is not None, objid
+        doc.getobj(objid)
     for page in pages:
         assert _iter_objects([stream_value(c) for c in page.contents])[0]
+    assert calls == []  # every object, the 20 content streams included
