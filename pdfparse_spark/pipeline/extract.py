@@ -4,11 +4,14 @@ SURVEY.md §2 operators P8 (classify/route), P10 (skew salting), R12
 (vectorized kernel).  The kernel chain (P1–P7) runs entirely inside the
 Python worker on Arrow record batches — one JVM↔Python crossing per batch,
 never per row (BASELINE.json input_hint: "vectorized pandas/Arrow UDFs, no
-per-row Python"): the body reads ``text`` off the batch, passes the key
-columns through as the input Arrow arrays and builds every output column,
-``spans`` included, as a typed Arrow array.  No pandas frame and no per-row
-converter sits between the kernel and the JVM.  The body also installs the
-per-task zip-cache guard (pyworker.py) in its worker.
+per-row Python"): the body dictionary-encodes the batch's ``text`` column,
+so the kernel runs once per distinct payload of a batch, builds every output
+column, ``spans`` included, as a typed Arrow array over those payloads and
+fans them back out to the batch's rows with Arrow ``take``; the key columns
+pass through as the input Arrow arrays.  No pandas frame and no per-row
+converter sits between the kernel and the JVM, and no result outlives its
+batch.  The body also installs the per-task zip-cache guard (pyworker.py)
+in its worker.
 
 Scale notes (the part Catalyst cannot do for us):
 - A 10k-turn conversation must not pin one task.  The kernel is per-turn
@@ -26,7 +29,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Iterable
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -140,13 +145,24 @@ def make_extract_batch(
     so the module object is constructed once per (reused) Python worker and
     the glyph/AFM tables stay warm.
 
+    Each batch's ``text`` column is dictionary-encoded (NULL is its own
+    entry), the kernel runs once per dictionary entry, and the five kernel
+    columns are built over the distinct payloads and expanded to the
+    batch's rows with ``take(indices)``.  The kernel is a pure function of
+    the payload, so repeats within a batch cost one kernel call; nothing is
+    kept from one batch to the next.  Dedup across batches and partitions
+    is :func:`run_extraction_dedup`'s job.
+
     ``telemetry=True`` also emits ``kernel_us`` — wall microseconds spent
-    in the kernel per turn, measured at the call site inside the worker.
-    Per-partition sums of ``kernel_us`` are the straggler evidence the
-    partition-row-count proxy can't give: a partition can hold few rows
-    but one pathological 500-page PDF.  The ~100 ns perf_counter overhead
-    per turn is noise next to the 0.1-50 ms kernel cost; telemetry stays
-    opt-in only because the extra column changes the output schema.
+    in the kernel, measured at the call site inside the worker.  The row
+    where a payload first appears in its batch carries that payload's
+    kernel time and its repeats carry 0, so sums of ``kernel_us`` (per
+    partition, per bucket) are the real kernel time spent.  Per-partition
+    sums are the straggler evidence the partition-row-count proxy can't
+    give: a partition can hold few rows but one pathological 500-page PDF.
+    The ~100 ns perf_counter overhead per payload is noise next to the
+    0.1-50 ms kernel cost; telemetry stays opt-in only because the extra
+    column changes the output schema.
     """
     names = list(key_cols) + list(_KERNEL_COLS) + (["kernel_us"] if telemetry else [])
 
@@ -158,8 +174,9 @@ def make_extract_batch(
 
         factory = get_device_factory(device)
         for batch in batches:
+            enc = pc.dictionary_encode(batch.column("text"), null_encoding="encode")
             ctypes, texts, spans, statuses, micros = [], [], [], [], []
-            for text in batch.column("text").to_pylist():
+            for text in enc.dictionary.to_pylist():
                 t0 = perf_counter_ns()
                 ctype, extracted, turn_spans, status = extract_turn(text, factory)
                 if telemetry:
@@ -169,12 +186,23 @@ def make_extract_batch(
                 spans.append(turn_spans)
                 statuses.append(status)
             cols = [batch.column(k) for k in key_cols]
-            cols += kernel_arrays(ctypes, texts, spans, statuses)
+            cols += [a.take(enc.indices) for a in kernel_arrays(ctypes, texts, spans, statuses)]
             if telemetry:
-                cols.append(pa.array(micros, _ARROW_TYPES["kernel_us"]))
+                cols.append(_first_occurrence_us(enc.indices, micros))
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return extract_batch_body
+
+
+def _first_occurrence_us(indices: pa.Array, micros: list[int]) -> pa.Array:
+    """The ``kernel_us`` column of a batch: ``micros[code]`` on the row
+    where dictionary code ``code`` first appears, 0 on its repeats.  Every
+    code of a ``dictionary_encode`` result appears in ``indices``."""
+    codes = indices.to_numpy()
+    _, first = np.unique(codes, return_index=True)
+    us = np.zeros(len(codes), np.int64)
+    us[first] = micros
+    return pa.array(us, _ARROW_TYPES["kernel_us"])
 
 
 def salt_repartition(df: DataFrame, num_partitions: int, salt: int = 64) -> DataFrame:

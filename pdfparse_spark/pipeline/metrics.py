@@ -54,6 +54,10 @@ def straggler_stats(telemetry_out: DataFrame) -> DataFrame:
     thousand text turns.  This measures where the CPU time actually went:
     ``kernel_us`` summed per executing partition, reduced to max / median /
     mean and the max-over-median ratio (the BENCH straggler bound is ≤ 2).
+    The kernel runs once per distinct payload of an Arrow batch, and only
+    the row where a payload first appears in its batch carries its kernel
+    time (repeats carry 0), so the sums are real kernel time, not time
+    multiplied by repeats.
     One aggregation row out; safe to .collect() at any scale.
     """
     per_part = telemetry_out.groupBy("part_id").agg(

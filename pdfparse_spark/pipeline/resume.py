@@ -153,9 +153,11 @@ def run_resumable(
     ``telemetry=True`` runs the kernel with per-turn timing: wave output
     gains ``kernel_us``/``part_id`` columns and each ledger row records the
     bucket's total ``kernel_ms`` — per-partition/per-bucket wall-time
-    lineage (SURVEY.md §7 straggler evidence).  The ledger column exists in
-    both modes (null when off) so telemetry and plain waves share one
-    ledger directory.
+    lineage (SURVEY.md §7 straggler evidence).  A payload repeated within
+    an Arrow batch runs the kernel once; its first row carries the time and
+    the repeats 0, so ``kernel_ms`` sums real kernel time.  The ledger
+    column exists in both modes (null when off) so telemetry and plain
+    waves share one ledger directory.
     """
     if split_pages and telemetry:
         raise ValueError("split_pages and telemetry are mutually exclusive")

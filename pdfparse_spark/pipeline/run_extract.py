@@ -61,7 +61,9 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="content-addressed extraction: run the kernel once per "
         "distinct payload within each wave and join results back "
-        "(identical output rows; wins on duplicate-heavy corpora)",
+        "(identical output rows; wins on duplicate-heavy corpora). Each "
+        "Arrow batch already runs a repeated payload once; this dedups "
+        "across partitions at the cost of one extra shuffle plus a join",
     )
     p.add_argument(
         "--conv-dedup",

@@ -44,6 +44,27 @@ def turns(spark):
     return spark.createDataFrame(rows, schema), rows
 
 
+@pytest.fixture(scope="module")
+def repeat_turns(spark):
+    """One frame whose payloads repeat: the same PDF three times, the same
+    HTML twice, NULL twice, ``""`` next to NULL and one text turn.  Run
+    with ``num_partitions=1`` every row shares one Arrow batch."""
+    from pdfparse_spark.fixtures.html_gen import build_html_fixtures
+    from pdfparse_spark.fixtures.pdf_gen import build_pdf_fixtures
+    from pdfparse_spark.pipeline.transcripts import INPUT_SCHEMA
+
+    pdf = "pdfb64:" + base64.b64encode(build_pdf_fixtures()[0].data).decode("ascii")
+    html = build_html_fixtures()[0].html
+    texts = [pdf, None, html, pdf, "", None, "a plain text turn", html, pdf]
+    ts0 = datetime.datetime(2024, 5, 1, 12, 0, 0)
+    rows = [
+        ("rep%d" % (i % 3), i, "tool" if i % 2 else None, text, "t%d" % i, ts0)
+        for i, text in enumerate(texts)
+    ]
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in INPUT_SCHEMA])
+    return spark.createDataFrame(rows, schema), rows
+
+
 def _expected(rows):
     from pdfparse_spark.kernel.extract import extract_turn
 
@@ -138,3 +159,34 @@ def test_split_query_leaves_no_persisted_rdd(spark, turns):
     out = run_extraction_split(df, page_threshold=1, pages_per_seg=1, probe_min_bytes=0)
     assert out.count() == df.count()
     assert {k for k in sc._jsc.getPersistentRDDs().keys() if k > mark} == set()
+
+
+def test_arrow_body_repeats_in_one_batch_match_driver_kernel(spark, repeat_turns):
+    from pdfparse_spark.pipeline.extract import run_extraction
+
+    df, rows = repeat_turns
+    expected = _expected(rows)
+    assert _actual(run_extraction(df, num_partitions=1)) == expected
+    by_text = {text: expected[(c, i)] for c, i, _, text, _, _ in rows}
+    assert by_text[None]["spans"] == []
+    assert by_text[""]["spans"] == [(0, 0, 0)]
+    assert {by_text[t]["content_type"] for t in by_text} == {"pdf", "html", "text"}
+
+
+def test_arrow_body_telemetry_times_each_payload_once(spark, repeat_turns):
+    """Only the row where a payload first appears in its batch carries its
+    kernel time; repeats carry 0 and the kernel columns are unchanged."""
+    from pdfparse_spark.pipeline.extract import run_extraction
+
+    df, rows = repeat_turns
+    out = run_extraction(df, num_partitions=1, telemetry=True)
+    got = {(r["conv_id"], r["turn_idx"]): r["kernel_us"] for r in out.collect()}
+    assert _actual(out.drop("kernel_us", "part_id")) == _expected(rows)
+    timed = {}
+    for c, i, _, text, _, _ in rows:
+        timed.setdefault(text, []).append(got[(c, i)])
+    for text, micros in timed.items():
+        assert micros.count(0) >= len(micros) - 1, (text, micros)
+    pdf, html = rows[0][3], rows[2][3]
+    assert sum(1 for us in timed[pdf] if us > 0) == 1  # PDF kernel time is never 0 µs
+    assert sum(1 for us in timed[html] if us > 0) == 1

@@ -1,4 +1,4 @@
-"""In-process A/B timing of two revisions of the PDF kernel.
+"""In-process A/B timing of two revisions of the PDF and HTML kernel.
 
 Each side's ``pdfparse_spark/kernel`` is extracted with ``git archive`` into
 the gitignored ``.bench_cache/ab/`` and imported under its own top-level
@@ -9,15 +9,18 @@ or change-base-base-change (alternating by round), so host speed drift falls
 on both alike.
 
 Layers, each timed per round over the whole input group (repeated until
-one sample takes about ``SAMPLE_MS``):
+one sample takes about ``SAMPLE_MS``).  PDF groups:
   open    count_pdf_pages: xref, trailer, page tree, /Contents resolved
   parse   iter_objects over every page's decoded content streams
   noop    process_pdf into a device that drops every callback
   simple  process_pdf into SimpleTextDevice, the whole kernel
+HTML group:
+  extract extract_html: scan or parse into the tree, then the density walk
 
-Before timing, both sides' outputs (text, spans, status and the segment
+Before timing, both sides' outputs must be equal on every input; the run
+stops otherwise.  For a PDF that is the text, spans, status and the segment
 metadata ``first_y``/``last_y``/``rendered_any``, plus the object count of
-each page) must be equal on every input; the run stops otherwise.
+each page; for an HTML page the text and status of ``extract_html_status``.
 
 Usage (from the repository root):
   python tools/kernel_ab.py --base HEAD~1                 # working tree vs HEAD~1
@@ -25,7 +28,8 @@ Usage (from the repository root):
   python tools/kernel_ab.py --base <rev> --change <rev>
 
 Prints one table per input group (``big``: ``make_big_pdf(20, 40, seed)``
-for ``BIG_SEEDS`` seeds; ``fixtures``: ``build_pdf_fixtures()``) with each
+for ``BIG_SEEDS`` seeds; ``fixtures``: ``build_pdf_fixtures()``; ``html``:
+``build_html_fixtures()`` and ``HTML_PAGES`` ``generate_pages`` pages) with each
 side's median ms per document, the median over rounds of the change/base
 ratio (both sides of a round run back to back, so a round's ratio is free of
 slower drift) and the rounds the change was faster in, then one JSON line
@@ -52,14 +56,15 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))  # perfbench imports its modules by bare name
 
+from pdfparse_spark.fixtures.html_gen import build_html_fixtures, generate_pages  # noqa: E402
 from pdfparse_spark.fixtures.pdf_gen import build_pdf_fixtures, make_big_pdf  # noqa: E402
 from layers import NoopDevice  # noqa: E402  (perfbench's; duck-typed, so it fits either side)
 
 CACHE = os.path.join(ROOT, ".bench_cache", "ab")
 KERNEL = "pdfparse_spark/kernel"
-LAYERS = ("open", "parse", "noop", "simple")
 ROUNDS = 21
 BIG_SEEDS = 10  # make_big_pdf(20, 40, seed) for seed in range(BIG_SEEDS)
+HTML_PAGES = 200  # generate_pages(HTML_PAGES, seed=0)
 SAMPLE_MS = 25.0  # a layer repeats over its group until one sample takes about this long
 
 
@@ -91,7 +96,8 @@ def load_kernel(side: str, rev: str | None):
             shutil.rmtree(os.path.join(base, "pdfparse_spark"))
     sys.path.insert(0, base)
     mods = {name: importlib.import_module("%s.%s" % (pkg, name))
-            for name in ("device", "interp", "pdfdocument", "pdfparser", "pdftypes")}
+            for name in ("device", "html_extract", "interp", "pdfdocument", "pdfparser",
+                         "pdftypes")}
     return label, SimpleNamespace(**mods)
 
 
@@ -120,18 +126,27 @@ def _output(k, data: bytes) -> tuple:
             device.last_y, device.rendered_any)
 
 
-def layer_calls(k, docs: list[bytes]) -> dict:
-    """Per layer, a function that runs the layer over every document."""
+def pdf_output(k, data: bytes) -> tuple:
+    out = _output(k, data)
+    return out, (_count_objects(k, _page_streams(k, data)) if out[2] == "ok" else None)
+
+
+def html_output(k, html: str) -> tuple:
+    return k.html_extract.extract_html_status(html)
+
+
+def each(fn, items) -> None:
+    for item in items:
+        try:
+            fn(item)
+        except Exception:
+            pass  # a failing document costs what it costs on both sides
+
+
+def pdf_layer_calls(k, docs: list[bytes]) -> dict:
+    """Per PDF layer, a function that runs the layer over every document."""
     pages = [_page_streams(k, d) for d in docs if _output(k, d)[2] == "ok"]
     interp, device = k.interp, k.device
-
-    def each(fn, items):
-        for item in items:
-            try:
-                fn(item)
-            except Exception:
-                pass  # a failing document costs what it costs on both sides
-
     return {
         "open": lambda: each(interp.count_pdf_pages, docs),
         "parse": lambda: each(lambda p: _count_objects(k, p), pages),
@@ -140,34 +155,34 @@ def layer_calls(k, docs: list[bytes]) -> dict:
     }
 
 
-def check_equal(sides: list, docs: list[bytes], group: str) -> None:
-    for i, data in enumerate(docs):
-        outs = []
-        for _label, k in sides:
-            out = _output(k, data)
-            objects = _count_objects(k, _page_streams(k, data)) if out[2] == "ok" else None
-            outs.append((out, objects))
-        if outs[0] != outs[1]:
+def html_layer_calls(k, docs: list[str]) -> dict:
+    return {"extract": lambda: each(k.html_extract.extract_html, docs)}
+
+
+def check_equal(sides: list, docs: list, group: str, output) -> None:
+    for i, doc in enumerate(docs):
+        if output(sides[0][1], doc) != output(sides[1][1], doc):
             sys.exit("outputs differ on %s document %d" % (group, i))
 
 
-def run_group(sides: list, docs: list[bytes]) -> dict:
+def run_group(sides: list, docs: list, layer_calls) -> dict:
     calls = [layer_calls(k, docs) for _label, k in sides]
+    layers = list(calls[0])
     reps = {}
-    for layer in LAYERS:  # warm-up (imports, per-process caches) and sizing
+    for layer in layers:  # warm-up (imports, per-process caches) and sizing
         for c in calls:
             t0 = time.perf_counter_ns()
             c[layer]()
             warm_ms = (time.perf_counter_ns() - t0) / 1e6
         reps[layer] = max(1, round(SAMPLE_MS / max(warm_ms, 1e-3)))
-    ms: list[dict] = [{layer: [] for layer in LAYERS} for _ in sides]
+    ms: list[dict] = [{layer: [] for layer in layers} for _ in sides]
     gc_was = gc.isenabled()
     gc.disable()
     try:
         for r in range(ROUNDS):
             # ABBA, then BAAB: drift that is linear within a round cancels
             order = (0, 1, 1, 0) if r % 2 == 0 else (1, 0, 0, 1)
-            for layer in LAYERS:
+            for layer in layers:
                 n = reps[layer]
                 got = [0.0, 0.0]
                 for s in order:
@@ -183,7 +198,7 @@ def run_group(sides: list, docs: list[bytes]) -> dict:
         if gc_was:
             gc.enable()
     out = {}
-    for layer in LAYERS:
+    for layer in layers:
         base, change = ms[0][layer], ms[1][layer]
         out[layer] = {
             "base_ms": statistics.median(base),
@@ -204,15 +219,18 @@ def main(argv=None) -> None:
 
     sides = [load_kernel("base", args.base), load_kernel("change", args.change)]
     groups = {
-        "big": [make_big_pdf(20, 40, seed=s).data for s in range(BIG_SEEDS)],
-        "fixtures": [fx.data for fx in build_pdf_fixtures()],
+        "big": ([make_big_pdf(20, 40, seed=s).data for s in range(BIG_SEEDS)],
+                pdf_output, pdf_layer_calls),
+        "fixtures": ([fx.data for fx in build_pdf_fixtures()], pdf_output, pdf_layer_calls),
+        "html": ([fx.html for fx in build_html_fixtures()] + generate_pages(HTML_PAGES),
+                 html_output, html_layer_calls),
     }
     print("base:   %s\nchange: %s\nrounds: %d, ABBA/BAAB alternating" % (
         sides[0][0], sides[1][0], ROUNDS))
     report = {"base": sides[0][0], "change": sides[1][0], "groups": {}}
-    for group, docs in groups.items():
-        check_equal(sides, docs, group)
-        res = report["groups"][group] = run_group(sides, docs)
+    for group, (docs, output, layer_calls) in groups.items():
+        check_equal(sides, docs, group, output)
+        res = report["groups"][group] = run_group(sides, docs, layer_calls)
         print("\n%s (%d docs, outputs equal)   ms/doc, medians" % (group, len(docs)))
         print("%-8s %10s %10s %8s %6s" % ("layer", "base", "change", "ratio", "wins"))
         for layer, r in res.items():
