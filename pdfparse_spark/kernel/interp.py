@@ -20,16 +20,23 @@ Show path inlined for the golden device: when the device is exactly a
 ``SimpleTextDevice``, ``execute`` runs Tj and T* inline
 (``_execute_simple``), with what ``do_Tj`` + ``SimpleTextDevice.render_string``
 and ``do_T_star`` do; they are 1,600 of the 1,700 operators of a
-``make_big_pdf(20, 40)`` document.  Every other operator, and every other
-device (subclasses included), goes through the ``do_*`` dispatch, which
-stays the authority (tests/test_page_loop_differential.py).
+``make_big_pdf(20, 40)`` document.  That loop consumes the page's raw
+whole-buffer tokens (``PDFContentParser.tokens``), each resolved as it is
+reached, so a token crosses one Python loop; a show token ("(string) Tj")
+runs as one step, and a collection is assembled from the same tokens when
+its opener is reached.  Every other operator, and every other device
+(subclasses included), goes through the ``do_*`` dispatch over
+``iter_objects``, which stays the authority
+(tests/test_page_loop_differential.py).
 """
 
 from __future__ import annotations
 
-from .psparse import KWD, LIT, PSEOF, PSKeyword, PSLiteral
+from functools import partial
+
+from .psparse import KWD, LIT, PSEOF, PSKeyword, PSLiteral, _token_value
 from .pdfdocument import PDFDocument, PDFPage
-from .pdfparser import PDFContentParser, PDFParser
+from .pdfparser import _COLLECTIONS, PDFContentParser, PDFParser, _assemble
 from .pdftypes import (
     PDFObjRef,
     PDFStream,
@@ -59,6 +66,8 @@ LITERAL_IMAGE = LIT("Image")
 # the operators _execute_simple runs inline
 _OP_TJ = KWD("Tj")
 _OP_T_STAR = KWD("T*")
+# collection openers: at one, _execute_simple hands its token iterator to _assemble
+_OPENERS = {kw: act for kw, act in _COLLECTIONS.items() if act[0] != "/"}
 
 
 class PDFInterpreterError(Exception):
@@ -216,11 +225,7 @@ class PDFPageInterpreter:
     def pop(self, n: int) -> list:
         if n == 0:
             return []
-        if len(self.argstack) < n:
-            vals = self.argstack[:]
-            self.argstack = []
-            return vals
-        vals = self.argstack[-n:]
+        vals = self.argstack[-n:]  # all of a shorter stack
         del self.argstack[-n:]
         return vals
 
@@ -597,18 +602,17 @@ class PDFPageInterpreter:
             parser = PDFContentParser(streams)
         except PSEOF:
             return
-        # Objects come from the specialized iter_objects assembler (pinned
-        # differentially against nextobject).
-        objects = parser.iter_objects()
         if self.device.__class__ is SimpleTextDevice:
-            self._execute_simple(objects)
+            self._execute_simple(*parser.tokens())
             return
-        # keyword→bound-method cache: PSKeywords are interned, so identity
-        # is stable; False marks known-unknown operators (non-strict skip).
+        # Objects come from the specialized iter_objects assembler (pinned
+        # differentially against nextobject).  keyword→bound-method cache:
+        # PSKeywords are interned, so identity is stable; False marks
+        # known-unknown operators (non-strict skip).
         dispatch: dict = {}
         dispatch_get = dispatch.get
         push = self.push
-        for obj in objects:
+        for obj in parser.iter_objects():
             if obj.__class__ is PSKeyword:
                 fn = dispatch_get(obj)
                 if fn is None:
@@ -619,25 +623,41 @@ class PDFPageInterpreter:
             else:
                 push(obj)
 
-    def _execute_simple(self, objects) -> None:
-        """``execute`` for exactly a SimpleTextDevice: Tj and T* run inline,
-        doing what ``do_Tj`` + ``SimpleTextDevice.render_string`` and
+    def _execute_simple(self, tokens, lookup) -> None:
+        """``execute`` for exactly a SimpleTextDevice over the page's tokens
+        (``PDFContentParser.tokens``): each token is resolved through
+        ``lookup`` as the loop reaches it, and Tj and T* run inline, doing
+        what ``do_Tj`` + ``SimpleTextDevice.render_string`` and
         ``do_T_star`` do, with the argument stack, text state, font and
-        device state held in locals.  Every other operator runs its
+        device state held in locals.  A show token runs as its string pushed
+        and then Tj.  A collection opener hands the token iterator to
+        ``_assemble``, which pushes the collection once it closes; stray
+        closers are unknown operators.  Every other operator runs its
         ``do_*`` method, with the device state written back before the call
         and read again after it (a Form XObject's ``Do`` renders into the
-        same device; ``Q`` replaces the text state; a short ``pop``
-        replaces the argument stack)."""
+        same device; ``Q`` replaces the text state)."""
         device = self.device
         parts = device._parts
         length, last_y, rendered = device._len, device._last_y, device.rendered_any
         stack = self.argstack
         ts = self.textstate
         font = ts.font
+        tokens = iter(tokens)
         dispatch: dict = {}
         dispatch_get = dispatch.get
         try:
-            for obj in objects:
+            for tok in tokens:
+                obj = lookup(tok)
+                if obj is None:
+                    obj = tok.lstrip()
+                    if obj[0] == 0x28 and obj[-1] == 0x6A:  # a show token, as _token_value reads it
+                        stack.append(obj[1 : -3 if obj[-3] == 0x29 else -4])
+                        obj = _OP_TJ
+                    else:
+                        try:
+                            obj = _token_value(tok)
+                        except ValueError:
+                            continue  # an integer too long for int(): dropped, as nexttoken drops it
                 if obj.__class__ is not PSKeyword:
                     stack.append(obj)
                 elif obj is _OP_TJ:
@@ -661,7 +681,9 @@ class PDFPageInterpreter:
                 else:
                     fn = dispatch_get(obj)
                     if fn is None:
-                        fn = dispatch[obj] = self._operator(obj)
+                        act = _OPENERS.get(obj)
+                        fn = dispatch[obj] = (self._operator(obj) if act is None else partial(
+                            _assemble, tokens, _COLLECTIONS, stack, lookup, opened=act))
                     if fn:
                         device._len, device._last_y = length, last_y
                         try:
@@ -669,7 +691,6 @@ class PDFPageInterpreter:
                         finally:
                             length, last_y = device._len, device._last_y
                             rendered = device.rendered_any
-                            stack = self.argstack
                             ts = self.textstate
                             font = ts.font
         finally:

@@ -13,11 +13,17 @@ favor of PDF-spec semantics so fixture goldens are self-consistent):
   at pdfparse.lisp:1277 cannot work for any real W array).
 
 Whole-buffer fast path: a page's content streams and an indirect object's
-body are tokenized in one regex pass (``psparse.scan_values``) and
-assembled by ``_assemble``, with ``nextobject`` kept as the authority.  A
-content stream falls back on any uncovered byte and on ``BI``/``ID`` (inline
-images need byte positions); its fallback feeds ``nexttoken`` values into
-the same ``_assemble``.  An object body falls back to ``nextobject`` on any
+body are tokenized in one regex pass (``psparse.scan_tokens``), with
+``nextobject`` kept as the authority.  The raw matches are the only
+intermediate form: ``_assemble`` resolves each one as it reaches it, and
+for the golden device the interpreter's show loop consumes a page's matches
+directly (``PDFContentParser.tokens``), handing its token iterator to
+``_assemble`` at a collection opener.  A content stream goes whole to the
+per-token path when the pass does not cover it: any byte outside the
+grammar, and ``BI``/``ID``, which the content pattern leaves uncovered
+(inline images need byte positions).  That path feeds ``nexttoken`` values
+into the same ``_assemble``.  So the path is decided before the first
+operator runs.  An object body falls back to ``nextobject`` on any
 uncovered byte, anything but a strict ``N G obj`` header naming the object,
 an ``endobj`` not standing as its own token, ``obj``/``xref``/``startxref``
 in the body, ``R`` over anything but two ints, an odd dict, an open
@@ -48,8 +54,11 @@ from .psparse import (
     PSStackParser,
     PSSyntaxError,
     PSTypeError,
+    _CONTENT_TOKEN,
+    _VALUE_CACHE,
+    _token_value,
     dict_of_pairs,
-    scan_values,
+    scan_tokens,
 )
 from .pdftypes import (
     PDFObjRef,
@@ -92,6 +101,8 @@ LITERAL_LENGTH = LIT("Length")
 # open an array/dict/proc, "/a"/"/d"/"/p" close one, "i" opens an inline
 # image dict that "ID" closes, "R" and "null" are the indirect-object
 # keywords, and "!" hands the whole buffer back to the per-token parser.
+# A content stream's whole-buffer tokens take _COLLECTIONS: its pattern
+# leaves BI/ID uncovered.
 _COLLECTIONS = {
     KEYWORD_ARRAY_BEGIN: "a",
     KEYWORD_ARRAY_END: "/a",
@@ -100,8 +111,6 @@ _COLLECTIONS = {
     KEYWORD_PROC_BEGIN: "p",
     KEYWORD_PROC_END: "/p",
 }
-# content streams, whole buffer: inline images need byte positions
-_CONTENT_ACTIONS = {**_COLLECTIONS, KEYWORD_BI: "!", KEYWORD_ID: "!"}
 # content streams, per token
 _INLINE_ACTIONS = {**_COLLECTIONS, KEYWORD_BI: "i", KEYWORD_ID: "ID"}
 _OBJECT_ACTIONS = {
@@ -114,22 +123,44 @@ _OBJECT_ACTIONS = {
 }
 
 
-def _assemble(values, actions: dict, out: list, doc=None, open_ok: bool = True,
-              inline_data=None) -> bool:
-    """Append to ``out`` the top-level objects ``values`` assemble into, as
+def _same(value):
+    """The ``lookup`` of values that need no conversion (``nexttoken``'s)."""
+    return value
+
+
+def _assemble(tokens, actions: dict, out: list, lookup, doc=None, open_ok: bool = True,
+              inline_data=None, opened: str | None = None) -> bool:
+    """Append to ``out`` the top-level objects ``tokens`` assemble into, as
     the per-token parser builds them (positions dropped): stray closers are
     dropped, and collections still open at the end are dropped when
-    ``open_ok``.  An ``ID`` closing a ``BI`` dict appends the inline image,
-    its bytes from ``inline_data()``, and ``EI``; an odd inline dict and an
-    ``ID`` without ``BI`` are dropped.  An odd dict raises PSSyntaxError,
-    with the objects before it already in ``out``.  False hands the buffer
-    back to the per-token parser: a "!" keyword, ``R`` over anything but
-    two ints, or an open collection when not ``open_ok``."""
-    cur = out
-    curtype = None
-    frames: list = []  # (enclosing type, enclosing items)
+    ``open_ok``.  ``lookup`` gives a token's value, or None when
+    ``_token_value`` must convert the raw match: ``_VALUE_CACHE.get`` for
+    ``scan_tokens`` matches, ``_same`` for ``nexttoken`` values.  A show
+    token stands for its string and ``Tj``; an integer too long for int()
+    is dropped, as ``nexttoken`` drops it.  An ``ID`` closing a ``BI`` dict
+    appends the inline image, its bytes from ``inline_data()``, and ``EI``;
+    an odd inline dict and an ``ID`` without ``BI`` are dropped.  An odd
+    dict raises PSSyntaxError, with the objects before it already in
+    ``out``.  With ``opened`` ("a", "d" or "p"), a collection of that type
+    is open before the first token, and the call returns once it closes:
+    the interpreter's show loop hands its token iterator here at an opener.
+    False hands the buffer back to the per-token parser: a "!" keyword,
+    ``R`` over anything but two ints, or an open collection when not
+    ``open_ok``."""
+    cur = out if opened is None else []
+    curtype = opened
+    frames: list = [] if opened is None else [(None, out)]  # (enclosing type, enclosing items)
     get = actions.get
-    for v in values:
+    for tok in tokens:
+        v = lookup(tok)
+        if v is None:
+            try:
+                v = _token_value(tok)
+            except ValueError:
+                continue
+            if v.__class__ is tuple:  # a show token
+                cur.append(v[0])
+                v = v[1]
         act = get(v) if v.__class__ is PSKeyword else None
         if act is None:
             cur.append(v)
@@ -139,6 +170,8 @@ def _assemble(values, actions: dict, out: list, doc=None, open_ok: bool = True,
             items = cur
             curtype, cur = frames.pop()
             cur.append(dict_of_pairs(items) if act == "/d" else items)
+            if opened and not frames:
+                return True
         elif act == "R":
             if len(cur) < 2 or cur[-1].__class__ is not int or cur[-2].__class__ is not int:
                 return False
@@ -163,6 +196,19 @@ def _assemble(values, actions: dict, out: list, doc=None, open_ok: bool = True,
             curtype = act
             cur = []
     return open_ok or not frames
+
+
+def _assembled(tokens, actions: dict, lookup, inline_data=None):
+    """An iterator over the objects ``_assemble`` builds from ``tokens``; an
+    assembly error (PSSyntaxError for an odd dict, TypeError for an
+    unhashable inline-image key) comes out of it after the objects before
+    it, as it does from ``nextobject``."""
+    objs: list = []
+    try:
+        _assemble(tokens, actions, objs, lookup, inline_data=inline_data)
+    except Exception as exc:  # not swallowed: raised once the consumer reaches it
+        return chain(objs, _raising(exc))
+    return iter(objs)
 
 
 def _raising(exc: Exception):
@@ -401,12 +447,13 @@ class PDFParser(PSStackParser):
     def _object_values(self, body: bytes) -> list | None:
         """The top-level values of an object body from one scan, or None
         when the scan does not cover it or ``_assemble`` hands it back."""
-        values = scan_values(body)
-        if values is None:
+        tokens = scan_tokens(body)
+        if tokens is None:
             return None
         out: list = []
         try:
-            if not _assemble(values, _OBJECT_ACTIONS, out, self.doc, open_ok=False):
+            if not _assemble(tokens, _OBJECT_ACTIONS, out, _VALUE_CACHE.get, self.doc,
+                             open_ok=False):
                 return None
         except PSSyntaxError:
             return None  # odd dict
@@ -606,34 +653,31 @@ class PDFContentParser(PSStackParser):
         captured = _EI_TRAIL_EOL.sub(b"", captured)
         return pos, captured
 
+    def tokens(self) -> tuple:
+        """``(tokens, lookup)`` for the interpreter's show loop: the raw
+        ``_CONTENT_TOKEN`` matches of the whole buffer from one regex pass,
+        with ``_VALUE_CACHE.get``; or, for a buffer that pass does not cover
+        (a byte outside its grammar, or an inline image's ``BI``/``ID``),
+        the objects ``nexttoken`` values assemble into, with ``_same``.  The
+        path is decided before the first token, never part way through.
+        ``lookup`` is as for ``_assemble``, which the loop hands its token
+        iterator at a collection opener."""
+        tokens = scan_tokens(self.data, _CONTENT_TOKEN)
+        if tokens is None:  # the whole buffer from nexttoken, one token at a time
+            objects = _assembled(self._token_values(), _INLINE_ACTIONS, _same,
+                                 inline_data=lambda: self.get_inline_data(self.pos + 1)[1])
+            return objects, _same
+        return tokens, _VALUE_CACHE.get
+
     def iter_objects(self):
-        """Object iterator for the interpreter's execute loop: the objects
+        """Object iterator for the interpreter's plain dispatch: the objects
         ``nextobject`` would produce, minus the positions, which execute
         ignores.  ``nextobject`` stays the semantic authority; the
-        differential tests pin this against it.
-
-        The objects are assembled up front by ``_assemble`` and handed over
-        as a list iterator.  Fast path: the whole buffer is scanned in one
-        regex pass (``scan_values``).  A byte outside the bulk grammar or a
-        ``BI``/``ID`` (inline images need byte positions) sends the WHOLE
-        stream to ``nexttoken``, one token at a time, into the same
-        assembler.  An error while assembling (PSSyntaxError for an odd
-        dict, TypeError for an unhashable inline-image key) comes out of the
-        iterator after the objects before it, as it does from
-        ``nextobject``.
+        differential tests pin this against it.  The objects are assembled
+        up front by ``_assemble`` from the tokens of ``tokens()``.
         """
-        objs: list = []
-        try:
-            values = scan_values(self.data)
-            if values is None or not _assemble(values, _CONTENT_ACTIONS, objs):
-                objs = []
-                _assemble(
-                    self._token_values(), _INLINE_ACTIONS, objs,
-                    inline_data=lambda: self.get_inline_data(self.pos + 1)[1],
-                )
-        except Exception as exc:  # not swallowed: raised once execute reaches it
-            return chain(objs, _raising(exc))
-        return iter(objs)
+        tokens, lookup = self.tokens()
+        return tokens if lookup is _same else _assembled(tokens, _COLLECTIONS, lookup)
 
     def _token_values(self):
         """The token values from ``nexttoken`` to the end of the buffer; a

@@ -10,12 +10,19 @@ Two token sources share one branch table (``_TOKEN_BRANCHES``):
 
 - ``nexttoken`` matches one token at a time; anything its fused regex does
   not cover falls through to the full scanner, the semantic authority.
-- ``scan_values`` tokenizes a WHOLE buffer with one ``findall`` and converts
-  the matches through one capped value cache.  It answers None when any
-  byte is uncovered (comments, escaped or nested strings, '#' escapes,
-  lone '>', malformed numbers, NUL), and the caller then hands the whole
-  buffer to the per-token parser.  Its users are
-  ``PDFContentParser.iter_objects`` and ``PDFParser.object_stack_fast``.
+- ``scan_tokens`` tokenizes a WHOLE buffer with one ``findall`` and returns
+  the raw matches; it answers None when any byte is uncovered (comments,
+  escaped or nested strings, '#' escapes, lone '>', malformed numbers,
+  NUL), and the caller then hands the whole buffer to the per-token parser.
+  The matches are the only intermediate form: their consumers
+  (``pdfparser._assemble`` and the interpreter's show loop) resolve each
+  one as they reach it, through one capped value cache (``_VALUE_CACHE``)
+  and ``_token_value``.  Content streams use ``_CONTENT_TOKEN``: the same
+  branches plus a show token (a simple string, at most one whitespace byte
+  and a whole ``Tj`` keyword in one match), with no standalone ``BI``/``ID``
+  keyword, so an inline image is uncovered.  An integer too long for int()
+  is dropped where it is resolved, as ``nexttoken`` drops it.  The caches
+  change speed, never values.
 
 Deviation from the reference, per SURVEY.md §5.2: ``false`` parses to boolean
 False (the reference tests "true" twice and never matches false,
@@ -38,7 +45,7 @@ __all__ = [
     "PSBaseParser",
     "PSStackParser",
     "dict_of_pairs",
-    "scan_values",
+    "scan_tokens",
     "KEYWORD_ARRAY_BEGIN",
     "KEYWORD_ARRAY_END",
     "KEYWORD_DICT_BEGIN",
@@ -118,6 +125,7 @@ KEYWORD_DICT_BEGIN = KWD("<<")
 KEYWORD_DICT_END = KWD(">>")
 KEYWORD_TRUE = KWD("true")
 KEYWORD_FALSE = KWD("false")
+KEYWORD_TJ = KWD("Tj")
 
 # Token caches: hot content streams repeat the same keywords/names millions
 # of times; interning from raw bytes skips decode + __new__ per hit.  Size-
@@ -147,7 +155,7 @@ def _bytes_except(excluded: bytes) -> bytes:
 _NAME_BYTE = _bytes_except(b"#/%[]()<>{} \t\n\r\x0b\x0c")
 
 # Token branch patterns, shared by the per-token fast path (_SIMPLE_TOKEN)
-# and the whole-buffer scanner (_BULK_TOKEN).  Python 3.11 possessive
+# and the whole-buffer scanners (_BULK_TOKEN, _CONTENT_TOKEN).  Python 3.11 possessive
 # quantifiers prevent the backtracking that would mis-split "12." into int 1
 # + junk.  Branches deliberately cover ONLY cases whose semantics equal the
 # full scanner's:
@@ -177,16 +185,31 @@ _SIMPLE_TOKEN = re.compile(
     + rb"|".join(b"(?P<%s>%s)" % (name.encode(), pat) for name, pat in _TOKEN_BRANCHES)
     + rb")"
 )
-# The same branches plus hex strings (tried after "<<"), without groups:
-# findall then returns each token with its leading whitespace.  A hex
-# string's closing '>' is consumed here while _parse_hexstring leaves it to
-# the main dispatch, which pairs it with a following '>' into a dict end.
-# On a fully covered buffer the two agree: a run of k '>' after "<AB" gives
-# k // 2 dict ends both ways when k is odd, and when k is even the bulk scan
-# leaves a lone '>' uncovered.
-_BULK_TOKEN = re.compile(
-    rb"\s*+(?:" + rb"|".join(pat for _, pat in _TOKEN_BRANCHES) + rb"|<[0-9A-Fa-f\s]*+>)"
-)
+
+
+def _bulk_token(patterns) -> re.Pattern:
+    """The whole-buffer pattern: ``patterns`` plus hex strings (tried after
+    "<<"), without groups, so findall returns each token with its leading
+    whitespace.  A hex string's closing '>' is consumed here while
+    _parse_hexstring leaves it to the main dispatch, which pairs it with a
+    following '>' into a dict end.  On a fully covered buffer the two agree:
+    a run of k '>' after "<AB" gives k // 2 dict ends both ways when k is
+    odd, and when k is even the bulk scan leaves a lone '>' uncovered."""
+    return re.compile(rb"\s*+(?:" + rb"|".join(patterns) + rb"|<[0-9A-Fa-f\s]*+>)")
+
+
+_BULK_TOKEN = _bulk_token(pat for _, pat in _TOKEN_BRANCHES)
+# Content streams: a simple string may run on through at most one
+# whitespace byte and a whole "Tj" keyword (one show token, which
+# _token_value reads as the string and Tj), and the keyword branch leaves a
+# standalone BI or ID uncovered: an inline image needs byte positions, so
+# its buffer goes whole to the per-token parser.
+_KEYWORD_END = rb"(?!" + _NAME_BYTE + rb")"
+_CONTENT_TOKEN = _bulk_token((
+    rb"(?!(?:BI|ID)" + _KEYWORD_END + rb")" + _TOKEN_BRANCHES[0][1],  # kw
+    _TOKEN_BRANCHES[1][1] + rb"(?:\s?Tj" + _KEYWORD_END + rb")?+",  # str, or a show token
+    *(pat for _, pat in _TOKEN_BRANCHES[2:]),
+))
 
 # Character classes; byte-level equivalents of pdfparse.lisp:42-53.
 _EOL = re.compile(rb"[\r\n]")
@@ -249,17 +272,20 @@ def _hex_bytes(digits: bytes) -> bytes:
 
 # Whole-buffer token values keyed by the raw match (leading whitespace
 # included): numbers, names, keywords, true/false and delimiters.  Strings
-# are never cached.  Capped like _KW_CACHE.
+# and show tokens are never cached.  Capped like _KW_CACHE.
 _VALUE_CACHE: dict[bytes, object] = {}
 
 
 def _token_value(raw: bytes):
-    """Value of one _BULK_TOKEN match; raises ValueError on an integer too
-    long for int() (the authority drops such a token)."""
+    """Value of one _BULK_TOKEN or _CONTENT_TOKEN match; a show token gives
+    the pair (string, ``Tj``).  Raises ValueError on an integer too long for
+    int() (the authority drops such a token)."""
     tok = raw.lstrip()
     c = tok[0]
-    if c == 0x28:  # '('
-        return tok[1:-1]
+    if c == 0x28:  # '(': a string ends on its ')', a show token on "Tj"
+        if tok[-1] == 0x29:
+            return tok[1:-1]
+        return tok[1 : -3 if tok[-3] == 0x29 else -4], KEYWORD_TJ
     if c == 0x3C and tok != b"<<":
         return _hex_bytes(tok[1:-1])
     if c == 0x2F:  # '/'
@@ -281,25 +307,22 @@ def _token_value(raw: bytes):
     return val
 
 
-def scan_values(data: bytes) -> list | None:
-    """Every token value of ``data`` in order, from one regex pass, or None
-    when the per-token scanner must decide: some byte is outside the bulk
-    grammar (comments, escaped or nested strings, '#' escapes, lone '>',
-    malformed numbers, any other byte), or an integer is too long for int().
+def scan_tokens(data: bytes, pattern: re.Pattern = _BULK_TOKEN) -> list | None:
+    """Every token of ``data`` in order, as raw ``pattern`` matches from one
+    regex pass, or None when the per-token scanner must decide: some byte is
+    outside the bulk grammar (comments, escaped or nested strings, '#'
+    escapes, lone '>', malformed numbers, any other byte).
 
     Covered means the matches, which never overlap and each end on a
     non-space byte, add up to the buffer without its trailing whitespace;
     then they are exactly the tokens nexttoken would return, one after the
-    other.  Regex whitespace excludes NUL, so a NUL byte is never covered.
+    other (a show token is two of them).  Regex whitespace excludes NUL, so
+    a NUL byte is never covered.
     """
-    toks = _BULK_TOKEN.findall(data)
+    toks = pattern.findall(data)
     if sum(map(len, toks)) != len(data.rstrip()):
         return None
-    get = _VALUE_CACHE.get
-    try:
-        return [_token_value(raw) if (val := get(raw)) is None else val for raw in toks]
-    except ValueError:
-        return None
+    return toks
 
 
 class PSBaseParser:

@@ -24,8 +24,12 @@ from pdfparse_spark.fixtures.pdf_gen import (
     make_big_pdf,
 )
 from pdfparse_spark.kernel import extract as kernel_extract
+from pdfparse_spark.kernel import pdfparser, psparse
 from pdfparse_spark.kernel.device import SimpleTextDevice
+from pdfparse_spark.kernel.extract import extract_pdf_bytes
 from pdfparse_spark.kernel.interp import PDFPageInterpreter, process_pdf
+from pdfparse_spark.kernel.pdfparser import PDFContentParser
+from pdfparse_spark.kernel.pdftypes import PDFStream
 
 
 class PlainDispatchDevice(SimpleTextDevice):
@@ -43,22 +47,24 @@ def _run(device_cls, data: bytes) -> tuple:
             device.last_y, device.rendered_any)
 
 
-def _both(data: bytes) -> tuple[tuple, tuple, int]:
-    """(inline result, plain result, pages that took the inline loop)."""
-    calls = []
+def _both(data: bytes) -> tuple[tuple, tuple, list]:
+    """(inline result, plain result, one entry per content buffer that took
+    the inline loop: True when it ran on the whole-buffer tokens, False when
+    on the per-token parser's objects)."""
+    paths = []
     inline = PDFPageInterpreter._execute_simple
 
-    def spy(self, objects):
-        calls.append(1)
-        return inline(self, objects)
+    def spy(self, tokens, lookup):
+        paths.append(lookup is not pdfparser._same)
+        return inline(self, tokens, lookup)
 
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(PDFPageInterpreter, "_execute_simple", spy)
         fast = _run(SimpleTextDevice, data)
-        n_inline = len(calls)
+        n_inline = len(paths)
         plain = _run(PlainDispatchDevice, data)
-    assert len(calls) == n_inline, "a subclass must take the plain dispatch"
-    return fast, plain, n_inline
+    assert len(paths) == n_inline, "a subclass must take the plain dispatch"
+    return fast, plain, paths
 
 
 def _segments(data: bytes, window: tuple[int, int]) -> tuple[dict, dict]:
@@ -77,10 +83,10 @@ _DOCS = [fx.data for fx in build_pdf_fixtures()] + [
 
 @pytest.mark.parametrize("i", range(len(_DOCS)))
 def test_documents_match_the_plain_dispatch(i):
-    fast, plain, n_inline = _both(_DOCS[i])
+    fast, plain, paths = _both(_DOCS[i])
     assert fast == plain
     if fast[1]:  # pages rendered: the inline loop ran for them
-        assert n_inline >= len(fast[1])
+        assert len(paths) >= len(fast[1])
     for window in [(1, 2), (2, 4), (1, 99)]:
         seg_fast, seg_plain = _segments(_DOCS[i], window)
         assert seg_fast == seg_plain, window
@@ -171,9 +177,9 @@ def test_generated_streams_match_the_plain_dispatch(pages):
     # one page per stream, and the same streams as one two-page document,
     # so state carried across pages (last_y) is compared too
     for content in pages:
-        fast, plain, n_inline = _both(_doc(content))
+        fast, plain, paths = _both(_doc(content))
         assert fast == plain, content
-        assert n_inline >= 1
+        assert paths
     bodies = _doc_skeleton(pages[0], resources=_RESOURCES, extra_objs=dict(_EXTRA))
     bodies[2] = b"<< /Type /Pages /Kids [3 0 R 12 0 R] /Count 2 >>"
     bodies[12] = bodies[3].replace(b"/Contents 5 0 R", b"/Contents 13 0 R")
@@ -214,7 +220,103 @@ def test_generated_streams_match_the_plain_dispatch(pages):
      "\nff￾D\nαBﬁ￾", "ok"),
 ])
 def test_pinned_streams(content, text, status):
-    fast, plain, n_inline = _both(_doc(content))
+    fast, plain, paths = _both(_doc(content))
     assert fast == plain
-    assert n_inline >= 1
+    assert paths
     assert fast[0] == text and fast[2] == status
+
+
+# --- the whole-buffer tokens: boundaries, paths and cache states -------------
+
+_SHOWN = b"BT /F1 12 Tf 72 720 Td (x) Tj "  # rendered text before the case
+
+
+_BOUNDARY_CASES = [
+    # show tokens: "(string)", at most one whitespace byte, a whole "Tj"
+    (b"BT /F1 12 Tf (a)Tj ET", True, "\na", "ok"),
+    (b"BT /F1 12 Tf (a) Tjx (b) Tj ET", True, "\nb", "ok"),
+    (b"BT /F1 12 Tf (a)\nTj ET", True, "\na", "ok"),
+    (b"BT /F1 12 Tf (a)  \n Tj ET", True, "\na", "ok"),
+    (b"BT /F1 12 Tf (a) Tj", True, "\na", "ok"),  # Tj at the end of the buffer
+    (b"BT /F1 12 Tf (a) Tj#", False, "\na", "ok"),  # '#' is outside the bulk grammar
+    (b"BT /F1 12 Tf <41> Tj ET", True, "\nA", "ok"),
+    (b"BT /F1 12 Tf [(a) Tj] TJ ET", True, "\na", "ok"),  # the array [a Tj]
+    (b"BT /F1 12 Tf [(a) Tj (b) Tj] TJ ET", True, "\nab", "ok"),
+    # collections and malformed input after rendered text
+    (_SHOWN + b"[(a) 5 (b)] TJ ET", True, "\nxab", "ok"),
+    (_SHOWN + b"/Span << /MCID 0 >> BDC (c) Tj EMC ET", True, "\nxc", "ok"),
+    (_SHOWN + b"] (c) Tj >> (d) Tj } ET", True, "\nxcd", "ok"),  # stray closers
+    (_SHOWN + b"(c) Tj [ (d) Tj", True, "\nxc", "ok"),  # an open '[' at the end
+    (_SHOWN + b"[ (d) Tj", True, "\nx", "ok"),
+    (_SHOWN + b"(c) Tj << /A >> (d) Tj ET", True, "\nxc", "error:PSSyntaxError"),
+    (_SHOWN + b"BI /W 1 /H 1 ID \x01 EI (c) Tj ET", False, "\nxc", "ok"),
+    # an integer too long for int() is dropped: Tj pops the string under it
+    (_SHOWN + b"(c) " + b"1" * 4301 + b" Tj ET", True, "\nxc", "ok"),
+    # an escaped string: the whole buffer goes to the per-token parser
+    (b"BT /F1 12 Tf (q) Tj (a\\)b) Tj ET", False, "\nqa)b", "ok"),
+]
+
+
+@pytest.mark.parametrize("content, whole_buffer, text, status", _BOUNDARY_CASES)
+def test_boundary_streams(content, whole_buffer, text, status):
+    fast, plain, paths = _both(_doc(content))
+    assert fast == plain
+    assert paths == [whole_buffer]
+    assert fast[0] == text and fast[2] == status
+
+
+def test_show_token_boundaries():
+    def tokens(data: bytes) -> list:
+        tokens, lookup = PDFContentParser([PDFStream({}, data)]).tokens()
+        assert lookup is not pdfparser._same, data
+        return tokens
+
+    assert tokens(b"(a)Tj") == [b"(a)Tj"]
+    assert tokens(b"(a) Tj") == [b"(a) Tj"]
+    assert tokens(b"q\n(a)\nTj Q") == [b"q", b"\n(a)\nTj", b" Q"]
+    assert tokens(b"(a)  Tj") == [b"(a)", b"  Tj"]
+    assert tokens(b"(a) Tjx") == [b"(a)", b" Tjx"]
+    assert tokens(b"(a) Tj[") == [b"(a) Tj", b"["]
+    assert tokens(b"<41> Tj") == [b"<41>", b" Tj"]
+    assert tokens(b"[(a) Tj] TJ") == [b"[", b"(a) Tj", b"]", b" TJ"]
+
+
+# The token caches (psparse's _VALUE_CACHE, _KW_CACHE and _LIT_CACHE) may
+# change speed, never values: a cold cache sends every token through
+# _token_value, a full one (of keys no token matches) keeps it that way.
+_TOKEN_CACHES = (psparse._VALUE_CACHE, psparse._KW_CACHE, psparse._LIT_CACHE)
+
+
+@pytest.fixture
+def token_caches():
+    saved = [dict(cache) for cache in _TOKEN_CACHES]
+    yield
+    for cache, entries in zip(_TOKEN_CACHES, saved):
+        cache.clear()
+        cache.update(entries)
+
+
+def _set_token_caches(state: str, run) -> None:
+    for cache in _TOKEN_CACHES:
+        cache.clear()
+        if state == "full":
+            cache.update((b"\x00unused %d" % i, None) for i in range(psparse._TOKEN_CACHE_MAX))
+    if state == "warm":
+        run()
+
+
+def test_token_cache_states_change_no_value(token_caches):
+    docs = _DOCS + [_doc(case[0]) for case in _BOUNDARY_CASES]
+    results = {}
+    for state in ("cold", "warm", "full"):
+        got = results[state] = []
+        for data in docs:
+            _set_token_caches(state, lambda: _both(data))
+            got.append(_both(data))
+        for fx in build_pdf_fixtures():
+            _set_token_caches(state, lambda: extract_pdf_bytes(fx.data))
+            assert extract_pdf_bytes(fx.data) == (fx.golden_text, fx.golden_spans,
+                                                  fx.golden_status), (state, fx.name)
+        if state == "full":
+            assert all(len(cache) == psparse._TOKEN_CACHE_MAX for cache in _TOKEN_CACHES)
+    assert results["cold"] == results["warm"] == results["full"]

@@ -1,6 +1,6 @@
 """Differential tests for the PDF kernel's whole-buffer fast path.
 
-One regex pass (``psparse.scan_values``) tokenizes a whole content stream
+One regex pass (``psparse.scan_tokens``) tokenizes a whole content stream
 (``PDFContentParser.iter_objects``) or a whole indirect-object body, stream
 objects included (``PDFParser.object_stack_fast``); ``nextobject`` with
 ``_capture_stream`` stays the authority.
@@ -18,9 +18,11 @@ from hypothesis import strategies as st
 from pdfparse_spark.fixtures.pdf_gen import _assemble, _doc_skeleton, build_pdf_fixtures, make_big_pdf
 from pdfparse_spark.kernel.extract import extract_pdf_bytes
 from pdfparse_spark.kernel.pdfdocument import PDFDocument
+from pdfparse_spark.kernel import pdfparser
 from pdfparse_spark.kernel.pdfparser import PDFContentParser, PDFParser
 from pdfparse_spark.kernel.pdftypes import PDFObjRef, PDFStream, stream_value
-from pdfparse_spark.kernel.psparse import KWD, LIT, PSEOF, PSBaseParser, PSSyntaxError, scan_values
+from pdfparse_spark.kernel.psparse import (
+    _VALUE_CACHE, KWD, LIT, PSEOF, PSBaseParser, PSSyntaxError, scan_tokens)
 
 _SETTINGS = dict(deadline=4000, suppress_health_check=[HealthCheck.too_slow])
 
@@ -155,7 +157,6 @@ def test_content_fallbacks_go_whole_to_the_authority():
         b"q > Q",  # lone '>'
         b"q \x00 Q",  # NUL is not whitespace
         b"' \" Tj",  # single-byte operators outside the bulk grammar
-        b"1" * 5000 + b" 2 Td",  # too many digits for int()
         b"<41 Tj",  # unterminated hex string
         b"BI /W 4 /H 4 ID rawbytes EI Q",  # inline image
         b"q ID x EI",  # stray ID
@@ -185,7 +186,14 @@ def test_long_integer_is_dropped_by_the_per_token_fast_path():
     # int() refuses more than 4300 digits; the full scanner drops the token
     p = PSBaseParser(b"1" * 5000 + b" 2")
     assert p.nexttoken() == (5001, 2)
-    assert scan_values(b"1" * 5000 + b" 2") is None
+    # the whole-buffer scan covers it, and its assembler drops it too
+    tokens = scan_tokens(b"1" * 5000 + b" 2")
+    out = []
+    assert tokens is not None
+    assert pdfparser._assemble(tokens, pdfparser._OBJECT_ACTIONS, out, _VALUE_CACHE.get)
+    assert out == [2]
+    fast, got, want = _content(b"1" * 5000 + b" 2 Td")
+    assert fast and got == want == [("int", 2), ("PSKeyword", KWD("Td"))]
 
 
 # --- indirect objects --------------------------------------------------------
@@ -253,6 +261,7 @@ def test_object_cases():
         (b"null", True),
         (b"1 2 3 4 5 6", True),  # first of the last four stack items
         (b"[1 2 R] 3", True),
+        (b"5 " + b"1" * 4301 + b" 0 R", True),  # the over-long integer is dropped
         (b"", False),  # empty stack: the authority reads on past endobj
         (b"1.5 0 R", False),  # R after a float
         (b"true 0 R", False),  # R after a bool

@@ -21,6 +21,11 @@ Before timing, both sides' outputs must be equal on every input; the run
 stops otherwise.  For a PDF that is the text, spans, status and the segment
 metadata ``first_y``/``last_y``/``rendered_any``, plus the object count of
 each page; for an HTML page the text and status of ``extract_html_status``.
+The token caches of ``psparse`` may change speed, never values, so each
+side's caches are cleared before each document's check (a cache warmed by
+an earlier document cannot hide a value that differs cold), and the check
+runs once more with the caches full (every token takes the uncached path
+and nothing new is cached).  Timing starts from cleared caches.
 
 Usage (from the repository root):
   python tools/kernel_ab.py --base HEAD~1                 # working tree vs HEAD~1
@@ -97,7 +102,7 @@ def load_kernel(side: str, rev: str | None):
     sys.path.insert(0, base)
     mods = {name: importlib.import_module("%s.%s" % (pkg, name))
             for name in ("device", "html_extract", "interp", "pdfdocument", "pdfparser",
-                         "pdftypes")}
+                         "pdftypes", "psparse")}
     return label, SimpleNamespace(**mods)
 
 
@@ -159,10 +164,29 @@ def html_layer_calls(k, docs: list[str]) -> dict:
     return {"extract": lambda: each(k.html_extract.extract_html, docs)}
 
 
+def set_token_caches(k, state: str) -> None:
+    """Clear the kernel's token caches ("cold"), or fill them to their cap
+    with keys no token matches ("full")."""
+    for name in ("_VALUE_CACHE", "_KW_CACHE", "_LIT_CACHE"):
+        cache = getattr(k.psparse, name, None)
+        if cache is None:
+            continue
+        cache.clear()
+        if state == "full":
+            cache.update((b"\x00unused %d" % i, None) for i in range(k.psparse._TOKEN_CACHE_MAX))
+
+
 def check_equal(sides: list, docs: list, group: str, output) -> None:
-    for i, doc in enumerate(docs):
-        if output(sides[0][1], doc) != output(sides[1][1], doc):
-            sys.exit("outputs differ on %s document %d" % (group, i))
+    for state in ("cold", "full"):
+        for i, doc in enumerate(docs):
+            outs = []
+            for _label, k in sides:
+                set_token_caches(k, state)
+                outs.append(output(k, doc))
+            if outs[0] != outs[1]:
+                sys.exit("outputs differ on %s document %d (token caches %s)" % (group, i, state))
+    for _label, k in sides:
+        set_token_caches(k, "cold")
 
 
 def run_group(sides: list, docs: list, layer_calls) -> dict:
@@ -231,7 +255,8 @@ def main(argv=None) -> None:
     for group, (docs, output, layer_calls) in groups.items():
         check_equal(sides, docs, group, output)
         res = report["groups"][group] = run_group(sides, docs, layer_calls)
-        print("\n%s (%d docs, outputs equal)   ms/doc, medians" % (group, len(docs)))
+        print("\n%s (%d docs, outputs equal with cold and full token caches)   ms/doc, medians"
+              % (group, len(docs)))
         print("%-8s %10s %10s %8s %6s" % ("layer", "base", "change", "ratio", "wins"))
         for layer, r in res.items():
             print("%-8s %10.3f %10.3f %8.3f %3d/%d" % (
