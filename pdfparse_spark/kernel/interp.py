@@ -23,16 +23,17 @@ and ``do_T_star`` do; they are 1,600 of the 1,700 operators of a
 ``make_big_pdf(20, 40)`` document.  That loop consumes the page's raw
 whole-buffer tokens (``PDFContentParser.tokens``), each resolved as it is
 reached, so a token crosses one Python loop; a show token ("(string) Tj")
-runs as one step, and a collection is assembled from the same tokens when
-its opener is reached.  Every other operator, and every other device
-(subclasses included), goes through the ``do_*`` dispatch over
-``iter_objects``, which stays the authority
-(tests/test_page_loop_differential.py).
+runs as one step, a show line ("(string) Tj T*", a whole text line) as the
+same Tj step followed by the same T* step, and a collection is assembled
+from the same tokens when its opener is reached.  Every other operator, and
+every other device (subclasses included), goes through the ``do_*``
+dispatch over ``iter_objects``, which stays the authority
+(tests/test_page_loop_differential.py).  Both paths look a plain
+operator's ``do_*`` method up once per interpreter, that is once per
+document.
 """
 
 from __future__ import annotations
-
-from functools import partial
 
 from .psparse import KWD, LIT, PSEOF, PSKeyword, PSLiteral, _token_value
 from .pdfdocument import PDFDocument, PDFPage
@@ -62,6 +63,9 @@ MATRIX_IDENTITY = (1, 0, 0, 1, 0, 0)
 
 LITERAL_FORM = LIT("Form")
 LITERAL_IMAGE = LIT("Image")
+LITERAL_FONT = LIT("Font")
+LITERAL_COLORSPACE = LIT("ColorSpace")
+LITERAL_XOBJECT = LIT("XObject")
 
 # the operators _execute_simple runs inline
 _OP_TJ = KWD("Tj")
@@ -121,9 +125,9 @@ class PDFGraphicState:
                  "intent", "flatness")
 
     def __init__(self):
-        for slot in PDFGraphicState.__slots__:
-            setattr(self, slot, None)
         self.linewidth = 0
+        self.linecap = self.linejoin = self.miterlimit = self.dash = None
+        self.intent = self.flatness = None
 
     def copy(self) -> "PDFGraphicState":
         obj = PDFGraphicState.__new__(PDFGraphicState)
@@ -150,16 +154,21 @@ PREDEFINED_COLORSPACE = {
 }
 
 
+_DEVICE_GRAY = PREDEFINED_COLORSPACE[LIT("DeviceGray")]
+
+
 class PDFResourceManager:
     """Shared font cache keyed by objid (pdfparse.lisp:2080-2147)."""
 
     def __init__(self):
         self._cached_fonts: dict[int, object] = {}
 
-    def get_font(self, objid, spec: dict):
+    def get_font(self, objid, spec):
+        """The font of ``spec``, a font dict or a reference to one; cached by
+        ``objid``, so a hit resolves nothing."""
         if objid is not None and objid in self._cached_fonts:
             return self._cached_fonts[objid]
-        font = get_font(spec)
+        font = get_font(dict_value(resolve1(spec)))
         if objid is not None:
             self._cached_fonts[objid] = font
         return font
@@ -169,6 +178,10 @@ class PDFPageInterpreter:
     def __init__(self, rsrcmgr: PDFResourceManager, device):
         self.rsrcmgr = rsrcmgr
         self.device = device
+        # operator keyword → bound do_* method, False when unknown: PSKeywords
+        # are interned, so identity is stable; one interpreter serves one
+        # document (a form gets its own through dup)
+        self._ops: dict = {}
 
     def dup(self) -> "PDFPageInterpreter":
         return PDFPageInterpreter(self.rsrcmgr, self.device)
@@ -193,16 +206,14 @@ class PDFPageInterpreter:
             return PREDEFINED_COLORSPACE.get(name)
 
         for k, v in dict_value(resources).items():
-            if k is LIT("Font"):
+            if k is LITERAL_FONT:
                 for font_id, spec in dict_value(resolve1(v)).items():
                     objid = spec.objid if isinstance(spec, PDFObjRef) else None
-                    self.fontmap[font_id] = self.rsrcmgr.get_font(
-                        objid, dict_value(resolve1(spec))
-                    )
-            elif k is LIT("ColorSpace"):
+                    self.fontmap[font_id] = self.rsrcmgr.get_font(objid, spec)
+            elif k is LITERAL_COLORSPACE:
                 for csid, spec in dict_value(resolve1(v)).items():
                     self.csmap[csid] = get_colorspace(resolve1(spec))
-            elif k is LIT("XObject"):
+            elif k is LITERAL_XOBJECT:
                 for xobjid, xobjstrm in dict_value(resolve1(v)).items():
                     self.xobjmap[xobjid] = xobjstrm
 
@@ -215,7 +226,7 @@ class PDFPageInterpreter:
         self.argstack: list = []
         # deterministic default (the reference picks an arbitrary hash-order
         # value, pdfparse.lisp:2342-2344); fixtures always set cs/CS first
-        self.scs = self.ncs = PREDEFINED_COLORSPACE[LIT("DeviceGray")]
+        self.scs = self.ncs = _DEVICE_GRAY
         self.device.set_ctm(ctm)
 
     # --- stack ------------------------------------------------------------------
@@ -606,17 +617,14 @@ class PDFPageInterpreter:
             self._execute_simple(*parser.tokens())
             return
         # Objects come from the specialized iter_objects assembler (pinned
-        # differentially against nextobject).  keyword→bound-method cache:
-        # PSKeywords are interned, so identity is stable; False marks
-        # known-unknown operators (non-strict skip).
-        dispatch: dict = {}
-        dispatch_get = dispatch.get
+        # differentially against nextobject).
+        ops = self._ops
         push = self.push
         for obj in parser.iter_objects():
             if obj.__class__ is PSKeyword:
-                fn = dispatch_get(obj)
+                fn = ops.get(obj)
                 if fn is None:
-                    fn = dispatch[obj] = self._operator(obj)
+                    fn = ops[obj] = self._operator(obj)
                 if fn:
                     fn()
                 # unknown operators ignored (non-strict)
@@ -630,7 +638,7 @@ class PDFPageInterpreter:
         what ``do_Tj`` + ``SimpleTextDevice.render_string`` and
         ``do_T_star`` do, with the argument stack, text state, font and
         device state held in locals.  A show token runs as its string pushed
-        and then Tj.  A collection opener hands the token iterator to
+        and then Tj, a show line as that and then T*.  A collection opener hands the token iterator to
         ``_assemble``, which pushes the collection once it closes; stray
         closers are unknown operators.  Every other operator runs its
         ``do_*`` method, with the device state written back before the call
@@ -643,15 +651,21 @@ class PDFPageInterpreter:
         ts = self.textstate
         font = ts.font
         tokens = iter(tokens)
-        dispatch: dict = {}
-        dispatch_get = dispatch.get
+        ops = self._ops
+        ops_get = ops.get
+        line = False  # the show token being run is a show line: T* follows its Tj
         try:
             for tok in tokens:
                 obj = lookup(tok)
                 if obj is None:
                     obj = tok.lstrip()
-                    if obj[0] == 0x28 and obj[-1] == 0x6A:  # a show token, as _token_value reads it
-                        stack.append(obj[1 : -3 if obj[-3] == 0x29 else -4])
+                    tail = obj[-1]
+                    if obj[0] == 0x28 and tail != 0x29:  # a show token or line, as _token_value reads it
+                        if tail == 0x6A:
+                            stack.append(obj[1 : -3 if obj[-3] == 0x29 else -4])
+                        else:
+                            stack.append(obj[1 : -6 if obj[-6] == 0x29 else -7])
+                            line = True
                         obj = _OP_TJ
                     else:
                         try:
@@ -660,7 +674,8 @@ class PDFPageInterpreter:
                             continue  # an integer too long for int(): dropped, as nexttoken drops it
                 if obj.__class__ is not PSKeyword:
                     stack.append(obj)
-                elif obj is _OP_TJ:
+                    continue
+                if obj is _OP_TJ:
                     s = stack.pop() if stack else None
                     y = ts.matrix[5]
                     if not rendered:
@@ -673,17 +688,17 @@ class PDFPageInterpreter:
                     if text:
                         parts.append(text)
                         length += len(text)
-                elif obj is _OP_T_STAR:
-                    a, b, c, d, e, f = ts.matrix
-                    leading = ts.leading
-                    ts.matrix = (a, b, c, d, c * leading + e, d * leading + f)
-                    ts.linematrix = (0, 0)
-                else:
-                    fn = dispatch_get(obj)
+                    if not line:
+                        continue
+                    line = False
+                elif obj is not _OP_T_STAR:
+                    fn = ops_get(obj)
                     if fn is None:
                         act = _OPENERS.get(obj)
-                        fn = dispatch[obj] = (self._operator(obj) if act is None else partial(
-                            _assemble, tokens, _COLLECTIONS, stack, lookup, opened=act))
+                        if act is not None:  # the collection, from the same tokens, is pushed
+                            _assemble(tokens, _COLLECTIONS, stack, lookup, opened=act)
+                            continue
+                        fn = ops[obj] = self._operator(obj)
                     if fn:
                         device._len, device._last_y = length, last_y
                         try:
@@ -693,6 +708,11 @@ class PDFPageInterpreter:
                             rendered = device.rendered_any
                             ts = self.textstate
                             font = ts.font
+                    continue
+                a, b, c, d, e, f = ts.matrix  # T*, alone or after a show line's Tj
+                leading = ts.leading
+                ts.matrix = (a, b, c, d, c * leading + e, d * leading + f)
+                ts.linematrix = (0, 0)
         finally:
             device._len, device._last_y = length, last_y
 
@@ -702,7 +722,7 @@ class PDFPageInterpreter:
         self.execute(list_value(streams) or list(streams))
 
     def process_page(self, page: PDFPage) -> None:
-        mediabox = [num for num in (resolve1(v) for v in page.mediabox)]
+        mediabox = [resolve1(v) for v in page.mediabox]
         if len(mediabox) != 4:
             mediabox = [0, 0, 612, 792]
         x0, y0, x1, y1 = mediabox

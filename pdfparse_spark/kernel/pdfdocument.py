@@ -35,7 +35,15 @@ LITERAL_KIDS = LIT("Kids")
 LITERAL_N = LIT("N")
 LITERAL_COUNT = LIT("Count")
 
-INHERITABLE_ATTRS = (LIT("Resources"), LIT("MediaBox"), LIT("CropBox"), LIT("Rotate"))
+LITERAL_RESOURCES = LIT("Resources")
+LITERAL_MEDIABOX = LIT("MediaBox")
+LITERAL_CROPBOX = LIT("CropBox")
+LITERAL_ROTATE = LIT("Rotate")
+LITERAL_ANNOTS = LIT("Annots")
+LITERAL_B = LIT("B")
+LITERAL_CONTENTS = LIT("Contents")
+
+INHERITABLE_ATTRS = (LITERAL_RESOURCES, LITERAL_MEDIABOX, LITERAL_CROPBOX, LITERAL_ROTATE)
 
 PASSWORD_PADDING = bytes(
     [40, 191, 78, 94, 78, 117, 138, 65, 100, 0, 78, 86, 255, 250, 1, 8,
@@ -78,19 +86,19 @@ class PDFPage:
     def __init__(self, doc: "PDFDocument", pageid, attrs):
         self.doc = doc
         self.pageid = pageid
-        self.attrs = dict_value(attrs)
-        self.resources = resolve1(self.attrs.get(LIT("Resources")))
-        self.mediabox = resolve1(self.attrs.get(LIT("MediaBox"))) or [0, 0, 612, 792]
-        if LIT("CropBox") in self.attrs:
-            self.cropbox = resolve1(self.attrs[LIT("CropBox")])
+        attrs = self.attrs = dict_value(attrs)
+        self.resources = resolve1(attrs.get(LITERAL_RESOURCES))
+        self.mediabox = resolve1(attrs.get(LITERAL_MEDIABOX)) or [0, 0, 612, 792]
+        if LITERAL_CROPBOX in attrs:
+            self.cropbox = resolve1(attrs[LITERAL_CROPBOX])
         else:
             self.cropbox = self.mediabox
-        self.rotate = (int_value(self.attrs.get(LIT("Rotate"), 0)) + 360) % 360
-        self.annots = self.attrs.get(LIT("Annots"))
-        self.beads = self.attrs.get(LIT("B"))
+        self.rotate = (int_value(attrs.get(LITERAL_ROTATE, 0)) + 360) % 360
+        self.annots = attrs.get(LITERAL_ANNOTS)
+        self.beads = attrs.get(LITERAL_B)
         contents = None
-        if LIT("Contents") in self.attrs:
-            contents = resolve1(self.attrs[LIT("Contents")])
+        if LITERAL_CONTENTS in attrs:
+            contents = resolve1(attrs[LITERAL_CONTENTS])
         if not isinstance(contents, list):
             contents = [contents] if contents is not None else []
         self.contents = contents

@@ -136,8 +136,9 @@ def _assemble(tokens, actions: dict, out: list, lookup, doc=None, open_ok: bool 
     ``open_ok``.  ``lookup`` gives a token's value, or None when
     ``_token_value`` must convert the raw match: ``_VALUE_CACHE.get`` for
     ``scan_tokens`` matches, ``_same`` for ``nexttoken`` values.  A show
-    token stands for its string and ``Tj``; an integer too long for int()
-    is dropped, as ``nexttoken`` drops it.  An ``ID`` closing a ``BI`` dict
+    token stands for its string and ``Tj``, a show line for its string,
+    ``Tj`` and ``T*``; an integer too long for int() is dropped, as
+    ``nexttoken`` drops it.  An ``ID`` closing a ``BI`` dict
     appends the inline image, its bytes from ``inline_data()``, and ``EI``;
     an odd inline dict and an ``ID`` without ``BI`` are dropped.  An odd
     dict raises PSSyntaxError, with the objects before it already in
@@ -158,9 +159,9 @@ def _assemble(tokens, actions: dict, out: list, lookup, doc=None, open_ok: bool 
                 v = _token_value(tok)
             except ValueError:
                 continue
-            if v.__class__ is tuple:  # a show token
-                cur.append(v[0])
-                v = v[1]
+            if v.__class__ is tuple:  # a show token or show line: its string, Tj (and T*)
+                cur += v
+                continue
         act = get(v) if v.__class__ is PSKeyword else None
         if act is None:
             cur.append(v)
@@ -612,7 +613,7 @@ class PDFContentParser(PSStackParser):
     boundaries (pdfparse.lisp:2149-2249).  Handles inline images BI/ID/EI."""
 
     def __init__(self, streams: list):
-        data = b"".join(stream_value(s).get_data() for s in streams)
+        data = b"".join([stream_value(s).get_data() for s in streams])
         super().__init__(data)
 
     flush = _flush_results

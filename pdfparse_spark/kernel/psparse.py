@@ -19,10 +19,12 @@ Two token sources share one branch table (``_TOKEN_BRANCHES``):
   one as they reach it, through one capped value cache (``_VALUE_CACHE``)
   and ``_token_value``.  Content streams use ``_CONTENT_TOKEN``: the same
   branches plus a show token (a simple string, at most one whitespace byte
-  and a whole ``Tj`` keyword in one match), with no standalone ``BI``/``ID``
-  keyword, so an inline image is uncovered.  An integer too long for int()
-  is dropped where it is resolved, as ``nexttoken`` drops it.  The caches
-  change speed, never values.
+  and a whole ``Tj`` keyword in one match) and a show line (a show token,
+  exactly one more whitespace byte and a whole ``T*``: a text line of
+  ``(s) Tj T*`` is one match), with no standalone ``BI``/``ID`` keyword, so
+  an inline image is uncovered.  An integer too long for int() is dropped
+  where it is resolved, as ``nexttoken`` drops it.  The caches change
+  speed, never values.
 
 Deviation from the reference, per SURVEY.md §5.2: ``false`` parses to boolean
 False (the reference tests "true" twice and never matches false,
@@ -126,6 +128,7 @@ KEYWORD_DICT_END = KWD(">>")
 KEYWORD_TRUE = KWD("true")
 KEYWORD_FALSE = KWD("false")
 KEYWORD_TJ = KWD("Tj")
+KEYWORD_T_STAR = KWD("T*")
 
 # Token caches: hot content streams repeat the same keywords/names millions
 # of times; interning from raw bytes skips decode + __new__ per hit.  Size-
@@ -170,7 +173,7 @@ _NAME_BYTE = _bytes_except(b"#/%[]()<>{} \t\n\r\x0b\x0c")
 #   d2   dict delimiters
 #   d1   array/proc delimiters
 # No two branches can match at the same position, so their order only sets
-# speed: the most common content-stream tokens are tried first.
+# speed: each pattern tries the most common tokens of its buffers first.
 _TOKEN_BRANCHES = (
     ("kw", rb"[A-Za-z]" + _NAME_BYTE + rb"*+"),
     ("str", rb"\(" + _bytes_except(b"()\\") + rb"*+\)"),
@@ -198,16 +201,23 @@ def _bulk_token(patterns) -> re.Pattern:
     return re.compile(rb"\s*+(?:" + rb"|".join(patterns) + rb"|<[0-9A-Fa-f\s]*+>)")
 
 
-_BULK_TOKEN = _bulk_token(pat for _, pat in _TOKEN_BRANCHES)
+# Object bodies: names and integers, the commonest tokens of a dict, first.
+_BULK_TOKEN = _bulk_token(dict(_TOKEN_BRANCHES)[name]
+                          for name in ("lit", "int", "kw", "d2", "d1", "str", "flt"))
 # Content streams: a simple string may run on through at most one
 # whitespace byte and a whole "Tj" keyword (one show token, which
-# _token_value reads as the string and Tj), and the keyword branch leaves a
-# standalone BI or ID uncovered: an inline image needs byte positions, so
-# its buffer goes whole to the per-token parser.
+# _token_value reads as the string and Tj), and from there through exactly
+# one more whitespace byte and a whole "T*" (one show line: the string, Tj
+# and T*; "TjT*" would be one keyword, two whitespace bytes leave two
+# tokens).  The keyword branch leaves a standalone BI or ID uncovered: an
+# inline image needs byte positions, so its buffer goes whole to the
+# per-token parser.  The string branch goes first: in text-heavy streams
+# most tokens are show lines.
 _KEYWORD_END = rb"(?!" + _NAME_BYTE + rb")"
 _CONTENT_TOKEN = _bulk_token((
+    # str, or a show token, or a show line
+    _TOKEN_BRANCHES[1][1] + rb"(?:\s?Tj" + _KEYWORD_END + rb"(?:\sT\*" + _KEYWORD_END + rb")?+)?+",
     rb"(?!(?:BI|ID)" + _KEYWORD_END + rb")" + _TOKEN_BRANCHES[0][1],  # kw
-    _TOKEN_BRANCHES[1][1] + rb"(?:\s?Tj" + _KEYWORD_END + rb")?+",  # str, or a show token
     *(pat for _, pat in _TOKEN_BRANCHES[2:]),
 ))
 
@@ -278,14 +288,18 @@ _VALUE_CACHE: dict[bytes, object] = {}
 
 def _token_value(raw: bytes):
     """Value of one _BULK_TOKEN or _CONTENT_TOKEN match; a show token gives
-    the pair (string, ``Tj``).  Raises ValueError on an integer too long for
-    int() (the authority drops such a token)."""
+    the tuple (string, ``Tj``), a show line (string, ``Tj``, ``T*``).
+    Raises ValueError on an integer too long for int() (the authority drops
+    such a token)."""
     tok = raw.lstrip()
     c = tok[0]
-    if c == 0x28:  # '(': a string ends on its ')', a show token on "Tj"
-        if tok[-1] == 0x29:
+    if c == 0x28:  # '(': a string ends on its ')', a show token on "Tj", a show line on "T*"
+        c = tok[-1]
+        if c == 0x29:
             return tok[1:-1]
-        return tok[1 : -3 if tok[-3] == 0x29 else -4], KEYWORD_TJ
+        if c == 0x6A:
+            return tok[1 : -3 if tok[-3] == 0x29 else -4], KEYWORD_TJ
+        return tok[1 : -6 if tok[-6] == 0x29 else -7], KEYWORD_TJ, KEYWORD_T_STAR
     if c == 0x3C and tok != b"<<":
         return _hex_bytes(tok[1:-1])
     if c == 0x2F:  # '/'
@@ -316,8 +330,8 @@ def scan_tokens(data: bytes, pattern: re.Pattern = _BULK_TOKEN) -> list | None:
     Covered means the matches, which never overlap and each end on a
     non-space byte, add up to the buffer without its trailing whitespace;
     then they are exactly the tokens nexttoken would return, one after the
-    other (a show token is two of them).  Regex whitespace excludes NUL, so
-    a NUL byte is never covered.
+    other (a show token is two of them, a show line three).  Regex
+    whitespace excludes NUL, so a NUL byte is never covered.
     """
     toks = pattern.findall(data)
     if sum(map(len, toks)) != len(data.rstrip()):

@@ -52,8 +52,16 @@ def load_transcripts(
     fmt: str = "auto",
 ) -> DataFrame:
     """Read a transcripts table (input_hint schema) from Iceberg, parquet,
-    json or csv.  ``fmt="auto"``: Iceberg for catalog table names (no '/'),
-    else by file extension, defaulting to parquet."""
+    ORC, json or csv.  ``fmt="auto"``: Iceberg for catalog table names (no
+    '/'), else by file extension, defaulting to parquet.
+
+    Every file format is read with ``INPUT_SCHEMA`` declared, so loading
+    starts no Spark job (no schema inference) and the columns come out in
+    ``INPUT_SCHEMA`` order, whatever their order in the files; columns
+    outside it are not read.  A parquet file whose column has another
+    physical type (``turn_idx`` as int64) fails when it is read, with
+    ``PARQUET_COLUMN_DATA_TYPE_MISMATCH`` naming the column.  An Iceberg
+    table brings its own schema."""
     if fmt == "auto":
         # file-extension sniff BEFORE the catalog-name heuristic: a
         # slash-less FILE name ('drops.jsonl') must not route to the
@@ -77,8 +85,8 @@ def load_transcripts(
     if fmt == "csv":
         return spark.read.schema(INPUT_SCHEMA).option("header", "true").csv(path)
     if fmt == "orc":
-        return spark.read.orc(path)
-    return spark.read.parquet(path)
+        return spark.read.schema(INPUT_SCHEMA).orc(path)
+    return spark.read.schema(INPUT_SCHEMA).parquet(path)
 
 
 def write_output(df: DataFrame, path: str, mode: str = "overwrite", fmt: str = "auto") -> None:

@@ -94,5 +94,10 @@ def test_iter_objects_edge_cases():
         b"q ID ab EI Q",  # ID with no BI: dropped, its bytes stay tokens
         b"[1 2 ID ab EI] TJ",  # ... also inside an array
         b"1 0 0 1 2 3 cm q << /A 1 /B >> Q",  # odd dict after operators
+        # show lines: one whitespace byte between Tj and T* (else two tokens)
+        b"BT 14 TL (a) Tj T* (b)Tj\nT* (c) Tj  T* (d) Tj\r\nT* (e) Tj T*x ET",
+        b"[(a) Tj T*] TJ",
+        b"<< /A (a) Tj T* >>",  # string, Tj and T*: four dict items
+        b"[(a) Tj T* (b) Tj] TJ (c) Tj T*",
     ]:
         _assert_same(data)

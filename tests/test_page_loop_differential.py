@@ -129,7 +129,7 @@ _OPERANDS = [
     b"0", b"1", b"-2", b"3.5", b"12", b"720", b"-14", b"0.5",
     b"(AB)", b"(Hello)", b"()", b"<41424344>", b"(\\101BC)",
     b"/F1", b"/F2", b"/F3", b"/X1", b"/DeviceRGB", b"true",
-    b"[(a) -120 (b)]", b"[]", b"[(x) (y) 3]", b"[-50 (z)]",
+    b"[(a) -120 (b)]", b"[]", b"[(x) (y) 3]", b"[-50 (z)]", b"[(a) Tj T*]",
 ]
 _TEXT_OPS = [b"Tj", b"TJ", b"'", b'"', b"T*", b"Td", b"TD", b"Tm", b"BT", b"ET",
              b"TL", b"Tc", b"Tw", b"Tz", b"Ts", b"Tr"]
@@ -140,6 +140,7 @@ _OTHER_OPS = [b"q", b"Q", b"cm", b"g", b"rg", b"G", b"RG", b"k", b"cs", b"sc", b
 _GOOD = [
     b"BT", b"ET", b"/F1 12 Tf", b"/F2 10 Tf", b"/F3 11 Tf", b"72 720 Td", b"0 -14 Td",
     b"0 2 Td", b"14 TL", b"T*", b"(Line) Tj", b"(ABC) Tj", b"[(A) -30 (B)] TJ",
+    b"(Line) Tj T*", b"(ABC)Tj\nT*", b"() Tj T*", b"(A) Tj  T*", b"(B) Tj T*x",
     b"(q) '", b"1 2 (w) \"", b"1 0 0 1 50 500 Tm", b"1 0 0 1 72 0 Tm", b"2 0 0 2 0 -3 Tm",
     b"0 -20 TD", b"q", b"Q",
     b"1 0 0 1 5 5 cm", b"/X1 Do", b"/X3 Do", b"0.5 g", b"/DeviceRGB cs 1 0 0 sc",
@@ -229,6 +230,7 @@ def test_pinned_streams(content, text, status):
 # --- the whole-buffer tokens: boundaries, paths and cache states -------------
 
 _SHOWN = b"BT /F1 12 Tf 72 720 Td (x) Tj "  # rendered text before the case
+_LINES = b"BT /F1 12 Tf 14 TL 72 720 Td "  # T* moves down 14
 
 
 _BOUNDARY_CASES = [
@@ -254,6 +256,25 @@ _BOUNDARY_CASES = [
     (_SHOWN + b"(c) " + b"1" * 4301 + b" Tj ET", True, "\nxc", "ok"),
     # an escaped string: the whole buffer goes to the per-token parser
     (b"BT /F1 12 Tf (q) Tj (a\\)b) Tj ET", False, "\nqa)b", "ok"),
+    # show lines: a show token, exactly one whitespace byte and a whole "T*"
+    (_LINES + b"(a) Tj T* (b) Tj ET", True, "\na\nb", "ok"),
+    (_LINES + b"(a)Tj T* (b) Tj ET", True, "\na\nb", "ok"),
+    (_LINES + b"(a) Tj\nT* (b) Tj ET", True, "\na\nb", "ok"),
+    (_LINES + b"(a) Tj\r\nT* (b) Tj ET", True, "\na\nb", "ok"),  # two tokens
+    (_LINES + b"(a) Tj  T* (b) Tj ET", True, "\na\nb", "ok"),  # two tokens
+    (_LINES + b"(a) Tj T*x (b) Tj ET", True, "\nab", "ok"),  # T*x is an unknown operator
+    (_LINES + b"(a) Tj T*(b) Tj ET", True, "\na\nb", "ok"),
+    (_LINES + b"(a) Tj T*", True, "\na", "ok"),  # at the end of the buffer
+    # the first operator: no font yet, and first_y from the identity matrix
+    (b"(a) Tj T* /F1 12 Tf 14 TL (b) Tj T* (c) Tj", True, "\nb\nc", "ok"),
+    (_LINES + b"[(a) Tj T*] TJ (b) Tj ET", True, "\nab", "ok"),  # the array [a Tj T*]
+    (_LINES + b"<41> Tj T* (b) Tj ET", True, "\nA\nb", "ok"),
+    # T* moves by the leading (TL negated) times the matrix's d
+    (b"BT /F1 12 Tf 0 TL 72 720 Td (a) Tj T* (b) Tj T* ET", True, "\nab", "ok"),
+    (b"BT /F1 12 Tf -14 TL 72 720 Td (a) Tj T* (b) Tj ET", True, "\na\nb", "ok"),
+    (b"BT /F1 12 Tf 2.5 TL 72 720 Td (a) Tj T* (b) Tj T* (c) Tj ET", True, "\nabc", "ok"),
+    (b"BT /F1 12 Tf 1 0 0 0.2 0 100 Tm 14 TL (a) Tj T* (b) Tj ET", True, "\nab", "ok"),
+    (b"BT /F1 12 Tf 1 0 0 0.25 0 100 Tm 14 TL (a) Tj T* (b) Tj ET", True, "\na\nb", "ok"),
 ]
 
 
@@ -279,6 +300,17 @@ def test_show_token_boundaries():
     assert tokens(b"(a) Tj[") == [b"(a) Tj", b"["]
     assert tokens(b"<41> Tj") == [b"<41>", b" Tj"]
     assert tokens(b"[(a) Tj] TJ") == [b"[", b"(a) Tj", b"]", b" TJ"]
+    # show lines: exactly one whitespace byte between Tj and a whole T*
+    assert tokens(b"(a) Tj T*") == [b"(a) Tj T*"]
+    assert tokens(b"(a)Tj T*") == [b"(a)Tj T*"]
+    assert tokens(b"(a) Tj\nT*") == [b"(a) Tj\nT*"]
+    assert tokens(b"(a) Tj\r\nT*") == [b"(a) Tj", b"\r\nT*"]
+    assert tokens(b"(a) Tj  T*") == [b"(a) Tj", b"  T*"]
+    assert tokens(b"(a) Tj T*x") == [b"(a) Tj", b" T*x"]
+    assert tokens(b"(a) TjT*") == [b"(a)", b" TjT*"]
+    assert tokens(b"(a) Tj T*(b) Tj") == [b"(a) Tj T*", b"(b) Tj"]
+    assert tokens(b"[(a) Tj T*] TJ") == [b"[", b"(a) Tj T*", b"]", b" TJ"]
+    assert tokens(b"<41> Tj T*") == [b"<41>", b" Tj", b" T*"]
 
 
 # The token caches (psparse's _VALUE_CACHE, _KW_CACHE and _LIT_CACHE) may

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from pdfparse_spark.pipeline.transcripts import synthesize
 from pdfparse_spark.sources import iceberg_available, load_transcripts, write_output
 
@@ -29,6 +31,54 @@ def test_parquet_json_csv_roundtrip(spark, tmp_path):
     plain.write.option("header", "true").csv(cs)
     got = load_transcripts(spark, cs)
     assert got.count() == plain.count()
+
+
+def test_parquet_load_starts_no_spark_job(spark, tmp_path):
+    """The declared input schema replaces parquet schema inference, which
+    ran a one-task Spark job on every load."""
+    df, _ = synthesize(spark, n_convs=2, turns_per_conv=2, seed=3)
+    pq = str(tmp_path / "t.parquet")
+    df.write.parquet(pq)
+    sc = spark.sparkContext
+    sc.setJobGroup("load_transcripts_probe", "parquet load")
+    try:
+        got = load_transcripts(spark, pq)
+        assert sc.statusTracker().getJobIdsForGroup("load_transcripts_probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got.count() == df.count()
+
+
+def test_parquet_columns_load_in_input_schema_order(spark, tmp_path):
+    """Columns in another order plus one outside the schema: the load gives
+    INPUT_SCHEMA's columns, in its order, with the same values."""
+    from pyspark.sql import functions as F
+
+    from pdfparse_spark.pipeline.transcripts import INPUT_SCHEMA
+
+    df, _ = synthesize(spark, n_convs=3, turns_per_conv=3, seed=4)
+    pq = str(tmp_path / "shuffled.parquet")
+    df.select("ts", "text", F.lit(7).alias("extra"), "tool", "conv_id", "role",
+              "turn_idx").write.parquet(pq)
+    got = load_transcripts(spark, pq)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in INPUT_SCHEMA
+    ]
+    assert sorted(got.collect()) == sorted(df.collect())
+
+
+def test_parquet_int64_turn_idx_fails_at_read(spark, tmp_path):
+    """A file whose turn_idx is int64 fails when read, naming the column."""
+    from pyspark.sql import functions as F
+
+    df, _ = synthesize(spark, n_convs=1, turns_per_conv=2, seed=2)
+    pq = str(tmp_path / "long.parquet")
+    df.withColumn("turn_idx", F.col("turn_idx").cast("long")).write.parquet(pq)
+    with pytest.raises(Exception) as err:
+        load_transcripts(spark, pq).collect()
+    assert "PARQUET_COLUMN_DATA_TYPE_MISMATCH" in str(err.value)
+    assert "[turn_idx]" in str(err.value)
 
 
 def test_iceberg_gracefully_absent(spark, tmp_path):

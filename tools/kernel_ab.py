@@ -33,7 +33,9 @@ Usage (from the repository root):
   python tools/kernel_ab.py --base <rev> --change <rev>
 
 Prints one table per input group (``big``: ``make_big_pdf(20, 40, seed)``
-for ``BIG_SEEDS`` seeds; ``fixtures``: ``build_pdf_fixtures()``; ``html``:
+for ``BIG_SEEDS`` seeds; ``pages``: ``make_big_pdf(20, 0, seed)`` for the
+same seeds, the per-page fixed cost without the show loop, which is about
+half of a big PDF's time; ``fixtures``: ``build_pdf_fixtures()``; ``html``:
 ``build_html_fixtures()`` and ``HTML_PAGES`` ``generate_pages`` pages) with each
 side's median ms per document, the median over rounds of the change/base
 ratio (both sides of a round run back to back, so a round's ratio is free of
@@ -245,6 +247,8 @@ def main(argv=None) -> None:
     groups = {
         "big": ([make_big_pdf(20, 40, seed=s).data for s in range(BIG_SEEDS)],
                 pdf_output, pdf_layer_calls),
+        "pages": ([make_big_pdf(20, 0, seed=s).data for s in range(BIG_SEEDS)],
+                  pdf_output, pdf_layer_calls),
         "fixtures": ([fx.data for fx in build_pdf_fixtures()], pdf_output, pdf_layer_calls),
         "html": ([fx.html for fx in build_html_fixtures()] + generate_pages(HTML_PAGES),
                  html_output, html_layer_calls),
