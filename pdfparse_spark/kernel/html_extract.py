@@ -1,4 +1,4 @@
-"""HTML main-content extraction via DOM text-density heuristics.
+"""HTML main-content extraction via text-density heuristics.
 
 Not present in the reference (SURVEY.md §2 P9); technique follows the
 published text-density / link-density family (Kohlschütter et al., WSDM'10;
@@ -6,20 +6,23 @@ Sun et al., SIGIR'11), stdlib only (no lxml dependency).  Goldens are
 self-defined by this extractor and frozen in the fixture corpus
 (FIXTURES.md §3).
 
-Tree building has two token sources and one set of tree rules.  The fast
-path is one fused regex scanner (``_SCAN``) over text runs, start and end
-tags, comments, the doctype and script/style raw text; it calls the
-``_TreeBuilder`` handlers exactly as html.parser would.  A document with any
-construct outside that grammar goes WHOLE to the stdlib ``html.parser``
-loop driving the same handlers — the semantic authority, as
-``psparse._nexttoken_slow`` is for the PDF tokenizer.
-tests/test_html_differential.py pins tree equality between the two.
+One block picker (``_BlockPicker``) holds every rule and makes each block
+decision when its element closes, from running char and link-char counts;
+no tree is built.  It has two token sources.  The fast path is one fused
+regex scanner (``_SCAN``) over text runs, start and end tags, comments, the
+doctype and script/style raw text; it calls the picker's handlers exactly as
+html.parser would.  A document with any construct outside that grammar goes
+WHOLE to the stdlib ``html.parser`` loop driving the same handlers — the
+semantic authority, as ``psparse._nexttoken_slow`` is for the PDF
+tokenizer.  tests/test_html_differential.py pins that both sources give the
+picker the same opens, closes and kept text chunks.
 
 Policy (deterministic):
 1. drop <script>/<style>/<noscript>/<template>/<head>/comments entirely;
 2. drop boilerplate containers: <nav>, <header>, <footer>, <aside>, <form>;
 3. candidate blocks = <p>, <h1>-<h6>, <li>, <pre>, <blockquote>, <td>, <th>,
-   <figcaption>, <dt>, <dd>, and <div>s with no block children;
+   <figcaption>, <dt>, <dd>, and <div>s with no block children; a candidate's
+   text holds its descendants', and it replaces whatever they picked;
 4. keep a block iff len(text) >= 25 and link_density <= 0.5, where
    link_density = chars inside <a> / total chars; <pre> blocks are always
    kept when non-empty (code preservation);
@@ -63,42 +66,48 @@ MIN_BLOCK_CHARS = 25
 MAX_LINK_DENSITY = 0.5
 
 
-class _Node:
-    __slots__ = ("tag", "children", "parent")
+class _BlockPicker(HTMLParser):
+    """Picks the candidate blocks as their elements close, without a tree.
 
-    def __init__(self, tag: str, parent=None):
-        self.tag = tag
-        self.children: list = []  # _Node or (text, in_link) tuples
-        self.parent = parent
+    Its three handlers hold every rule (drop, void, link, implicit close,
+    block choice); both token sources call them: the fused scanner
+    (``_scan_into``) and, for documents outside its grammar, the stdlib
+    ``HTMLParser`` loop this class inherits.
 
-
-class _TreeBuilder(HTMLParser):
-    """Best-effort DOM builder.  Its three handlers hold every tree rule
-    (drop, void, link, implicit close); both token sources call them: the
-    fused scanner (``_scan_into``) and, for documents outside its grammar,
-    the stdlib ``HTMLParser`` loop this class inherits."""
+    State: one list of text chunks (a " " chunk before and after each block
+    element), running counts of stripped chars and of chars inside <a>, the
+    picks as (start, end, is_pre) slices of the chunks, and one frame per
+    open element: [tag, chunk start, chars at open, link chars at open,
+    picks start, has a block child].  Every close is O(1) amortized at any
+    depth; the picked slices are joined once, by ``text``."""
 
     def __init__(self):
         super().__init__(convert_charrefs=True)
-        self.root = _Node("#root")
-        self.cur = self.root
+        self._chunks: list[str] = []
+        self._chars = 0
+        self._link = 0
+        self._picks: list[tuple[int, int, bool]] = []
+        self._stack: list[list] = []
         self._drop_depth = 0
-        # open nodes per tag on the chain root..cur; "a" is the link depth
+        # open elements per tag; "a" is the link depth
         self._open = defaultdict(int)
 
     def handle_starttag(self, tag, attrs):
         if tag in _VOID_TAGS:
             if tag == "br" and not self._drop_depth:
-                self.cur.children.append(("\n", self._open["a"] > 0))
+                self._chunks.append("\n")
             return
         if tag in _DROP_TAGS:
             self._drop_depth += 1
             return
         if self._drop_depth:
             return
-        node = _Node(tag, self.cur)
-        self.cur.children.append(node)
-        self.cur = node
+        stack = self._stack
+        if tag in _BLOCK_TAGS:
+            if stack:
+                stack[-1][5] = True
+            self._chunks.append(" ")
+        stack.append([tag, len(self._chunks), self._chars, self._link, len(self._picks), False])
         self._open[tag] += 1
 
     def handle_endtag(self, tag):
@@ -111,24 +120,59 @@ class _TreeBuilder(HTMLParser):
         open_ = self._open
         if not open_[tag]:
             # stray end tag: nothing open to close.  Answered from the
-            # count without walking the chain, so n stray end tags under n
+            # count without walking the stack, so n stray end tags under n
             # open elements cost O(n), not O(n²).
             return
-        # close everything from cur up to AND including the nearest open
-        # ``tag``; every <a> closed on the way leaves the link depth, so an
-        # unclosed <a> cannot leak link-ness over the rest of the document
-        node = self.cur
+        # close everything from the top up to AND including the nearest
+        # open ``tag``; every <a> closed on the way leaves the link depth,
+        # so an unclosed <a> cannot leak link-ness over the rest
+        stack = self._stack
         while True:
-            open_[node.tag] -= 1
-            if node.tag == tag:
-                break
-            node = node.parent
-        self.cur = node.parent
+            frame = stack.pop()
+            open_[frame[0]] -= 1
+            self._close(frame)
+            if frame[0] == tag:
+                return
 
     def handle_data(self, data):
         if self._drop_depth or not data:
             return
-        self.cur.children.append((data, self._open["a"] > 0))
+        self._chunks.append(data)
+        n = len(data.strip())
+        self._chars += n
+        if self._open["a"]:
+            self._link += n
+
+    def _close(self, frame: list) -> None:
+        tag, start, chars, link, picks_start, block_child = frame
+        if tag in _BOILERPLATE_TAGS:  # gone with all it holds
+            del self._chunks[start:]
+            del self._picks[picks_start:]
+            self._chars = chars
+            self._link = link
+            return
+        if tag in _CANDIDATE_TAGS and not (block_child and tag == "div"):
+            # a candidate replaces whatever its descendants picked
+            del self._picks[picks_start:]
+            total = self._chars - chars
+            if tag == "pre":
+                if total:
+                    self._picks.append((start, len(self._chunks), True))
+            elif total >= MIN_BLOCK_CHARS and (self._link - link) / total <= MAX_LINK_DENSITY:
+                self._picks.append((start, len(self._chunks), False))
+        if tag in _BLOCK_TAGS:
+            self._chunks.append(" ")
+
+    def text(self) -> str:
+        """Close what is still open, then join the picked blocks."""
+        while self._stack:
+            self._close(self._stack.pop())
+        chunks = self._chunks
+        out = []
+        for start, end, pre in self._picks:
+            raw = "".join(chunks[start:end])
+            out.append(raw.strip("\n") if pre else " ".join(raw.split()))
+        return "\n".join(out)
 
 
 # --- fast path: one fused scanner over the markup stdlib parses the same way -
@@ -137,7 +181,7 @@ class _TreeBuilder(HTMLParser):
 # same handler calls: one handle_data(unescape(run)) per text run between
 # markup, the same lowered tag names, the same tag ends.  All quantifiers are
 # possessive, so a match is the one greedy parse html.parser's own regexes
-# take.  Attributes are never parsed (the builder ignores them); the scanner
+# take.  Attributes are never parsed (the picker ignores them); the scanner
 # only has to end each tag where check_for_whole_start_tag does — a bare
 # value swallows a trailing "/", so <div a=b/> is a start tag, not <div/>.
 # Anything else — "<![", "<?", other "<!" forms, a stray "<", "</>", an
@@ -178,13 +222,13 @@ _SCAN = re.compile(
 _RAWTEXT = {2: "script", 3: "style"}
 
 
-def _scan_into(builder: _TreeBuilder, html: str) -> bool:
-    """Feed ``builder`` the handler calls html.parser would make for
-    ``html``; False (builder state then undefined) when the document leaves
+def _scan_into(picker: _BlockPicker, html: str) -> bool:
+    """Feed ``picker`` the handler calls html.parser would make for
+    ``html``; False (picker state then undefined) when the document leaves
     the covered grammar."""
-    starttag = builder.handle_starttag
-    endtag = builder.handle_endtag
-    data = builder.handle_data
+    starttag = picker.handle_starttag
+    endtag = picker.handle_endtag
+    data = picker.handle_data
     for m in _SCAN.finditer(html):
         kind = m.lastindex
         if kind == 1:
@@ -211,111 +255,22 @@ def _scan_into(builder: _TreeBuilder, html: str) -> bool:
     return True
 
 
-def _scan_tree(html: str) -> _Node | None:
-    """The fast path's tree, or None when ``html`` needs the fallback."""
-    builder = _TreeBuilder()
-    return builder.root if _scan_into(builder, html) else None
-
-
-def _parse_tree(html: str) -> _Node:
-    """The fallback authority: the same builder driven by html.parser."""
-    builder = _TreeBuilder()
-    builder.feed(html)
-    builder.close()
-    return builder.root
-
-
-def _node_text(node: _Node) -> tuple[str, int, int]:
-    """(text, total_chars, link_chars) of a subtree (raw, uncollapsed).
-
-    Iterative (explicit stack): recursion here bounded extraction depth by
-    the interpreter limit, so a ~2000-deep nest of tags raised
-    RecursionError THROUGH extract_turn and killed the whole Spark task —
-    the one failure mode the lenient kernel may never have.  The " "
-    markers pushed around block-tag subtrees reproduce the recursive
-    version's spacing exactly."""
-    parts: list[str] = []
-    total = 0
-    link = 0
-    stack = list(reversed(node.children))
-    while stack:
-        child = stack.pop()
-        if isinstance(child, str):  # post-subtree spacing marker
-            parts.append(child)
-            continue
-        if isinstance(child, _Node):
-            if child.tag in _BOILERPLATE_TAGS:
-                continue
-            if child.tag in _BLOCK_TAGS:
-                parts.append(" ")
-                stack.append(" ")
-            stack.extend(reversed(child.children))
-        else:
-            text, in_link = child
-            parts.append(text)
-            n = len(text.strip())
-            total += n
-            if in_link:
-                link += n
-    return "".join(parts), total, link
-
-
-def _has_block_child(node: _Node) -> bool:
-    return any(
-        isinstance(c, _Node) and c.tag in _BLOCK_TAGS for c in node.children
-    )
-
-
-def _collapse(text: str) -> str:
-    return " ".join(text.split())
-
-
-def _walk(node: _Node, out: list[str]) -> None:
-    """Candidate-block selection in document order — iterative for the
-    same unbounded-depth reason as _node_text."""
-    stack = list(reversed(node.children))
-    while stack:
-        child = stack.pop()
-        if not isinstance(child, _Node):
-            continue
-        tag = child.tag
-        if tag in _BOILERPLATE_TAGS:
-            continue
-        if tag == "pre":
-            raw, total, _ = _node_text(child)
-            raw = raw.strip("\n")
-            if total:
-                out.append(raw)
-            continue
-        if tag in _CANDIDATE_TAGS and not (tag == "div" and _has_block_child(child)):
-            raw, total, link = _node_text(child)
-            if total and (
-                total >= MIN_BLOCK_CHARS
-                and (link / total) <= MAX_LINK_DENSITY
-            ):
-                out.append(_collapse(raw))
-            continue
-        stack.extend(reversed(child.children))
-
-
 def extract_html_status(html: str) -> tuple[str, str]:
     """(main-content text, parse status).  Never raises: when html.parser
     itself rejects the document (it raises AssertionError on "<![ x"), the
-    text comes from the tree built up to the failing construct and the
+    text comes from the elements seen up to the failing construct and the
     status is "error:<class name>" — a failed PDF turn likewise keeps the
     text of the pages before the failure."""
-    builder = _TreeBuilder()
+    picker = _BlockPicker()
     status = "ok"
     try:
-        if not _scan_into(builder, html):
-            builder = _TreeBuilder()
-            builder.feed(html)
-            builder.close()
+        if not _scan_into(picker, html):
+            picker = _BlockPicker()
+            picker.feed(html)
+            picker.close()
     except Exception as exc:
         status = "error:%s" % type(exc).__name__
-    out: list[str] = []
-    _walk(builder.root, out)
-    return "\n".join(out), status
+    return picker.text(), status
 
 
 def extract_html(html: str) -> str:

@@ -1,7 +1,13 @@
-"""Differential fuzz: the fused HTML scanner must build EXACTLY the tree that
-html.parser builds through the same handlers — the stdlib parser is the
-authority (html_extract module docstring).  Trees are compared node by node:
-tag, child count, every text chunk and its in_link flag."""
+"""Differential fuzz: the fused HTML scanner must give the block picker
+EXACTLY the events html.parser gives it through the same handlers — the
+stdlib parser is the authority (html_extract module docstring).  The events
+are what the picker acts on: an element opened, an element closed (implicit
+closes and the end-of-document unwind included), and a text chunk kept with
+its in-link flag; the final ``extract_html_status`` must match too.
+
+Raw handler calls are not compared: they differ where the picker ignores the
+difference (html.parser splits a script body at "</scrıpt>", and sends no
+data call for "<script></script>" where the scanner sends an empty one)."""
 
 from __future__ import annotations
 
@@ -11,39 +17,64 @@ from hypothesis import strategies as st
 
 from pdfparse_spark.fixtures.html_gen import build_html_fixtures, generate_pages
 from pdfparse_spark.kernel.html_extract import (
-    _Node,
-    _node_text,
-    _parse_tree,
-    _scan_tree,
+    _BlockPicker,
+    _scan_into,
+    extract_html_status,
 )
 
 
-def _shape(root: _Node) -> list:
-    """Pre-order listing of a tree: ("<", tag, n_children) per node and
-    (text, in_link) per text chunk.  Iterative: soup can nest deeply."""
-    out = []
-    stack = [root]
-    while stack:
-        item = stack.pop()
-        if isinstance(item, _Node):
-            out.append(("<", item.tag, len(item.children)))
-            stack.extend(reversed(item.children))
-        else:
-            out.append(item)
-    return out
+class _Recorder(_BlockPicker):
+    """The picker, logging the events it acts on."""
+
+    def __init__(self):
+        super().__init__()
+        self.events: list[tuple] = []
+
+    def handle_starttag(self, tag, attrs):
+        depth, chunks = len(self._stack), len(self._chunks)
+        super().handle_starttag(tag, attrs)
+        if len(self._stack) > depth:
+            self.events.append(("open", tag))
+        elif len(self._chunks) > chunks:  # <br>
+            self.events.append(("text", self._chunks[-1], self._open["a"] > 0))
+
+    def handle_data(self, data):
+        chunks = len(self._chunks)
+        super().handle_data(data)
+        if len(self._chunks) > chunks:
+            self.events.append(("text", data, self._open["a"] > 0))
+
+    def _close(self, frame):
+        self.events.append(("close", frame[0]))
+        super()._close(frame)
+
+
+def _events(html: str, fast: bool) -> tuple[list, str] | None:
+    """(events, text) from one token source, the unwind included; None when
+    ``fast`` and ``html`` needs the fallback."""
+    rec = _Recorder()
+    if not fast:  # the fallback authority: html.parser
+        rec.feed(html)
+        rec.close()
+    elif not _scan_into(rec, html):
+        return None
+    text = rec.text()
+    return rec.events, text
 
 
 def _assert_same(html: str) -> bool:
-    """Fast tree == fallback tree whenever the fast path accepts ``html``;
-    True iff it did."""
-    fast = _scan_tree(html)
+    """Fast events and text == fallback events and text whenever the fast
+    path accepts ``html``, and ``extract_html_status`` agrees; True iff the
+    fast path accepted."""
+    fast = _events(html, True)
     try:
-        slow = _parse_tree(html)
+        slow = _events(html, False)
     except AssertionError:  # html.parser rejects some "<![" forms
         assert fast is None, html
         return False
     if fast is not None:
-        assert _shape(fast) == _shape(slow), html
+        assert fast == slow, html
+    assert extract_html_status(html) == (slow[1], "ok"), html
     return fast is not None
 
 
@@ -76,13 +107,13 @@ _SETTINGS = dict(deadline=2000, suppress_health_check=[HealthCheck.too_slow])
 
 @given(_SOUP)
 @settings(max_examples=500, **_SETTINGS)
-def test_fast_tree_matches_fallback_on_tag_soup(html):
+def test_fast_events_match_fallback_on_tag_soup(html):
     _assert_same(html)
 
 
 @given(st.text(alphabet="<>/=\"' \t\n\x0b\x00\x1c\xa0\u2003abpsBPS!-&;#x", max_size=120))
 @settings(max_examples=300, **_SETTINGS)
-def test_fast_tree_matches_fallback_on_char_soup(html):
+def test_fast_events_match_fallback_on_char_soup(html):
     _assert_same(html)
 
 
@@ -108,6 +139,8 @@ def test_fixtures_take_the_fast_path(fx):
         ("<script>if (a) { x = '</p>' }</script>t", True),
         ("<script>x</SCRIPT >t", True),
         ("<style>p{}</style  >t", True),
+        ("<script></script>t", True),  # html.parser sends no data call here
+        ("<script>a</scrıpt>b</script>t", True),  # html.parser splits the body
         ("<script>never closed", False),
         ("<script>x</ſcript>", False),
         ("a < b", False),
@@ -123,13 +156,16 @@ def test_pinned_cases(html, fast):
 
 
 def test_comment_splits_a_text_run():
-    root = _scan_tree("<p>abc <!-- --> def</p>")
-    p = root.children[0]
-    assert p.children == [("abc ", False), (" def", False)]
+    rec = _Recorder()
+    assert _scan_into(rec, "<p>abc <!-- --> def</p>")
+    assert rec.events == [
+        ("open", "p"), ("text", "abc ", False), ("text", " def", False), ("close", "p"),
+    ]
     # each chunk is stripped before it is counted: 3 + 3, not 8
-    assert _node_text(p)[1:] == (6, 0)
+    assert rec._chars == 6
 
 
 def test_open_link_marks_later_text():
-    root = _scan_tree("<a href=x/>inside")
-    assert _shape(root) == [("<", "#root", 1), ("<", "a", 1), ("inside", True)]
+    assert _events("<a href=x/>inside", True)[0] == [
+        ("open", "a"), ("text", "inside", True), ("close", "a"),
+    ]

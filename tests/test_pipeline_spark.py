@@ -197,17 +197,21 @@ def test_entry_contract(spark):
 
 
 def test_query_registry_pins_the_committed_order():
-    """queries() is ONE ordered list: exactly the order of the committed
-    local oracle sweep; oracle_sql() covers exactly the sweep's
-    hash-verified queries; every family-registered query appears in
-    queries() exactly once."""
+    """queries() is ONE ordered list: exactly the order of the latest
+    committed local oracle sweep (the highest round number); oracle_sql()
+    covers exactly the sweep's hash-verified queries; every
+    family-registered query appears in queries() exactly once."""
+    import glob
     import json
     import os
+    import re
 
     import __spark_entry__ as e
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "CORRECTNESS_LOCAL_r06_sf0.1.json")) as fh:
+    sweeps = glob.glob(os.path.join(repo, "CORRECTNESS_LOCAL_r*_sf0.1.json"))
+    latest = max(sweeps, key=lambda p: int(re.search(r"_r(\d+)_sf0\.1\.json$", p)[1]))
+    with open(latest) as fh:
         sweep = json.load(fh)
     assert list(e.queries()) == list(sweep)
     assert set(e.oracle_sql()) == {k for k, v in sweep.items() if v["err"] != "no_oracle"}

@@ -15,7 +15,7 @@ one sample takes about ``SAMPLE_MS``).  PDF groups:
   noop    process_pdf into a device that drops every callback
   simple  process_pdf into SimpleTextDevice, the whole kernel
 HTML group:
-  extract extract_html: scan or parse into the tree, then the density walk
+  extract extract_html: scan or parse, each block picked as its element closes
 
 Before timing, both sides' outputs must be equal on every input; the run
 stops otherwise.  For a PDF that is the text, spans, status and the segment
