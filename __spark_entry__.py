@@ -85,7 +85,7 @@ def _extract_corpus(spark: SparkSession, n_convs: int = 12, turns_per_conv: int 
         return hit
     _ensure_workers_can_import(spark)
     df, golden = synthesize(spark, n_convs=n_convs, turns_per_conv=turns_per_conv, seed=7)
-    extracted = run_extraction(df, num_partitions=8, salt=16).persist()
+    extracted = run_extraction(df, num_partitions=8).persist()
     _CORPUS_CACHE[key] = (extracted, golden)
     return extracted, golden
 

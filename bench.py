@@ -4,22 +4,17 @@ Default: run everything at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
 
 Modes:
-    python bench.py                  # full bench, one JSON line
-    python bench.py --extract-only   # extraction timing only (used by --scaling)
-    python bench.py --scaling        # run extraction at local[8] and local[32]
-                                     # in subprocesses, report scaling efficiency
-                                     # and rewrite BENCH/BASELINE.md
-    python bench.py --executor-scaling  # TRUE multi-executor legs: 1 vs 4
-                                     # separate executor JVMs (local-cluster),
-                                     # rewrite BENCH/EXECUTORS.md
-    python bench.py --submit-scaling # the north rule VERBATIM: spark-submit
-                                     # --py-files of the resumable job at 1 and
-                                     # 4 executors, appends to BENCH/EXECUTORS.md
+    python bench.py            # full bench, one JSON line
+    python bench.py --scaling  # the north rule's N -> 4N legs: spark-submit
+                               # --py-files of the resumable job at 1 and 4
+                               # executors of cpus // 4 cores each; rewrites
+                               # BENCH/EXECUTORS.md
+    python bench.py --skew     # hot-key tolerance; rewrites BENCH/SKEW.md
 
 The extraction corpus is the fixture corpus replicated Spark-side
 (pipeline/bench_corpus.py), cached under /tmp/pdfparse_bench; both scaling
 legs read the SAME parquet input with the SAME partitioning (128 salted
-partitions) so only the core count differs.
+partitions) so only the executor count differs.
 """
 
 from __future__ import annotations
@@ -35,7 +30,7 @@ import time
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CACHE = os.environ.get("PDFPARSE_BENCH_CACHE", "/tmp/pdfparse_bench")
-PARTITIONS = 128  # fixed across scaling legs: >= 4 x 32 and 16 x 8
+PARTITIONS = 128  # fixed across scaling legs: >= 4 x 32
 # recorded run_extraction turns/s at sf0.1, local[32] (BENCH/BASELINE.md)
 BASELINE_TURNS_PER_SEC = 20026
 
@@ -109,7 +104,7 @@ def _n_convs(sf: float) -> int:
     return max(80, int(210000 * sf))
 
 
-def bench_extraction(spark, n_convs: int, dedup_leg: bool = True) -> dict:
+def bench_extraction(spark, n_convs: int) -> dict:
     from pyspark.sql import functions as F
 
     from pdfparse_spark.pipeline.bench_corpus import ensure_bench_corpus
@@ -134,8 +129,6 @@ def bench_extraction(spark, n_convs: int, dedup_leg: bool = True) -> dict:
         "extract_sec": round(wall, 3),
         "turns_per_sec": round(row["n"] / wall, 1),
     }
-    if not dedup_leg:
-        return out_stats
     # content-addressed path over the SAME corpus — the replicated shape
     # the metric names (kernel once per distinct payload, joined back).
     # Reported alongside, never as the headline: extract_sec above stays
@@ -226,23 +219,13 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--extract-only", action="store_true")
     ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--executor-scaling", action="store_true")
-    ap.add_argument("--executor-leg", type=int, default=None)
-    ap.add_argument("--submit-scaling", action="store_true")
     ap.add_argument("--skew", action="store_true")
     ap.add_argument("--cpus", type=int, default=CPUS)
     args = ap.parse_args()
 
-    if args.executor_leg is not None:
-        return executor_leg(args.executor_leg)
-    if args.executor_scaling:
-        return executor_scaling_mode()
-    if args.submit_scaling:
-        return submit_scaling_mode()
     if args.scaling:
-        return scaling_mode()
+        return scaling_mode(args.cpus)
     if args.skew:
         return skew_mode(args.cpus)
 
@@ -253,10 +236,7 @@ def main() -> int:
     # overhead. Production default stays 512 (fat PDF rows — session.py).
     spark = get_spark(master="local[%d]" % args.cpus, app_name="bench", arrow_batch=2048)
     spark.sparkContext.setLogLevel("ERROR")
-    # scaling legs (--extract-only) skip the dedup leg: scaling_mode only
-    # reads value/extract_sec, and the extra pass would just add host load
-    # noise to the comparison the mode exists to measure
-    ext = bench_extraction(spark, _n_convs(sf), dedup_leg=not args.extract_only)
+    ext = bench_extraction(spark, _n_convs(sf))
     result = {
         "metric": "extraction_throughput",
         "value": ext["turns_per_sec"],
@@ -265,13 +245,13 @@ def main() -> int:
         "cpus": args.cpus,
         "turns": ext["turns"],
         "extract_sec": ext["extract_sec"],
-        "queries": {"extract": ext["extract_sec"]},
+        "queries": {
+            "extract": ext["extract_sec"],
+            "extract_dedup": ext["extract_dedup_sec"],
+            "conv_dedup": ext["conv_dedup_sec"],
+        },
+        "dedup_turns_per_sec": ext["dedup_turns_per_sec"],
     }
-    if "extract_dedup_sec" in ext:
-        result["dedup_turns_per_sec"] = ext["dedup_turns_per_sec"]
-        result["queries"]["extract_dedup"] = ext["extract_dedup_sec"]
-    if "conv_dedup_sec" in ext:
-        result["queries"]["conv_dedup"] = ext["conv_dedup_sec"]
     if math.isclose(sf, 0.1) and args.cpus == 32:
         # self-document the recorded-baseline ratio (BENCH/BASELINE.md,
         # local[32] @ sf0.1) so a single record reads in context: the
@@ -281,10 +261,9 @@ def main() -> int:
         # good-window records
         result["baseline_turns_per_sec"] = BASELINE_TURNS_PER_SEC
         result["vs_baseline"] = round(ext["turns_per_sec"] / BASELINE_TURNS_PER_SEC, 4)
-    if not args.extract_only:
-        timings, warm = bench_queries(spark)
-        result["queries"].update(timings)
-        result["queries_warm"] = warm
+    timings, warm = bench_queries(spark)
+    result["queries"].update(timings)
+    result["queries_warm"] = warm
     spark.stop()
     # Full detail first, compact headline LAST: the driver records only a
     # bounded tail of stdout, and the full record (per-query + warm
@@ -305,189 +284,91 @@ def main() -> int:
     return 0
 
 
-def executor_leg(n_executors: int) -> int:
-    """One true-executor scaling leg: local-cluster[N,4,6144] — SEPARATE
-    executor JVMs with real inter-process shuffle service, not local[N]
-    threads.  Prints one JSON line; used by --executor-scaling."""
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local-cluster[%d,4,6144]" % n_executors)
-        .appName("executor-scaling")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # executor JVMs spawn their own Python workers: ship the package as a
-    # zip via addPyFile — the same mechanism as spark-submit --py-files
-    import __spark_entry__ as e
-
-    e._ensure_workers_can_import(spark)
-    # bench_extraction, not a bare count: it keeps the ok > 0.8*n
-    # extraction-validity assert (a partially-failing kernel on the new
-    # executor import path would otherwise publish a scaling number over
-    # error rows) and the shared corpus/warmup/timing logic
-    ext = bench_extraction(spark, _n_convs(_sf_of(SF_DIR)), dedup_leg=False)
-    print(json.dumps({
-        "executors": n_executors, "cores_each": 4, "turns": ext["turns"],
-        "extract_sec": ext["extract_sec"], "value": ext["turns_per_sec"],
-    }))
-    spark.stop()
-    return 0
-
-
-def executor_scaling_mode() -> int:
-    """The north rule's two-cluster-size criterion in its LITERAL form:
-    the same extraction job at N and 4N EXECUTORS (separate JVMs,
-    real executor-to-executor shuffle) via Spark local-cluster mode —
-    one step closer to a real cluster than the local[N] thread legs
-    (BENCH/BASELINE.md).  Rewrites BENCH/EXECUTORS.md."""
-    legs = {}
-    for ex in (1, 4):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--executor-leg", str(ex)],
-            capture_output=True, text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
+def executor_cores(cpus: int) -> int:
+    """Cores per executor of the N -> 4N legs: the 4-executor leg fills
+    ``cpus`` and never oversubscribes it (1 on a 4-core host, 8 on a
+    32-core one).  Below 4 cores the 4N leg cannot give each executor a
+    core of its own, so no honest shape exists and the mode refuses."""
+    if cpus < 4:
+        raise SystemExit(
+            "--scaling needs at least 4 cores (4 executors x 1 core); got %d" % cpus
         )
-        lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-        if proc.returncode != 0 or not lines:
-            sys.stderr.write(
-                "executor leg %d failed (rc=%d)\n--- child stderr ---\n%s\n"
-                % (ex, proc.returncode, proc.stderr[-4000:])
-            )
-            raise SystemExit(1)
-        legs[ex] = json.loads(lines[-1])
-    eff = round(legs[4]["value"] / (4 * legs[1]["value"]), 4)
-    md = """# BENCH/EXECUTORS.md — true multi-executor N -> 4N scaling
-
-The north rule asks for the job at two cluster sizes (N and 4N
-executors).  The sandbox has one machine, but Spark's local-cluster
-mode launches genuinely SEPARATE executor JVMs with the real
-inter-process shuffle path — unlike local[N], where "executors" are
-threads sharing one JVM heap and no shuffle ever crosses a process
-boundary.  Same corpus, same 128 salted partitions, one clean JVM
-per leg, 4 cores per executor (the regime the box serves without
-hitting its memory-bandwidth ceiling; see BENCH/BASELINE.md for the
-thread-leg analysis of that ceiling).
-
-| executors x cores | turns | wall s | turns/s |
-|---|---|---|---|
-| 1 x 4 | {t1} | {s1} | {v1} |
-| 4 x 4 | {t4} | {s4} | {v4} |
-
-**Scaling efficiency 1 -> 4 executors: {eff}** (target >= 0.8).
-
-Regenerate: `python bench.py --executor-scaling` (~4 min at sf0.1).
-
-The north rule's full execution mode also runs verbatim against this
-master — real executors, package shipped via --py-files, PYTHONPATH
-unset, resumable ledger, content-addressed waves.  NOTE: --master must
-be forwarded into the app (second occurrence below) — the session
-builder's default would otherwise silently override the submitted
-master; the app's JSON echoes the actual master as proof:
-
-```
-zip -qr p.zip pdfparse_spark
-spark-submit --master "local-cluster[2,4,4096]" --py-files p.zip \\
-    scripts/submit_extract.py --master "local-cluster[2,4,4096]" \\
-    --out /tmp/px --n-convs 6 --turns 5 --dedup-payloads
-# -> {{"turns": 30, ..., "master": "local-cluster[2,4,4096]", ...}}
-```
-
-See the spark-submit section below (`python bench.py --submit-scaling`)
-for the measured sf-scale N -> 4N legs through this exact launcher.
-""".format(
-        t1=legs[1]["turns"], s1=legs[1]["extract_sec"], v1=legs[1]["value"],
-        t4=legs[4]["turns"], s4=legs[4]["extract_sec"], v4=legs[4]["value"],
-        eff=eff,
-    )
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH", "EXECUTORS.md"), "w") as fh:
-        fh.write(md)
-    print(json.dumps({
-        "metric": "executor_scaling_1_to_4", "value": eff, "unit": "ratio",
-        "turns_per_sec": {"1x4": legs[1]["value"], "4x4": legs[4]["value"]},
-    }))
-    return 0
+    return cpus // 4
 
 
-_SUBMIT_MARKER = "## spark-submit --py-files legs (north-rule verbatim)"
+def leg_master(n_executors: int, cores: int) -> str:
+    return "local-cluster[%d,%d,6144]" % (n_executors, cores)
 
 
-def submit_scaling_mode() -> int:
-    """The north rule's execution mode VERBATIM: the resumable extraction
-    job launched via ``spark-submit --py-files pdfparse_spark.zip`` against
-    local-cluster masters at 1 and 4 executors (4 cores each), reading the
-    same cached corpus parquet.  PYTHONPATH is stripped and the child cwd is
-    outside the repo, so the package can ONLY arrive via --py-files.  The
-    ``--master`` flag is forwarded to run_extract because the session
-    builder's default master would otherwise silently override the submitted
-    one (run_extract's JSON records the actual master; each leg is checked).
-    Appends the measured N -> 4N record to BENCH/EXECUTORS.md."""
+def submit_command(
+    submit: str, master: str, zip_path: str, script: str, corpus: str, out_dir: str
+) -> list[str]:
+    """One leg's spark-submit command line.  ``--master`` goes in twice:
+    the session builder's default master would otherwise silently
+    override the submitted one (run_extract echoes the master it ran on)."""
+    return [
+        submit, "--master", master, "--py-files", zip_path, script,
+        "--master", master,
+        "--input", corpus, "--out", out_dir,
+        "--partitions", str(PARTITIONS),
+        "--n-buckets", "4", "--buckets-per-wave", "2",
+        # fork the Python workers and import the kernel before the clock starts
+        "--warmup",
+    ]
+
+
+def scaling_mode(cpus: int) -> int:
+    """The north rule's N -> 4N scaling, run verbatim: the resumable
+    extraction job launched via ``spark-submit --py-files
+    pdfparse_spark.zip`` against local-cluster masters at 1 and 4
+    executors of ``executor_cores(cpus)`` cores each (``cpus`` capped at
+    the host's cores), reading the same cached corpus parquet.  PYTHONPATH
+    is stripped and the child cwd is outside the repo, so the package can
+    ONLY arrive via --py-files; each leg's echoed master is checked.
+    Rewrites BENCH/EXECUTORS.md."""
     import shutil
     import tempfile
-    import zipfile
+
+    import pyspark
 
     from pdfparse_spark.pipeline.bench_corpus import ensure_bench_corpus
     from pdfparse_spark.pipeline.session import get_spark
 
+    cpus = min(cpus, os.cpu_count() or 1)
+    cores = executor_cores(cpus)
     here = os.path.dirname(os.path.abspath(__file__))
     # corpus build (cache hit in steady state) on a small local session,
     # stopped before any leg so the leg JVMs own the machine
-    spark = get_spark(master="local[8]", app_name="submit-scaling-corpus")
+    spark = get_spark(master="local[%d]" % cpus, app_name="scaling-corpus")
     spark.sparkContext.setLogLevel("ERROR")
     corpus = ensure_bench_corpus(spark, CACHE, _n_convs(_sf_of(SF_DIR)))
     spark.stop()
 
-    submit = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "bin", "spark-submit")
-    if not os.path.exists(submit):
-        import pyspark
-
-        submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
-
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    submit = os.path.join(spark_home, "bin", "spark-submit")
     workdir = tempfile.mkdtemp(prefix="pdfparse_submit_")
-    zip_path = os.path.join(workdir, "pdfparse_spark.zip")
-    pkg_root = os.path.join(here, "pdfparse_spark")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_root):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if not fn.endswith(".pyc"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.relpath(full, here))
+    # zipimport never reads __pycache__, so the cached bytecode rides along inert
+    zip_path = shutil.make_archive(
+        os.path.join(workdir, "pdfparse_spark"), "zip", here, "pdfparse_spark"
+    )
 
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     legs = {}
     try:
         for ex in (1, 4):
-            master = "local-cluster[%d,4,6144]" % ex
+            master = leg_master(ex, cores)
             # fresh out dir per leg: a reused ledger would mark every bucket
             # done and the "run" would measure bucket-skipping, not extraction
-            out_dir = os.path.join(workdir, "out_%dx4" % ex)
-            cmd = [
-                submit, "--master", master, "--py-files", zip_path,
-                os.path.join(here, "scripts", "submit_extract.py"),
-                "--master", master,
-                "--input", corpus, "--out", out_dir,
-                "--partitions", str(PARTITIONS),
-                "--n-buckets", "4", "--buckets-per-wave", "2",
-                # same measurement protocol as every other recorded leg
-                # (bench_extraction, --executor-scaling): fork/import/JIT
-                # the Python workers before the clock starts
-                "--warmup",
-            ]
+            out_dir = os.path.join(workdir, "out_%dx%d" % (ex, cores))
+            cmd = submit_command(
+                submit, master, zip_path,
+                os.path.join(here, "scripts", "submit_extract.py"), corpus, out_dir,
+            )
             proc = subprocess.run(cmd, capture_output=True, text=True, cwd=workdir, env=env)
-            recs = []
-            for ln in proc.stdout.splitlines():
-                if ln.startswith("{") and "turns_per_sec" in ln:
-                    try:
-                        recs.append(json.loads(ln))
-                    except ValueError:
-                        pass
+            recs = [
+                json.loads(ln) for ln in proc.stdout.splitlines()
+                if ln.startswith("{") and "turns_per_sec" in ln
+            ]
             if proc.returncode != 0 or not recs:
                 sys.stderr.write(
                     "submit leg %d failed (rc=%d)\n--- child stderr ---\n%s\n"
@@ -496,109 +377,72 @@ def submit_scaling_mode() -> int:
                 raise SystemExit(1)
             rec = recs[-1]
             # master is the proof of topology; parallelism is advisory only
-            # (standalone reports 2 until executors register, and an idle
-            # executor may have deregistered again by JSON-print time)
+            # (standalone reports max(2, cores) once executors register, and
+            # an idle executor may have deregistered by JSON-print time)
             if rec.get("master") != master:
                 raise SystemExit(
                     "leg %d ran on %r, not the submitted %s"
                     % (ex, rec.get("master"), master)
                 )
-            if rec.get("parallelism") != 4 * ex:
+            if rec.get("parallelism") != max(2, ex * cores):
                 sys.stderr.write(
                     "note: leg %d echoed parallelism %r (expected %d)\n"
-                    % (ex, rec.get("parallelism"), 4 * ex)
+                    % (ex, rec.get("parallelism"), max(2, ex * cores))
                 )
             legs[ex] = rec
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
     eff = round(legs[4]["turns_per_sec"] / (4 * legs[1]["turns_per_sec"]), 4)
-    section = """
-
-{marker}
-
-The table above times the extraction stage in-process.  This section is
-the rule's execution mode run LITERALLY: `spark-submit --py-files
-pdfparse_spark.zip scripts/submit_extract.py` (resumable ledger, 2
-waves x 2 buckets, {parts} salted partitions, output + lineage written
-to parquet), PYTHONPATH unset and cwd outside the repo so the workers
-import the package from the shipped zip only.  `--warmup` forks the
-worker pool and imports the kernel before the clock starts — the same
-steady-state protocol every other recorded leg uses.  `--master` is forwarded
-into the app because a builder-side default would silently override the
-submitted master — each leg's JSON echoes `master`/`parallelism` and is
-verified before the record is accepted.
-
-| spark-submit master | turns | wall s | turns/s |
-|---|---|---|---|
-| local-cluster[1,4,6144] | {t1} | {s1} | {v1} |
-| local-cluster[4,4,6144] | {t4} | {s4} | {v4} |
-
-**spark-submit scaling efficiency 1 -> 4 executors: {eff}** (target >= 0.8).
-
-Regenerate: `python bench.py --submit-scaling` (~5 min at sf0.1; rerun
-after `--executor-scaling`, which rewrites this file).
-""".format(
-        marker=_SUBMIT_MARKER, parts=PARTITIONS,
-        t1=legs[1]["turns_processed"], s1=legs[1]["wall_sec"], v1=legs[1]["turns_per_sec"],
-        t4=legs[4]["turns_processed"], s4=legs[4]["wall_sec"], v4=legs[4]["turns_per_sec"],
-        eff=eff,
+    rows = "\n".join(
+        "| %d x %d | `%s` | %s | %s | %s |" % (
+            ex, cores, legs[ex]["master"], legs[ex]["turns_processed"],
+            legs[ex]["wall_sec"], legs[ex]["turns_per_sec"],
+        )
+        for ex in (1, 4)
     )
-    md_path = os.path.join(here, "BENCH", "EXECUTORS.md")
-    old = ""
-    if os.path.exists(md_path):
-        with open(md_path) as fh:
-            old = fh.read()
-        if _SUBMIT_MARKER in old:
-            old = old[: old.index(_SUBMIT_MARKER)].rstrip() + "\n"
-    with open(md_path, "w") as fh:
-        fh.write(old.rstrip() + "\n" + section)
+    md = """# BENCH/EXECUTORS.md — N -> 4N executor scaling, {shape}
+
+The north rule's job at two cluster sizes, run verbatim: `spark-submit
+--py-files pdfparse_spark.zip scripts/submit_extract.py` (resumable ledger,
+2 waves x 2 buckets, {parts} salted partitions, output + lineage written to
+parquet) against local-cluster masters, which launch separate executor JVMs
+with the real inter-process shuffle.  PYTHONPATH is unset and the cwd is
+outside the repo, so workers import the package from the zip only;
+`--warmup` starts the worker pool before the clock.  `--master` is also
+forwarded into the app, since the builder's default would override the
+submitted one; a leg whose echoed master differs is refused.  N = 1 and
+4N = 4 executors of {cores} core(s) each: the 4N leg fills the {cpus} cores
+`--cpus` gives (capped at the host's) without oversubscribing them.
+
+| executors x cores | echoed master | turns | wall s | turns/s |
+|---|---|---|---|---|
+{rows}
+
+**Scaling efficiency 1 -> 4 executors ({shape}): {eff}** (target >= 0.8).
+
+The bench corpus replicates 8 template conversations of 20 turns
+(`bench_corpus._N_TEMPLATES`), so it holds at most 160 distinct payloads;
+the kernel runs once per distinct payload of each Arrow batch, so these
+legs weigh the Spark shell (scan, salted shuffle, Arrow crossing, parquet
+write) far more than the kernel.
+
+Regenerate: `python bench.py --scaling` (rewrites this file).
+""".format(
+        shape="1x%d -> 4x%d" % (cores, cores),
+        parts=PARTITIONS, cores=cores, cpus=cpus, rows=rows, eff=eff,
+    )
+    with open(os.path.join(here, "BENCH", "EXECUTORS.md"), "w") as fh:
+        fh.write(md)
     print(json.dumps({
-        "metric": "submit_scaling_1_to_4", "value": eff, "unit": "ratio",
+        "metric": "scaling_efficiency_1_to_4_executors", "value": eff, "unit": "ratio",
+        "shape": "1x%d->4x%d" % (cores, cores),
         "turns_per_sec": {
-            "1x4": legs[1]["turns_per_sec"], "4x4": legs[4]["turns_per_sec"],
+            "1x%d" % cores: legs[1]["turns_per_sec"],
+            "4x%d" % cores: legs[4]["turns_per_sec"],
         },
         "masters": [legs[1]["master"], legs[4]["master"]],
     }))
-    return 0
-
-
-def scaling_mode() -> int:
-    """Two-cluster-size evidence for the N→4N scaling rule (sandbox proxy:
-    two parallelism levels on the same input, same plan, same 128 salted
-    partitions).  Primary legs local[4]→local[16]; local[8]→local[32] is
-    reported too but is memory-bandwidth-capped on a single box (see
-    BENCH/BASELINE.md).  Rewrites BENCH/BASELINE.md with the evidence."""
-    legs = {}
-    for cpus in (4, 16, 8, 32):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--extract-only", "--cpus", str(cpus)],
-            capture_output=True,
-            text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
-        if proc.returncode != 0 or not lines:
-            sys.stderr.write(
-                "scaling leg local[%d] failed (rc=%d)\n--- child stderr ---\n%s\n"
-                % (cpus, proc.returncode, proc.stderr[-4000:])
-            )
-            raise SystemExit(1)
-        legs[cpus] = json.loads(lines[-1])
-    eff_4_16 = round(legs[16]["value"] / (4 * legs[4]["value"]), 4)
-    eff_8_32 = round(legs[32]["value"] / (4 * legs[8]["value"]), 4)
-    out = {
-        "metric": "scaling_efficiency_4_to_16",
-        "value": eff_4_16,
-        "unit": "ratio",
-        "sf": legs[32]["sf"],
-        "turns": legs[32]["turns"],
-        "scaling_efficiency_8_to_32": eff_8_32,
-        "turns_per_sec": {str(c): legs[c]["value"] for c in (4, 8, 16, 32)},
-        "queries": {"extract_local%d" % c: legs[c]["extract_sec"] for c in (4, 8, 16, 32)},
-    }
-    _write_baseline_md(legs, eff_4_16, eff_8_32)
-    print(json.dumps(out))
     return 0
 
 
@@ -628,7 +472,7 @@ def skew_mode(cpus: int) -> int:
         return round(time.monotonic() - t0, 2)
 
     naive = df.repartition(parts, F.col("conv_id"))  # hot conv pins one task
-    salted = salt_repartition(df, parts, salt=64)
+    salted = salt_repartition(df, parts)
 
     def _load_ratio(d):
         loads = [
@@ -704,51 +548,6 @@ def skew_mode(cpus: int) -> int:
     spark.stop()
     print(json.dumps(out))
     return 0
-
-
-def _write_baseline_md(legs: dict, eff_4_16: float, eff_8_32: float) -> None:
-    os.makedirs(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH"), exist_ok=True)
-    rows = "\n".join(
-        "| local[%d] | %s | %s |" % (c, legs[c]["value"], legs[c]["extract_sec"]) for c in (4, 8, 16, 32)
-    )
-    md = f"""# BENCH/BASELINE.md — measured scaling + throughput evidence
-
-Input: fixture corpus replicated x{legs[32]['turns'] // 160} ({legs[32]['turns']} turns,
-2 heavy 20-page FlateDecode PDFs + 4 small fixture PDFs + 6 HTML + 8 text
-turns per conversation), read from parquet; classify -> salted
-repartition(128) -> mapInArrow extraction; identical plan at every
-parallelism level; only the core count varies.
-
-| config | turns/sec | extract wall (s) |
-|---|---|---|
-{rows}
-
-**Scaling efficiency (N -> 4N cores, same input):**
-
-- local[4] -> local[16]: **{eff_4_16}** (target >= 0.8)
-- local[8] -> local[32]: {eff_8_32}
-
-The 8->32 leg is bounded by single-box memory bandwidth, not the pipeline:
-this is ONE box whose bandwidth is shared by all workers (measured 0.66-0.82
-across runs as host load varies). A pure-Python multiprocessing pool running
-the identical kernel over the identical rows (no Spark, no shuffle, no Arrow)
-scales 8->32 at only ~0.61 on this VM, and a pure arithmetic spin loop shows
-per-process capacity dropping to ~0.82 at 32 procs. The Spark pipeline
-reaches 87-93%+ of the process-pool ceiling at every level, i.e. Spark
-overhead is not the limiter. On a real N -> 4N EXECUTOR scale-up, memory
-bandwidth grows with node count, which the 4->16 leg (unsaturated bandwidth)
-is the honest single-box proxy for.
-
-Run-to-run variance: the sandbox VM's absolute CPU speed drifts +/-20-25%
-between time windows (same code, same corpus: 7.2k-20k turns/s at
-local[32] across the session as the kernel was optimized AND the host
-drifted). Compare legs only WITHIN one --scaling run (they execute
-back-to-back); absolute turns/sec in BENCH_r{{N}}.json inherits the drift.
-
-Reproduce: `python bench.py --scaling` (rewrites this file).
-"""
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
 
 
 if __name__ == "__main__":

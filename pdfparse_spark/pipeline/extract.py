@@ -44,6 +44,7 @@ __all__ = [
     "DEDUP_KERNEL_SCHEMA",
     "INPUT_COLS",
     "OUTPUT_SCHEMA",
+    "SALT",
     "TELEMETRY_SCHEMA",
     "TURN_KEY_COLS",
     "extract_payloads",
@@ -57,6 +58,9 @@ __all__ = [
     "salt_repartition",
     "spans_array",
 ]
+
+# a hot conv_id spreads over up to SALT partitions (salt_repartition)
+SALT = 64
 
 # the columns that enter the Python stage (column pruning before the shuffle)
 INPUT_COLS = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
@@ -205,23 +209,22 @@ def _first_occurrence_us(indices: pa.Array, micros: list[int]) -> pa.Array:
     return pa.array(us, _ARROW_TYPES["kernel_us"])
 
 
-def salt_repartition(df: DataFrame, num_partitions: int, salt: int = 64) -> DataFrame:
-    """P10: spread hot conv_ids over up to ``salt`` partitions.
+def salt_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """P10: spread hot conv_ids over up to ``SALT`` partitions.
 
-    Hash-partitions on (conv_id, turn_idx mod salt).  AQE cannot split a
+    Hash-partitions on (conv_id, turn_idx mod SALT).  AQE cannot split a
     skewed Python stage, so this explicit repartition is the skew defense.
     """
     return df.repartition(
         num_partitions,
         F.col("conv_id"),
-        F.pmod(F.col("turn_idx").cast("int"), F.lit(salt)),
+        F.pmod(F.col("turn_idx").cast("int"), F.lit(SALT)),
     )
 
 
 def run_extraction(
     df: DataFrame,
     num_partitions: int | None = None,
-    salt: int = 64,
     telemetry: bool = False,
     device: str = "simple",
 ) -> DataFrame:
@@ -236,7 +239,7 @@ def run_extraction(
         raise ValueError("telemetry supports only the golden device")
     df = df.select(*INPUT_COLS)  # column pruning before the shuffle
     if num_partitions:
-        df = salt_repartition(df, num_partitions, salt)
+        df = salt_repartition(df, num_partitions)
     out = df.mapInArrow(
         make_extract_batch(device, telemetry),
         schema=TELEMETRY_SCHEMA if telemetry else OUTPUT_SCHEMA,

@@ -126,7 +126,6 @@ def run_resumable(
     n_buckets: int = 8,
     buckets_per_wave: int = 2,
     num_partitions: int | None = None,
-    salt: int = 64,
     fail_after_waves: int | None = None,
     telemetry: bool = False,
     split_pages: bool = False,
@@ -220,11 +219,11 @@ def run_resumable(
             from .split_extract import run_extraction_split
 
             extracted = run_extraction_split(
-                subset.drop("bucket"), num_partitions=num_partitions, salt=salt
+                subset.drop("bucket"), num_partitions=num_partitions
             )
         else:
             extracted = run_extraction(
-                subset.drop("bucket"), num_partitions=num_partitions, salt=salt,
+                subset.drop("bucket"), num_partitions=num_partitions,
                 telemetry=telemetry, device=device,
             )
         # bucket_of, not an inline copy of the formula: the output bucket

@@ -42,7 +42,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-buckets", type=int, default=8)
     p.add_argument("--buckets-per-wave", type=int, default=2)
     p.add_argument("--partitions", type=int, default=None, help="salted partitions (default 4x cores)")
-    p.add_argument("--salt", type=int, default=64)
     p.add_argument(
         "--device",
         choices=["simple", "advance", "column"],
@@ -166,7 +165,6 @@ def main(argv: list[str] | None = None) -> int:
         n_buckets=args.n_buckets,
         buckets_per_wave=args.buckets_per_wave,
         num_partitions=partitions,
-        salt=args.salt,
         telemetry=args.telemetry,
         split_pages=args.split_pages,
         device=args.device,

@@ -134,7 +134,6 @@ def _merge_group(table: pa.Table) -> pa.Table:
 def run_extraction_split(
     df: DataFrame,
     num_partitions: int | None = None,
-    salt: int = 64,
     page_threshold: int = 32,
     pages_per_seg: int = 8,
     probe_min_bytes: int | None = None,
@@ -212,5 +211,5 @@ def run_extraction_split(
         ["conv_id", "turn_idx"],
         "left_anti",
     )
-    light_out = run_extraction(light, num_partitions=num_partitions, salt=salt)
+    light_out = run_extraction(light, num_partitions=num_partitions)
     return light_out.unionByName(merged)

@@ -46,7 +46,6 @@ def start_stream_extraction(
     out_dir: str,
     checkpoint_dir: str,
     num_partitions: int | None = None,
-    salt: int = 64,
     max_files_per_trigger: int = 8,
     available_now: bool = True,
 ):
@@ -61,7 +60,7 @@ def start_stream_extraction(
     stream = read_stream(spark, INPUT_SCHEMA, input_dir, max_files_per_trigger)
 
     def _process_batch(batch_df, batch_id: int) -> DataFrame:
-        out = run_extraction(batch_df, num_partitions=num_partitions, salt=salt)
+        out = run_extraction(batch_df, num_partitions=num_partitions)
         return out.withColumn("batch_id", F.lit(batch_id))
 
     return start_foreach_batch(

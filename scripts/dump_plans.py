@@ -112,7 +112,7 @@ def main() -> int:
     for title, key, commentary in CASES:
         if key == "flagship":
             df, _ = synthesize(spark, n_convs=4, turns_per_conv=4, seed=1)
-            plan_df = run_extraction(df, num_partitions=8, salt=8)
+            plan_df = run_extraction(df, num_partitions=8)
         else:
             plan_df = qs[key](spark, SF)
         plan = plan_df._sc._jvm.PythonSQLUtils.explainString(

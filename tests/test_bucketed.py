@@ -16,7 +16,7 @@ def bucketed_pair(spark, tmp_path_factory):
 
     base = tmp_path_factory.mktemp("bucketed")
     df, golden = synthesize(spark, n_convs=8, turns_per_conv=5, seed=11)
-    out = run_extraction(df, num_partitions=4, salt=8)
+    out = run_extraction(df, num_partitions=4)
     write_bucketed(out, "t_extracted", 4, path=str(base / "extracted"))
     write_bucketed(golden, "t_golden", 4, path=str(base / "golden"))
     yield "t_extracted", "t_golden", df.count()

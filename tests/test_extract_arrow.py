@@ -103,7 +103,7 @@ def test_arrow_body_matches_driver_kernel(spark, turns):
     assert any(len(e["spans"]) > 1 for e in expected.values())  # multi-page
     assert "unsupported_filter" in {e["parse_status"] for e in expected.values()}
 
-    out = run_extraction(df, num_partitions=3, salt=4)
+    out = run_extraction(df, num_partitions=3)
     assert out.schema == OUTPUT_SCHEMA
     assert _actual(out) == expected
 
@@ -112,7 +112,7 @@ def test_arrow_body_telemetry_adds_only_kernel_us(spark, turns):
     from pdfparse_spark.pipeline.extract import TELEMETRY_SCHEMA, run_extraction
 
     df, rows = turns
-    out = run_extraction(df, num_partitions=3, salt=4, telemetry=True)
+    out = run_extraction(df, num_partitions=3, telemetry=True)
     assert out.schema[: len(TELEMETRY_SCHEMA)] == TELEMETRY_SCHEMA
     assert dict(out.dtypes)["kernel_us"] == "bigint"
     assert out.filter(F.col("kernel_us") < 0).count() == 0

@@ -16,7 +16,7 @@ def test_extraction_matches_golden_per_turn(spark):
     from pdfparse_spark.pipeline.transcripts import synthesize
 
     df, golden = synthesize(spark, n_convs=10, turns_per_conv=6, seed=42)
-    extracted = run_extraction(df, num_partitions=8, salt=16)
+    extracted = run_extraction(df, num_partitions=8)
     joined = join_golden(extracted, golden)
     row = match_rate(joined).collect()[0]
     assert row["n_turns"] == df.count()
@@ -43,7 +43,7 @@ def test_salting_spreads_hot_conversation(spark):
     from pdfparse_spark.pipeline.transcripts import synthesize
 
     df, _ = synthesize(spark, n_convs=10, turns_per_conv=10, seed=42)
-    salted = salt_repartition(df, num_partitions=8, salt=16)
+    salted = salt_repartition(df, num_partitions=8)
     parts = (
         salted.filter(F.col("conv_id") == "conv000000")
         .select(F.spark_partition_id().alias("pid"))
@@ -62,7 +62,7 @@ def test_match_rate_sees_dropped_rows(spark):
     from pdfparse_spark.pipeline.transcripts import synthesize
 
     df, golden = synthesize(spark, n_convs=4, turns_per_conv=4, seed=5)
-    extracted = run_extraction(df, num_partitions=4, salt=8)
+    extracted = run_extraction(df, num_partitions=4)
     # simulate the regression: silently drop one turn
     lossy = extracted.filter(~((F.col("conv_id") == df.first()["conv_id"])
                                & (F.col("turn_idx") == 0)))
@@ -264,7 +264,7 @@ def test_telemetry_kernel_timing_and_straggler_stats(spark):
     from pdfparse_spark.pipeline.transcripts import synthesize
 
     df, _ = synthesize(spark, n_convs=6, turns_per_conv=6, seed=7)
-    out = run_extraction(df, num_partitions=8, salt=16, telemetry=True)
+    out = run_extraction(df, num_partitions=8, telemetry=True)
     assert {"kernel_us", "part_id"} <= set(out.columns)
 
     rows = out.select("kernel_us", "part_id").collect()
